@@ -11,8 +11,6 @@ scan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,13 +26,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-#: dimension tables small enough to always broadcast in joins —
-#: mirrors the reference's tiny teams/leagues/players dims
-#: (/root/reference/database_schema.sql:5-24,100-109)
-BROADCAST_DIMS = frozenset({"region", "nation", "customer", "supplier", "part"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,12 +56,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

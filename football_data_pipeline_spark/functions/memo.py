@@ -16,6 +16,12 @@ worker's memo holds at most ``maxsize × max_bytes`` of key bytes
 far smaller). The gate does not change any result (the memoized
 functions are pure), and the fixture-scale hit rate is unaffected:
 every synthesized bench payload is far below the gate.
+
+The gate bounds KEY bytes only. Cached VALUES are not measured:
+fingerprints and stats are tiny, but a decoded value can be roughly
+the size of its payload (``_sampled_frames`` keeps PPM stills of the
+sampled frames), so budget a worker's memo at about twice the key
+bound.
 """
 
 from __future__ import annotations

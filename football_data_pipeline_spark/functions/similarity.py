@@ -39,15 +39,10 @@ def word_set(norm: Column) -> Column:
     return F.array_distinct(F.array_remove(F.split(norm, " "), ""))
 
 
-def jaccard_words(a_norm: Column, b_norm: Column) -> Column:
-    """F10: word-set Jaccard × 0.7
-    (/root/reference/enhanced_mapping.py:531-567)."""
-    return jaccard_from_words(word_set(a_norm), word_set(b_norm))
-
-
 def jaccard_from_words(aw: Column, bw: Column) -> Column:
-    """F10 over pre-split word sets — lets callers hoist the split
-    out of a pairwise join (split once per input row, not per pair)."""
+    """F10: word-set Jaccard × 0.7 over pre-split ``word_set``s —
+    callers hoist the split out of a pairwise join (split once per
+    input row, not per pair)."""
     inter = F.size(F.array_intersect(aw, bw))
     union = F.size(F.array_union(aw, bw))
     return F.when((F.size(aw) > 0) & (F.size(bw) > 0) & (union > 0), inter / union * 0.7).otherwise(

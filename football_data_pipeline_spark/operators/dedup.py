@@ -683,7 +683,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_dedup_pairs(spark, load(spark, sf_dir, "documents"))
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 26) -> DataFrame:
     """Min-label propagation over an undirected pair graph →
     (node, component) where component = the minimum doc_id reachable.
 
@@ -810,9 +810,13 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     else:
         # fail loudly: an unconverged exit would silently SPLIT real
         # clusters (multiple is_canonical keepers per true component),
-        # corrupting the keep/drop list. Propagation advances one hop
-        # per round, so this means graph diameter > max_iter — raise
-        # max_iter (or switch to pointer-doubling) for that data.
+        # corrupting the keep/drop list. The pointer jump settles a
+        # component of diameter d in O(log d) rounds, and the
+        # consecutive-propagate probe confirms it at most one round
+        # later than the r13 post-jump probe did — the default 26 keeps
+        # that probe's 25-round envelope. Reaching here means labels
+        # still changed after max_iter rounds: raise max_iter for that
+        # data.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(labels still changing)"

@@ -99,9 +99,6 @@ RULE_NAMES = (
     *[f"dup_{n}gram" for n in sorted(DUP_NGRAM_PCT)],
 )
 
-_LONG0 = "CAST(0 AS LONG)"
-
-
 def _weight(g: Column, sep_chars: int) -> Column:
     w = F.length(g).cast("long")
     return w - F.lit(sep_chars) if sep_chars else w

@@ -241,14 +241,6 @@ def read_collections(spark: SparkSession, path: str) -> DataFrame:
     return with_collected_ts(df)
 
 
-def write_bronze(df: DataFrame, path: str) -> None:
-    """S3: persist collection snapshots, partitioned by type —
-    the Spark analogue of per-collection snapshot JSON files
-    (yml:330-339); Parquet + partitionBy replaces filename encoding.
-    """
-    df.write.mode("append").partitionBy("collection_type").parquet(path)
-
-
 # --- documents-corpus JSONL source -------------------------------------
 #
 # Raw training corpora arrive as JSON-lines dumps (one document per

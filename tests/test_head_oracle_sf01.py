@@ -1,13 +1,14 @@
 """Driver-scale gate for the driver-checked head (VERDICT r5 "what's
-wrong" #1): the round's CHECK_PRIORITY + mid queries — exactly the
-set the driver will hash-compare this round — run against the DuckDB
+wrong" #1): the first DRIVER_CAP names of the derived check order
+(registry.check_order) — exactly the set the driver will hash-compare
+next round — run against the DuckDB
 oracle PINNED at sf0.01, the driver's scale, regardless of what
 ``SPARK_GRAFT_TEST_SF_DIR`` points the main all-queries gate at.
 
 The main gate (tests/test_queries_oracle.py) covers all 127 queries
 at the configured SF (default sf0.001, 10x smaller than the driver);
 this file removes the "only routinely verified at a smaller scale"
-gap for the queries whose next driver row actually matters. Tail
+gap for the queries whose next driver row actually matters. The other
 queries keep their green rows from prior rounds and stay on the main
 gate only, keeping the pinned run's cost bounded by DRIVER_CAP.
 """
@@ -22,7 +23,7 @@ from football_data_pipeline_spark.catalog import TABLES
 from football_data_pipeline_spark.registry import (
     DRIVER_CAP,
     QUERIES,
-    _curated_names,
+    check_order,
 )
 
 from .conftest import assert_matches_oracle
@@ -34,7 +35,7 @@ import pytest as _pytest_r14
 pytestmark = _pytest_r14.mark.slow
 
 DRIVER_SF_DIR = "/root/testdata/sf0.01"
-HEAD = _curated_names()[:DRIVER_CAP]
+HEAD = check_order()[:DRIVER_CAP]
 
 
 @pytest.fixture(scope="module")

@@ -1,11 +1,10 @@
 """PLANS.md freshness guard (VERDICT r6 item 1): the committed
 plan-inventory artifact must cover exactly the queries the generator
-would emit — every bench headliner and every driver-rotation head
-query. R6 extended the generator but never regenerated the artifact;
-this test makes that divergence a build failure instead of a judge
-finding. (Row CONTENTS are audited by the plan-shape pytests and the
-per-round judge; regenerating them here would mean building 60+
-plans per test run.)
+emits — every registered query. R6 extended the generator but never
+regenerated the artifact; this test makes that divergence a build
+failure instead of a judge finding. (Row CONTENTS are audited by the
+plan-shape pytests and the per-round judge; regenerating them here
+would mean building 165 plans per test run.)
 """
 
 from __future__ import annotations
@@ -14,15 +13,13 @@ import os
 import re
 
 import football_data_pipeline_spark.all_queries  # noqa: F401
-from football_data_pipeline_spark.registry import CHECK_PRIORITY
+from football_data_pipeline_spark.registry import QUERIES
 
 PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
 
 
-def test_plans_md_covers_headliners_and_rotation_head():
-    import bench
-
-    expected = list(dict.fromkeys(list(bench.HEADLINE) + CHECK_PRIORITY))
+def test_plans_md_covers_every_query():
+    expected = list(QUERIES)
     with open(PLANS) as f:
         text = f.read()
     rows = re.findall(r"^\| `(q_\w+)` \|", text, flags=re.MULTILINE)
@@ -31,7 +28,7 @@ def test_plans_md_covers_headliners_and_rotation_head():
     missing = [n for n in expected if n not in set(rows)]
     stale = [n for n in rows if n not in set(expected)]
     assert not missing and not stale, (
-        f"PLANS.md drifted from bench.HEADLINE + CHECK_PRIORITY — "
+        f"PLANS.md drifted from the registered queries — "
         f"run `python tools/gen_plans_md.py`.\n missing={missing}\n stale={stale}"
     )
 

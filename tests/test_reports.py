@@ -1,9 +1,13 @@
 """Gold report builders vs the reference's shipped report documents.
 
-The assertion target is the DOCUMENT SHAPE: every top-level and
-nested key of the samples in /root/reference/data/ must appear in our
-output (values differ — the samples come from live 2025 data, ours
-from the synthesized test corpus).
+The assertion target is the DOCUMENT SHAPE: the top-level and nested
+key sets of the reference pipeline's sample reports under its
+``data/`` directory (``weekly_report.json``, ``health_status.json``,
+``dashboard_data.json``, ``api_usage.json``,
+``daily_mapping_stats.json``) must equal our output's. The key sets
+are written out below so the test reads no file outside this repo
+(values differ — the samples come from live 2025 data, ours from the
+synthesized test corpus).
 """
 
 from __future__ import annotations
@@ -47,9 +51,29 @@ def silver(spark):
     }
 
 
-def _reference_doc(name: str) -> dict:
-    with open(f"/root/reference/data/{name}") as f:
-        return json.load(f)
+WEEKLY_KEYS = {"period", "report_date", "summary"}
+WEEKLY_SUMMARY_KEYS = {
+    "bookmakers", "collection_phases", "games_tracked", "odds_collected", "top_leagues"
+}
+HEALTH_KEYS = {"issues", "pipeline_status", "recommendations", "timestamp"}
+DASHBOARD_KEYS = {
+    "last_updated", "league_stats", "odds_movements", "stats", "top_teams", "upcoming_games"
+}
+DASHBOARD_STATS_KEYS = {"active_leagues", "total_fixtures", "total_odds_records"}
+API_USAGE_KEYS = {
+    "api_football_calls", "api_football_remaining", "completed_jobs", "date",
+    "estimated_total_calls", "odds_api_calls", "usage_status",
+}
+MAPPING_KEYS = {"date", "report", "stats"}
+MAPPING_STATS_KEYS = {
+    "avg_confidence", "failed_mappings", "strategy_usage", "success_rate",
+    "successful_mappings", "total_attempts",
+}
+# avg_processing_time stays out of the comparison, as it did against the sample
+MAPPING_REPORT_KEYS = {
+    "failed_mappings", "learned_mappings_count", "manual_mappings_count", "overall_stats",
+    "period_days", "recent_successes", "report_date", "strategy_performance",
+}
 
 
 def _roundtrip(df, tmp_path) -> dict:
@@ -66,9 +90,8 @@ def test_weekly_report_shape(spark, silver, tmp_path):
         weekly_report(silver["odds"], silver["fixtures"], silver["leagues"], silver["now"]),
         tmp_path,
     )
-    sample = _reference_doc("weekly_report.json")
-    assert set(doc) == set(sample)
-    assert set(doc["summary"]) == set(sample["summary"])
+    assert set(doc) == WEEKLY_KEYS
+    assert set(doc["summary"]) == WEEKLY_SUMMARY_KEYS
     assert doc["period"] == "last_7_days"
     assert doc["summary"]["odds_collected"] > 0
     assert 0 < len(doc["summary"]["top_leagues"]) <= 5
@@ -88,8 +111,7 @@ def test_health_status_shape_and_rules(spark, silver, tmp_path):
     doc = _roundtrip(
         health_status(jobs, silver["odds"], silver["fixtures"], silver["now"]), tmp_path
     )
-    sample = _reference_doc("health_status.json")
-    assert set(doc) == set(sample)
+    assert set(doc) == HEALTH_KEYS
     # no processed_at column → 'No recent job activity' must fire
     assert "No recent job activity" in doc["issues"]
     n = len(doc["issues"])
@@ -120,9 +142,8 @@ def test_dashboard_data_shape(spark, silver, tmp_path):
         ),
         tmp_path,
     )
-    sample = _reference_doc("dashboard_data.json")
-    assert set(doc) == set(sample)
-    assert set(doc["stats"]) == set(sample["stats"])
+    assert set(doc) == DASHBOARD_KEYS
+    assert set(doc["stats"]) == DASHBOARD_STATS_KEYS
     assert doc["stats"]["active_leagues"] == len(doc["league_stats"])
     assert doc["stats"]["total_fixtures"] == silver["fixtures"].count()
     assert len(doc["league_stats"]) > 0
@@ -196,8 +217,7 @@ def test_api_usage_report_shape(spark, tmp_path):
         "id string, status string, type string, p string",
     ).select("id", "status", "type", F.to_timestamp("p").alias("processed_at"))
     doc = _roundtrip(api_usage_report(jobs, now), tmp_path)
-    sample = _reference_doc("api_usage.json")
-    assert set(doc) == set(sample)
+    assert set(doc) == API_USAGE_KEYS
     assert doc["completed_jobs"] == 2
     assert doc["estimated_total_calls"] == 2 + 4
     assert doc["api_football_calls"] == 1 + 3
@@ -227,10 +247,9 @@ def test_mapping_stats_report_shape(spark, silver, tmp_path):
         mapping_stats_report(attempts, learned, manual, F.lit(NOW).cast("timestamp")),
         tmp_path,
     )
-    sample = _reference_doc("daily_mapping_stats.json")
-    assert set(doc) == set(sample)
-    assert set(doc["stats"]) == set(sample["stats"])
-    assert set(doc["report"]) - {"avg_processing_time"} == set(sample["report"]) - {"avg_processing_time"}
+    assert set(doc) == MAPPING_KEYS
+    assert set(doc["stats"]) == MAPPING_STATS_KEYS
+    assert set(doc["report"]) - {"avg_processing_time"} == MAPPING_REPORT_KEYS
     assert doc["stats"]["total_attempts"] == 3
     assert doc["stats"]["successful_mappings"] == 2
     assert doc["stats"]["failed_mappings"] == 1

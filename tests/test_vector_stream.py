@@ -265,10 +265,8 @@ def test_band_signatures_match_batch_dedup_pass(spark):
     """The streaming signature assembly and q_dedup_embed must stay
     ONE family: reconstructing the batch pass's near-dup pair report
     from band_signatures reproduces it exactly. (The assembly is
-    duplicated by design this round — refactoring embedsearch.py
-    would void the rotation ledger's byte-untouched carry for its 7
-    queries; this test pins bit-equivalence until the shared-kernel
-    refactor lands when those queries head CHECK_PRIORITY.)"""
+    duplicated in streaming/vectors.py and embedsearch.py; this test
+    pins bit-equivalence until a shared kernel replaces both.)"""
     from pyspark.sql import functions as F
 
     from football_data_pipeline_spark.catalog import load

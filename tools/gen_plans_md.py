@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Generate PLANS.md: an auditable physical-plan inventory for the
-bench headline queries.
+"""Generate PLANS.md: an auditable physical-plan inventory for every
+registered query.
 
 For each query the table records the signals that decide 100 TB
 behavior — shuffle count, join strategies, window count, parquet
@@ -31,15 +31,13 @@ OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 
 HEADER = """# PLANS — physical-plan inventory (generated)
 
-One row per bench headline query AND per driver-rotation head query
-(registry.CHECK_PRIORITY — so every carried/late-added family has a
-plan regression record, VERDICT r5 item 5): the plan signals that
-decide behavior at 100 TB, extracted from the executed-plan string at
-sf0.01 (static plan; AQE runtime re-planning can only improve the
-join choices shown). Counts are plan-STRING-level: a reused exchange
-subtree re-prints under every consumer but executes once, so large
-numbers on deliberately-reusing lineages (q_fuzzy_join's two-batch
-cascade) overstate executed work. Regenerate with
+One row per registered query, in registration order: the plan
+signals that decide behavior at 100 TB, extracted from the
+executed-plan string at sf0.01 (static plan; AQE runtime re-planning
+can only improve the join choices shown). Counts are
+plan-STRING-level: a reused exchange subtree re-prints under every
+consumer but executes once, so large numbers on deliberately-reusing
+lineages overstate executed work. Regenerate with
 `python tools/gen_plans_md.py` after plan-affecting changes.
 
 Column key: **exch** = shuffle exchanges; **bhj/smj/bnlj** =
@@ -141,15 +139,15 @@ LAZY_SHAPE = {
 #: otherwise flag; keyed by query name
 KNOWN_NOTES = {
     "q_fuzzy_join": (
-        "global window = the deliberate DIM-SIZED candidate ranking "
+        "global windows = the deliberate DIM-SIZED candidate ranking "
         "(resolution.rank_candidates, plan-embedded cardinality guard); "
-        "counts inflated by the two-batch learned-mapping lineage "
-        "re-printing reused subtrees"
+        "one resolve_names cascade — counts are plan-string-level, so "
+        "subtrees its tiers share re-print under each consumer"
     ),
     "q_learned_mapping": (
-        "two full resolution cascades with the batch-1 lineage severed "
-        "at a dim-sized localCheckpoint (er_queries.py); global windows "
-        "= the same guarded dim-sized candidate ranking as q_fuzzy_join; "
+        "batch 2 is a projection of batch 1 (er_queries.py), so the plan "
+        "is q_fuzzy_join's single cascade plus one projection; global "
+        "windows = the same guarded dim-sized candidate ranking; "
         "ceiling 400 enforced by tests/test_resolution.py AND the "
         "PLANS.md staleness guard (tests/test_plans_md.py)"
     ),
@@ -256,18 +254,9 @@ def plan_row(name: str, plan: str) -> str:
 
 
 def main() -> None:
-    import bench
-
-    from football_data_pipeline_spark.registry import CHECK_PRIORITY
-
     spark = get_spark(app_name="fdps-gen-plans")
-    # bench headliners first (stable diff vs earlier rounds), then the
-    # round's rotation head — every carried/late-added family gets a
-    # plan-shape record (VERDICT r5 item 5)
-    names = list(bench.HEADLINE)
-    names += [n for n in CHECK_PRIORITY if n not in set(names)]
     rows = []
-    for name in names:
+    for name in QUERIES:
         if name in LAZY_SHAPE:
             df = LAZY_SHAPE[name](spark)
         else:

@@ -13,14 +13,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import football_data_pipeline_spark.all_queries  # noqa: F401
-from football_data_pipeline_spark.registry import QUERIES, _curated_names
+from football_data_pipeline_spark.registry import QUERIES
 
 HEADER = """# Query inventory
 
-All driver-checkable queries in driver check order (the registry's
-curated rotation order), generated from the registry docstrings —
-regenerate with ``python tools/gen_queries_md.py``. Every query has
-a DuckDB oracle — zero rows-only checks. Run one via:
+All driver-checkable queries in registration order, generated from
+the registry docstrings — regenerate with
+``python tools/gen_queries_md.py``. Every query has a DuckDB oracle
+— zero rows-only checks. Run one via:
 
 ```python
 import __spark_entry__ as e
@@ -41,7 +41,7 @@ def main() -> None:
     no_oracle = [n for n in QUERIES if QUERIES[n].oracle is None]
     assert not no_oracle, f"rows-only queries need a header note: {no_oracle}"
     lines = [HEADER]
-    for name in _curated_names():
+    for name in QUERIES:
         lines.append(f"| `{name}` | {summarize(QUERIES[name].doc)} |\n")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
     with open(out, "w") as f:
