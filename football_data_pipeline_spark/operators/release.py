@@ -31,9 +31,10 @@ Release layout::
     <path>/audio_drops, /audio_assets      (when audio_assets given)
     <path>/video_drops, /video_assets      (when video_assets given)
 
-The streaming twin is streaming/pipeline.curation_batch_writer —
-same stages, micro-batch grain, near-dup classification against
-history instead of whole-corpus exact dedup.
+The streaming counterparts are streaming/pipeline.curation_batch_writer
+(text) and streaming/mediadedup.media_curation_snapshot_writer
+(media) — same stages, micro-batch grain, near-dup classification
+against the snapshot-log history instead of whole-corpus exact dedup.
 
 Scale: every stage is an operator whose 100 TB shape is documented
 at its definition; this module adds only doc_id equi-joins between

@@ -1,64 +1,44 @@
-"""Streaming CDC materialized view — the streaming twin of
+"""Streaming CDC materialized view — the streaming form of
 operators/cdc.apply_changes, log-structured (LSM-style) so a
-micro-batch never rewrites the snapshot:
+micro-batch never rewrites the view:
 
-- WRITE path (``cdc_log_batch_writer``, a foreachBatch body): each
+- WRITE path (``cdc_snapshot_writer``, a foreachBatch body): each
   micro-batch of changes is collapsed to its per-key winners (the
   same one-aggregate max-struct collapse the batch operator uses —
-  operators/cdc.collapse_log) and written to its OWN
-  ``log/batch_id=N`` partition directory with mode=overwrite, the
-  engine's exactly-once convention (streaming/pipeline.py): a
-  crash-restart re-running batch N overwrites exactly its partition
-  and nothing else. Write cost is bounded by the batch, never by the
-  snapshot.
-- READ path (``read_cdc_snapshot``): union the managed compacted
-  base at ``{root}/base`` (if present — rows re-enter at their
-  recorded __seq/__op) with any caller-supplied external base (as
-  seq=BASE_SEQ pseudo-changes that lose to ANY real change) and
-  every committed log partition, collapse once, drop 'D' winners.
-  Out-of-order delivery ACROSS batches is handled by construction —
-  a late low-seq change loses the global collapse, so state never
-  regresses (the property the batch operator cannot give a naive
-  per-batch applier).
-- AUTO-COMPACTION (VERDICT r5 #4 — the read amplification was
-  previously unbounded until someone compacted by hand; ON BY
-  DEFAULT since r7, VERDICT r6 #5): whenever the committed log
-  reaches ``compact_every`` partitions (default
-  DEFAULT_COMPACT_EVERY), the writer folds base+log into a new
-  ``{root}/base`` (crash-safe temp-sibling write + two metadata
-  renames, the delta_merge._swap_rewrite discipline) and deletes
-  exactly the partitions it folded. The compacted base keeps the
-  winning __seq AND the 'D' tombstones: a tombstone dropped at
-  compaction would let a late lower-seq 'U' resurrect the key with
-  stale state, so deletes stay in the base until their key is
-  overwritten by a higher change. Crash between base swap and
-  partition cleanup only double-folds identical winners — the
-  max-struct collapse is idempotent, so the reader is correct at
-  every intermediate state.
+  operators/cdc.collapse_log) and appended to a snapshot table
+  (``{root}/winners_log`` + ``{root}/winners_data``,
+  sources/snapshots.snapshot_append_writer): marker-last atomic
+  commits with the batch_id replay guard, so a crash-restart
+  re-running batch N either rewrites its invisible debris or skips
+  a commit that already landed. Write cost is bounded by the batch,
+  never by the view.
+- READ path (``read_cdc_snapshot_log``): the committed winners table
+  (or any earlier version — the view AS OF any commit is one pin
+  away) plus an optional caller-supplied external base (as
+  seq=BASE_SEQ pseudo-changes that lose to ANY real change), one
+  global collapse, 'D' winners dropped. Out-of-order delivery ACROSS
+  batches is handled by construction — a late low-seq change loses
+  the global collapse, so state never regresses (the property the
+  batch operator cannot give a naive per-batch applier).
+- MAINTENANCE splits in two, each bounded: maintain() bin-packs
+  small FILES without touching rows; ``compact_cdc_snapshot`` is the
+  LSM fold (row-level GC of overwritten winners) as a COW rewrite
+  commit. The fold keeps the winning __seq AND the 'D' tombstones: a
+  tombstone dropped at compaction would let a late lower-seq 'U'
+  resurrect the key with stale state, so deletes stay until their
+  key is overwritten by a higher change. The fold commit inherits
+  the log's batch watermark, so the replay guard survives it.
 
-At 100 TB: the log partitions are per-batch winner sets (small), the
-snapshot collapse is one hash aggregate keyed on the CDC key — the
-reader is the same shape as the batch apply's winner side; the
-expensive fold against the big base happens only every K batches (the
-knob trades write amplification against read amplification, exactly
-an LSM level-0 compaction) or in a table format's MERGE
-(sources/delta_merge.py seam), never per batch.
+At 100 TB: the winner sets are per-batch (small), the view collapse
+is one hash aggregate keyed on the CDC key — the reader is the same
+shape as the batch apply's winner side; the expensive fold runs
+only when the caller schedules it (its cadence trades write
+amplification against read amplification, exactly an LSM level-0
+compaction) or in a table format's MERGE (sources/delta_merge.py
+seam), never per batch.
 
 Real seqs must be >= 0 (BASE_SEQ = -1 sits strictly below them);
 enforced by a plan-embedded check in the writer.
-
-SNAPSHOT-BACKED VARIANT (r12 — completes the funnel/log
-unification): ``cdc_snapshot_writer`` + ``read_cdc_snapshot_log``
-back the winner sets with the snapshot log (marker-last atomic
-commits, batch_id replay guard, AS-OF reads) instead of the raw
-partitions + ``{root}/base`` fold above, and
-``compact_cdc_snapshot`` is the LSM fold as a COW rewrite commit
-(tombstones and winning seqs kept; the commit inherits the batch
-watermark). maintain() handles small FILES; the fold handles
-row-level GC — two bounded maintenance axes instead of one
-entangled one. The partition-backed writer stays as the
-compaction-comparison baseline; decisions are twin-run
-pytest-identical.
 """
 
 from __future__ import annotations
@@ -68,162 +48,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.cdc import collapse_log
 
 #: external base rows enter the collapse below every real change
 BASE_SEQ = -1
-
-#: default compaction cadence (VERDICT r6 #5: the opt-in knob left
-#: unbounded read amplification as the default behavior). 32 level-0
-#: partitions before a fold is the LSM-ish middle ground: write
-#: amplification stays ~1/32 of a per-batch rewrite while the reader
-#: unions at most 32 small winner sets + one base.
-DEFAULT_COMPACT_EVERY = 32
-
-#: with compaction explicitly disabled, warn when the committed log
-#: passes this many partitions — every snapshot read now unions
-#: 2x the default fold cadence worth of files and keeps growing
-UNCOMPACTED_WARN_THRESHOLD = 64
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    return hp.getFileSystem(hconf), jvm
-
-
-def _list_log_partitions(spark: SparkSession, root: str) -> list[str]:
-    """Names (``batch_id=N``) of the committed log partition dirs."""
-    fs, jvm = _fs(spark, root)
-    log_path = jvm.org.apache.hadoop.fs.Path(f"{root}/log")
-    if not fs.exists(log_path):
-        return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(log_path)
-        if st.isDirectory() and st.getPath().getName().startswith("batch_id=")
-    )
-
-
-def cdc_log_batch_writer(
-    root: str,
-    key: str,
-    seq_col: str,
-    op_col: str,
-    payload_cols: list[str],
-    compact_every: int | None = DEFAULT_COMPACT_EVERY,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body: collapse this micro-batch's changes per key
-    and persist them to ``{root}/log/batch_id=N`` (idempotent
-    partition overwrite). Negative sequence numbers are rejected
-    in-plan (they would collide with the base sentinel). A write that
-    brings the committed log to >= ``compact_every`` partitions
-    triggers the fold into ``{root}/base`` (module docstring:
-    tombstone-preserving, crash-safe, idempotent). Compaction is ON
-    by default (VERDICT r6 #5); pass ``compact_every=None`` to manage
-    compaction yourself — the writer then warns once the log passes
-    UNCOMPACTED_WARN_THRESHOLD partitions instead of growing
-    silently."""
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
-
-    def write_batch(changes: DataFrame, batch_id: int) -> None:
-        # the guard REPLACES the seq value (a dropped side column's
-        # raise_error would be pruned as dead code)
-        guarded = changes.withColumn(
-            seq_col,
-            F.when(F.col(seq_col) >= 0, F.col(seq_col)).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("cdc seq must be >= 0, got "),
-                        F.col(seq_col).cast("string"),
-                    )
-                ).cast("long")
-            ),
-        )
-        winners = collapse_log(guarded, key, seq_col, op_col, payload_cols)
-        winners.write.mode("overwrite").parquet(
-            f"{root}/log/batch_id={batch_id}"
-        )
-        spark = changes.sparkSession
-        n_parts = len(_list_log_partitions(spark, root))
-        if compact_every is not None:
-            if n_parts >= compact_every:
-                compact_cdc_log(spark, root, key, payload_cols)
-        elif n_parts >= UNCOMPACTED_WARN_THRESHOLD:
-            import warnings
-
-            warnings.warn(
-                f"CDC log at {root} holds {n_parts} uncompacted "
-                "partitions with compaction disabled; every snapshot "
-                "read unions all of them. Call compact_cdc_log() or "
-                "pass compact_every= to the writer.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-
-    return write_batch
-
-
-def compact_cdc_log(
-    spark: SparkSession,
-    root: str,
-    key: str,
-    payload_cols: list[str],
-) -> int:
-    """Fold ``{root}/base`` (if any) + every committed log partition
-    into a new compacted base, then delete exactly the folded
-    partitions. Returns how many partitions were consumed.
-
-    The compacted base keeps __seq and the 'D' tombstones so late
-    lower-seq changes still lose after the rebase (the monotonicity
-    property ``test_cdc_stream.py`` pins). Crash-safety: the new
-    base is written to a temp sibling and swapped in with two
-    metadata renames (sources/delta_merge._swap_rewrite); a crash
-    before partition cleanup leaves winners duplicated between base
-    and log, which the idempotent max-struct collapse absorbs."""
-    # a crash between the swap's renames may have left the previous
-    # base orphaned at base.__merge_old__; restore it BEFORE folding,
-    # or the fold reads a log-only view and the partition cleanup
-    # below makes the loss permanent (ADVICE r6)
-    from ..sources.delta_merge import recover_swap_orphan
-
-    recover_swap_orphan(spark, f"{root}/base")
-    consumed = _list_log_partitions(spark, root)
-    if not consumed:
-        return 0
-    snap = read_cdc_snapshot(
-        spark,
-        root,
-        key,
-        payload_cols,
-        keep_seq=True,
-        keep_tombstones=True,
-    )
-    fs, jvm = _fs(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    base = f"{root}/base"
-    if fs.exists(hpath(base)):
-        from ..sources.delta_merge import _swap_rewrite
-
-        _swap_rewrite(spark, base, snap)
-    else:
-        tmp = base + ".__compact_tmp__"
-        if fs.exists(hpath(tmp)):
-            fs.delete(hpath(tmp), True)
-        snap.write.mode("overwrite").parquet(tmp)
-        if not fs.rename(hpath(tmp), hpath(base)):
-            raise RuntimeError(f"compaction: could not move {tmp} into place")
-    for name in consumed:
-        fs.delete(hpath(f"{root}/log/{name}"), True)
-    return len(consumed)
-
-
-# --- snapshot-log-backed variant (VERDICT r11 item 4, r12: the CDC
-# view was the last funnel on raw batch_id partitions) ------------------
 
 
 def cdc_snapshot_writer(
@@ -233,25 +62,20 @@ def cdc_snapshot_writer(
     op_col: str,
     payload_cols: list[str],
 ) -> Callable[[DataFrame, int], None]:
-    """cdc_log_batch_writer with the per-batch winner sets as a
-    SNAPSHOT TABLE (``{root}/winners_log`` + ``{root}/winners_data``,
-    sources/snapshots.snapshot_append_writer) — the DEFAULT going
-    forward; the partition twin stays as the compaction-comparison
-    baseline. One exactly-once mechanism (marker-last atomic commits
-    with the batch_id replay guard) replaces the partition-overwrite
-    convention, and the view history gains time travel / WAP /
-    maintain() small-file compaction for free. Snapshot semantics are
-    IDENTICAL (the global max-struct collapse runs at read time, so
-    out-of-order delivery across batches still loses by
-    construction) — pytest-locked by a twin run.
+    """foreachBatch body: collapse this micro-batch's changes per key
+    and append the winners to the ``{root}/winners_log`` snapshot
+    table (module docstring: replay-guarded, marker-last). Negative
+    sequence numbers are rejected in-plan (they would collide with
+    the base sentinel)."""
+    from ..sources.snapshots import snapshot_append_writer
 
-    Maintenance splits in two, each bounded: maintain() bin-packs
-    small FILES without touching rows; ``compact_cdc_snapshot`` is
-    the LSM fold (row-level GC of overwritten winners) as a COW
-    rewrite commit."""
-    winners_w = _winners_appender(root)
+    winners_w = snapshot_append_writer(
+        f"{root}/winners_log", f"{root}/winners_data", []
+    )
 
     def write_batch(changes: DataFrame, batch_id: int) -> None:
+        # the guard REPLACES the seq value (a dropped side column's
+        # raise_error would be pruned as dead code)
         guarded = changes.withColumn(
             seq_col,
             F.when(F.col(seq_col) >= 0, F.col(seq_col)).otherwise(
@@ -269,15 +93,6 @@ def cdc_snapshot_writer(
     return write_batch
 
 
-def _winners_appender(root: str):
-    """The winners-log appender (lazy import seam)."""
-    from ..sources.snapshots import snapshot_append_writer
-
-    return snapshot_append_writer(
-        f"{root}/winners_log", f"{root}/winners_data", []
-    )
-
-
 def read_cdc_snapshot_log(
     spark: SparkSession,
     root: str,
@@ -288,15 +103,26 @@ def read_cdc_snapshot_log(
     keep_tombstones: bool = False,
     version: int | None = None,
 ) -> DataFrame:
-    """read_cdc_snapshot for the snapshot-backed layout: the latest
-    committed winners table (or ``version`` — the view state AS OF
-    any commit is one pin away) + an optional external base, one
-    global collapse, 'D' winners dropped unless kept. External-base
-    and keep_* semantics match read_cdc_snapshot exactly."""
-    from ..sources.snapshots import read_snapshot
+    """The materialized view: (key, payload...) of the latest
+    surviving state per key — identical semantics to
+    operators/cdc.apply_changes, robust to out-of-order and duplicate
+    delivery across batches. Reads the latest committed winners table
+    (or ``version`` — the view AS OF any commit is one pin away) plus
+    an optional external ``base``, one global collapse, 'D' winners
+    dropped unless kept.
 
-    winners = read_snapshot(spark, f"{root}/winners_log", version=version)
-    parts = [winners.select(key, "__seq", "__op", *payload_cols)]
+    An external ``base`` with __seq/__op columns re-enters at those
+    recorded values (a materialized ``keep_seq`` view used as the
+    next base); otherwise its rows enter at seq=BASE_SEQ/op='U' and
+    lose to any real change. ``keep_seq``/``keep_tombstones`` expose
+    the compaction form: winning __seq kept, 'D' winners retained."""
+    from ..sources.snapshots import read_snapshot, snapshot_versions
+
+    log = f"{root}/winners_log"
+    parts: list[DataFrame] = []
+    if version is not None or snapshot_versions(spark, log):
+        winners = read_snapshot(spark, log, version=version)
+        parts.append(winners.select(key, "__seq", "__op", *payload_cols))
     if base is not None:
         base_cols = set(base.columns)
         base_seq = (
@@ -311,6 +137,8 @@ def read_cdc_snapshot_log(
                 *payload_cols,
             )
         )
+    if not parts:
+        raise ValueError("read_cdc_snapshot_log: no log yet and no base given")
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)
@@ -381,76 +209,3 @@ def compact_cdc_snapshot(
     return commit_snapshot(
         spark, log, manifest, batch_id=latest_committed_batch(spark, log)
     )
-
-
-def read_cdc_snapshot(
-    spark: SparkSession,
-    root: str,
-    key: str,
-    payload_cols: list[str],
-    base: DataFrame | None = None,
-    keep_seq: bool = False,
-    keep_tombstones: bool = False,
-) -> DataFrame:
-    """Current snapshot from the managed compacted base (if
-    ``{root}/base`` exists) + the committed log (+ optional external
-    base): (key, payload...) of the latest surviving state per key —
-    identical semantics to operators/cdc.apply_changes, robust to
-    out-of-order and duplicate delivery across batches.
-
-    An external ``base`` with __seq/__op columns re-enters at those
-    recorded values (the pre-r6 manual compaction form); otherwise
-    its rows enter at seq=BASE_SEQ/op='U' and lose to any real
-    change. ``keep_seq``/``keep_tombstones`` expose the compaction
-    form: winning __seq kept, 'D' winners retained."""
-    parts: list[DataFrame] = []
-    try:
-        log = (
-            spark.read.option("basePath", f"{root}/log")
-            .parquet(f"{root}/log")
-            .drop("batch_id")
-        )
-        parts.append(log.select(key, "__seq", "__op", *payload_cols))
-    except AnalysisException:
-        pass
-    try:
-        # a missing base with a base.__merge_old__ sibling is a
-        # crashed swap, not an empty base — restore before the
-        # AnalysisException fallback treats it as log-only
-        # (ADVICE r6: serving that view, then compacting, loses
-        # every previously-compacted key permanently)
-        from ..sources.delta_merge import recover_swap_orphan
-
-        recover_swap_orphan(spark, f"{root}/base")
-        managed = spark.read.parquet(f"{root}/base")
-        parts.append(managed.select(key, "__seq", "__op", *payload_cols))
-    except AnalysisException:
-        pass
-    if base is not None:
-        base_cols = set(base.columns)
-        base_seq = (
-            F.col("__seq") if "__seq" in base_cols else F.lit(BASE_SEQ)
-        ).cast("long")
-        base_op = F.col("__op") if "__op" in base_cols else F.lit("U")
-        parts.append(
-            base.select(
-                key,
-                base_seq.alias("__seq"),
-                base_op.alias("__op"),
-                *payload_cols,
-            )
-        )
-    if not parts:
-        raise ValueError("read_cdc_snapshot: no log yet and no base given")
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    snap = collapse_log(union, key, "__seq", "__op", payload_cols)
-    if not keep_tombstones:
-        snap = snap.filter(F.col("__op") != "D")
-    keep = [key, *payload_cols]
-    if keep_seq:
-        keep.append("__seq")
-    if keep_tombstones:
-        keep.append("__op")
-    return snap.select(*keep)

@@ -1,7 +1,9 @@
-"""Streaming media-asset gate — the MULTIMODAL twin of the text
-curation funnel (pipeline.curation_batch_writer): a micro-batch
-stream of opaque media payloads is split by kind, run through the
-batch layer's own tier gates (never re-implemented here), and
+"""Streaming media-asset gate — the gate stage of the multimodal
+curation funnel (mediadedup.media_curation_snapshot_writer composes
+it with the near-dup screen, the media counterpart of the text
+funnel pipeline.curation_batch_writer): a micro-batch stream of
+opaque media payloads is split by kind, run through the batch
+layer's own tier gates (never re-implemented here), and
 written as the same two-sided audit the release builder produces —
 every asset of every batch lands in exactly one of drops/manifest,
 with the gate verdict as the drop reason.

@@ -1,7 +1,7 @@
-"""Streaming media near-dup funnel — the last missing member of the
-funnel family (text: pipeline.dedup_batch_writer screens documents
+"""Streaming media near-dup funnel — the media member of the funnel
+family (text: pipeline.dedup_snapshot_writer screens documents
 against accepted minhash history; vectors: vectors.py screens
-embeddings against the accepted sig_index; this module screens
+embeddings against the accepted signature index; this module screens
 arriving MEDIA assets against the accepted perceptual-fingerprint
 history). Reference parity: none — LLM-data-pipeline extension
 (SURVEY.md §2 scale extensions; VERDICT r9 item 2).
@@ -18,16 +18,21 @@ history probe is a single (band_idx, band_val)-keyed equi join —
 history is never self-paired, so per-batch cost is
 arrival × bucket occupancy, the incremental-dedup asymptote.
 
-Per micro-batch N (the vectors.py resolution protocol, media form)::
+Layout (the vectors.py resolution protocol, media form)::
 
-    {root}/rejected/batch_id=N   (asset_id, kind, dup_of, hamming, scope)
-    {root}/accepted/batch_id=N   (asset_id, kind)
-    {root}/fp_index/batch_id=N   (asset_id, kind, fp_seq, decoded, band0..3)
+    {root}/rejected/batch_id=N   audit (asset_id, kind, dup_of,
+                                 hamming, scope)
+    {root}/accepted/batch_id=N   audit (asset_id, kind)
+    {root}/fp_log + fp_data      snapshot table: the fp index
+                                 (asset_id, kind, fp_seq, decoded,
+                                 band0..3)
+
+Per micro-batch N:
 
 1. same-asset_id re-collections collapse deterministically (min
    (kind, payload) wins); unknown/NULL kinds reject up front with
    ``scope='unknown_kind'`` — rejects audited, never silent;
-2. history near-dups: batch fingerprints probe ``{root}/fp_index``
+2. history near-dups: batch fingerprints probe the fp index
    (ACCEPTED assets only — a rejected near-copy can never evict
    future arrivals) by one band-keyed equi join + exact Hamming
    verify; best owner per asset = min (hamming, owner id);
@@ -42,16 +47,16 @@ Per micro-batch N (the vectors.py resolution protocol, media form)::
 4. history owns on overlap; a batch owner not itself
    history-rejected is accepted, so ``dup_of`` chains terminate in
    the accepted corpus in ≤ 2 hops, never dangling;
-5. survivors land in ``accepted`` and their fingerprints in
-   ``fp_index``; every write is a batchId-keyed partition overwrite
-   (crash-replay of batch N rewrites byte-equivalent partitions),
-   every history read prunes to ``batch_id < N``, and the index
-   folds into a compacted base on the shared cadence
-   (pipeline.compact_history).
+5. survivors land in ``accepted`` and their fingerprints in the fp
+   index.
 
-Exactly-once + compaction inherit pipeline.py's proofs verbatim —
-this module adds no new history mechanics, only the media
-fingerprint geometry.
+Exactly-once: the audits are batchId-keyed partition overwrites
+(crash-replay of batch N rewrites byte-equivalent partitions); the fp
+index is a snapshot_append_writer table (marker-last atomic commits,
+a replay after the marker skips), read as of the newest commit
+before batch N (snapshots.read_table_before_batch), so a replay never
+screens a batch against its own fingerprints. The index gets time
+travel and maintain() compaction from the log.
 
 10x probe (sf0.1 docs replicated 10x, tools/scale_probe.py, medians
 of 3): q_media_dedup 4.79 -> 23.98 s for 10x assets AND 10x output
@@ -60,11 +65,11 @@ row; the Arrow fingerprint kernel and the banded probes scale with
 arrivals while rep-level candidates stay bounded by the class count
 (the audiodedup/video-bridge argument, funnel form).
 
-``media_curation_batch_writer`` composes the quality gate
+``media_curation_snapshot_writer`` composes the quality gate
 (media.gate_media_batch) IN FRONT of this screen — gate rejects are
 audited with their verdict and never fingerprinted — giving the full
-gate→dedup funnel, the complete multimodal twin of the text curation
-writer (pipeline.curation_batch_writer).
+gate→dedup funnel, the complete multimodal counterpart of the text
+curation writer (pipeline.curation_batch_writer).
 """
 
 from __future__ import annotations
@@ -81,7 +86,6 @@ from ..operators.multimodal import (
     DHASH_MAX_HAMMING,
 )
 from ..registry import query
-from .pipeline import HIST_COMPACT_EVERY, _maybe_compact_history, _read_history
 
 #: composite fingerprint-row key: fid = asset_id * FRAME_KEY + fp_seq
 #: (fp_seq = sampled-frame index for video, 0 for image/audio). The
@@ -385,9 +389,9 @@ def _explode_bands(fps: DataFrame, prefix: str) -> DataFrame:
 
 
 def _fp_snapshot_io(root: str):
-    """(read_hist, write_fps) backing the fp index with a snapshot
-    table at ``{root}/fp_log`` + ``{root}/fp_data`` — the seam both
-    snapshot-backed media writers share."""
+    """(read_hist, write_fps) for the fp index snapshot table at
+    ``{root}/fp_log`` + ``{root}/fp_data`` — shared by both media
+    writers."""
     from ..sources.snapshots import (
         read_table_before_batch,
         snapshot_append_writer,
@@ -402,67 +406,30 @@ def _fp_snapshot_io(root: str):
     return read_hist, fp_w
 
 
+def _collapse_asset_ids(batch: DataFrame) -> DataFrame:
+    """Same-asset_id re-collections collapse deterministically (min
+    (kind, payload) wins)."""
+    idw = Window.partitionBy("asset_id").orderBy("kind", "payload")
+    return (
+        batch.withColumn("__rn", F.row_number().over(idw))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def media_dedup_snapshot_writer(
     root: str,
     max_hamming: int = DHASH_MAX_HAMMING,
     frame_every_n: int = MEDIA_FRAME_EVERY_N,
 ) -> Callable[[DataFrame, int], None]:
-    """media_dedup_batch_writer with the fp index as a SNAPSHOT TABLE
-    (``{root}/fp_log`` + ``{root}/fp_data``) — the DEFAULT going
-    forward (VERDICT r11 item 4; the partition twin stays as the
-    compaction-comparison baseline): marker-last atomic commits with
-    the batch_id replay guard replace the ``__hist_base__`` fold, and
-    the index gains time travel / maintain() compaction for free.
-    rejected/accepted stay plain batchId-keyed audit partitions.
-    Screening decisions are IDENTICAL to the partition-backed writer
-    — pytest-locked by a twin run."""
-    read_hist, fp_w = _fp_snapshot_io(root)
-    return media_dedup_batch_writer(
-        root, max_hamming, frame_every_n, compact_every=None,
-        read_hist=read_hist, write_fps=fp_w,
-    )
-
-
-def media_curation_snapshot_writer(
-    root: str,
-    max_hamming: int = DHASH_MAX_HAMMING,
-    frame_every_n: int = MEDIA_FRAME_EVERY_N,
-) -> Callable[[DataFrame, int], None]:
-    """media_curation_batch_writer on the snapshot-backed fp index —
-    same unification as media_dedup_snapshot_writer (one
-    exactly-once mechanism, AS-OF history, maintain() for free)."""
-    read_hist, fp_w = _fp_snapshot_io(root)
-    return media_curation_batch_writer(
-        root, max_hamming, frame_every_n, compact_every=None,
-        read_hist=read_hist, write_fps=fp_w,
-    )
-
-
-def media_dedup_batch_writer(
-    root: str,
-    max_hamming: int = DHASH_MAX_HAMMING,
-    frame_every_n: int = MEDIA_FRAME_EVERY_N,
-    compact_every: int | None = HIST_COMPACT_EVERY,
-    read_hist: Callable | None = None,
-    write_fps: Callable[[DataFrame, int], None] | None = None,
-) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for a MEDIA stream of (asset_id, kind,
     payload) rows — the module docstring's five-step protocol.
-    Layout, exactly-once and compaction arguments up top.
-    ``read_hist``/``write_fps`` are the snapshot-backing seam
-    (media_dedup_snapshot_writer supplies them); left None, the fp
-    index lives in raw batchId partitions with the compaction fold."""
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    Layout and exactly-once arguments up top."""
+    read_hist, write_fps = _fp_snapshot_io(root)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        idw = Window.partitionBy("asset_id").orderBy("kind", "payload")
-        batch_rows = (
-            batch.withColumn("__rn", F.row_number().over(idw))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        batch_rows = _collapse_asset_ids(batch)
         # unknown/NULL kinds reject up front (the gate's r9 lesson:
         # NULL-safe predicate, audited as kind='unknown')
         is_media = F.col("kind").isin("image", "audio", "video")
@@ -478,11 +445,9 @@ def media_dedup_batch_writer(
         # one Arrow fingerprint pass, reused by the pair stage, the
         # history probe and the index write
         fps = media_fingerprints(media_rows, frame_every_n).localCheckpoint()
-        if read_hist is None:
-            hist = _read_history(spark, root, "fp_index", batch_id)
-        else:
-            hist = read_hist(spark, batch_id)
-        rejected = media_dup_rejects(fps, hist, max_hamming).unionByName(misrouted)
+        rejected = media_dup_rejects(
+            fps, read_hist(spark, batch_id), max_hamming
+        ).unionByName(misrouted)
         rejected.write.mode("overwrite").parquet(
             f"{root}/rejected/batch_id={batch_id}"
         )
@@ -495,29 +460,19 @@ def media_dedup_batch_writer(
         ).write.mode("overwrite").parquet(f"{root}/accepted/batch_id={batch_id}")
         # only ACCEPTED fingerprints are indexed — a rejected
         # near-copy can never evict future arrivals
-        accepted_fps = fps.join(rej, "asset_id", "left_anti").select(*_FP_COLS)
-        if write_fps is None:
-            accepted_fps.write.mode("overwrite").parquet(
-                f"{root}/fp_index/batch_id={batch_id}"
-            )
-            _maybe_compact_history(
-                spark, root, "fp_index", batch_id, compact_every
-            )
-        else:
-            write_fps(accepted_fps, batch_id)
+        write_fps(
+            fps.join(rej, "asset_id", "left_anti").select(*_FP_COLS), batch_id
+        )
 
     return write_batch
 
 
-def media_curation_batch_writer(
+def media_curation_snapshot_writer(
     root: str,
     max_hamming: int = DHASH_MAX_HAMMING,
     frame_every_n: int = MEDIA_FRAME_EVERY_N,
-    compact_every: int | None = HIST_COMPACT_EVERY,
-    read_hist: Callable | None = None,
-    write_fps: Callable[[DataFrame, int], None] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The FULL multimodal twin of the text curation funnel
+    """The FULL multimodal counterpart of the text curation funnel
     (pipeline.curation_batch_writer): per micro-batch, quality gate
     THEN near-dup screen, one unified audit. Stages are the two
     proven writers' own pieces, composed:
@@ -530,14 +485,15 @@ def media_curation_batch_writer(
        fingerprint pass and never enters the index; near-dup rejects
        audited with ``reason='near_duplicate'`` + owner/hamming/scope;
     3. survivors → ``{root}/media_assets/batch_id=N``, their
-       fingerprints → ``{root}/fp_index/batch_id=N`` (accepted only),
+       fingerprints → the fp index snapshot table (accepted only),
        all rejects → ``{root}/media_drops/batch_id=N``
        (asset_id, kind, reason, dup_of, hamming, scope).
 
-    Exactly-once/compaction: identical to media_dedup_batch_writer
-    (batchId-keyed overwrites, history pruned to batch_id < N,
-    shared compaction cadence). Closure: every asset of every batch
-    lands in exactly one of drops/assets.
+    Exactly-once: identical to media_dedup_snapshot_writer (audits
+    are batchId-keyed overwrites, the fp index a replay-guarded
+    snapshot append, history read as of the newest commit before
+    batch N). Closure: every asset of every batch lands in exactly
+    one of drops/assets.
 
     Cost note: the gate's stats kernels and the fingerprint kernels
     are separate Arrow passes, so gate-PASSED payloads decode twice
@@ -547,17 +503,11 @@ def media_curation_batch_writer(
     composable, like the batch release builder does."""
     from .media import gate_media_batch
 
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    read_hist, write_fps = _fp_snapshot_io(root)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        idw = Window.partitionBy("asset_id").orderBy("kind", "payload")
-        batch_rows = (
-            batch.withColumn("__rn", F.row_number().over(idw))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        batch_rows = _collapse_asset_ids(batch)
         gated = gate_media_batch(batch_rows).localCheckpoint()
         gate_drops = gated.filter(F.col("reason").isNotNull()).select(
             "asset_id",
@@ -571,11 +521,9 @@ def media_curation_batch_writer(
             gated.filter(F.col("reason").isNull()).select("asset_id"), "asset_id"
         )
         fps = media_fingerprints(passed, frame_every_n).localCheckpoint()
-        if read_hist is None:
-            hist = _read_history(spark, root, "fp_index", batch_id)
-        else:
-            hist = read_hist(spark, batch_id)
-        dup_drops = media_dup_rejects(fps, hist, max_hamming).select(
+        dup_drops = media_dup_rejects(
+            fps, read_hist(spark, batch_id), max_hamming
+        ).select(
             "asset_id",
             "kind",
             F.lit("near_duplicate").alias("reason"),
@@ -595,16 +543,9 @@ def media_curation_batch_writer(
         ).write.mode("overwrite").parquet(
             f"{root}/media_assets/batch_id={batch_id}"
         )
-        accepted_fps = fps.join(rej, "asset_id", "left_anti").select(*_FP_COLS)
-        if write_fps is None:
-            accepted_fps.write.mode("overwrite").parquet(
-                f"{root}/fp_index/batch_id={batch_id}"
-            )
-            _maybe_compact_history(
-                spark, root, "fp_index", batch_id, compact_every
-            )
-        else:
-            write_fps(accepted_fps, batch_id)
+        write_fps(
+            fps.join(rej, "asset_id", "left_anti").select(*_FP_COLS), batch_id
+        )
 
     return write_batch
 
@@ -615,26 +556,16 @@ def start_media_dedup_pipeline(
     root: str,
     checkpoint: str,
     trigger: str | None = None,
-    backend: str = "snapshot",
 ):
     """Wire the funnel: a parquet file source of (asset_id, kind,
-    payload) rows → per-micro-batch screen + audit writes.
-    ``trigger=None`` → availableNow. ``backend``: 'snapshot'
-    (DEFAULT — the fp index as a snapshot table,
-    media_dedup_snapshot_writer) or 'partitions' (the raw batch_id
-    twin, the compaction-comparison baseline)."""
-    if backend == "snapshot":
-        batch_writer = media_dedup_snapshot_writer(root)
-    elif backend == "partitions":
-        batch_writer = media_dedup_batch_writer(root)
-    else:
-        raise ValueError(f"unknown backend {backend!r}")
+    payload) rows → per-micro-batch screen + audit writes
+    (media_dedup_snapshot_writer). ``trigger=None`` → availableNow."""
     schema = "asset_id long, kind string, payload binary"
     writer = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
-        .writeStream.foreachBatch(batch_writer)
+        .writeStream.foreachBatch(media_dedup_snapshot_writer(root))
         .option("checkpointLocation", checkpoint)
     )
     if trigger is None:

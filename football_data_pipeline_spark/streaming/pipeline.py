@@ -28,11 +28,20 @@ Delivery semantics: exactly-once end-to-end on plain Parquet.
   nests inside it, so time-range pruning still works). A
   transactional format (Delta/Iceberg) makes this implicit; this is
   the portable equivalent.
+
+The document funnels below (incremental dedup, curation, substring
+trim) keep the history they probe in a snapshot table
+(sources/snapshots.snapshot_append_writer: marker-last atomic commits
+with a batch_id replay guard) and read it as of the newest commit
+before the running batch (read_table_before_batch). Their per-batch
+audits (classification, rejected, trimmed) are plain batchId-keyed
+partition overwrites that nothing reads back as history.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -219,222 +228,51 @@ def dedup_stream(events: DataFrame, id_cols: list[str], ts_col: str = "ts",
     return events.dropDuplicates(id_cols)
 
 
+@contextmanager
+def collapsed_batch(batch: DataFrame) -> Iterator[DataFrame]:
+    """The within-batch collapse every document funnel runs before its
+    history probe: EXACT copies by canonical fingerprint (min doc_id
+    wins), then NEAR copies by the same minhash-band + Jaccard-verify
+    + min-per-component pass the batch path uses
+    (dedup.batch_near_dup_drops) — so two copies of a document
+    arriving in one micro-batch cannot both be accepted, whether or
+    not they are byte-identical. The near pass runs over one
+    micro-batch, so its component loop is bounded by arrival rate,
+    not corpus size.
 
-#: fold the history dirs into their compacted base once this many
-#: live batch_id partitions accumulate (the LSM level-0 cadence the
-#: CDC stream uses; VERDICT r6 #5's lesson applied to the OTHER
-#: unbounded-partition readers — accepted/gram_index/sig_index grew
-#: one directory per batch forever, so every history probe listed
-#: and unioned the whole stream's lifetime of small files)
-HIST_COMPACT_EVERY = 32
+    Yields the collapsed rows, cached. Both cached frames are
+    released on exit, also when the body raises, so a failed batch
+    leaves nothing pinned in the session."""
+    from pyspark.sql import functions as F
 
+    from ..operators.dedup import batch_near_dup_drops, fingerprint
 
-def _hist_base(root: str, sub: str) -> str:
-    return f"{root}/{sub}.__hist_base__"
-
-
-def _hist_fs(spark, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    return jvm, hpath, hpath(path).getFileSystem(hconf)
-
-
-def _write_base_max(spark, base_path: str, base_max: int) -> None:
-    """Persist the base's max batch_id in a ``_base_max`` marker file
-    INSIDE the base directory (ADVICE r7: the reader ran a
-    max-aggregate Spark job on EVERY micro-batch once a base existed
-    — a per-batch scan growing with base size). Underscore-prefixed,
-    so Spark's parquet FileIndex ignores it. Living inside the dir
-    makes a STALE marker structurally impossible: _swap_rewrite
-    replaces the whole directory, so the marker dies with the data it
-    describes; the only crash state is marker-MISSING (written after
-    the swap), which the reader heals via the old aggregate."""
-    jvm, hpath, fs = _hist_fs(spark, base_path)
-    out = fs.create(hpath(f"{base_path}/_base_max"), True)
+    w = Window.partitionBy("__fp").orderBy("doc_id")
+    # cache the exact-collapsed batch BEFORE the near-dup pass: its
+    # lineage (fingerprint projection + the __fp window shuffle) is
+    # otherwise re-evaluated ~3× — both sides of the near pass's band
+    # self-join plus the outer anti-join below
+    collapsed = (
+        batch.withColumn("__fp", fingerprint(F.col("text")))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__fp", "__rn")
+        .cache()
+    )
+    rows = None
     try:
-        out.write(bytearray(str(int(base_max)).encode("ascii")))
+        rows = collapsed.join(
+            batch_near_dup_drops(collapsed), "doc_id", "left_anti"
+        ).cache()
+        yield rows
     finally:
-        out.close()
+        if rows is not None:
+            rows.unpersist()
+        collapsed.unpersist()
 
 
-def _read_base_max(spark, base_path: str) -> int | None:
-    """The marker's value, or None when absent/unparseable (first
-    write crashed mid-stream) — caller falls back to the aggregate."""
-    jvm, hpath, fs = _hist_fs(spark, base_path)
-    marker = hpath(f"{base_path}/_base_max")
-    if not fs.exists(marker):
-        return None
-    stream = fs.open(marker)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        line = reader.readLine()
-    finally:
-        stream.close()
-    try:
-        return int(line)
-    except (TypeError, ValueError):
-        return None
-
-
-def _base_max_of(spark, base, base_path: str, heal: bool = True) -> int:
-    """max(batch_id) of the compacted base: one tiny marker-file read
-    on the steady path; the Spark aggregate only when the marker is
-    missing (legacy base / crashed marker write), after which the
-    marker is rewritten so the next batch is cheap again."""
-    from pyspark.sql import functions as F
-
-    got = _read_base_max(spark, base_path)
-    if got is not None:
-        return got
-    agg = base.agg(F.max("batch_id")).collect()[0][0]
-    base_max = -1 if agg is None else int(agg)
-    if heal:
-        _write_base_max(spark, base_path, base_max)
-    return base_max
-
-
-def _read_history(spark, root: str, sub: str, batch_id: int):
-    """Batch-pruned history read shared by the incremental dedup,
-    substring-trim and vector-ingest writers: rows of ``{root}/{sub}``
-    from batches BEFORE ``batch_id`` (a crash-restart re-running
-    batch N must never see its own partial output as history), or
-    None when no history exists yet (first batch).
-
-    History lives in TWO places once compaction has run: the live
-    ``batch_id=N`` partition dirs and the compacted base (which keeps
-    ``batch_id`` as an ordinary column, so the replay pruning applies
-    to it unchanged). Live partitions at or below the base's max
-    batch_id are EXCLUDED — after a crash between the base swap and
-    the partition cleanup both copies exist, and this predicate makes
-    the reader correct at every intermediate state (the bounded
-    base-max lookup is one scalar aggregate)."""
-    from pyspark.sql import functions as F
-
-    from ..sources.delta_merge import recover_swap_orphan
-
-    base_path = _hist_base(root, sub)
-    recover_swap_orphan(spark, base_path)  # crashed compaction swap
-    parts, base_max = [], -1
-    try:
-        base = spark.read.parquet(base_path)
-        base_max = _base_max_of(spark, base, base_path)
-        parts.append(base.filter(F.col("batch_id") < batch_id))
-    except AnalysisException:
-        pass
-    try:
-        parts.append(
-            spark.read.option("basePath", f"{root}/{sub}")
-            .parquet(f"{root}/{sub}")
-            .filter(
-                (F.col("batch_id") < batch_id)
-                & (F.col("batch_id") > base_max)
-            )
-        )
-    except AnalysisException:
-        pass
-    if not parts:
-        return None
-    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return out.drop("batch_id")
-
-
-def _list_batch_partitions(spark, root: str, sub: str) -> list[int]:
-    """batch_id values of the committed live partition dirs."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    path = hpath(f"{root}/{sub}")
-    fs = path.getFileSystem(hconf)
-    if not fs.exists(path):
-        return []
-    out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def compact_history(spark, root: str, sub: str, upto_exclusive: int) -> int:
-    """Fold the live ``batch_id < upto_exclusive`` partitions of
-    ``{root}/{sub}`` into the compacted base (batch_id preserved as a
-    column), then delete exactly the covered partition dirs. Returns
-    how many partitions were folded.
-
-    ``upto_exclusive`` must be the CURRENT batch id: the one batch
-    that can legally be replayed after a crash is the in-flight one,
-    so it must stay a live partition the reader can prune by
-    ``batch_id < N``; everything below it is checkpoint-committed and
-    safe to fold. Idempotent: the fold takes only partitions above
-    the base's max batch_id, and a crash between the swap and the
-    cleanup leaves duplicates that the reader's base-max predicate
-    already hides (and that the next call deletes)."""
-    from pyspark.sql import functions as F
-
-    from ..sources.delta_merge import _swap_rewrite, recover_swap_orphan
-
-    base_path = _hist_base(root, sub)
-    recover_swap_orphan(spark, base_path)
-    names = _list_batch_partitions(spark, root, sub)
-    base, base_max = None, -1
-    try:
-        base = spark.read.parquet(base_path)
-        base_max = _base_max_of(spark, base, base_path, heal=False)
-    except AnalysisException:
-        pass
-    fold = [n for n in names if base_max < n < upto_exclusive]
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(f"{root}/{sub}").getFileSystem(hconf)
-    if fold:
-        live = (
-            spark.read.option("basePath", f"{root}/{sub}")
-            .parquet(f"{root}/{sub}")
-            .filter(
-                (F.col("batch_id") > base_max)
-                & (F.col("batch_id") < upto_exclusive)
-            )
-        )
-        if base is not None:
-            _swap_rewrite(spark, base_path, base.unionByName(live))
-        else:
-            tmp = base_path + ".__compact_tmp__"
-            if fs.exists(hpath(tmp)):
-                fs.delete(hpath(tmp), True)
-            live.write.mode("overwrite").parquet(tmp)
-            if not fs.rename(hpath(tmp), hpath(base_path)):
-                raise RuntimeError(
-                    f"history compaction: could not move {tmp} into place"
-                )
-        # marker AFTER the swap: the rename removed any old marker
-        # with its directory, so a crash right here leaves the marker
-        # missing (reader falls back to the aggregate and heals) —
-        # never stale
-        _write_base_max(spark, base_path, max(fold))
-    # delete every live dir the base now covers — including leftovers
-    # from a previous crashed cleanup (n <= old base_max)
-    for n in names:
-        if n < upto_exclusive and (n in fold or n <= base_max):
-            fs.delete(hpath(f"{root}/{sub}/batch_id={n}"), True)
-    return len(fold)
-
-
-def _maybe_compact_history(
-    spark, root: str, sub: str, batch_id: int, compact_every: int | None
-) -> None:
-    """Post-write hook for the stream writers: fold once the live
-    partition count reaches the cadence."""
-    if compact_every is None:
-        return
-    if len(_list_batch_partitions(spark, root, sub)) >= compact_every:
-        compact_history(spark, root, sub, upto_exclusive=batch_id)
-
-def dedup_batch_writer(
-    corpus_root: str, compact_every: int | None = HIST_COMPACT_EVERY
+def dedup_snapshot_writer(
+    corpus_root: str,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for a DOCUMENT stream: classify each
     micro-batch against the accumulated accepted corpus
@@ -442,105 +280,23 @@ def dedup_batch_writer(
     then banded near probe), persist the classification, and append
     only unique documents to the corpus. The streaming form of
     incremental dedup: history grows batch by batch and is probed,
-    never re-paired with itself.
+    never re-paired with itself. Within-batch copies collapse first
+    (collapsed_batch).
 
-    Exactly-once: both outputs are batchId-keyed partition
-    overwrites, and the history read PRUNES to ``batch_id < this``
-    so a crash-restart re-running batch N never sees its own partial
-    output as 'history' (which would classify the whole batch as
-    duplicate of itself).
+    Layout: the accepted corpus is a snapshot table
+    (``{root}/accepted_log`` + ``{root}/accepted_data``,
+    sources/snapshots.snapshot_append_writer; read it with
+    read_corpus_snapshot), the classification a plain batchId-keyed
+    audit partition ``{root}/classification/batch_id=N``.
 
-    Within-batch duplicates are collapsed first — EXACT copies by
-    canonical fingerprint (min doc_id wins), then NEAR copies by the
-    same minhash-band + Jaccard-verify + min-per-component pass the
-    batch path uses (dedup.batch_near_dup_drops) — so two copies of
-    a document arriving in one micro-batch cannot both be accepted,
-    whether or not they are byte-identical. The near pass runs over
-    one micro-batch, so its component loop is bounded by arrival
-    rate, not corpus size.
-
-    ``compact_every``: once the accepted-history dirs reach this many
-    live partitions, they fold into the compacted base (ON by
-    default; the unbounded one-dir-per-batch growth was the same
-    read-amplification CDC fixed in r6/r7 — see compact_history).
-    """
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        _dedup_one_batch(batch, batch_id, corpus_root)
-        _maybe_compact_history(
-            batch.sparkSession, corpus_root, "accepted", batch_id, compact_every
-        )
-
-    return write_batch
-
-
-def _dedup_one_batch(batch: DataFrame, batch_id: int, corpus_root: str) -> None:
-    """The dedup stage shared by dedup_batch_writer and
-    curation_batch_writer — see dedup_batch_writer's docstring for
-    semantics and the exactly-once argument."""
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import batch_near_dup_drops, dedup_against_corpus, fingerprint
-
-    spark = batch.sparkSession
-    fp = fingerprint(F.col("text"))
-    w = Window.partitionBy("__fp").orderBy("doc_id")
-    # cache the exact-collapsed batch BEFORE the near-dup pass: its
-    # lineage (fingerprint projection + the __fp window shuffle) is
-    # otherwise re-evaluated ~3× — both sides of the near pass's band
-    # self-join plus the outer anti-join below
-    collapsed = (
-        batch.withColumn("__fp", fp)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__fp", "__rn")
-        .cache()
-    )
-    batch = collapsed.join(
-        batch_near_dup_drops(collapsed), "doc_id", "left_anti"
-    ).cache()
-    try:
-        history = _read_history(spark, corpus_root, "accepted", batch_id)
-        if history is None:
-            history = spark.createDataFrame([], batch.schema)
-        classified = dedup_against_corpus(batch, history)
-        classified.write.mode("overwrite").parquet(
-            f"{corpus_root}/classification/batch_id={batch_id}"
-        )
-        accepted = batch.join(
-            spark.read.parquet(
-                f"{corpus_root}/classification/batch_id={batch_id}"
-            )
-            .filter(F.col("dup_kind") == "unique")
-            .select("doc_id"),
-            "doc_id",
-        )
-        accepted.write.mode("overwrite").parquet(
-            f"{corpus_root}/accepted/batch_id={batch_id}"
-        )
-    finally:
-        batch.unpersist()
-        collapsed.unpersist()
-
-
-def dedup_snapshot_writer(
-    corpus_root: str,
-) -> Callable[[DataFrame, int], None]:
-    """dedup_batch_writer with the accepted corpus as a SNAPSHOT
-    TABLE (``{root}/accepted_log`` + ``{root}/accepted_data``,
-    sources/snapshots.snapshot_append_writer) instead of raw
-    batch_id partition overwrites + the __hist_base__ fold — the
-    base-funnel twin of supersede.keep_best_snapshot_writer,
-    completing the unification the keep-best funnel started: one
-    exactly-once mechanism (marker-last atomic commits), and the
-    corpus history gains time travel / WAP / maintain() compaction
-    for free. The probe's ``batch_id < N`` prune is
-    snapshots.read_table_before_batch (a replay can never see its
-    own commit as history); the classification stays a plain
-    batchId-keyed audit partition. Decisions are IDENTICAL to
-    dedup_batch_writer — pytest-locked by a twin run."""
+    Exactly-once: the probe reads the corpus as of the newest commit
+    BEFORE this batch (snapshots.read_table_before_batch), so a
+    crash-restart re-running batch N never sees its own commit as
+    history (which would classify the whole batch as duplicate of
+    itself); the classification overwrite recomputes identically
+    from the batch; the accepted append is a marker-last atomic
+    commit that a replay after the marker skips. The corpus history
+    gets time travel and maintain() compaction from the log."""
     from ..sources.snapshots import (
         read_table_before_batch,
         snapshot_append_writer,
@@ -553,46 +309,25 @@ def dedup_snapshot_writer(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        from ..operators.dedup import (
-            batch_near_dup_drops,
-            dedup_against_corpus,
-            fingerprint,
-        )
+        from ..operators.dedup import dedup_against_corpus
 
         spark = batch.sparkSession
-        w = Window.partitionBy("__fp").orderBy("doc_id")
-        collapsed = (
-            batch.withColumn("__fp", fingerprint(F.col("text")))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__fp", "__rn")
-            .cache()
-        )
-        rows = collapsed.join(
-            batch_near_dup_drops(collapsed), "doc_id", "left_anti"
-        ).cache()
-        try:
+        cls_path = f"{corpus_root}/classification/batch_id={batch_id}"
+        with collapsed_batch(batch) as rows:
             history = read_table_before_batch(
                 spark, f"{corpus_root}/accepted_log", batch_id
             )
             if history is None:
                 history = spark.createDataFrame([], rows.schema)
-            classified = dedup_against_corpus(rows, history)
-            classified.write.mode("overwrite").parquet(
-                f"{corpus_root}/classification/batch_id={batch_id}"
-            )
-            accepted = rows.join(
-                spark.read.parquet(
-                    f"{corpus_root}/classification/batch_id={batch_id}"
-                )
+            dedup_against_corpus(rows, history).write.mode(
+                "overwrite"
+            ).parquet(cls_path)
+            unique = (
+                spark.read.parquet(cls_path)
                 .filter(F.col("dup_kind") == "unique")
-                .select("doc_id"),
-                "doc_id",
+                .select("doc_id")
             )
-            acc_write(accepted, batch_id)
-        finally:
-            rows.unpersist()
-            collapsed.unpersist()
+            acc_write(rows.join(unique, "doc_id"), batch_id)
 
     return write_batch
 
@@ -607,7 +342,7 @@ def read_corpus_snapshot(spark: SparkSession, corpus_root: str) -> DataFrame:
 
 
 def curation_batch_writer(
-    corpus_root: str, compact_every: int | None = HIST_COMPACT_EVERY
+    corpus_root: str,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for the FULL curation funnel — the
     streaming form of the batch cleaning pass (prep.corpus_clean),
@@ -619,25 +354,23 @@ def curation_batch_writer(
        what it kept);
     2. PII redaction: ``redact.redact_pii`` rewrites survivor text
        in place (emails before phones; pure projection);
-    3. incremental dedup against the accepted corpus — the shared
-       stage above, so accepted output is exactly the dedup
-       pipeline's corpus layout and downstream consumers cannot tell
-       which writer produced it.
+    3. incremental dedup against the accepted corpus — the
+       dedup_snapshot_writer stage itself, so the accepted corpus is
+       that funnel's snapshot table (read it with
+       read_corpus_snapshot).
 
-    Exactly-once: every write (rejected, classification, accepted)
-    is a batchId-keyed partition overwrite, and the dedup history
-    read prunes to ``batch_id < this`` — a crash between ANY two
-    stage writes replays to the identical state because each stage
-    recomputes from the (deterministic) batch input, not from the
-    partial outputs.
+    Exactly-once: the rejected audit is a batchId-keyed partition
+    overwrite and the dedup stage carries dedup_snapshot_writer's
+    argument — a crash between ANY two stage writes replays to the
+    identical state because each stage recomputes from the
+    (deterministic) batch input, not from the partial outputs.
     """
     from pyspark.sql import functions as F
 
     from ..operators.quality import classify_quality
     from ..operators.redact import redact_pii
 
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    dedup = dedup_snapshot_writer(corpus_root)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         scored = classify_quality(batch).select("doc_id", "score", "keep")
@@ -669,10 +402,7 @@ def curation_batch_writer(
         if "n_chars" in survivors.columns:
             # redaction changes the text; keep the metadata honest
             cleaned = cleaned.withColumn("n_chars", F.length("text").cast("long"))
-        _dedup_one_batch(cleaned, batch_id, corpus_root)
-        _maybe_compact_history(
-            batch.sparkSession, corpus_root, "accepted", batch_id, compact_every
-        )
+        dedup(cleaned, batch_id)
 
     return write_batch
 
@@ -683,29 +413,18 @@ def start_dedup_pipeline(
     corpus_root: str,
     checkpoint: str,
     trigger: str | None = None,
-    backend: str = "snapshot",
 ):
     """Wire the streaming incremental-dedup ingest: a parquet file
     source of documents → per-micro-batch classification against the
-    accumulated accepted corpus. ``trigger=None`` → availableNow.
-    ``backend``: 'snapshot' (DEFAULT — the accepted corpus as a
-    snapshot table, dedup_snapshot_writer; read it with
-    read_corpus_snapshot) or 'partitions' (the raw batch_id-partition
-    twin, kept as the compaction-comparison baseline)."""
-    from ..catalog import load  # noqa: F401 (schema doc: documents table shape)
-
-    if backend == "snapshot":
-        batch_writer = dedup_snapshot_writer(corpus_root)
-    elif backend == "partitions":
-        batch_writer = dedup_batch_writer(corpus_root)
-    else:
-        raise ValueError(f"unknown backend {backend!r}")
+    accumulated accepted corpus (dedup_snapshot_writer; read the
+    corpus with read_corpus_snapshot). ``trigger=None`` →
+    availableNow."""
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     writer = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
-        .writeStream.foreachBatch(batch_writer)
+        .writeStream.foreachBatch(dedup_snapshot_writer(corpus_root))
         .option("checkpointLocation", checkpoint)
     )
     if trigger is None:
@@ -715,8 +434,8 @@ def start_dedup_pipeline(
     return writer.start()
 
 
-def substring_trim_batch_writer(
-    corpus_root: str, compact_every: int | None = HIST_COMPACT_EVERY
+def substring_trim_snapshot_writer(
+    corpus_root: str,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for streaming EXACT-SUBSTRING dedup — the
     micro-batch form of operators.substring.strip_dup_spans: every
@@ -730,19 +449,24 @@ def substring_trim_batch_writer(
     1. within-batch foreign offsets — the batch's own gram index,
        min-doc_id owner rule (identical to the batch strip);
     2. history foreign offsets — batch gram offsets whose gram exists
-       in ``{root}/gram_index`` (history always owns what it holds;
-       offsets only, the history TEXT is never read);
+       in the gram index (history always owns what it holds; offsets
+       only, the history TEXT is never read);
     3. the union merges to cut spans (substring.apply_cuts) →
        trimmed docs land in ``{root}/trimmed/batch_id=N``;
     4. the TRIMMED text's grams (what actually survived — indexing
        pre-trim grams would let a cut run evict future copies of
-       text nobody carries anymore) append to
-       ``{root}/gram_index/batch_id=N``.
+       text nobody carries anymore) append to the gram index.
 
-    Exactly-once: both writes are batchId-keyed partition overwrites
-    and the history read prunes to ``batch_id < this`` — a
-    crash-restart re-running batch N never sees its own partial
-    index (which would cut every one of its runs as 'already seen').
+    Layout: the gram index is a snapshot table (``{root}/gram_log`` +
+    ``{root}/gram_data``, sources/snapshots.snapshot_append_writer);
+    trimmed docs are plain batchId-keyed audit partitions.
+
+    Exactly-once: the history probe reads the index as of the newest
+    commit before this batch (snapshots.read_table_before_batch) — a
+    crash-restart re-running batch N never sees its own gram commit
+    (which would cut every one of its runs as 'already seen'); the
+    trimmed overwrite recomputes identically and the gram append is a
+    marker-last commit a replay after the marker skips.
 
     Scale shape: the history index is probed by ONE gram-keyed semi
     join per batch (combine-reduced distinct grams on the history
@@ -750,107 +474,6 @@ def substring_trim_batch_writer(
     cost is bounded by arrival rate × history-index lookup, the same
     asymptote as the incremental doc-level dedup.
     """
-
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        _trim_one_batch(batch, batch_id, corpus_root)
-        _maybe_compact_history(
-            batch.sparkSession, corpus_root, "gram_index", batch_id, compact_every
-        )
-
-    return write_batch
-
-
-def _trim_one_batch(
-    batch: DataFrame,
-    batch_id: int,
-    corpus_root: str,
-    read_hist: Callable | None = None,
-    write_grams: Callable[[DataFrame, int], None] | None = None,
-) -> None:
-    """The trim stage shared by the partition-backed and snapshot-
-    backed writers: ``read_hist(spark, batch_id)`` supplies the gram
-    history (defaults to the raw-partition fold) and
-    ``write_grams(df, batch_id)`` lands the surviving grams (defaults
-    to the batchId-keyed partition overwrite) — decisions depend on
-    neither mechanism, which the twin-run pytest locks."""
-    from pyspark.sql import functions as F
-
-    from ..operators.substring import (
-        MIN_MATCH_WORDS,
-        _doc_grams,
-        _merge_offsets,
-        apply_cuts,
-        foreign_offsets,
-    )
-
-    spark = batch.sparkSession
-    k = MIN_MATCH_WORDS
-    # collapse same-id re-collections first (deterministically: min
-    # text wins) — duplicate doc_ids would fan out the metadata
-    # re-attach join and defeat the within-batch owner rule
-    # (countDistinct(doc_id) = 1 across copies of one id)
-    idw = Window.partitionBy("doc_id").orderBy("text")
-    batch = (
-        batch.withColumn("__rn", F.row_number().over(idw))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    grams = _doc_grams(batch, k).cache()
-    try:
-        within = foreign_offsets(grams)
-        if read_hist is None:
-            hist = _read_history(spark, corpus_root, "gram_index", batch_id)
-        else:
-            hist = read_hist(spark, batch_id)
-        if hist is not None:
-            against_hist = grams.join(
-                hist.select("g").distinct(), "g", "left_semi"
-            ).select("doc_id", "pos")
-        else:
-            against_hist = within.limit(0)
-        foreign = within.unionByName(against_hist).dropDuplicates(["doc_id", "pos"])
-        trimmed = apply_cuts(batch, _merge_offsets(foreign, k)).join(
-            batch.drop("text"), "doc_id"
-        )
-        # keep text-derived metadata honest after the cut (the same
-        # convention curation_batch_writer follows post-redaction)
-        if "n_chars" in trimmed.columns:
-            trimmed = trimmed.withColumn("n_chars", F.length("text").cast("long"))
-        trimmed.write.mode("overwrite").parquet(
-            f"{corpus_root}/trimmed/batch_id={batch_id}"
-        )
-        new_grams = _doc_grams(
-            spark.read.parquet(f"{corpus_root}/trimmed/batch_id={batch_id}"), k
-        ).select("g").distinct()
-        if write_grams is None:
-            new_grams.write.mode("overwrite").parquet(
-                f"{corpus_root}/gram_index/batch_id={batch_id}"
-            )
-        else:
-            write_grams(new_grams, batch_id)
-    finally:
-        grams.unpersist()
-
-
-def substring_trim_snapshot_writer(
-    corpus_root: str,
-) -> Callable[[DataFrame, int], None]:
-    """substring_trim_batch_writer with the gram index as a SNAPSHOT
-    TABLE (``{root}/gram_log`` + ``{root}/gram_data``,
-    sources/snapshots.snapshot_append_writer) — the DEFAULT going
-    forward (VERDICT r11 item 4; the partition-backed twin stays as
-    the compaction-comparison baseline): one exactly-once mechanism
-    (marker-last atomic commits with the batch_id replay guard), and
-    the gram history gains time travel / WAP / maintain() compaction
-    for free. The history probe's ``batch_id < N`` prune is
-    snapshots.read_table_before_batch — a replay of batch N can never
-    see its own gram commit as history. Trimmed docs stay plain
-    batchId-keyed audit partitions (deterministically recomputed on
-    replay). Trim decisions are IDENTICAL to the partition-backed
-    writer — pytest-locked by a twin run."""
     from ..sources.snapshots import (
         read_table_before_batch,
         snapshot_append_writer,
@@ -861,12 +484,61 @@ def substring_trim_snapshot_writer(
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        def read_hist(spark, bid):
-            return read_table_before_batch(spark, f"{corpus_root}/gram_log", bid)
+        from pyspark.sql import functions as F
 
-        _trim_one_batch(
-            batch, batch_id, corpus_root,
-            read_hist=read_hist, write_grams=gram_w,
+        from ..operators.substring import (
+            MIN_MATCH_WORDS,
+            _doc_grams,
+            _merge_offsets,
+            apply_cuts,
+            foreign_offsets,
         )
+
+        spark = batch.sparkSession
+        k = MIN_MATCH_WORDS
+        # collapse same-id re-collections first (deterministically: min
+        # text wins) — duplicate doc_ids would fan out the metadata
+        # re-attach join and defeat the within-batch owner rule
+        # (countDistinct(doc_id) = 1 across copies of one id)
+        idw = Window.partitionBy("doc_id").orderBy("text")
+        batch = (
+            batch.withColumn("__rn", F.row_number().over(idw))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        trimmed_path = f"{corpus_root}/trimmed/batch_id={batch_id}"
+        grams = _doc_grams(batch, k).cache()
+        try:
+            within = foreign_offsets(grams)
+            hist = read_table_before_batch(
+                spark, f"{corpus_root}/gram_log", batch_id
+            )
+            if hist is not None:
+                against_hist = grams.join(
+                    hist.select("g").distinct(), "g", "left_semi"
+                ).select("doc_id", "pos")
+            else:
+                against_hist = within.limit(0)
+            foreign = within.unionByName(against_hist).dropDuplicates(
+                ["doc_id", "pos"]
+            )
+            trimmed = apply_cuts(batch, _merge_offsets(foreign, k)).join(
+                batch.drop("text"), "doc_id"
+            )
+            # keep text-derived metadata honest after the cut (the same
+            # convention curation_batch_writer follows post-redaction)
+            if "n_chars" in trimmed.columns:
+                trimmed = trimmed.withColumn(
+                    "n_chars", F.length("text").cast("long")
+                )
+            trimmed.write.mode("overwrite").parquet(trimmed_path)
+            gram_w(
+                _doc_grams(spark.read.parquet(trimmed_path), k)
+                .select("g")
+                .distinct(),
+                batch_id,
+            )
+        finally:
+            grams.unpersist()
 
     return write_batch

@@ -3,7 +3,7 @@ canonical selection (operators/curation.py's best_of_group policy,
 VERDICT r9 item 3 theme, applied to the incremental funnel).
 Reference parity: none — LLM-data-pipeline extension.
 
-The plain dedup funnel (pipeline.dedup_batch_writer) is
+The plain dedup funnel (pipeline.dedup_snapshot_writer) is
 first-arrival-wins: once a document is accepted, every later
 near-copy is rejected — even a cleaner, fuller copy of the same
 content. A keep-the-best corpus instead lets a HIGHER-QUALITY
@@ -12,39 +12,53 @@ old owner gets a tombstone, and the live corpus is
 ``accepted − tombstoned``. Classic crawl reality: the first copy of
 a page is often the truncated or boilerplate-ridden one.
 
-Per micro-batch N::
+Layout::
 
-    {root}/classification/batch_id=N   (doc_id, dup_kind, dup_of)
-    {root}/accepted/batch_id=N         full doc rows (unique + superseding)
-    {root}/rejected/batch_id=N         (doc_id, dup_of, reason)
-    {root}/tombstones/batch_id=N       (doc_id, superseded_by, score,
-                                        new_score)
+    {root}/accepted_log + accepted_data       snapshot table: full doc
+                                              rows (unique + superseding)
+    {root}/tombstones_log + tombstones_data   snapshot table: (doc_id,
+                                              superseded_by, score,
+                                              new_score)
+    {root}/classification/batch_id=N          audit (doc_id, dup_kind,
+                                              matched_doc, jaccard)
+    {root}/rejected/batch_id=N                audit (doc_id, dup_of,
+                                              reason)
 
 Decision rule, per arriving doc classified dup-of live owner O:
 score(arrival) > score(O) STRICTLY (quality.classify_quality, the
 engine's one quality score) → arrival accepted, O tombstoned with
 both scores in the audit row; ties and worse keep the incumbent
 (stability: replaying equal-quality copies can never flip-flop the
-corpus). Within-batch collapse stays min-id (pipeline.py's rule) —
-the batch-level best-of policy is curation.best_of_group; this
+corpus). Within-batch collapse stays min-id (pipeline.collapsed_batch)
+— the batch-level best-of policy is curation.best_of_group; this
 module is about BATCH-vs-HISTORY supersession.
 
 Correctness of owner liveness: the history the probe sees is
-``accepted − tombstones`` (both pruned to batch_id < N), so a dup is
-always compared against the CURRENT owner, never a superseded one —
-without this, a doc could beat a long-dead copy while losing to its
-live superseder. Tombstoned docs leave the probe set entirely; their
-content is still represented by whoever superseded them (near-dup of
-the old owner ⇒ near-dup of the new owner at the working thresholds,
-the standard LSH-family transitivity-at-high-similarity argument —
-and any miss is a false NEGATIVE of the screen, the same failure
-class the base funnel already accepts from banding).
+``accepted − tombstones`` (both as of the newest commit before batch
+N), so a dup is always compared against the CURRENT owner, never a
+superseded one — without this, a doc could beat a long-dead copy
+while losing to its live superseder. Tombstoned docs leave the probe
+set entirely; their content is still represented by whoever
+superseded them (near-dup of the old owner ⇒ near-dup of the new
+owner at the working thresholds, the standard LSH-family
+transitivity-at-high-similarity argument — and any miss is a false
+NEGATIVE of the screen, the same failure class the base funnel
+already accepts from banding).
 
-Exactly-once: all four outputs are batchId-keyed partition
-overwrites; every history read prunes to ``batch_id < N`` (a replay
-of batch N never sees its own partial output — including its own
-tombstones); the scoring join is arrival-bounded (only owners
-actually referenced by this batch's dups are re-scored).
+Exactly-once: accepted and tombstones are snapshot_append_writer
+tables — every micro-batch is a marker-last atomic commit, and a
+replay after the marker skips it (batch_id guard). Every history
+read is AS OF the newest commit whose marker's batch_id predates
+batch N (snapshots.read_table_before_batch), so a replay of batch N
+never sees its own output — including its own tombstones. The two
+logs commit separately: a crash between them leaves
+accepted-committed / tombstones-not, and the replay converges
+because each appender is individually replay-guarded and the
+decisions recompute deterministically from the persisted
+classification read-back and the AS-OF history. The audits are
+plain batchId-keyed overwrites. The scoring join is arrival-bounded
+(only owners actually referenced by this batch's dups are
+re-scored).
 
 100 TB shape: the probe is pipeline/dedup.py's incremental pass
 unchanged; this module adds one anti-join of history against the
@@ -57,15 +71,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .pipeline import (
-    HIST_COMPACT_EVERY,
-    _maybe_compact_history,
-    _read_history,
-)
+from .pipeline import collapsed_batch
 
 
 def supersede_decisions(
@@ -111,102 +121,6 @@ def supersede_decisions(
         )
         .select("doc_id", "dup_of", "score", "new_score", "wins")
     )
-
-
-def _live_history(spark, root: str, batch_id: int) -> DataFrame | None:
-    """accepted − tombstoned, both pruned to batches before this one."""
-    hist = _read_history(spark, root, "accepted", batch_id)
-    if hist is None:
-        return None
-    tomb = _read_history(spark, root, "tombstones", batch_id)
-    if tomb is None:
-        return hist
-    return hist.join(tomb.select("doc_id"), "doc_id", "left_anti")
-
-
-def keep_best_batch_writer(
-    corpus_root: str, compact_every: int | None = HIST_COMPACT_EVERY
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body for a DOCUMENT stream under the keep-best
-    policy — module docstring has layout, decision rule, liveness and
-    exactly-once arguments."""
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import (
-            batch_near_dup_drops,
-            dedup_against_corpus,
-            fingerprint,
-        )
-        spark = batch.sparkSession
-        w = Window.partitionBy("__fp").orderBy("doc_id")
-        collapsed = (
-            batch.withColumn("__fp", fingerprint(F.col("text")))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__fp", "__rn")
-            .cache()
-        )
-        batch_rows = collapsed.join(
-            batch_near_dup_drops(collapsed), "doc_id", "left_anti"
-        ).cache()
-        try:
-            history = _live_history(spark, corpus_root, batch_id)
-            if history is None:
-                history = spark.createDataFrame([], batch_rows.schema)
-            history = history.cache()
-            classified = dedup_against_corpus(batch_rows, history)
-            classified.write.mode("overwrite").parquet(
-                f"{corpus_root}/classification/batch_id={batch_id}"
-            )
-            cls = spark.read.parquet(
-                f"{corpus_root}/classification/batch_id={batch_id}"
-            )
-
-            judged = supersede_decisions(
-                batch_rows, history, classified=cls
-            ).localCheckpoint()
-
-            tombstones = judged.filter(F.col("wins")).select(
-                F.col("dup_of").alias("doc_id"),
-                F.col("doc_id").alias("superseded_by"),
-                "score",
-                "new_score",
-            )
-            tombstones.write.mode("overwrite").parquet(
-                f"{corpus_root}/tombstones/batch_id={batch_id}"
-            )
-            rejected = judged.filter(~F.col("wins")).select(
-                "doc_id",
-                "dup_of",
-                F.lit("duplicate_not_better").alias("reason"),
-            )
-            rejected.write.mode("overwrite").parquet(
-                f"{corpus_root}/rejected/batch_id={batch_id}"
-            )
-            keep_ids = cls.filter(F.col("dup_kind") == "unique").select(
-                "doc_id"
-            ).unionByName(judged.filter(F.col("wins")).select("doc_id"))
-            batch_rows.join(keep_ids, "doc_id").write.mode("overwrite").parquet(
-                f"{corpus_root}/accepted/batch_id={batch_id}"
-            )
-        finally:
-            batch_rows.unpersist()
-            collapsed.unpersist()
-            history.unpersist()
-        # BOTH history tables are probed every batch (accepted by the
-        # dedup pass, tombstones by the liveness prune) — both fold
-        # on the shared cadence, or the tombstone read amplifies one
-        # directory per batch forever
-        _maybe_compact_history(
-            spark, corpus_root, "accepted", batch_id, compact_every
-        )
-        _maybe_compact_history(
-            spark, corpus_root, "tombstones", batch_id, compact_every
-        )
-
-    return write_batch
 
 
 def _supersede_oracle() -> str:
@@ -264,51 +178,22 @@ def q_supersede(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: "all batches" watermark for read_live_corpus — any id above every
-#: real batch id
+#: "all batches" watermark for read_live_corpus_snapshot — any id
+#: above every real batch id
 _ALL_BATCHES = 1 << 62
-
-
-# --- snapshot-log-backed variant (VERDICT r10 "What's missing" 3) ------
-#
-# The writer above uses raw batch_id partition overwrites + the
-# __hist_base__ compaction fold — one of the repo's two exactly-once
-# mechanisms. The variant below backs the SAME funnel's accepted and
-# tombstone tables with sources/snapshots.snapshot_append_writer
-# instead: every micro-batch is an atomic marker-last commit, so the
-# histories gain time travel, WAP-style auditability and the CAS
-# story for free, and `maintain()` replaces the bespoke fold. The
-# probe's `batch_id < N` pruning maps onto the log exactly: read the
-# newest version whose marker's batch_id predates this batch
-# (markers are batchId-stamped), which a replay cannot see past —
-# the same replay-window guarantee the partition scheme's pruning
-# gave. Crash windows: accepted and tombstones are separate logs, so
-# a crash between the two commits leaves accepted-committed /
-# tombstones-not; the replay is convergent because each
-# snapshot_append_writer is individually replay-guarded and the
-# decisions recompute deterministically from the persisted
-# classification read-back + the AS-OF-pruned history
-# (pytest-locked: marker delete + replay restores the corpus).
-
-
-def _snapshot_table_before(
-    spark: SparkSession, log_dir: str, batch_id: int
-) -> DataFrame | None:
-    """The funnels' `batch_id < N` history prune on the snapshot
-    log — now the shared snapshots.read_table_before_batch (the
-    base dedup funnel's snapshot variant uses it too)."""
-    from ..sources.snapshots import read_table_before_batch
-
-    return read_table_before_batch(spark, log_dir, batch_id)
 
 
 def _snapshot_live_history(
     spark: SparkSession, root: str, batch_id: int
 ) -> DataFrame | None:
-    acc = _snapshot_table_before(spark, f"{root}/accepted_log", batch_id)
+    """accepted − tombstoned, both as of the newest commit before
+    ``batch_id``; None before the first accepted commit."""
+    from ..sources.snapshots import read_table_before_batch
+
+    acc = read_table_before_batch(spark, f"{root}/accepted_log", batch_id)
     if acc is None:
         return None
-    tomb = _snapshot_table_before(spark, f"{root}/tombstones_log", batch_id)
+    tomb = read_table_before_batch(spark, f"{root}/tombstones_log", batch_id)
     if tomb is None:
         return acc
     return acc.join(tomb.select("doc_id"), "doc_id", "left_anti")
@@ -317,13 +202,9 @@ def _snapshot_live_history(
 def keep_best_snapshot_writer(
     corpus_root: str,
 ) -> Callable[[DataFrame, int], None]:
-    """keep_best_batch_writer with snapshot-log-backed accepted /
-    tombstone tables (layout: ``{root}/accepted_log`` +
-    ``{root}/accepted_data``, same pair for tombstones;
-    classification/rejected stay plain batchId-keyed audit
-    partitions). Decision rule, liveness and within-batch collapse
-    are IDENTICAL to the partition-backed writer — pytest-locked by
-    a twin run over the same batch sequence."""
+    """foreachBatch body for a DOCUMENT stream under the keep-best
+    policy — module docstring has layout, decision rule, liveness and
+    exactly-once arguments."""
     from ..sources.snapshots import snapshot_append_writer
 
     acc_write = snapshot_append_writer(
@@ -334,73 +215,47 @@ def keep_best_snapshot_writer(
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import (
-            batch_near_dup_drops,
-            dedup_against_corpus,
-            fingerprint,
-        )
+        from ..operators.dedup import dedup_against_corpus
 
         spark = batch.sparkSession
-        w = Window.partitionBy("__fp").orderBy("doc_id")
-        collapsed = (
-            batch.withColumn("__fp", fingerprint(F.col("text")))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__fp", "__rn")
-            .cache()
-        )
-        batch_rows = collapsed.join(
-            batch_near_dup_drops(collapsed), "doc_id", "left_anti"
-        ).cache()
-        # bound before the try: if the history read itself raises, the
-        # finally must not mask the real error with an
-        # UnboundLocalError from the unpersist (ADVICE r11)
-        history = None
-        try:
+        cls_path = f"{corpus_root}/classification/batch_id={batch_id}"
+        with collapsed_batch(batch) as batch_rows:
             history = _snapshot_live_history(spark, corpus_root, batch_id)
             if history is None:
                 history = spark.createDataFrame([], batch_rows.schema)
             history = history.cache()
-            classified = dedup_against_corpus(batch_rows, history)
-            classified.write.mode("overwrite").parquet(
-                f"{corpus_root}/classification/batch_id={batch_id}"
-            )
-            cls = spark.read.parquet(
-                f"{corpus_root}/classification/batch_id={batch_id}"
-            )
-
-            judged = supersede_decisions(
-                batch_rows, history, classified=cls
-            ).localCheckpoint()
-
-            tombstones = judged.filter(F.col("wins")).select(
-                F.col("dup_of").alias("doc_id"),
-                F.col("doc_id").alias("superseded_by"),
-                "score",
-                "new_score",
-            )
-            judged.filter(~F.col("wins")).select(
-                "doc_id",
-                "dup_of",
-                F.lit("duplicate_not_better").alias("reason"),
-            ).write.mode("overwrite").parquet(
-                f"{corpus_root}/rejected/batch_id={batch_id}"
-            )
-            keep_ids = cls.filter(F.col("dup_kind") == "unique").select(
-                "doc_id"
-            ).unionByName(judged.filter(F.col("wins")).select("doc_id"))
-            accepted = batch_rows.join(keep_ids, "doc_id")
-            # marker-last atomic commits, each individually
-            # replay-guarded (snapshot_append_writer's batch_id
-            # watermark) — accepted first so a crash between the two
-            # never hides an accepted doc's tombstone from a FUTURE
-            # batch without also replaying this one
-            acc_write(accepted, batch_id)
-            tomb_write(tombstones, batch_id)
-        finally:
-            batch_rows.unpersist()
-            collapsed.unpersist()
-            if history is not None:
+            try:
+                dedup_against_corpus(batch_rows, history).write.mode(
+                    "overwrite"
+                ).parquet(cls_path)
+                cls = spark.read.parquet(cls_path)
+                judged = supersede_decisions(
+                    batch_rows, history, classified=cls
+                ).localCheckpoint()
+                judged.filter(~F.col("wins")).select(
+                    "doc_id",
+                    "dup_of",
+                    F.lit("duplicate_not_better").alias("reason"),
+                ).write.mode("overwrite").parquet(
+                    f"{corpus_root}/rejected/batch_id={batch_id}"
+                )
+                keep_ids = cls.filter(F.col("dup_kind") == "unique").select(
+                    "doc_id"
+                ).unionByName(judged.filter(F.col("wins")).select("doc_id"))
+                # accepted first, so a crash between the two commits
+                # never hides an accepted doc's tombstone from a
+                # FUTURE batch without also replaying this one
+                acc_write(batch_rows.join(keep_ids, "doc_id"), batch_id)
+                tomb_write(
+                    judged.filter(F.col("wins")).select(
+                        F.col("dup_of").alias("doc_id"),
+                        F.col("doc_id").alias("superseded_by"),
+                        "score",
+                        "new_score",
+                    ),
+                    batch_id,
+                )
+            finally:
                 history.unpersist()
 
     return write_batch
@@ -409,32 +264,11 @@ def keep_best_snapshot_writer(
 def read_live_corpus_snapshot(
     spark: SparkSession, corpus_root: str
 ) -> DataFrame:
-    """read_live_corpus for the snapshot-backed layout: latest
-    committed accepted snapshot minus latest committed tombstones —
-    and because both are snapshot tables, any HISTORICAL corpus
-    state is one `_snapshot_table_before(batch_id)` pair away."""
-    return _require_live(spark, corpus_root, _ALL_BATCHES)
-
-
-def _require_live(spark, corpus_root: str, watermark: int) -> DataFrame:
-    live = _snapshot_live_history(spark, corpus_root, watermark)
+    """The corpus a consumer trains on: latest committed accepted
+    snapshot minus latest committed tombstones. Because both are
+    snapshot tables, any HISTORICAL corpus state is one
+    ``_snapshot_live_history(batch_id)`` read away."""
+    live = _snapshot_live_history(spark, corpus_root, _ALL_BATCHES)
     if live is None:
         raise ValueError(f"no accepted snapshots under {corpus_root!r}")
     return live
-
-
-def read_live_corpus(spark: SparkSession, corpus_root: str) -> DataFrame:
-    """The corpus a consumer trains on: every accepted doc that has
-    not been superseded — accepted − tombstones, across ALL batches
-    (use after the stream quiesces; mid-stream readers should prune
-    by their own batch watermark). Reads through the funnel's own
-    history reader so COMPACTED rows (the `.__hist_base__` fold) are
-    included — a raw partition-glob read silently loses everything
-    compaction has folded."""
-    acc = _read_history(spark, corpus_root, "accepted", _ALL_BATCHES)
-    if acc is None:
-        raise ValueError(f"no accepted history under {corpus_root!r}")
-    tomb = _read_history(spark, corpus_root, "tombstones", _ALL_BATCHES)
-    if tomb is None:
-        return acc
-    return acc.join(tomb.select("doc_id"), "doc_id", "left_anti")

@@ -1,9 +1,9 @@
-"""Streaming embedding ingest — the VECTOR twin of the document
-dedup and substring-trim batch writers (`streaming/pipeline.py`):
-per micro-batch, hyperplane-LSH near-dup screening of arriving
-vectors against the accepted vector corpus, with the same
-exactly-once batch_id layout and rejects-audited-never-silent
-contract the text funnel follows.
+"""Streaming embedding ingest — the VECTOR member of the document
+dedup and substring-trim funnels (`streaming/pipeline.py`): per
+micro-batch, hyperplane-LSH near-dup screening of arriving vectors
+against the accepted vector corpus, with the same exactly-once
+snapshot-log history and rejects-audited-never-silent contract the
+text funnels follow.
 
 The reference has no vector surface at all (its nearest analogue is
 the fixture-upsert freshness loop, `data_pipeline.py` collect →
@@ -40,11 +40,12 @@ at its banding ceiling, zero false rejects among the 500 mutually
 far originals). Pinned with a 0.8 floor by
 tests/test_vector_stream.py::test_stream_screen_recall_at_sf001.
 
-Exactly-once: accepted/sig-index/rejected writes are all
-batchId-keyed partition overwrites and every history read prunes to
-``batch_id < this`` — a crash-restart re-running batch N never sees
-its own partial output (which would reject every one of its vectors
-as already-accepted).
+Exactly-once: the signature index is a snapshot_append_writer table
+(marker-last atomic commits, a replay after the marker skips) read
+as of the newest commit before batch N — a crash-restart re-running
+batch N never sees its own signatures (which would reject every one
+of its vectors as already-accepted); accepted/rejected are
+batchId-keyed audit overwrites recomputed identically on replay.
 """
 
 from __future__ import annotations
@@ -53,8 +54,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .pipeline import HIST_COMPACT_EVERY, _maybe_compact_history
 
 #: cosine threshold above which an arriving vector is a near-dup of
 #: an accepted one and is rejected. Deliberately far above
@@ -109,72 +108,6 @@ def band_signatures(
     )
 
 
-def vector_ingest_batch_writer(
-    corpus_root: str,
-    tau: float = VECTOR_DUP_TAU,
-    n_bands: int | None = None,
-    bits_per_band: int | None = None,
-    compact_every: int | None = HIST_COMPACT_EVERY,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch body for an EMBEDDING stream of
-    (vec_id, embedding) rows. Per micro-batch:
-
-    1. collapse same-vec_id re-collections (deterministically: min
-       array wins — the analogue of the trim writer's min-text rule);
-       zero-norm vectors (cosine undefined) are rejected up front
-       with ``scope='degenerate'`` — under the session's ANSI mode
-       an unguarded cosine would DIVIDE_BY_ZERO and poison-pill the
-       stream (replay re-crashes forever);
-    2. history near-dups: batch signatures probe
-       ``{root}/sig_index`` (accepted vectors only) by ONE sig-keyed
-       equi join + cosine verify at ≥ tau;
-    3. within-batch near-dups: band-bucket candidate pairs →
-       connected components (the dedup.py pointer-jumping kernel —
-       near-dup clusters are near-cliques, so it converges in 1-2
-       rounds on a batch-sized graph); each cluster's min id is
-       canonical, the rest reject with ``dup_of`` = the canonical
-       and ``cosine_sim`` = their strongest DIRECT match (cosine is
-       not transitive, so the direct-match cosine is the honest
-       audit number);
-    4. survivors land in ``{root}/accepted/batch_id=N`` and their
-       signatures in ``{root}/sig_index/batch_id=N`` — only ACCEPTED
-       vectors are indexed, so a rejected near-copy can never evict
-       future arrivals (the surviving-text invariant, vector form);
-    5. every rejection is written to ``{root}/rejected/batch_id=N``
-       with its owner and cosine — audited, never silent. Owner
-       resolution: a history owner is always accepted; a batch owner
-       (cluster canonical) is either accepted or carries its own
-       history-scope audit row in the SAME batch — ``dup_of`` chains
-       terminate in the accepted corpus in ≤ 2 hops, never dangling.
-
-    The band geometry is persisted to ``{root}/geometry`` on first
-    write and validated on every batch: restarting the writer with a
-    different (n_bands, bits_per_band) over an existing corpus_root
-    raises instead of silently matching nothing against history.
-
-    ``compact_every``: once the sig_index reaches this many live
-    batch partitions it folds into the compacted history base
-    (pipeline.compact_history — ON by default, r7; the probe
-    otherwise lists and unions one directory per batch for the
-    stream's whole lifetime).
-    """
-
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        _ingest_one_batch(
-            batch, batch_id, corpus_root, tau, n_bands, bits_per_band
-        )
-        # the sig_index is the history the screen probes every batch;
-        # fold it like the text funnels (pipeline.compact_history)
-        _maybe_compact_history(
-            batch.sparkSession, corpus_root, "sig_index", batch_id, compact_every
-        )
-
-    return write_batch
-
-
 def _check_geometry(
     spark, corpus_root: str, n_bands: int, bits_per_band: int
 ) -> None:
@@ -188,7 +121,7 @@ def _check_geometry(
         row = spark.read.parquet(path).collect()[0]
         if (row.n_bands, row.bits_per_band) != (n_bands, bits_per_band):
             raise ValueError(
-                f"sig_index at {corpus_root} was built with "
+                f"signature index at {corpus_root} was built with "
                 f"{row.n_bands} bands x {row.bits_per_band} bits; "
                 f"writer configured for {n_bands} x {bits_per_band} — "
                 "rebuild the index or match the recorded geometry"
@@ -205,18 +138,48 @@ def vector_ingest_snapshot_writer(
     n_bands: int | None = None,
     bits_per_band: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """vector_ingest_batch_writer with the sig index as a SNAPSHOT
-    TABLE (``{root}/sig_log`` + ``{root}/sig_data``,
-    sources/snapshots.snapshot_append_writer) — the DEFAULT going
-    forward (VERDICT r11 item 4; the partition twin stays as the
-    compaction-comparison baseline): marker-last atomic commits with
-    the batch_id replay guard replace the ``__hist_base__`` fold, and
-    the index history gains time travel / maintain() compaction for
-    free. The history probe's ``batch_id < N`` prune is
-    snapshots.read_table_before_batch. accepted/rejected stay plain
-    batchId-keyed audit partitions (deterministically recomputed on
-    replay). Screening decisions are IDENTICAL to the
-    partition-backed writer — pytest-locked by a twin run."""
+    """foreachBatch body for an EMBEDDING stream of
+    (vec_id, embedding) rows. Per micro-batch:
+
+    1. collapse same-vec_id re-collections (deterministically: min
+       array wins — the analogue of the trim writer's min-text rule);
+       zero-norm vectors (cosine undefined) are rejected up front
+       with ``scope='degenerate'`` — under the session's ANSI mode
+       an unguarded cosine would DIVIDE_BY_ZERO and poison-pill the
+       stream (replay re-crashes forever);
+    2. history near-dups: batch signatures probe the signature index
+       (accepted vectors only) by ONE sig-keyed equi join + cosine
+       verify at ≥ tau;
+    3. within-batch near-dups: band-bucket candidate pairs →
+       connected components (the dedup.py pointer-jumping kernel —
+       near-dup clusters are near-cliques, so it converges in 1-2
+       rounds on a batch-sized graph); each cluster's min id is
+       canonical, the rest reject with ``dup_of`` = the canonical
+       and ``cosine_sim`` = their strongest DIRECT match (cosine is
+       not transitive, so the direct-match cosine is the honest
+       audit number);
+    4. survivors land in ``{root}/accepted/batch_id=N`` and their
+       signatures append to the signature index — only ACCEPTED
+       vectors are indexed, so a rejected near-copy can never evict
+       future arrivals (the surviving-text invariant, vector form);
+    5. every rejection is written to ``{root}/rejected/batch_id=N``
+       with its owner and cosine — audited, never silent. Owner
+       resolution: a history owner is always accepted; a batch owner
+       (cluster canonical) is either accepted or carries its own
+       history-scope audit row in the SAME batch — ``dup_of`` chains
+       terminate in the accepted corpus in ≤ 2 hops, never dangling.
+
+    Layout: the signature index is a snapshot table
+    (``{root}/sig_log`` + ``{root}/sig_data``,
+    sources/snapshots.snapshot_append_writer), read as of the newest
+    commit before batch N (snapshots.read_table_before_batch);
+    accepted/rejected are plain batchId-keyed audit partitions.
+
+    The band geometry is persisted to ``{root}/geometry`` on first
+    write and validated on every batch: restarting the writer with a
+    different (n_bands, bits_per_band) over an existing corpus_root
+    raises instead of silently matching nothing against history.
+    """
     from ..sources.snapshots import (
         read_table_before_batch,
         snapshot_append_writer,
@@ -227,162 +190,135 @@ def vector_ingest_snapshot_writer(
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        def read_hist(spark, bid):
-            return read_table_before_batch(spark, f"{corpus_root}/sig_log", bid)
+        from ..operators.dedup import connected_components
+        from ..operators.embedsearch import BITS_PER_BAND, N_BANDS, norm
 
-        _ingest_one_batch(
-            batch, batch_id, corpus_root, tau, n_bands, bits_per_band,
-            read_hist=read_hist, write_sigs=sig_w,
+        spark = batch.sparkSession
+        _check_geometry(
+            spark,
+            corpus_root,
+            N_BANDS if n_bands is None else n_bands,
+            BITS_PER_BAND if bits_per_band is None else bits_per_band,
         )
+        idw = Window.partitionBy("vec_id").orderBy("embedding")
+        batch = (
+            batch.withColumn("__rn", F.row_number().over(idw))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        # zero-norm vectors have no cosine: reject up front (ANSI mode
+        # would otherwise DIVIDE_BY_ZERO inside the verify and poison-
+        # pill the batch on every replay)
+        degenerate = batch.filter(norm(F.col("embedding")) == 0).select(
+            "vec_id",
+            F.lit(None).cast("long").alias("dup_of"),
+            F.lit(None).cast("double").alias("cosine_sim"),
+            F.lit("degenerate").alias("scope"),
+        )
+        batch = batch.filter(norm(F.col("embedding")) > 0)
+        sigs = band_signatures(batch, n_bands, bits_per_band).cache()
+        a, b = sigs.alias("a"), sigs.alias("b")
+        pairs = (
+            a.join(
+                b,
+                (F.col("a.sig") == F.col("b.sig"))
+                & (F.col("a.vec_id") < F.col("b.vec_id")),
+            )
+            .select(
+                F.col("a.vec_id").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b"),
+                _pair_cosine("a", "b").alias("cosine_sim"),
+            )
+            .filter(F.col("cosine_sim") >= tau)
+            .groupBy("vec_a", "vec_b")
+            .agg(F.max("cosine_sim").alias("cosine_sim"))
+            .cache()
+        )
+        try:
+            hist = read_table_before_batch(
+                spark, f"{corpus_root}/sig_log", batch_id
+            )
+            if hist is not None:
+                h = hist.alias("h")
+                against_hist = (
+                    sigs.alias("a")
+                    .join(h, F.col("a.sig") == F.col("h.sig"))
+                    .select(
+                        F.col("a.vec_id").alias("vec_id"),
+                        F.col("h.vec_id").alias("dup_of"),
+                        _pair_cosine("a", "h").alias("cosine_sim"),
+                    )
+                    .filter(F.col("cosine_sim") >= tau)
+                    .withColumn(
+                        "__rk",
+                        F.row_number().over(
+                            Window.partitionBy("vec_id").orderBy(
+                                F.col("cosine_sim").desc(), F.col("dup_of")
+                            )
+                        ),
+                    )
+                    .filter(F.col("__rk") == 1)
+                    .drop("__rk")
+                    .withColumn("scope", F.lit("history"))
+                )
+            else:
+                against_hist = spark.createDataFrame(
+                    [], "vec_id long, dup_of long, cosine_sim double, scope string"
+                )
+
+            # within-batch: cluster the pair graph, each cluster's min id
+            # is canonical; non-canonicals reject with dup_of = canonical
+            # and cosine = their strongest DIRECT match (cosine is not
+            # transitive — the direct number is the honest audit value)
+            comp = connected_components(
+                pairs.select(
+                    F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+                )
+            )
+            direct = (
+                pairs.select(F.col("vec_a").alias("vec_id"), "cosine_sim")
+                .unionByName(
+                    pairs.select(F.col("vec_b").alias("vec_id"), "cosine_sim")
+                )
+                .groupBy("vec_id")
+                .agg(F.max("cosine_sim").alias("cosine_sim"))
+            )
+            within = (
+                comp.filter(~F.col("is_canonical"))
+                .select(
+                    F.col("doc_id").alias("vec_id"),
+                    F.col("component").alias("dup_of"),
+                )
+                .join(direct, "vec_id")
+                .withColumn("scope", F.lit("batch"))
+            )
+
+            # history owns on overlap (the canonical corpus); a batch
+            # owner not itself history-rejected is accepted, so dup_of
+            # chains terminate in the accepted corpus in <= 2 hops
+            rejected = against_hist.unionByName(
+                within.join(against_hist.select("vec_id"), "vec_id", "left_anti")
+            ).unionByName(degenerate)
+            rejected.write.mode("overwrite").parquet(
+                f"{corpus_root}/rejected/batch_id={batch_id}"
+            )
+
+            rej = spark.read.parquet(
+                f"{corpus_root}/rejected/batch_id={batch_id}"
+            ).select("vec_id")
+            accepted = batch.join(rej, "vec_id", "left_anti")
+            accepted.write.mode("overwrite").parquet(
+                f"{corpus_root}/accepted/batch_id={batch_id}"
+            )
+            # index from the already-cached signatures — recomputing the
+            # n_bands*bits_per_band plane dots per accepted vector would
+            # double the batch's dominant cost for no reason
+            sig_w(sigs.join(rej, "vec_id", "left_anti"), batch_id)
+        finally:
+            pairs.unpersist()
+            sigs.unpersist()
 
     return write_batch
-
-
-def _ingest_one_batch(
-    batch: DataFrame,
-    batch_id: int,
-    corpus_root: str,
-    tau: float,
-    n_bands: int | None,
-    bits_per_band: int | None,
-    read_hist: Callable | None = None,
-    write_sigs: Callable[[DataFrame, int], None] | None = None,
-) -> None:
-    from ..operators.dedup import connected_components
-    from ..operators.embedsearch import BITS_PER_BAND, N_BANDS, norm
-    from .pipeline import _read_history
-
-    spark = batch.sparkSession
-    _check_geometry(
-        spark,
-        corpus_root,
-        N_BANDS if n_bands is None else n_bands,
-        BITS_PER_BAND if bits_per_band is None else bits_per_band,
-    )
-    idw = Window.partitionBy("vec_id").orderBy("embedding")
-    batch = (
-        batch.withColumn("__rn", F.row_number().over(idw))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # zero-norm vectors have no cosine: reject up front (ANSI mode
-    # would otherwise DIVIDE_BY_ZERO inside the verify and poison-
-    # pill the batch on every replay)
-    degenerate = batch.filter(norm(F.col("embedding")) == 0).select(
-        "vec_id",
-        F.lit(None).cast("long").alias("dup_of"),
-        F.lit(None).cast("double").alias("cosine_sim"),
-        F.lit("degenerate").alias("scope"),
-    )
-    batch = batch.filter(norm(F.col("embedding")) > 0)
-    sigs = band_signatures(batch, n_bands, bits_per_band).cache()
-    a, b = sigs.alias("a"), sigs.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            _pair_cosine("a", "b").alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= tau)
-        .groupBy("vec_a", "vec_b")
-        .agg(F.max("cosine_sim").alias("cosine_sim"))
-        .cache()
-    )
-    try:
-        if read_hist is None:
-            hist = _read_history(spark, corpus_root, "sig_index", batch_id)
-        else:
-            hist = read_hist(spark, batch_id)
-        if hist is not None:
-            h = hist.alias("h")
-            against_hist = (
-                sigs.alias("a")
-                .join(h, F.col("a.sig") == F.col("h.sig"))
-                .select(
-                    F.col("a.vec_id").alias("vec_id"),
-                    F.col("h.vec_id").alias("dup_of"),
-                    _pair_cosine("a", "h").alias("cosine_sim"),
-                )
-                .filter(F.col("cosine_sim") >= tau)
-                .withColumn(
-                    "__rk",
-                    F.row_number().over(
-                        Window.partitionBy("vec_id").orderBy(
-                            F.col("cosine_sim").desc(), F.col("dup_of")
-                        )
-                    ),
-                )
-                .filter(F.col("__rk") == 1)
-                .drop("__rk")
-                .withColumn("scope", F.lit("history"))
-            )
-        else:
-            against_hist = spark.createDataFrame(
-                [], "vec_id long, dup_of long, cosine_sim double, scope string"
-            )
-
-        # within-batch: cluster the pair graph, each cluster's min id
-        # is canonical; non-canonicals reject with dup_of = canonical
-        # and cosine = their strongest DIRECT match (cosine is not
-        # transitive — the direct number is the honest audit value)
-        comp = connected_components(
-            pairs.select(
-                F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-            )
-        )
-        direct = (
-            pairs.select(F.col("vec_a").alias("vec_id"), "cosine_sim")
-            .unionByName(
-                pairs.select(F.col("vec_b").alias("vec_id"), "cosine_sim")
-            )
-            .groupBy("vec_id")
-            .agg(F.max("cosine_sim").alias("cosine_sim"))
-        )
-        within = (
-            comp.filter(~F.col("is_canonical"))
-            .select(
-                F.col("doc_id").alias("vec_id"),
-                F.col("component").alias("dup_of"),
-            )
-            .join(direct, "vec_id")
-            .withColumn("scope", F.lit("batch"))
-        )
-
-        # history owns on overlap (the canonical corpus); a batch
-        # owner not itself history-rejected is accepted, so dup_of
-        # chains terminate in the accepted corpus in <= 2 hops
-        rejected = against_hist.unionByName(
-            within.join(against_hist.select("vec_id"), "vec_id", "left_anti")
-        ).unionByName(degenerate)
-        rejected.write.mode("overwrite").parquet(
-            f"{corpus_root}/rejected/batch_id={batch_id}"
-        )
-
-        rej = spark.read.parquet(
-            f"{corpus_root}/rejected/batch_id={batch_id}"
-        ).select("vec_id")
-        accepted = batch.join(rej, "vec_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            f"{corpus_root}/accepted/batch_id={batch_id}"
-        )
-        # index from the already-cached signatures — recomputing the
-        # n_bands*bits_per_band plane dots per accepted vector would
-        # double the batch's dominant cost for no reason
-        accepted_sigs = sigs.join(rej, "vec_id", "left_anti")
-        if write_sigs is None:
-            accepted_sigs.write.mode("overwrite").parquet(
-                f"{corpus_root}/sig_index/batch_id={batch_id}"
-            )
-        else:
-            write_sigs(accepted_sigs, batch_id)
-    finally:
-        pairs.unpersist()
-        sigs.unpersist()
 
 
 def _pair_cosine(left: str, right: str):

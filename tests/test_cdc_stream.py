@@ -1,16 +1,24 @@
-"""Streaming CDC materialized view: snapshot parity with the batch
+"""Streaming CDC materialized view: view parity with the batch
 operator, out-of-order safety across batches, crash-replay
-idempotence, compaction re-basing, and the seq guard."""
+idempotence, the COW fold (compact_cdc_snapshot) and its
+monotonicity, and the seq guard."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
-from pyspark.sql import functions as F
 
 from football_data_pipeline_spark.operators.cdc import apply_changes
+from football_data_pipeline_spark.sources.snapshots import (
+    _marker_path,
+    read_snapshot,
+    snapshot_versions,
+)
 from football_data_pipeline_spark.streaming.cdc_stream import (
-    cdc_log_batch_writer,
-    read_cdc_snapshot,
+    cdc_snapshot_writer,
+    compact_cdc_snapshot,
+    read_cdc_snapshot_log,
 )
 
 CHG_SCHEMA = "k long, seq long, op string, v string"
@@ -21,14 +29,23 @@ def _chg(spark, rows):
     return spark.createDataFrame(rows, CHG_SCHEMA)
 
 
-def _snap(spark, root, base=None, **kw):
-    out = read_cdc_snapshot(spark, str(root), "k", ["v"], base=base, **kw)
+def _writer(root):
+    return cdc_snapshot_writer(str(root), "k", "seq", "op", ["v"])
+
+
+def _snap_log(spark, root, base=None, **kw):
+    out = read_cdc_snapshot_log(spark, str(root), "k", ["v"], base=base, **kw)
     return {r.k: r.v for r in out.select("k", "v").collect()}
 
 
 def test_snapshot_matches_batch_apply_and_handles_out_of_order(spark, tmp_path):
+    """The view over a fixed two-batch sequence (a delete, a LATE
+    lower-seq change that must lose, an insert) equals the batch
+    operator over the concatenated log, and the winners it keeps —
+    seq and tombstone included — are the rows the writer produced
+    when it still had a partition-backed twin, and both agreed."""
     root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(str(root), "k", "seq", "op", ["v"])
+    w = _writer(root)
     b0 = [(1, 10, "U", "a"), (2, 10, "U", "b"), (3, 10, "U", "c")]
     b1 = [
         (2, 20, "D", None),   # delete
@@ -37,7 +54,7 @@ def test_snapshot_matches_batch_apply_and_handles_out_of_order(spark, tmp_path):
     ]
     w(_chg(spark, b0), 0)
     w(_chg(spark, b1), 1)
-    assert _snap(spark, root) == {1: "a", 3: "c", 4: "d"}
+    assert _snap_log(spark, root) == {1: "a", 3: "c", 4: "d"}
     # parity with the batch operator over the concatenated log
     batch = apply_changes(
         spark.createDataFrame([], BASE_SCHEMA),
@@ -47,225 +64,113 @@ def test_snapshot_matches_batch_apply_and_handles_out_of_order(spark, tmp_path):
         "op",
         ["v"],
     )
-    assert {r.k: r.v for r in batch.collect()} == _snap(spark, root)
+    assert {r.k: r.v for r in batch.collect()} == _snap_log(spark, root)
+    winners = read_cdc_snapshot_log(
+        spark, str(root), "k", ["v"], keep_seq=True, keep_tombstones=True
+    )
+    assert sorted(map(tuple, winners.collect())) == [
+        (1, "a", 10, "U"),
+        (2, None, 20, "D"),
+        (3, "c", 10, "U"),
+        (4, "d", 20, "U"),
+    ]
 
 
 def test_replay_of_last_batch_is_idempotent(spark, tmp_path):
+    """Crash window BEFORE the last batch's commit marker: its winner
+    files landed but the commit did not. The view ignores the debris,
+    and the restart's replay of the batch lands it exactly once."""
     root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(str(root), "k", "seq", "op", ["v"])
+    log = f"{root}/winners_log"
+    w = _writer(root)
     w(_chg(spark, [(1, 1, "U", "a")]), 0)
     b1 = _chg(spark, [(1, 2, "U", "a2"), (2, 2, "U", "b")])
     w(b1, 1)
-    first = _snap(spark, root)
+    first = _snap_log(spark, root)
+    shutil.rmtree(_marker_path(log, snapshot_versions(spark, log)[-1]))
+    assert _snap_log(spark, root) == {1: "a"}
     w(b1, 1)  # crash-restart re-runs the last batch
-    assert _snap(spark, root) == first == {1: "a2", 2: "b"}
+    assert _snap_log(spark, root) == first == {1: "a2", 2: "b"}
+    assert len(snapshot_versions(spark, log)) == 2
 
 
 def test_base_and_compaction_rebase_preserve_monotonicity(spark, tmp_path):
     root1 = tmp_path / "cdc1"
-    w1 = cdc_log_batch_writer(str(root1), "k", "seq", "op", ["v"])
+    w1 = _writer(root1)
     base = spark.createDataFrame([(1, "old"), (9, "keep")], BASE_SCHEMA)
     w1(_chg(spark, [(1, 50, "U", "new")]), 0)
-    assert _snap(spark, root1, base=base) == {1: "new", 9: "keep"}
+    assert _snap_log(spark, root1, base=base) == {1: "new", 9: "keep"}
     # compaction: materialize WITH __seq as the new base
-    compacted = read_cdc_snapshot(
+    compacted = read_cdc_snapshot_log(
         spark, str(root1), "k", ["v"], base=base, keep_seq=True
     )
     rebased = compacted.collect()
     assert {(r.k, r.v) for r in rebased} == {(1, "new"), (9, "keep")}
     root2 = tmp_path / "cdc2"
-    w2 = cdc_log_batch_writer(str(root2), "k", "seq", "op", ["v"])
+    w2 = _writer(root2)
     # a LATE change older than the compacted winner must still lose
     w2(_chg(spark, [(1, 10, "U", "stale")]), 0)
-    assert _snap(
+    assert _snap_log(
         spark, root2, base=spark.createDataFrame(rebased)
     ) == {1: "new", 9: "keep"}
 
 
 def test_negative_seq_rejected_and_empty_state_errors(spark, tmp_path):
     root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(str(root), "k", "seq", "op", ["v"])
+    w = _writer(root)
     with pytest.raises(Exception, match="cdc seq must be >= 0"):
         w(_chg(spark, [(1, -1, "U", "a")]), 0)
     with pytest.raises(ValueError, match="no log yet"):
-        read_cdc_snapshot(spark, str(tmp_path / "none"), "k", ["v"])
-
-
-def _log_parts(root):
-    log = root / "log"
-    if not log.is_dir():
-        return []
-    return sorted(p.name for p in log.iterdir() if p.name.startswith("batch_id="))
-
-
-def test_auto_compaction_triggers_at_k_and_parity_holds(spark, tmp_path):
-    root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(
-        str(root), "k", "seq", "op", ["v"], compact_every=3
-    )
-    w(_chg(spark, [(1, 10, "U", "a"), (2, 10, "U", "b")]), 0)
-    w(_chg(spark, [(2, 20, "D", None)]), 1)
-    assert len(_log_parts(root)) == 2 and not (root / "base").is_dir()
-    # batch 3 brings the log to K=3 partitions -> rebase fires
-    w(_chg(spark, [(3, 30, "U", "c")]), 2)
-    assert (root / "base").is_dir()
-    assert _log_parts(root) == []
-    assert _snap(spark, root) == {1: "a", 3: "c"}
-    # the compacted base keeps the winning __seq AND the tombstone
-    managed = spark.read.parquet(str(root / "base"))
-    rows = {r["k"]: (r["__seq"], r["__op"]) for r in managed.collect()}
-    assert rows == {1: (10, "U"), 2: (20, "D"), 3: (30, "U")}
+        read_cdc_snapshot_log(spark, str(tmp_path / "none"), "k", ["v"])
+    # an external base alone is a valid view before the first commit
+    base = spark.createDataFrame([(7, "seed")], BASE_SCHEMA)
+    assert _snap_log(spark, tmp_path / "none", base=base) == {7: "seed"}
 
 
 def test_late_low_seq_update_loses_after_rebase_even_for_deleted_key(
     spark, tmp_path
 ):
     root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(
-        str(root), "k", "seq", "op", ["v"], compact_every=2
-    )
+    w = _writer(root)
     w(_chg(spark, [(1, 50, "U", "live")]), 0)
-    w(_chg(spark, [(2, 60, "D", None)]), 1)  # triggers rebase at K=2
-    assert _log_parts(root) == []
+    w(_chg(spark, [(2, 60, "D", None)]), 1)
+    compact_cdc_snapshot(spark, str(root), "k", ["v"])
     # a LATE lower-seq 'U' for the DELETED key arrives after the
-    # rebase: the retained tombstone must still win
+    # fold: the retained tombstone must still win
     w(_chg(spark, [(2, 10, "U", "ghost"), (1, 20, "U", "stale")]), 2)
-    assert _snap(spark, root) == {1: "live"}
-    # ...and a genuinely newer 'U' resurrects it
-    w(_chg(spark, [(2, 70, "U", "back")]), 3)  # triggers 2nd rebase
-    assert _snap(spark, root) == {1: "live", 2: "back"}
+    assert _snap_log(spark, root) == {1: "live"}
+    # ...and a genuinely newer 'U' resurrects it, across a second fold
+    w(_chg(spark, [(2, 70, "U", "back")]), 3)
+    compact_cdc_snapshot(spark, str(root), "k", ["v"])
+    assert _snap_log(spark, root) == {1: "live", 2: "back"}
 
 
 def test_interrupted_compaction_is_idempotent(spark, tmp_path):
-    from football_data_pipeline_spark.streaming.cdc_stream import (
-        compact_cdc_log,
-    )
-
+    """Folding is idempotent: a replay of a folded batch is a guarded
+    no-op, and folding an already-folded table again changes neither
+    the view nor the winner rows."""
     root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(str(root), "k", "seq", "op", ["v"])
+    log = f"{root}/winners_log"
+    w = _writer(root)
     w(_chg(spark, [(1, 10, "U", "a"), (2, 20, "D", None)]), 0)
     w(_chg(spark, [(3, 30, "U", "c")]), 1)
-    n = compact_cdc_log(spark, str(root), "k", ["v"])
-    assert n == 2
-    before = _snap(spark, root)
-    # simulate the crash window: winners exist in base AND a replayed
-    # log partition (cleanup died) — the fold must absorb duplicates
-    w(_chg(spark, [(3, 30, "U", "c")]), 1)
-    assert _snap(spark, root) == before == {1: "a", 3: "c"}
-    assert compact_cdc_log(spark, str(root), "k", ["v"]) == 1
-    assert _snap(spark, root) == before
-    # nothing left to fold
-    assert compact_cdc_log(spark, str(root), "k", ["v"]) == 0
-
-
-def test_crashed_base_swap_recovers_on_read_and_compaction(spark, tmp_path):
-    """ADVICE r6 regression: a crash between _swap_rewrite's two
-    renames leaves {root}/base missing with the sole copy at
-    base.__merge_old__. The reader must restore it (NOT serve a
-    log-only snapshot), and a subsequent compaction must fold the
-    restored base (NOT write the log-only fold as the new base,
-    which made the loss permanent)."""
-    import shutil
-
-    from football_data_pipeline_spark.streaming.cdc_stream import (
-        compact_cdc_log,
-    )
-
-    root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(str(root), "k", "seq", "op", ["v"])
-    w(_chg(spark, [(1, 10, "U", "a"), (2, 10, "U", "b")]), 0)
-    assert compact_cdc_log(spark, str(root), "k", ["v"]) == 1
-    w(_chg(spark, [(3, 20, "U", "c")]), 1)
-    # simulate the crash window: base renamed aside, new base never
-    # moved into place
-    base = root / "base"
-    shutil.move(str(base), str(root / "base.__merge_old__"))
-    assert not base.exists()
-    # read path restores the orphan instead of serving log-only state
-    assert _snap(spark, root) == {1: "a", 2: "b", 3: "c"}
-    assert base.exists() and not (root / "base.__merge_old__").exists()
-    # crash again, this time recover via the compaction entry point
-    shutil.move(str(base), str(root / "base.__merge_old__"))
-    assert compact_cdc_log(spark, str(root), "k", ["v"]) == 1
-    assert _snap(spark, root) == {1: "a", 2: "b", 3: "c"}
-    assert not (root / "base.__merge_old__").exists()
-
-
-def test_uncompacted_log_warns_past_threshold(spark, tmp_path, monkeypatch):
-    """VERDICT r6 #5: compaction is now on by default; explicitly
-    disabling it must warn loudly once the committed log passes the
-    threshold instead of growing silently."""
-    import warnings as warnings_mod
-
-    from football_data_pipeline_spark.streaming import cdc_stream
-
-    monkeypatch.setattr(cdc_stream, "UNCOMPACTED_WARN_THRESHOLD", 2)
-    root = tmp_path / "cdc"
-    w = cdc_log_batch_writer(str(root), "k", "seq", "op", ["v"], compact_every=None)
-    with warnings_mod.catch_warnings():
-        warnings_mod.simplefilter("error")  # no warning below threshold
-        w(_chg(spark, [(1, 1, "U", "a")]), 0)
-    with pytest.warns(RuntimeWarning, match="uncompacted"):
-        w(_chg(spark, [(2, 2, "U", "b")]), 1)
-    # the default is compaction-on (a real value, not None)
-    assert cdc_stream.DEFAULT_COMPACT_EVERY >= 1
-    import inspect
-
-    sig = inspect.signature(cdc_log_batch_writer)
-    assert sig.parameters["compact_every"].default == cdc_stream.DEFAULT_COMPACT_EVERY
-    # and the compaction-on path folds at K instead of warning
-    root2 = tmp_path / "cdc2"
-    w2 = cdc_log_batch_writer(str(root2), "k", "seq", "op", ["v"], compact_every=2)
-    w2(_chg(spark, [(1, 1, "U", "a")]), 0)
-    w2(_chg(spark, [(2, 2, "U", "b")]), 1)
-    assert (root2 / "base").exists()
-    assert _snap(spark, root2) == {1: "a", 2: "b"}
-
-
-# --- snapshot-log-backed variant (VERDICT r11 item 4, r12) --------------
-
-
-def _snap_log(spark, root, base=None, **kw):
-    from football_data_pipeline_spark.streaming.cdc_stream import (
-        read_cdc_snapshot_log,
-    )
-
-    out = read_cdc_snapshot_log(spark, str(root), "k", ["v"], base=base, **kw)
-    return {r.k: r.v for r in out.select("k", "v").collect()}
-
-
-def test_cdc_snapshot_writer_twin_run_parity(spark, tmp_path):
-    """The snapshot-backed CDC writer must materialize the IDENTICAL
-    view the partition-backed writer does over the same batch
-    sequence — including the out-of-order loss and the delete."""
-    from football_data_pipeline_spark.streaming.cdc_stream import (
-        cdc_snapshot_writer,
-    )
-
-    b0 = [(1, 10, "U", "a"), (2, 10, "U", "b"), (3, 10, "U", "c")]
-    b1 = [(2, 20, "D", None), (3, 5, "U", "stale"), (4, 20, "U", "d")]
-    r_a = tmp_path / "partition"
-    r_b = tmp_path / "snapshot"
-    wa = cdc_log_batch_writer(str(r_a), "k", "seq", "op", ["v"])
-    wb = cdc_snapshot_writer(str(r_b), "k", "seq", "op", ["v"])
-    for w in (wa, wb):
-        w(_chg(spark, b0), 0)
-        w(_chg(spark, b1), 1)
-    assert _snap(spark, r_a) == _snap_log(spark, r_b) == {1: "a", 3: "c", 4: "d"}
+    compact_cdc_snapshot(spark, str(root), "k", ["v"])
+    before = _snap_log(spark, root)
+    folded = sorted(map(tuple, read_snapshot(spark, log).collect()))
+    n_versions = len(snapshot_versions(spark, log))
+    w(_chg(spark, [(3, 30, "U", "c")]), 1)  # replay after the fold
+    assert len(snapshot_versions(spark, log)) == n_versions
+    assert _snap_log(spark, root) == before == {1: "a", 3: "c"}
+    compact_cdc_snapshot(spark, str(root), "k", ["v"])
+    assert _snap_log(spark, root) == before
+    assert sorted(map(tuple, read_snapshot(spark, log).collect())) == folded
 
 
 def test_cdc_snapshot_writer_replay_and_seq_guard(spark, tmp_path):
     """Replay of the last batch is a guarded no-op (no new version);
     the in-plan seq guard still fires through the snapshot path."""
-    from football_data_pipeline_spark.sources.snapshots import (
-        snapshot_versions,
-    )
-    from football_data_pipeline_spark.streaming.cdc_stream import (
-        cdc_snapshot_writer,
-    )
-
     root = tmp_path / "cdc"
-    w = cdc_snapshot_writer(str(root), "k", "seq", "op", ["v"])
+    w = _writer(root)
     w(_chg(spark, [(1, 1, "U", "a")]), 0)
     b1 = _chg(spark, [(1, 2, "U", "a2"), (2, 2, "U", "b")])
     w(b1, 1)
@@ -285,17 +190,11 @@ def test_cdc_snapshot_fold_keeps_tombstones_and_monotonicity(spark, tmp_path):
     batch watermark, and leaves old versions time-travelable."""
     from football_data_pipeline_spark.sources.snapshots import (
         latest_committed_batch,
-        read_snapshot,
-        snapshot_versions,
-    )
-    from football_data_pipeline_spark.streaming.cdc_stream import (
-        cdc_snapshot_writer,
-        compact_cdc_snapshot,
     )
 
     root = tmp_path / "cdc"
     log = f"{root}/winners_log"
-    w = cdc_snapshot_writer(str(root), "k", "seq", "op", ["v"])
+    w = _writer(root)
     w(_chg(spark, [(1, 10, "U", "a"), (2, 10, "U", "b")]), 0)
     w(_chg(spark, [(1, 20, "U", "a2"), (2, 30, "D", None)]), 1)
     pre_fold = _snap_log(spark, root)
@@ -329,13 +228,8 @@ def test_crashed_fold_retry_takes_fresh_gen_dir(spark, tmp_path):
     mode('errorifexists') and failing permanently."""
     import os
 
-    from football_data_pipeline_spark.streaming.cdc_stream import (
-        cdc_snapshot_writer,
-        compact_cdc_snapshot,
-    )
-
     root = tmp_path / "cdc"
-    w = cdc_snapshot_writer(str(root), "k", "seq", "op", ["v"])
+    w = _writer(root)
     w(_chg(spark, [(1, 10, "U", "a"), (2, 10, "U", "b")]), 0)
     w(_chg(spark, [(1, 20, "U", "a2")]), 1)
     pre = _snap_log(spark, root)

@@ -2,19 +2,24 @@
 cross-batch history screening, within-batch component resolution,
 mixed-kind fingerprinting (image dHash / audio envelope / video
 frame bridge), unknown-kind audit, replay idempotence, accepted-only
-indexing, history compaction, and the end-to-end readStream wiring.
+indexing, the fp index snapshot log under maintain(), and the
+end-to-end readStream wiring.
 """
 
 from __future__ import annotations
 
-import glob
 import struct
 
 from football_data_pipeline_spark.operators.audio import encode_wav
 from football_data_pipeline_spark.operators.multimodal import encode_ppm
 from football_data_pipeline_spark.operators.video import encode_y4m
+from football_data_pipeline_spark.sources.snapshots import (
+    read_snapshot,
+    snapshot_versions,
+)
 from football_data_pipeline_spark.streaming.mediadedup import (
-    media_dedup_batch_writer,
+    media_curation_snapshot_writer,
+    media_dedup_snapshot_writer,
     media_fingerprints,
     start_media_dedup_pipeline,
 )
@@ -61,45 +66,22 @@ def _clip(seed: int) -> bytes:
 
 
 def _read(spark, root, sub):
+    """A batchId-keyed audit table (rejected, accepted, media_drops,
+    media_assets)."""
     return spark.read.option("basePath", f"{root}/{sub}").parquet(f"{root}/{sub}")
 
 
-def test_cross_batch_history_screening_all_kinds(spark, tmp_path):
-    root = str(tmp_path / "m")
-    w = media_dedup_batch_writer(root)
-    batch0 = spark.createDataFrame(
-        [
-            (1, "image", _ppm(3)),
-            (2, "audio", _tone(0x5A)),
-            (3, "video", _clip(9)),
-        ],
-        SCHEMA,
-    )
-    w(batch0, 0)
-    # batch 1: byte-identical copies of each kind + one fresh asset
-    batch1 = spark.createDataFrame(
-        [
-            (11, "image", _ppm(3)),
-            (12, "audio", _tone(0x5A)),
-            (13, "video", _clip(9)),
-            (14, "image", _ppm(40)),
-        ],
-        SCHEMA,
-    )
-    w(batch1, 1)
-    rej = {
-        r.asset_id: r for r in _read(spark, root, "rejected").collect()
+def _fp_index(spark, root):
+    """(asset_id, fp_seq) of the latest committed fp index snapshot."""
+    return {
+        (r.asset_id, r.fp_seq)
+        for r in read_snapshot(spark, f"{root}/fp_log").collect()
     }
-    assert set(rej) == {11, 12, 13}
-    assert {r.dup_of for r in rej.values()} == {1, 2, 3}
-    assert all(r.scope == "history" and r.hamming == 0 for r in rej.values())
-    acc = {r.asset_id for r in _read(spark, root, "accepted").collect()}
-    assert acc == {1, 2, 3, 14}
 
 
 def test_within_batch_owner_and_near_miss(spark, tmp_path):
     root = str(tmp_path / "m")
-    w = media_dedup_batch_writer(root)
+    w = media_dedup_snapshot_writer(root)
     # 21/22 identical, 23 a near-dup of them (<=3 bits), 24 unrelated
     batch = spark.createDataFrame(
         [
@@ -119,13 +101,12 @@ def test_within_batch_owner_and_near_miss(spark, tmp_path):
     assert rej[23].dup_of == 21 and 1 <= rej[23].hamming <= 3
     assert all(r.scope == "batch" for r in rej.values())
     # only ACCEPTED fingerprints are indexed
-    idx = {r.asset_id for r in _read(spark, root, "fp_index").collect()}
-    assert idx == {21, 24}
+    assert {a for a, _ in _fp_index(spark, root)} == {21, 24}
 
 
 def test_unknown_and_null_kind_audited_never_silent(spark, tmp_path):
     root = str(tmp_path / "m")
-    w = media_dedup_batch_writer(root)
+    w = media_dedup_snapshot_writer(root)
     batch = spark.createDataFrame(
         [(31, "gif", b"GIF89a"), (32, None, b"???"), (33, "image", _ppm(2))],
         SCHEMA,
@@ -142,7 +123,7 @@ def test_unknown_and_null_kind_audited_never_silent(spark, tmp_path):
 
 def test_replay_idempotent_and_duplicate_ids_collapse(spark, tmp_path):
     root = str(tmp_path / "m")
-    w = media_dedup_batch_writer(root)
+    w = media_dedup_snapshot_writer(root)
     batch0 = spark.createDataFrame([(1, "image", _ppm(8))], SCHEMA)
     w(batch0, 0)
     # batch 1 carries a same-id re-collection + a history dup
@@ -154,13 +135,15 @@ def test_replay_idempotent_and_duplicate_ids_collapse(spark, tmp_path):
     snap = lambda: (  # noqa: E731
         {(r.asset_id, r.dup_of, r.scope) for r in _read(spark, root, "rejected").collect()},
         {r.asset_id for r in _read(spark, root, "accepted").collect()},
-        {(r.asset_id, r.fp_seq) for r in _read(spark, root, "fp_index").collect()},
+        _fp_index(spark, root),
+        len(snapshot_versions(spark, f"{root}/fp_log")),
     )
     before = snap()
     assert before[0] == {(3, 1, "history")}
     assert before[1] == {1, 2}
     # crash-replay of batch 1 reproduces identical state (batch 1
-    # must not see its OWN fp_index partition as history)
+    # must not see its OWN fp commit as history, and the log's replay
+    # guard skips the re-commit)
     w(batch1, 1)
     assert snap() == before
 
@@ -170,7 +153,7 @@ def test_video_frames_bridge_matches_on_any_frame(spark, tmp_path):
     caught even when other frames differ (frame-level fingerprints,
     asset-level resolution)."""
     root = str(tmp_path / "m")
-    w = media_dedup_batch_writer(root)
+    w = media_dedup_snapshot_writer(root)
     # same luma sequence -> same frame hashes (flat frames hash 0,
     # so ANY constant-luma clip collides at hamming 0 — fine: the
     # test pins asset-level lift, not dHash discrimination)
@@ -178,21 +161,27 @@ def test_video_frames_bridge_matches_on_any_frame(spark, tmp_path):
     w(spark.createDataFrame([(2, "video", _clip(9))], SCHEMA), 1)
     rej = {r.asset_id: r for r in _read(spark, root, "rejected").collect()}
     assert rej[2].dup_of == 1 and rej[2].scope == "history"
-    # fp_index carries one row per sampled frame for the video tier
-    idx = _read(spark, root, "fp_index").collect()
-    assert {r.fp_seq for r in idx if r.asset_id == 1} == {0, 4}
+    # the fp index carries one row per sampled frame for the video tier
+    assert {seq for a, seq in _fp_index(spark, root) if a == 1} == {0, 4}
 
 
-def test_history_compaction_folds_and_screen_still_works(spark, tmp_path):
+def test_maintained_fp_log_still_screens(spark, tmp_path):
+    """maintain() folds the fp index and expires every older version
+    (keep_latest=1); history screening still sees the folded batches,
+    because the fold commit inherits the batch watermark."""
+    from football_data_pipeline_spark.sources.snapshots import maintain
+
     root = str(tmp_path / "m")
-    w = media_dedup_batch_writer(root, compact_every=2)
+    w = media_dedup_snapshot_writer(root)
     w(spark.createDataFrame([(1, "audio", _tone(0x11))], SCHEMA), 0)
     w(spark.createDataFrame([(2, "audio", _tone(0x22))], SCHEMA), 1)
     w(spark.createDataFrame([(3, "audio", _tone(0x33))], SCHEMA), 2)
-    # compaction ran: fewer live batch dirs than batches written
-    live = glob.glob(f"{root}/fp_index/batch_id=*")
-    assert len(live) < 3
-    # history screening still sees folded batches
+    audit = maintain(
+        spark, f"{root}/fp_log", target_rows=1000,
+        out_dir=f"{root}/fp_maintained", keep_latest=1,
+    )
+    assert audit["compacted_version"] is not None
+    assert len(snapshot_versions(spark, f"{root}/fp_log")) == 1
     w(spark.createDataFrame([(4, "audio", _tone(0x11))], SCHEMA), 3)
     rej = {r.asset_id: r.dup_of for r in _read(spark, root, "rejected").collect()}
     assert rej == {4: 1}
@@ -220,13 +209,15 @@ def test_stream_end_to_end(spark, tmp_path):
     assert rej[3] in {"history", "batch"}
 
 
-# --- snapshot-log-backed variant (VERDICT r11 item 4) ------------------
-
-
-def _run_media_sequence(spark, root, writer_factory):
-    """Shared 3-batch workout: three kinds accepted, per-kind history
-    rejects + a fresh asset, a within-batch near pair."""
-    w = writer_factory(root)
+def test_snapshot_media_writer_decisions(spark, tmp_path):
+    """The screening decisions over a fixed 3-batch workout (three
+    kinds accepted; byte-identical copies of each kind rejected
+    against history, per kind, plus a fresh image; a within-batch
+    near pair) — the rows below are what the writer
+    decided when it still had a partition-backed twin, and both
+    agreed."""
+    root = str(tmp_path / "snapshot")
+    w = media_dedup_snapshot_writer(root)
     w(
         spark.createDataFrame(
             [(1, "image", _ppm(3)), (2, "audio", _tone(0x5A)), (3, "video", _clip(9))],
@@ -252,116 +243,58 @@ def _run_media_sequence(spark, root, writer_factory):
         ),
         2,
     )
-
-
-def test_snapshot_media_writer_twin_run_parity(spark, tmp_path):
-    """The snapshot-backed media dedup must make the IDENTICAL
-    screening decisions the partition-backed writer makes — same
-    accepts, same (dup_of, scope, hamming) rejects — and its fp log
-    must fold to the same accepted-fingerprint set."""
-    from football_data_pipeline_spark.sources.snapshots import read_snapshot
-    from football_data_pipeline_spark.streaming.mediadedup import (
-        media_dedup_snapshot_writer,
-    )
-
-    r_a = str(tmp_path / "partition")
-    r_b = str(tmp_path / "snapshot")
-    _run_media_sequence(spark, r_a, media_dedup_batch_writer)
-    _run_media_sequence(spark, r_b, media_dedup_snapshot_writer)
-    rej_a = {
-        r.asset_id: (r.dup_of, r.scope, r.hamming)
-        for r in _read(spark, r_a, "rejected").collect()
-    }
-    rej_b = {
-        r.asset_id: (r.dup_of, r.scope, r.hamming)
-        for r in _read(spark, r_b, "rejected").collect()
-    }
-    assert rej_a == rej_b
-    acc_a = {r.asset_id for r in _read(spark, r_a, "accepted").collect()}
-    acc_b = {r.asset_id for r in _read(spark, r_b, "accepted").collect()}
-    assert acc_a == acc_b == {1, 2, 3, 14, 21}
-    fp_a = {
-        (r.asset_id, r.fp_seq)
-        for r in _read(spark, r_a, "fp_index").collect()
-    }
-    fp_b = {
-        (r.asset_id, r.fp_seq)
-        for r in read_snapshot(spark, f"{r_b}/fp_log").collect()
-    }
-    assert fp_a == fp_b
-
-
-def test_snapshot_media_writer_replay_idempotent(spark, tmp_path):
-    """A replayed batch never sees its own fp commit as history and
-    the log's replay guard skips the re-commit."""
-    from football_data_pipeline_spark.sources.snapshots import (
-        snapshot_versions,
-    )
-    from football_data_pipeline_spark.streaming.mediadedup import (
-        media_dedup_snapshot_writer,
-    )
-
-    root = str(tmp_path / "m")
-    w = media_dedup_snapshot_writer(root)
-    w(spark.createDataFrame([(1, "image", _ppm(3))], SCHEMA), 0)
-    b1 = spark.createDataFrame(
-        [(11, "image", _ppm(3)), (14, "image", _ppm(40))], SCHEMA
-    )
-    w(b1, 1)
-    first_rej = {
-        r.asset_id: (r.dup_of, r.scope)
+    rej = sorted(
+        (r.asset_id, r.kind, r.dup_of, r.hamming, r.scope, r.batch_id)
         for r in _read(spark, root, "rejected").collect()
-    }
-    first_acc = {r.asset_id for r in _read(spark, root, "accepted").collect()}
-    assert first_rej == {11: (1, "history")} and first_acc == {1, 14}
-    n_versions = len(snapshot_versions(spark, f"{root}/fp_log"))
-    w(b1, 1)  # crash-replay
-    assert {
-        r.asset_id: (r.dup_of, r.scope)
-        for r in _read(spark, root, "rejected").collect()
-    } == first_rej
-    assert {r.asset_id for r in _read(spark, root, "accepted").collect()} == first_acc
-    assert len(snapshot_versions(spark, f"{root}/fp_log")) == n_versions
-
-
-def test_snapshot_curation_writer_twin_run_parity(spark, tmp_path):
-    """The curation composition (gate → dedup) over the snapshot-
-    backed fp index makes identical drop/keep decisions."""
-    from football_data_pipeline_spark.streaming.mediadedup import (
-        media_curation_batch_writer,
-        media_curation_snapshot_writer,
     )
+    assert rej == [
+        (11, "image", 1, 0, "history", 1),
+        (12, "audio", 2, 0, "history", 1),
+        (13, "video", 3, 0, "history", 1),
+        (22, "image", 21, 1, "batch", 2),
+    ]
+    acc = sorted(
+        (r.asset_id, r.kind, r.batch_id)
+        for r in _read(spark, root, "accepted").collect()
+    )
+    assert acc == [
+        (1, "image", 0), (2, "audio", 0), (3, "video", 0),
+        (14, "image", 1), (21, "image", 2),
+    ]
+    assert _fp_index(spark, root) == {
+        (1, 0), (2, 0), (3, 0), (3, 4), (14, 0), (21, 0),
+    }
 
+
+def test_snapshot_curation_writer_decisions(spark, tmp_path):
+    """The curation composition (gate → dedup) over two batches — the
+    drops and keeps below are what it decided when it still had a
+    partition-backed twin, and both agreed."""
     flat = encode_ppm(16, 16, bytes([9, 9, 9]) * 256)
-
-    def run(root, factory):
-        w = factory(root)
-        w(
-            spark.createDataFrame(
-                [(1, "image", _ppm(4)), (2, "image", flat), (4, "gif", b"GIF89a")],
-                SCHEMA,
-            ),
-            0,
-        )
-        w(spark.createDataFrame([(11, "image", _ppm(4))], SCHEMA), 1)
-
-    r_a = str(tmp_path / "partition")
-    r_b = str(tmp_path / "snapshot")
-    run(r_a, media_curation_batch_writer)
-    run(r_b, media_curation_snapshot_writer)
-    drops_a = {
-        r.asset_id: (r.reason, r.dup_of, r.scope)
-        for r in _read(spark, r_a, "media_drops").collect()
-    }
-    drops_b = {
-        r.asset_id: (r.reason, r.dup_of, r.scope)
-        for r in _read(spark, r_b, "media_drops").collect()
-    }
-    assert drops_a == drops_b
-    assert drops_a[11] == ("near_duplicate", 1, "history")
-    kept_a = {r.asset_id for r in _read(spark, r_a, "media_assets").collect()}
-    kept_b = {r.asset_id for r in _read(spark, r_b, "media_assets").collect()}
-    assert kept_a == kept_b == {1}
+    root = str(tmp_path / "snapshot")
+    w = media_curation_snapshot_writer(root)
+    w(
+        spark.createDataFrame(
+            [(1, "image", _ppm(4)), (2, "image", flat), (4, "gif", b"GIF89a")],
+            SCHEMA,
+        ),
+        0,
+    )
+    w(spark.createDataFrame([(11, "image", _ppm(4))], SCHEMA), 1)
+    drops = sorted(
+        (r.asset_id, r.kind, r.reason, r.dup_of, r.hamming, r.scope, r.batch_id)
+        for r in _read(spark, root, "media_drops").collect()
+    )
+    assert drops == [
+        (2, "image", "flat", None, None, None, 0),
+        (4, "gif", "unknown_kind", None, None, None, 0),
+        (11, "image", "near_duplicate", 1, 0, "history", 1),
+    ]
+    kept = sorted(
+        (r.asset_id, r.kind, r.batch_id)
+        for r in _read(spark, root, "media_assets").collect()
+    )
+    assert kept == [(1, "image", 0)]
 
 
 def test_curation_writer_gate_then_dedup_closure(spark, tmp_path):
@@ -369,12 +302,8 @@ def test_curation_writer_gate_then_dedup_closure(spark, tmp_path):
     gate verdict, gate-passed dups carry near_duplicate + owner,
     survivors + index hold only gate-passed non-dups, closure holds
     across batches, and replay is idempotent."""
-    from football_data_pipeline_spark.streaming.mediadedup import (
-        media_curation_batch_writer,
-    )
-
     root = str(tmp_path / "m")
-    w = media_curation_batch_writer(root)
+    w = media_curation_snapshot_writer(root)
     flat = encode_ppm(16, 16, bytes([9, 9, 9]) * 256)
     batch0 = spark.createDataFrame(
         [
@@ -412,8 +341,7 @@ def test_curation_writer_gate_then_dedup_closure(spark, tmp_path):
     assert drops.keys() | kept == {1, 2, 3, 4, 11, 12}
     assert drops.keys() & kept == set()
     # only gate-passed non-dups are indexed
-    idx = {r.asset_id for r in _read(spark, root, "fp_index").collect()}
-    assert idx == {1}
+    assert {a for a, _ in _fp_index(spark, root)} == {1}
     # crash-replay of batch 1 reproduces identical state
     w(batch1, 1)
     assert {
@@ -460,12 +388,8 @@ def test_cross_kind_fingerprint_collision_never_pairs(spark, tmp_path):
     both paths (undecodable as image AND as audio), producing equal
     fingerprints — neither within-batch nor against history may that
     become a rejection."""
-    from football_data_pipeline_spark.streaming.mediadedup import (
-        media_dedup_batch_writer,
-    )
-
     root = str(tmp_path / "m")
-    w = media_dedup_batch_writer(root)
+    w = media_dedup_snapshot_writer(root)
     blob = b"same bytes, different modality"
     # within one batch
     w(spark.createDataFrame([(1, "image", blob), (2, "audio", blob)], SCHEMA), 0)

@@ -205,97 +205,107 @@ def test_streaming_incremental_dedup(spark, tmp_path):
     assert rows[11]["jaccard"] >= 0.9
     assert rows[12]["dup_kind"] == "unique"
 
-    # the default backend is the snapshot log (VERDICT r11 item 4)
+    assert _corpus(spark, corpus) == [1, 2, 12]
+
+
+SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _corpus(spark, root):
+    """doc_ids of the latest committed accepted corpus."""
     from football_data_pipeline_spark.streaming.pipeline import (
         read_corpus_snapshot,
     )
 
-    accepted = read_corpus_snapshot(spark, corpus)
-    assert sorted(r["doc_id"] for r in accepted.collect()) == [1, 2, 12]
+    return sorted(r["doc_id"] for r in read_corpus_snapshot(spark, root).collect())
+
+
+def _cls(spark, root, batch_id):
+    return sorted(
+        (r["doc_id"], r["dup_kind"])
+        for r in spark.read.parquet(
+            f"{root}/classification/batch_id={batch_id}"
+        ).collect()
+    )
+
+
+def _replay_batches(spark):
+    b0 = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon", "en", "s", 30)], SCHEMA
+    )
+    b1 = spark.createDataFrame(
+        [(10, "alpha beta gamma delta epsilon", "en", "s", 30),
+         (11, "novel totally different content here", "en", "s", 36)],
+        SCHEMA,
+    )
+    return b0, b1
 
 
 def test_incremental_dedup_batch_replay_idempotent(spark, tmp_path):
     """Crash-restart semantics: re-running a micro-batch with the same
     batch_id must produce the identical classification — the history
-    read prunes batch_id < current, so the batch cannot classify
-    against its own previous (possibly partial) output."""
-    from football_data_pipeline_spark.streaming.pipeline import dedup_batch_writer
+    read is AS OF the newest commit before the current batch, so the
+    batch cannot classify against its own commit, and the accepted
+    log's replay guard skips the re-commit."""
+    from football_data_pipeline_spark.sources.snapshots import snapshot_versions
+    from football_data_pipeline_spark.streaming.pipeline import (
+        dedup_snapshot_writer,
+    )
 
     corpus = str(tmp_path / "corpus")
-    writer = dedup_batch_writer(corpus)
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon", "en", "s", 30)], schema
-    )
-    b1 = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon", "en", "s", 30),
-         (11, "novel totally different content here", "en", "s", 36)],
-        schema,
-    )
+    writer = dedup_snapshot_writer(corpus)
+    b0, b1 = _replay_batches(spark)
     writer(b0, 0)
     writer(b1, 1)
-    first = sorted(
-        (r["doc_id"], r["dup_kind"])
-        for r in spark.read.parquet(f"{corpus}/classification/batch_id=1").collect()
-    )
-    # replay batch 1 (as after a crash between its two writes)
-    writer(b1, 1)
-    second = sorted(
-        (r["doc_id"], r["dup_kind"])
-        for r in spark.read.parquet(f"{corpus}/classification/batch_id=1").collect()
-    )
-    assert first == second == [(10, "exact"), (11, "unique")]
-    accepted = spark.read.option("basePath", f"{corpus}/accepted").parquet(f"{corpus}/accepted")
-    assert sorted(r["doc_id"] for r in accepted.collect()) == [1, 11]
+    first = _cls(spark, corpus, 1)
+    n_versions = len(snapshot_versions(spark, f"{corpus}/accepted_log"))
+    writer(b1, 1)  # replay batch 1
+    assert first == _cls(spark, corpus, 1) == [(10, "exact"), (11, "unique")]
+    assert _corpus(spark, corpus) == [1, 11]
+    assert len(snapshot_versions(spark, f"{corpus}/accepted_log")) == n_versions
 
 
 def test_incremental_dedup_crash_between_classify_and_accept(spark, tmp_path):
     """VERDICT r3 item 8: a crash AFTER the classification write but
-    BEFORE the accepted write (the window between the two outputs)
-    must replay to the same state — no duplicate accepted docs, no
-    self-classification against the batch's own partial output."""
+    BEFORE the accepted commit's marker (the window between the two
+    outputs) must replay to the same state — no duplicate accepted
+    docs, no self-classification against the batch's own partial
+    output."""
     import shutil
 
-    from football_data_pipeline_spark.streaming.pipeline import dedup_batch_writer
+    from football_data_pipeline_spark.sources.snapshots import (
+        _marker_path,
+        snapshot_versions,
+    )
+    from football_data_pipeline_spark.streaming.pipeline import (
+        dedup_snapshot_writer,
+    )
 
     corpus = str(tmp_path / "corpus")
-    writer = dedup_batch_writer(corpus)
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon", "en", "s", 30)], schema
-    )
-    b1 = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon", "en", "s", 30),
-         (11, "novel totally different content here", "en", "s", 36)],
-        schema,
-    )
+    log = f"{corpus}/accepted_log"
+    writer = dedup_snapshot_writer(corpus)
+    b0, b1 = _replay_batches(spark)
     writer(b0, 0)
     writer(b1, 1)
-    # simulate the crash window: classification/batch_id=1 landed,
-    # accepted/batch_id=1 did not
-    shutil.rmtree(f"{corpus}/accepted/batch_id=1")
+    # simulate the crash window: classification/batch_id=1 and the
+    # accepted data files landed, the commit marker did not
+    shutil.rmtree(_marker_path(log, snapshot_versions(spark, log)[-1]))
+    assert _corpus(spark, corpus) == [1]
     writer(b1, 1)  # restart replays the batch
-    cls = sorted(
-        (r["doc_id"], r["dup_kind"])
-        for r in spark.read.parquet(f"{corpus}/classification/batch_id=1").collect()
-    )
-    assert cls == [(10, "exact"), (11, "unique")]
-    accepted = spark.read.option("basePath", f"{corpus}/accepted").parquet(
-        f"{corpus}/accepted"
-    )
-    docs = sorted(r["doc_id"] for r in accepted.collect())
-    assert docs == [1, 11]  # exactly once: no duplicates, nothing lost
+    assert _cls(spark, corpus, 1) == [(10, "exact"), (11, "unique")]
+    assert _corpus(spark, corpus) == [1, 11]  # exactly once
 
 
 def test_incremental_dedup_within_batch_near_dups(spark, tmp_path):
     """ADVICE r3: two NON-identical near-copies arriving in the same
     micro-batch must not both be accepted — the within-batch near
     pass keeps the min doc_id per component."""
-    from football_data_pipeline_spark.streaming.pipeline import dedup_batch_writer
+    from football_data_pipeline_spark.streaming.pipeline import (
+        dedup_snapshot_writer,
+    )
 
     corpus = str(tmp_path / "corpus")
-    writer = dedup_batch_writer(corpus)
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    writer = dedup_snapshot_writer(corpus)
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     batch = spark.createDataFrame(
         [
@@ -303,13 +313,10 @@ def test_incremental_dedup_within_batch_near_dups(spark, tmp_path):
             (21, base + " extraword", "en", "s", 60),  # near copy of 20 (jac 10/11)
             (22, "unrelated fresh text about something else entirely", "en", "s", 50),
         ],
-        schema,
+        SCHEMA,
     )
     writer(batch, 0)
-    accepted = spark.read.option("basePath", f"{corpus}/accepted").parquet(
-        f"{corpus}/accepted"
-    )
-    assert sorted(r["doc_id"] for r in accepted.collect()) == [20, 22]
+    assert _corpus(spark, corpus) == [20, 22]
 
 
 def test_curation_writer_gates_redacts_dedups_and_replays(spark, tmp_path):
@@ -317,22 +324,25 @@ def test_curation_writer_gates_redacts_dedups_and_replays(spark, tmp_path):
     rejected/ with scores; survivors get PII-redacted before entering
     the dedup stage; duplicates of accepted history are refused; and
     replaying a batch (crash-restart) reproduces the identical state.
+    The accepted corpus is the dedup funnel's snapshot table.
 
     Token weights are the classifier's deterministic md5 weights:
     'alpha beta delta' sums +1.304 (keep), 'gamma epsilon theta'
     sums -2.451 (reject)."""
-    from football_data_pipeline_spark.streaming.pipeline import curation_batch_writer
+    from football_data_pipeline_spark.streaming.pipeline import (
+        curation_batch_writer,
+        read_corpus_snapshot,
+    )
 
     corpus = str(tmp_path / "corpus")
     writer = curation_batch_writer(corpus)
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
     good = "alpha beta delta mango grape lime peach"  # strongly positive
     b0 = spark.createDataFrame(
         [
             (1, good + " reach user@example.com now", "en", "s", 0),
             (2, "gamma epsilon theta kiwi cherry contact", "en", "s", 0),  # negative
         ],
-        schema,
+        SCHEMA,
     )
     b1 = spark.createDataFrame(
         [
@@ -343,7 +353,7 @@ def test_curation_writer_gates_redacts_dedups_and_replays(spark, tmp_path):
             (10, "now reach <EMAIL> " + good, "en", "s", 0),
             (11, "omega sigma plum lemon write totally novel", "en", "s", 0),
         ],
-        schema,
+        SCHEMA,
     )
     writer(b0, 0)
     writer(b1, 1)
@@ -355,89 +365,119 @@ def test_curation_writer_gates_redacts_dedups_and_replays(spark, tmp_path):
     assert set(rej) == {2}
     assert rej[2].score < 0
 
-    accepted = spark.read.option("basePath", f"{corpus}/accepted").parquet(
-        f"{corpus}/accepted"
-    )
-    acc = {r.doc_id: r for r in accepted.collect()}
+    acc = {r.doc_id: r for r in read_corpus_snapshot(spark, corpus).collect()}
     assert set(acc) == {1, 11}
     # the accepted text is the REDACTED form, with metadata recomputed
     assert "<EMAIL>" in acc[1].text and "user@example.com" not in acc[1].text
     assert acc[1].n_chars == len(acc[1].text)
-    cls1 = {
-        r.doc_id: r.dup_kind
-        for r in spark.read.parquet(f"{corpus}/classification/batch_id=1").collect()
-    }
-    assert cls1 == {10: "exact", 11: "unique"}
+    assert _cls(spark, corpus, 1) == [(10, "exact"), (11, "unique")]
 
     # crash-restart: replaying batch 1 reproduces the identical state
     writer(b1, 1)
-    acc2 = sorted(
-        r.doc_id
-        for r in spark.read.option("basePath", f"{corpus}/accepted")
-        .parquet(f"{corpus}/accepted")
-        .collect()
-    )
-    assert acc2 == [1, 11]
+    assert _corpus(spark, corpus) == [1, 11]
+    assert _cls(spark, corpus, 1) == [(10, "exact"), (11, "unique")]
 
 
-def test_dedup_snapshot_writer_twin_run_parity_and_replay(spark, tmp_path):
-    """The snapshot-backed base funnel (VERDICT r10 missing-item 3,
-    completing what keep_best_snapshot_writer started) must make the
-    IDENTICAL decisions dedup_batch_writer makes over the same batch
-    sequence, replay idempotently, and time-travel its corpus."""
+def test_dedup_snapshot_writer_decisions_and_replay(spark, tmp_path):
+    """The dedup funnel's decisions over a fixed two-batch sequence
+    (the rows below are what the funnel decided when it still had a
+    partition-backed twin, and both agreed), idempotent replay, and
+    AS-OF time travel over the corpus."""
     from football_data_pipeline_spark.sources.snapshots import (
         read_table_before_batch,
     )
     from football_data_pipeline_spark.streaming.pipeline import (
-        dedup_batch_writer,
         dedup_snapshot_writer,
-        read_corpus_snapshot,
     )
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
     batches = [
         spark.createDataFrame(
             [(1, "alpha beta gamma delta epsilon", "en", "s", 30),
              (2, "unrelated words about football odds", "en", "s", 35)],
-            schema,
+            SCHEMA,
         ),
         spark.createDataFrame(
             [(10, "alpha beta gamma delta epsilon", "en", "s", 30),
              (11, "novel totally different content here", "en", "s", 36)],
-            schema,
+            SCHEMA,
         ),
     ]
-    r_a = str(tmp_path / "partition")
-    r_b = str(tmp_path / "snapshot")
-    wa = dedup_batch_writer(r_a)
-    wb = dedup_snapshot_writer(r_b)
+    root = str(tmp_path / "snapshot")
+    w = dedup_snapshot_writer(root)
     for i, b in enumerate(batches):
-        wa(b, i)
-        wb(b, i)
-    for i in range(len(batches)):
-        a = sorted(
-            (r["doc_id"], r["dup_kind"])
-            for r in spark.read.parquet(f"{r_a}/classification/batch_id={i}").collect()
+        w(b, i)
+    expected = [
+        [(1, None, "unique", None), (2, None, "unique", None)],
+        [(10, 1, "exact", 1.0), (11, None, "unique", None)],
+    ]
+    for i, rows in enumerate(expected):
+        got = sorted(
+            (r["doc_id"], r["matched_doc"], r["dup_kind"], r["jaccard"])
+            for r in spark.read.parquet(
+                f"{root}/classification/batch_id={i}"
+            ).collect()
         )
-        b = sorted(
-            (r["doc_id"], r["dup_kind"])
-            for r in spark.read.parquet(f"{r_b}/classification/batch_id={i}").collect()
-        )
-        assert a == b, i
-    acc_a = sorted(
-        r["doc_id"]
-        for r in spark.read.option("basePath", f"{r_a}/accepted")
-        .parquet(f"{r_a}/accepted").collect()
-    )
-    acc_b = sorted(r["doc_id"] for r in read_corpus_snapshot(spark, r_b).collect())
-    assert acc_a == acc_b == [1, 2, 11]
+        assert got == rows, i
+    assert _corpus(spark, root) == [1, 2, 11]
     # replay batch 1: the log's guard skips, classification rewrites
     # the same rows — nothing changes
-    wb(batches[1], 1)
-    assert sorted(
-        r["doc_id"] for r in read_corpus_snapshot(spark, r_b).collect()
-    ) == [1, 2, 11]
-    # what the unification buys: the corpus as of batch 1 is one
-    # AS-OF read (no fold bookkeeping)
-    asof = read_table_before_batch(spark, f"{r_b}/accepted_log", 1)
+    w(batches[1], 1)
+    assert _corpus(spark, root) == [1, 2, 11]
+    # the corpus as of batch 1 is one AS-OF read
+    asof = read_table_before_batch(spark, f"{root}/accepted_log", 1)
     assert sorted(r["doc_id"] for r in asof.collect()) == [1, 2]
+
+
+def test_maintained_accepted_log_classifies_like_uncompacted(spark, tmp_path):
+    """maintain() is the corpus history's compaction: folding the
+    accepted log mid-sequence and expiring every older version
+    (keep_latest=1) must not change a single classification — the
+    fold commit inherits the batch watermark, so the next batch's
+    AS-OF probe still sees the whole history."""
+    from football_data_pipeline_spark.sources.snapshots import (
+        maintain,
+        snapshot_versions,
+    )
+    from football_data_pipeline_spark.streaming.pipeline import (
+        dedup_snapshot_writer,
+    )
+
+    texts = [
+        (i, f"totally distinct document number {i} "
+         + " ".join(f"w{i}x{j}" for j in range(30)))
+        for i in range(12)
+    ]
+    batches = [
+        texts[0:3],
+        texts[3:6] + [texts[1]],  # dup of a batch-0 doc
+        texts[6:9] + [texts[4]],  # dup of a batch-1 doc
+        texts[9:12] + [texts[7]],  # dup of a batch-2 doc
+    ]
+    ra, rb = str(tmp_path / "maintained"), str(tmp_path / "plain")
+    wa, wb = dedup_snapshot_writer(ra), dedup_snapshot_writer(rb)
+    for i, rows in enumerate(batches):
+        df = spark.createDataFrame(
+            [(d, t, "en", "web") for d, t in rows],
+            "doc_id long, text string, lang string, source string",
+        )
+        wa(df, i)
+        wb(df, i)
+        if i == 1:
+            audit = maintain(
+                spark,
+                f"{ra}/accepted_log",
+                target_rows=1000,
+                out_dir=f"{ra}/accepted_maintained",
+                keep_latest=1,
+            )
+            assert audit["compacted_version"] is not None
+            assert len(snapshot_versions(spark, f"{ra}/accepted_log")) == 1
+    dup_of_history = {1: 1, 2: 4, 3: 7}
+    for i in range(len(batches)):
+        assert _cls(spark, ra, i) == _cls(spark, rb, i), i
+        want = sorted(
+            (d, "exact" if d == dup_of_history.get(i) else "unique")
+            for d, _ in batches[i]
+        )
+        assert _cls(spark, ra, i) == want, i
+    assert _corpus(spark, ra) == _corpus(spark, rb) == list(range(12))

@@ -1,7 +1,8 @@
 """Keep-best streaming dedup (streaming/supersede.py): a
 higher-quality arrival supersedes its accepted owner (tombstone +
 acceptance), worse/tie arrivals reject as usual, the probe always
-compares against the LIVE owner, and replay is idempotent.
+compares against the LIVE owner, replay is idempotent, and the
+accepted/tombstone snapshot logs survive maintain() and time-travel.
 
 Fixture arithmetic (quality.classify_quality token weights): the
 10-greek-word ``BASE`` has mean -0.228; appending 'sludge' (+0.992)
@@ -12,9 +13,13 @@ word set — an exact-fingerprint dup with a different score.
 
 from __future__ import annotations
 
+from football_data_pipeline_spark.sources.snapshots import (
+    read_snapshot,
+    snapshot_versions,
+)
 from football_data_pipeline_spark.streaming.supersede import (
-    keep_best_batch_writer,
-    read_live_corpus,
+    keep_best_snapshot_writer,
+    read_live_corpus_snapshot,
 )
 
 import pytest as _pytest_r14
@@ -34,32 +39,50 @@ def _df(spark, rows):
 
 
 def _read(spark, root, sub):
+    """A batchId-keyed audit table (classification, rejected)."""
     return spark.read.option("basePath", f"{root}/{sub}").parquet(f"{root}/{sub}")
+
+
+def _log(spark, root, table):
+    """Rows of the latest committed snapshot of ``{root}/{table}_log``
+    ([] before the first commit — an all-empty table never commits)."""
+    log = f"{root}/{table}_log"
+    if not snapshot_versions(spark, log):
+        return []
+    return read_snapshot(spark, log).collect()
+
+
+def _tombs(spark, root):
+    return {r.doc_id: r for r in _log(spark, root, "tombstones")}
+
+
+def _live(spark, root):
+    return {r.doc_id for r in read_live_corpus_snapshot(spark, root).collect()}
 
 
 def test_better_near_copy_supersedes_and_owner_stays_live(spark, tmp_path):
     root = str(tmp_path / "c")
-    w = keep_best_batch_writer(root)
+    w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE)]), 0)
     # better near copy (jaccard 10/11, higher mean) supersedes doc 1
     w(_df(spark, [(11, BASE + " sludge")]), 1)
-    tomb = {r.doc_id: r for r in _read(spark, root, "tombstones").collect()}
+    tomb = _tombs(spark, root)
     assert set(tomb) == {1}
     assert tomb[1].superseded_by == 11 and tomb[1].new_score > tomb[1].score
-    acc = {r.doc_id for r in _read(spark, root, "accepted").collect()}
-    assert acc == {1, 11}  # raw partitions keep history; the VIEW prunes
-    assert {r.doc_id for r in read_live_corpus(spark, root).collect()} == {11}
+    acc = {r.doc_id for r in _log(spark, root, "accepted")}
+    assert acc == {1, 11}  # the accepted log keeps history; the VIEW prunes
+    assert _live(spark, root) == {11}
     # batch 2: a copy of the ORIGINAL text must be judged against the
     # LIVE owner 11 (not the tombstoned 1) — and it scores lower
     w(_df(spark, [(21, BASE)]), 2)
     rej = {r.doc_id: r for r in _read(spark, root, "rejected").collect()}
     assert rej[21].dup_of == 11 and rej[21].reason == "duplicate_not_better"
-    assert {r.doc_id for r in read_live_corpus(spark, root).collect()} == {11}
+    assert _live(spark, root) == {11}
 
 
 def test_worse_and_tie_arrivals_keep_incumbent(spark, tmp_path):
     root = str(tmp_path / "c")
-    w = keep_best_batch_writer(root)
+    w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE + " sludge")]), 0)
     # 11: near copy with an extra LOW-weight word (worse); 12: exact
     # same text (tie) — both reject, nothing tombstoned. Separate
@@ -71,134 +94,108 @@ def test_worse_and_tie_arrivals_keep_incumbent(spark, tmp_path):
     rej = {r.doc_id: r for r in _read(spark, root, "rejected").collect()}
     assert set(rej) == {11, 12}
     assert all(r.dup_of == 1 for r in rej.values())
-    assert _read(spark, root, "tombstones").count() == 0
-    assert {r.doc_id for r in read_live_corpus(spark, root).collect()} == {1}
+    assert _tombs(spark, root) == {}
+    assert _live(spark, root) == {1}
 
 
 def test_exact_dup_with_better_score_supersedes(spark, tmp_path):
     """Repeating a high-weight word changes the mean but not the word
     SET — an exact-fingerprint dup that still wins on quality."""
     root = str(tmp_path / "c")
-    w = keep_best_batch_writer(root)
+    w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE)]), 0)
     w(_df(spark, [(11, BASE + " beta beta")]), 1)
     cls = {
         r.doc_id: r for r in _read(spark, root, "classification").collect()
     }
     assert cls[11].dup_kind == "exact" and cls[11].matched_doc == 1
-    tomb = {r.doc_id: r.superseded_by for r in _read(spark, root, "tombstones").collect()}
-    assert tomb == {1: 11}
-    assert {r.doc_id for r in read_live_corpus(spark, root).collect()} == {11}
+    assert {d: r.superseded_by for d, r in _tombs(spark, root).items()} == {1: 11}
+    assert _live(spark, root) == {11}
 
 
 def test_replay_idempotent(spark, tmp_path):
+    """A replayed batch must not see its own commits as history —
+    snapshot_append_writer's batch_id guard + the AS-OF read: every
+    output and the log versions stay as they were."""
     root = str(tmp_path / "c")
-    w = keep_best_batch_writer(root)
+    w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE)]), 0)
     batch1 = _df(spark, [(11, BASE + " sludge"), (12, "totally unrelated words entirely")])
     w(batch1, 1)
     snap = lambda: (  # noqa: E731
-        {(r.doc_id, r.superseded_by) for r in _read(spark, root, "tombstones").collect()},
+        {(d, r.superseded_by) for d, r in _tombs(spark, root).items()},
         {r.doc_id for r in _read(spark, root, "rejected").collect()},
-        {r.doc_id for r in _read(spark, root, "accepted").collect()},
-        {r.doc_id for r in read_live_corpus(spark, root).collect()},
+        {r.doc_id for r in _log(spark, root, "accepted")},
+        _live(spark, root),
+        [
+            len(snapshot_versions(spark, f"{root}/{t}_log"))
+            for t in ("accepted", "tombstones")
+        ],
     )
     before = snap()
     assert before[0] == {(1, 11)} and before[3] == {11, 12}
-    # a replay of batch 1 must not see its own tombstones/accepted as
-    # history — identical outputs
     w(batch1, 1)
     assert snap() == before
 
 
-def test_tombstone_compaction_folds_and_liveness_survives(spark, tmp_path):
-    """Both history tables compact on the cadence — tombstones are
-    read every batch by the liveness prune, so they must fold too —
-    and a FOLDED tombstone still hides its superseded doc from the
-    probe."""
-    import glob
+def test_maintained_logs_keep_liveness(spark, tmp_path):
+    """maintain() is the histories' compaction: folding both logs and
+    expiring every older version (keep_latest=1) must not resurrect a
+    superseded doc — a folded tombstone still hides its owner from the
+    probe, because the fold commits inherit the batch watermark."""
+    from football_data_pipeline_spark.sources.snapshots import maintain
 
     root = str(tmp_path / "c")
-    w = keep_best_batch_writer(root, compact_every=2)
+    w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE)]), 0)
     w(_df(spark, [(11, BASE + " sludge")]), 1)  # supersedes 1 (near)
     # 21 repeats a high-weight word: SAME set as 11 (exact dup,
     # higher mean) — the chain's word set must not drift from BASE
     # or generation 3 would fall under the 0.9 verify vs doc 31
     w(_df(spark, [(21, BASE + " sludge beta beta")]), 2)
-    # compaction ran on both tables: fewer live dirs than batches
-    assert len(glob.glob(f"{root}/tombstones/batch_id=*")) < 3
-    assert len(glob.glob(f"{root}/accepted/batch_id=*")) < 3
+    for table in ("accepted", "tombstones"):
+        audit = maintain(
+            spark,
+            f"{root}/{table}_log",
+            target_rows=1000,
+            out_dir=f"{root}/{table}_maintained",
+            keep_latest=1,
+        )
+        assert audit["compacted_version"] is not None, table
+        assert len(snapshot_versions(spark, f"{root}/{table}_log")) == 1
     # liveness after folding: a copy of the ORIGINAL text is judged
     # against the current owner 21, not the folded tombstoned 1/11
     w(_df(spark, [(31, BASE)]), 3)
     rej = {r.doc_id: r.dup_of for r in _read(spark, root, "rejected").collect()}
     assert rej[31] == 21
-    assert {r.doc_id for r in read_live_corpus(spark, root).collect()} == {21}
+    assert _live(spark, root) == {21}
 
 
-# --- snapshot-log-backed variant (VERDICT r10 item 6) ------------------
-
-
-def _run_sequence(spark, root, writer_factory):
-    """The shared 4-batch decision-table workout: supersession, a
-    live-owner probe, a reject, and a unique."""
-    w = writer_factory(root)
+def test_snapshot_writer_decisions(spark, tmp_path):
+    """The keep-best decisions over a fixed 4-batch workout
+    (supersession, a live-owner probe, a reject, and a unique) — the
+    rows below are what the funnel decided when it still had a
+    partition-backed twin, and both agreed."""
+    root = str(tmp_path / "snapshot")
+    w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE), (2, "totally different words about football odds")]), 0)
     w(_df(spark, [(11, BASE + " sludge")]), 1)  # supersedes 1
     w(_df(spark, [(21, BASE)]), 2)  # vs LIVE owner 11 → reject
     w(_df(spark, [(31, "another fully unrelated corpus entry here")]), 3)
-    return w
-
-
-def test_snapshot_writer_twin_run_classification_parity(spark, tmp_path):
-    """The snapshot-backed writer must make the IDENTICAL decisions
-    the partition-backed writer makes over the same batch sequence —
-    same classifications, same tombstones, same live corpus."""
-    from football_data_pipeline_spark.streaming.supersede import (
-        keep_best_snapshot_writer,
-        read_live_corpus_snapshot,
-    )
-
-    r_a = str(tmp_path / "partition")
-    r_b = str(tmp_path / "snapshot")
-    _run_sequence(spark, r_a, keep_best_batch_writer)
-    _run_sequence(spark, r_b, keep_best_snapshot_writer)
-    for sub in ("classification", "rejected"):
-        a = sorted(map(tuple, _read(spark, r_a, sub).drop("batch_id").collect()))
-        b = sorted(map(tuple, _read(spark, r_b, sub).drop("batch_id").collect()))
-        assert a == b, sub
-    live_a = {r.doc_id for r in read_live_corpus(spark, r_a).collect()}
-    live_b = {r.doc_id for r in read_live_corpus_snapshot(spark, r_b).collect()}
-    assert live_a == live_b == {2, 11, 31}
-    # tombstone decision rows agree (snapshot side has no batch_id col)
-    from football_data_pipeline_spark.sources.snapshots import read_snapshot
-
-    ta = {(r.doc_id, r.superseded_by) for r in _read(spark, r_a, "tombstones").collect()}
-    tb = {
-        (r.doc_id, r.superseded_by)
-        for r in read_snapshot(spark, f"{r_b}/tombstones_log").collect()
+    cls = sorted(map(tuple, _read(spark, root, "classification").collect()))
+    assert cls == [
+        (1, None, "unique", None, 0),
+        (2, None, "unique", None, 0),
+        (11, 1, "near", 0.9091, 1),
+        (21, 11, "near", 0.9091, 2),
+        (31, None, "unique", None, 3),
+    ]
+    rej = sorted(map(tuple, _read(spark, root, "rejected").collect()))
+    assert rej == [(21, 11, "duplicate_not_better", 2)]
+    assert _live(spark, root) == {2, 11, 31}
+    assert {(d, r.superseded_by) for d, r in _tombs(spark, root).items()} == {
+        (1, 11)
     }
-    assert ta == tb == {(1, 11)}
-
-
-def test_snapshot_writer_replay_idempotent(spark, tmp_path):
-    """A replayed batch must not see its own commits as history —
-    snapshot_append_writer's batch_id watermark + the AS-OF prune."""
-    from football_data_pipeline_spark.streaming.supersede import (
-        keep_best_snapshot_writer,
-        read_live_corpus_snapshot,
-    )
-
-    root = str(tmp_path / "c")
-    w = keep_best_snapshot_writer(root)
-    w(_df(spark, [(1, BASE)]), 0)
-    batch1 = _df(spark, [(11, BASE + " sludge"), (12, "totally unrelated words entirely")])
-    w(batch1, 1)
-    before = {r.doc_id for r in read_live_corpus_snapshot(spark, root).collect()}
-    assert before == {11, 12}
-    w(batch1, 1)  # replay: both logs' guards skip, audits rewrite same
-    assert {r.doc_id for r in read_live_corpus_snapshot(spark, root).collect()} == before
 
 
 def test_snapshot_writer_crash_between_commits_converges(spark, tmp_path):
@@ -207,32 +204,23 @@ def test_snapshot_writer_crash_between_commits_converges(spark, tmp_path):
     REPLAY of that batch must restore it — convergent, not wedged."""
     import shutil
 
-    from football_data_pipeline_spark.sources.snapshots import (
-        _marker_path,
-        commit_log,
-        read_snapshot,
-    )
-    from football_data_pipeline_spark.streaming.supersede import (
-        keep_best_snapshot_writer,
-        read_live_corpus_snapshot,
-    )
+    from football_data_pipeline_spark.sources.snapshots import _marker_path
 
     root = str(tmp_path / "c")
     w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE)]), 0)
     batch1 = _df(spark, [(11, BASE + " sludge")])
     w(batch1, 1)
-    assert {r.doc_id for r in read_live_corpus_snapshot(spark, root).collect()} == {11}
+    assert _live(spark, root) == {11}
     # simulate the crash: delete the tombstone commit's marker
     tlog = f"{root}/tombstones_log"
-    v = int(commit_log(spark, tlog).agg({"version": "max"}).first()[0])
-    shutil.rmtree(_marker_path(tlog, v))
+    shutil.rmtree(_marker_path(tlog, snapshot_versions(spark, tlog)[-1]))
     # the tombstone vanished → doc 1 looks live again (crash state)
-    assert {r.doc_id for r in read_live_corpus_snapshot(spark, root).collect()} == {1, 11}
+    assert _live(spark, root) == {1, 11}
     # replay batch 1: accepted's guard skips, tombstones recommit
     w(batch1, 1)
-    assert {r.doc_id for r in read_live_corpus_snapshot(spark, root).collect()} == {11}
-    assert {(r.doc_id, r.superseded_by) for r in read_snapshot(spark, tlog).collect()} == {
+    assert _live(spark, root) == {11}
+    assert {(d, r.superseded_by) for d, r in _tombs(spark, root).items()} == {
         (1, 11)
     }
 
@@ -242,7 +230,6 @@ def test_snapshot_histories_time_travel(spark, tmp_path):
     one AS-OF read away — no bespoke fold bookkeeping."""
     from football_data_pipeline_spark.streaming.supersede import (
         _snapshot_live_history,
-        keep_best_snapshot_writer,
     )
 
     root = str(tmp_path / "c")
@@ -260,8 +247,8 @@ def test_snapshot_histories_time_travel(spark, tmp_path):
 
 def test_unique_docs_flow_through_untouched(spark, tmp_path):
     root = str(tmp_path / "c")
-    w = keep_best_batch_writer(root)
+    w = keep_best_snapshot_writer(root)
     w(_df(spark, [(1, BASE), (2, "totally different words about football odds")]), 0)
-    assert _read(spark, root, "tombstones").count() == 0
+    assert _tombs(spark, root) == {}
     assert _read(spark, root, "rejected").count() == 0
-    assert {r.doc_id for r in read_live_corpus(spark, root).collect()} == {1, 2}
+    assert _live(spark, root) == {1, 2}

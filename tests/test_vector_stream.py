@@ -1,12 +1,16 @@
 """Streaming embedding ingest: cross-batch and within-batch vector
-near-dup screening, surviving-only signature indexing, crash-replay
-idempotence, and the rejected-row audit."""
+near-dup screening, surviving-only signature indexing (a snapshot
+log), crash-replay idempotence, and the rejected-row audit."""
 
 from __future__ import annotations
 
+from football_data_pipeline_spark.sources.snapshots import (
+    read_snapshot,
+    snapshot_versions,
+)
 from football_data_pipeline_spark.streaming.vectors import (
     VECTOR_DUP_TAU,
-    vector_ingest_batch_writer,
+    vector_ingest_snapshot_writer,
 )
 
 import pytest as _pytest_r14
@@ -49,47 +53,13 @@ def _rejected(spark, root, batch_id):
     }
 
 
-def test_cross_batch_and_within_batch_screening(spark, tmp_path):
-    root = str(tmp_path / "vecs")
-    write = vector_ingest_batch_writer(root)
-
-    b0 = spark.createDataFrame(
-        [(1, _block(0)), (2, _block(8))], SCHEMA
-    )
-    write(b0, 0)
-    assert _accepted(spark, root, 0) == {1, 2}
-    assert _rejected(spark, root, 0) == {}
-
-    # batch 1: id 3 is an exact scaling of accepted id 1 (cosine
-    # 1.0 -> history reject); id 4 is a fresh orthogonal block
-    b1 = spark.createDataFrame(
-        [(3, _block(0, 2.0)), (4, _block(16))], SCHEMA
-    )
-    write(b1, 1)
-    assert _accepted(spark, root, 1) == {4}
-    rej = _rejected(spark, root, 1)
-    assert set(rej) == {3}
-    assert rej[3].dup_of == 1 and rej[3].scope == "history"
-    assert rej[3].cosine_sim >= VECTOR_DUP_TAU
-
-    # batch 2: two copies of one new block — smaller id owns
-    b2 = spark.createDataFrame(
-        [(5, _block(24)), (6, _block(24, 0.5))], SCHEMA
-    )
-    write(b2, 2)
-    assert _accepted(spark, root, 2) == {5}
-    rej2 = _rejected(spark, root, 2)
-    assert set(rej2) == {6}
-    assert rej2[6].dup_of == 5 and rej2[6].scope == "batch"
-
-
 def test_rejected_vectors_never_index(spark, tmp_path):
     """A rejected near-copy must not evict future arrivals: the
     owner recorded for a later copy is the ACCEPTED original, and a
     vector whose only match was itself rejected is judged against
     the accepted corpus only."""
     root = str(tmp_path / "vecs")
-    write = vector_ingest_batch_writer(root)
+    write = vector_ingest_snapshot_writer(root)
     write(spark.createDataFrame([(1, _block(0))], SCHEMA), 0)
     write(spark.createDataFrame([(3, _block(0, 2.0))], SCHEMA), 1)
     write(spark.createDataFrame([(7, _block(0, 3.0))], SCHEMA), 2)
@@ -100,8 +70,11 @@ def test_rejected_vectors_never_index(spark, tmp_path):
 
 
 def test_replay_idempotent_and_duplicate_ids_collapse(spark, tmp_path):
+    """A replayed batch never sees its own sig commit as history and
+    the log's replay guard skips the re-commit; same-id
+    re-collections collapse to one row."""
     root = str(tmp_path / "vecs")
-    write = vector_ingest_batch_writer(root)
+    write = vector_ingest_snapshot_writer(root)
     write(spark.createDataFrame([(1, _block(0))], SCHEMA), 0)
     b1 = spark.createDataFrame(
         [(2, _block(8)), (2, _block(8)), (3, _block(0, 0.5))], SCHEMA
@@ -114,82 +87,47 @@ def test_replay_idempotent_and_duplicate_ids_collapse(spark, tmp_path):
         len(spark.read.parquet(f"{root}/accepted/batch_id=1").collect()) == 1
     )
     assert first_rej == {3: (1, "history")}
+    n_versions = len(snapshot_versions(spark, f"{root}/sig_log"))
     write(b1, 1)  # crash-replay of the same batch
     assert _accepted(spark, root, 1) == first_acc
     assert {
         k: (v.dup_of, v.scope) for k, v in _rejected(spark, root, 1).items()
     } == first_rej
+    assert len(snapshot_versions(spark, f"{root}/sig_log")) == n_versions
 
 
-# --- snapshot-log-backed variant (VERDICT r11 item 4) ------------------
-
-
-def _run_vector_sequence(spark, root, writer_factory):
-    """Shared 3-batch workout: two fresh accepts, a history reject
-    + a fresh accept, a within-batch pair."""
-    w = writer_factory(root)
+def test_snapshot_vector_writer_decisions(spark, tmp_path):
+    """The screening decisions over a fixed 3-batch workout (two fresh
+    accepts; an exact scaling of an accepted vector, cosine 1.0 →
+    history reject, plus a fresh orthogonal block; two copies of one
+    new block — the smaller id owns)
+    — the rows below are what the writer decided when it still had a
+    partition-backed twin, and both agreed — and the sig log holds
+    exactly the accepted vectors' band signatures."""
+    root = str(tmp_path / "snapshot")
+    w = vector_ingest_snapshot_writer(root)
     w(spark.createDataFrame([(1, _block(0)), (2, _block(8))], SCHEMA), 0)
     w(spark.createDataFrame([(3, _block(0, 2.0)), (4, _block(16))], SCHEMA), 1)
     w(spark.createDataFrame([(5, _block(24)), (6, _block(24, 0.5))], SCHEMA), 2)
-
-
-def test_snapshot_vector_writer_twin_run_parity(spark, tmp_path):
-    """The snapshot-backed ingest must make the IDENTICAL screening
-    decisions the partition-backed writer makes — same accepts, same
-    (dup_of, scope) rejects — and its sig log must fold to the same
-    accepted-signature set."""
-    from football_data_pipeline_spark.sources.snapshots import read_snapshot
-    from football_data_pipeline_spark.streaming.vectors import (
-        vector_ingest_snapshot_writer,
-    )
-
-    r_a = str(tmp_path / "partition")
-    r_b = str(tmp_path / "snapshot")
-    _run_vector_sequence(spark, r_a, vector_ingest_batch_writer)
-    _run_vector_sequence(spark, r_b, vector_ingest_snapshot_writer)
-    for b in range(3):
-        assert _accepted(spark, r_a, b) == _accepted(spark, r_b, b), b
-        ra = {k: (v.dup_of, v.scope) for k, v in _rejected(spark, r_a, b).items()}
-        rb = {k: (v.dup_of, v.scope) for k, v in _rejected(spark, r_b, b).items()}
-        assert ra == rb, b
-    sigs_a = {
+    assert [_accepted(spark, root, b) for b in range(3)] == [{1, 2}, {4}, {5}]
+    rej = [
+        {
+            k: (v.dup_of, v.scope, round(v.cosine_sim, 6))
+            for k, v in _rejected(spark, root, b).items()
+        }
+        for b in range(3)
+    ]
+    assert rej == [{}, {3: (1, "history", 1.0)}, {6: (5, "batch", 1.0)}]
+    sigs = {
         (r.vec_id, r.sig)
-        for r in spark.read.option("basePath", f"{r_a}/sig_index")
-        .parquet(f"{r_a}/sig_index")
-        .collect()
+        for r in read_snapshot(spark, f"{root}/sig_log").collect()
     }
-    sigs_b = {
-        (r.vec_id, r.sig)
-        for r in read_snapshot(spark, f"{r_b}/sig_log").collect()
+    assert sigs == {
+        (1, "0|11001010"), (1, "1|10010010"), (1, "2|11111111"), (1, "3|10111001"),
+        (2, "0|00110101"), (2, "1|01110011"), (2, "2|01000011"), (2, "3|01011111"),
+        (4, "0|00000011"), (4, "1|00110010"), (4, "2|01001100"), (4, "3|10111100"),
+        (5, "0|11001100"), (5, "1|11000110"), (5, "2|11001001"), (5, "3|10010110"),
     }
-    assert sigs_a == sigs_b
-
-
-def test_snapshot_vector_writer_replay_idempotent(spark, tmp_path):
-    """A replayed batch never sees its own sig commit as history and
-    the log's replay guard skips the re-commit."""
-    from football_data_pipeline_spark.sources.snapshots import (
-        snapshot_versions,
-    )
-    from football_data_pipeline_spark.streaming.vectors import (
-        vector_ingest_snapshot_writer,
-    )
-
-    root = str(tmp_path / "vecs")
-    w = vector_ingest_snapshot_writer(root)
-    w(spark.createDataFrame([(1, _block(0))], SCHEMA), 0)
-    b1 = spark.createDataFrame([(2, _block(8)), (3, _block(0, 0.5))], SCHEMA)
-    w(b1, 1)
-    first_acc = _accepted(spark, root, 1)
-    first_rej = {k: (v.dup_of, v.scope) for k, v in _rejected(spark, root, 1).items()}
-    assert first_acc == {2} and first_rej == {3: (1, "history")}
-    n_versions = len(snapshot_versions(spark, f"{root}/sig_log"))
-    w(b1, 1)  # crash-replay
-    assert _accepted(spark, root, 1) == first_acc
-    assert {
-        k: (v.dup_of, v.scope) for k, v in _rejected(spark, root, 1).items()
-    } == first_rej
-    assert len(snapshot_versions(spark, f"{root}/sig_log")) == n_versions
 
 
 def test_within_batch_chain_owner_is_canonical(spark, tmp_path):
@@ -200,7 +138,7 @@ def test_within_batch_chain_owner_is_canonical(spark, tmp_path):
     import math
 
     root = str(tmp_path / "vecs")
-    write = vector_ingest_batch_writer(root)
+    write = vector_ingest_snapshot_writer(root)
     # three vectors on a plane at 0°, 15°, 30° within dims (0, 8):
     # cos(15°)=0.966 >= tau for adjacent pairs, cos(30°)=0.866 < tau.
     # 15° is chosen against the ACTUAL md5 hyperplanes: both adjacent
@@ -235,7 +173,7 @@ def test_zero_norm_vector_rejected_not_crashing(spark, tmp_path):
     audit as 'degenerate' instead of DIVIDE_BY_ZERO-poisoning the
     batch under ANSI mode."""
     root = str(tmp_path / "vecs")
-    write = vector_ingest_batch_writer(root)
+    write = vector_ingest_snapshot_writer(root)
     b0 = spark.createDataFrame(
         [(1, _block(0)), (2, [0.0] * DIMS)], SCHEMA
     )
@@ -254,9 +192,9 @@ def test_geometry_mismatch_raises(spark, tmp_path):
     import pytest
 
     root = str(tmp_path / "vecs")
-    write = vector_ingest_batch_writer(root)
+    write = vector_ingest_snapshot_writer(root)
     write(spark.createDataFrame([(1, _block(0))], SCHEMA), 0)
-    bad = vector_ingest_batch_writer(root, bits_per_band=16)
+    bad = vector_ingest_snapshot_writer(root, bits_per_band=16)
     with pytest.raises(ValueError, match="geometry|bands"):
         bad(spark.createDataFrame([(2, _block(8))], SCHEMA), 1)
 
@@ -367,7 +305,7 @@ def test_stream_screen_recall_at_sf001(spark, tmp_path):
             assert cosine(v, w) >= VECTOR_DUP_TAU  # truth by construction
             copies.append((10000 + vec_id, w))
     root = str(tmp_path / "corpus")
-    w = vector_ingest_batch_writer(root)
+    w = vector_ingest_snapshot_writer(root)
     half = len(originals) // 2
     batches = [originals[:half], originals[half:], copies]
     for i, rows in enumerate(batches):
