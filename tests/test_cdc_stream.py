@@ -166,6 +166,37 @@ def test_interrupted_compaction_is_idempotent(spark, tmp_path):
     assert sorted(map(tuple, read_snapshot(spark, log).collect())) == folded
 
 
+def test_cdc_snapshot_writer_twin_run_parity(spark, tmp_path):
+    """Two runs of the snapshot-backed CDC writer over the same change
+    log must materialize the IDENTICAL view and winners, whatever the
+    batch split: run A sees it as two batches, run B as one batch that
+    a crash-restart replays. The out-of-order loss and the delete
+    hold in both."""
+    b0 = [(1, 10, "U", "a"), (2, 10, "U", "b"), (3, 10, "U", "c")]
+    b1 = [(2, 20, "D", None), (3, 5, "U", "stale"), (4, 20, "U", "d")]
+    r_a = tmp_path / "two_batches"
+    r_b = tmp_path / "one_batch"
+    wa = _writer(r_a)
+    wa(_chg(spark, b0), 0)
+    wa(_chg(spark, b1), 1)
+    wb = _writer(r_b)
+    wb(_chg(spark, b0 + b1), 0)
+    wb(_chg(spark, b0 + b1), 0)  # crash-restart re-runs the batch
+    assert _snap_log(spark, r_a) == _snap_log(spark, r_b) == {
+        1: "a",
+        3: "c",
+        4: "d",
+    }
+
+    def winners(root):
+        out = read_cdc_snapshot_log(
+            spark, str(root), "k", ["v"], keep_seq=True, keep_tombstones=True
+        )
+        return sorted(map(tuple, out.collect()))
+
+    assert winners(r_a) == winners(r_b)
+
+
 def test_cdc_snapshot_writer_replay_and_seq_guard(spark, tmp_path):
     """Replay of the last batch is a guarded no-op (no new version);
     the in-plan seq guard still fires through the snapshot path."""
