@@ -24,8 +24,8 @@ key — map-side combinable, no window, no sort) and the base gets ONE
 key-equi full-outer join against the collapsed log (changes << base
 is the normal regime; the base is never windowed or re-sorted). At
 100 TB with a partitioned/bucketed base this is the
-one-shuffle-or-less nightly apply; pair with delta_merge.py's
-transactional MERGE seam where a table format is available.
+one-shuffle-or-less nightly apply; a table format's transactional
+MERGE applies it in place where one is available.
 
 10x probe (sf0.1 orders replicated 10x; medians of 3):
 0.70 -> 0.82 s - sub-linear.

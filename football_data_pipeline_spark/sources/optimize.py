@@ -9,7 +9,7 @@ Why: streaming funnels and incremental writes accrete small files
 KB-sized files spends more time planning splits than scanning.
 Compaction bin-packs the undersized files into target-sized ones —
 WITHOUT touching the already-right-sized files, which is what
-separates OPTIMIZE from sinks.compact_partitions' full rewrite.
+separates OPTIMIZE from sinks.rewrite_table's full rewrite.
 
 Manifest-first design (the Iceberg view: the MANIFEST is the table,
 directories are just storage):

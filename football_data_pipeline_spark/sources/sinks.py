@@ -14,13 +14,20 @@ runs a daily retention DELETE + VACUUM (yml:661-680). Here:
 - snapshot/report sinks are plain JSON writes (reports coalesce to
   one file — they are dim-sized by construction; snapshots keep
   their natural parallelism);
-- retention is a filter-and-overwrite of expired date partitions —
-  on plain Parquet the portable equivalent of ``DELETE WHERE ts <
-  cutoff`` + VACUUM. With dynamic partition overwrite only the
-  affected partitions rewrite; surviving data is never touched.
+- retention rewrites the table to its surviving rows through
+  ``rewrite_table`` — on plain Parquet the portable equivalent of
+  ``DELETE WHERE ts < cutoff`` + VACUUM: expired partitions and their
+  files are gone afterwards, and the table keeps its partition layout;
+- ``rewrite_table`` is the engine's one in-place rewrite of a
+  plain-Parquet table (retention here, the streaming pipeline's keyed
+  dim merges): the new contents land in a sibling directory that is
+  renamed into place, so a crash at any point leaves a recoverable
+  table.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,10 +51,6 @@ def write_silver(
     with_snapshot_date(df, ts_col).write.mode(mode).partitionBy(PARTITION_COL).parquet(path)
 
 
-def read_silver(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_snapshot_json(df: DataFrame, path: str) -> None:
     """S3: collection-snapshot JSON files (one dir per snapshot)."""
     df.write.mode("overwrite").json(path)
@@ -60,46 +63,93 @@ def write_report_json(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").json(path)
 
 
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem holding ``path`` and Hadoop's ``Path``
+    constructor. Hadoop FS rather than os.path, so HDFS and
+    object-store roots behave like local ones."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    return hpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def rewrite_table(
+    spark: SparkSession,
+    path: str,
+    rewrite: Callable[[DataFrame | None], DataFrame],
+) -> None:
+    """Replace the plain-Parquet table at ``path`` with
+    ``rewrite(current)``, crash-safely. ``current`` is the table as
+    it stands, or None when there is no table at ``path`` yet.
+
+    1. A crash between the two renames of step 5 left the only copy
+       at ``<path>.__merge_old__``: rename it back first. Deleting it
+       as a leftover would destroy the table, and reading the missing
+       path as "absent" would rebuild it from the new rows alone.
+    2. Refuse a path carrying ``_delta_log``: a parquet rewrite would
+       resurrect rows tombstoned by Delta commits and corrupt the log.
+    3. Read the current table when the path exists. A table that
+       exists but cannot be read raises; it is never taken as absent.
+    4. Write the new contents to the sibling ``<path>.__merge_tmp__``,
+       partitioned by the current table's partition columns. The
+       original stays untouched, so the plan may read it lazily.
+    5. Move the original aside, rename the sibling into place, delete
+       the original.
+
+    A crash before step 5 leaves the original in place (the next call
+    deletes the stale sibling); a crash inside step 5 leaves the
+    ``__merge_old__`` orphan that step 1 of the next call restores.
+    On an object store a directory rename is a copy, so there the
+    window of step 5 lasts as long as that copy.
+    """
+    fs, hpath = _fs(spark, path)
+    base = path.rstrip("/")
+    tmp, old = base + ".__merge_tmp__", base + ".__merge_old__"
+    if not fs.exists(hpath(base)) and fs.exists(hpath(old)):
+        if not fs.rename(hpath(old), hpath(base)):
+            raise RuntimeError(f"recovery failed: could not rename {old} back to {base}")
+    if fs.exists(hpath(base + "/_delta_log")):
+        raise RuntimeError(
+            f"{base} carries a _delta_log (a Delta table); refusing the "
+            "plain-parquet rewrite (it would resurrect tombstoned rows "
+            "and corrupt the log)"
+        )
+    current, partition_cols = None, []
+    if fs.exists(hpath(base)):
+        current = spark.read.parquet(base)
+        relation = current._jdf.queryExecution().analyzed().relation()
+        partition_cols = list(relation.partitionSchema().fieldNames())
+    for leftover in (tmp, old):
+        if fs.exists(hpath(leftover)):
+            fs.delete(hpath(leftover), True)
+    rewrite(current).write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
+    if current is not None and not fs.rename(hpath(base), hpath(old)):
+        raise RuntimeError(f"swap failed: could not rename {base} aside")
+    if not fs.rename(hpath(tmp), hpath(base)):
+        if current is not None:
+            fs.rename(hpath(old), hpath(base))  # never leave the table missing
+        raise RuntimeError(f"swap failed: could not move {tmp} into place")
+    fs.delete(hpath(old), True)
+
+
 def apply_retention(
     spark: SparkSession, path: str, cutoff: Column, ts_col: str = "collected_at"
 ) -> None:
-    """S7: drop rows older than ``cutoff`` from a date-partitioned
-    silver table by rewriting ONLY the partitions that still contain
-    surviving rows older than... — more precisely: with
-    ``partitionOverwriteMode=dynamic``, writing the surviving subset
-    in overwrite mode replaces exactly the partitions present in the
-    subset; fully-expired partitions keep their files but are
-    excluded by the partition predicate pushed from any time-bounded
-    read. For a hard file drop, compact with ``compact_partitions``.
+    """S7: delete the rows older than ``cutoff`` from a silver table
+    by rewriting it to its survivors (``rewrite_table``). Every
+    partition is rewritten, so fully expired partitions and their
+    files are gone afterwards and an unbounded read returns no
+    expired row; the table keeps its partition layout (the
+    pipeline's ``batch_id=N/snapshot_date=D`` included).
 
     The portable plain-Parquet analogue of Delta ``DELETE FROM t
     WHERE ts < cutoff`` + ``VACUUM`` (yml:661-680).
     """
-    df = spark.read.parquet(path)
-    survivors = df.filter(F.col(ts_col) >= cutoff)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        survivors.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
+    def survivors(table: DataFrame | None) -> DataFrame:
+        if table is None:
+            raise FileNotFoundError(f"no table at {path}")
+        return table.filter(F.col(ts_col) >= cutoff)
 
-def compact_partitions(spark: SparkSession, path: str, keep_predicate: Column, tmp_path: str) -> None:
-    """Full compaction (VACUUM analogue): rewrite the table keeping
-    only rows matching ``keep_predicate``. Two-phase copy: the
-    filtered copy lands in ``tmp_path`` first, then overwrites the
-    live path. NOT atomic — a crash during the second write leaves
-    the live path partial, but the full surviving dataset remains in
-    ``tmp_path`` for recovery (re-run the final write). A
-    transactional table format (Delta/Iceberg) is the real fix at
-    scale; on plain Parquet an atomic swap needs a filesystem rename,
-    which object stores don't provide."""
-    spark.read.parquet(path).filter(keep_predicate).write.mode("overwrite").partitionBy(
-        PARTITION_COL
-    ).parquet(tmp_path)
-    final = spark.read.parquet(tmp_path)
-    final.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(path)
+    rewrite_table(spark, path, survivors)
 
 
 def write_training_shards(

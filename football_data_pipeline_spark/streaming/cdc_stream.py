@@ -34,8 +34,7 @@ is one hash aggregate keyed on the CDC key — the reader is the same
 shape as the batch apply's winner side; the expensive fold runs
 only when the caller schedules it (its cadence trades write
 amplification against read amplification, exactly an LSM level-0
-compaction) or in a table format's MERGE (sources/delta_merge.py
-seam), never per batch.
+compaction) or in a table format's MERGE, never per batch.
 
 Real seqs must be >= 0 (BASE_SEQ = -1 sits strictly below them);
 enforced by a plan-embedded check in the writer.

@@ -18,8 +18,15 @@ Because each micro-batch calls the same pure batch transforms the
 oracle gate already checks, stream and batch cannot drift.
 
 Delivery semantics: exactly-once end-to-end on plain Parquet.
-- Dim merges are naturally idempotent (replaying a batch re-derives
-  the same keyed state).
+- Each dim merge is one sources/sinks.rewrite_table call: the merged
+  dim is written to a sibling directory and renamed into place, so a
+  crash at any point leaves either the old dim or, between the two
+  renames, its only copy at ``<dim>.__merge_old__``, which the
+  replayed batch's rewrite restores before it reads. A dim that
+  exists but cannot be read fails the batch; it is never taken as
+  absent and rebuilt from the batch's rows. Replaying a batch
+  re-derives the same keyed state (replace and insert-if-absent are
+  idempotent).
 - Fact writes are batchId-keyed: each micro-batch OVERWRITES its own
   ``batch_id=<n>`` partition directory, so a crash-restart that
   re-runs the batch replaces its own partial output instead of
@@ -43,7 +50,6 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..operators.flatten import (
@@ -58,7 +64,7 @@ from ..operators.flatten import (
 )
 from ..operators.upsert import insert_if_absent, upsert_replace
 from ..sources.ingest import COLLECTION_SCHEMA, with_collected_ts
-from ..sources.sinks import write_silver
+from ..sources.sinks import rewrite_table, write_silver
 
 DEFAULT_TRIGGER = "30 minutes"  # yml:8 — the reference's cron cadence
 
@@ -78,39 +84,20 @@ def stream_collections(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _merge_dim(
-    spark: SparkSession,
     delta: DataFrame,
     path: str,
     keys: list[str],
     order_cols: list[str],
-    replace: bool,
+    merge: Callable[..., DataFrame],
 ) -> None:
-    """Merge a dim delta into its Parquet table: U1 replace or U3
-    insert-if-absent. The merged state is materialized (dims are
-    KB-to-MB-sized by construction) before the overwrite so the write
-    never scans the files it replaces."""
-    merge = upsert_replace if replace else insert_if_absent
-    # Probe for existing state with a read attempt, not os.path — the
-    # silver root may be s3://, hdfs://, or any Hadoop-FS URI, where a
-    # driver-local listdir would silently report "absent" and the
-    # merge would destroy prior dim state by replacing it with the
-    # delta alone. AnalysisException covers both path-not-found and
-    # empty-dir (schema-inference) probes.
-    try:
-        base = spark.read.parquet(path)
-        merged = merge(base, delta, keys=keys, order_cols=order_cols)
-    except AnalysisException:
-        merged = delta
-    # two-phase write: land the merged state in a side path FIRST,
-    # then rewrite the live path from it. A cache()+count() barrier
-    # is NOT durable on a real cluster — losing a cached block after
-    # the live files are deleted would recompute the plan from the
-    # now-missing source and silently rebuild the dim from the delta
-    # alone. With the tmp copy on disk, a crash at any point leaves a
-    # recoverable full state (same contract as compact_partitions).
-    tmp = f"{path}__staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+    """Merge a dim delta into its Parquet table with ``merge``: U1
+    ``upsert_replace`` or U3 ``insert_if_absent``. The first batch
+    writes the delta as the table."""
+
+    def merged(base: DataFrame | None) -> DataFrame:
+        return delta if base is None else merge(base, delta, keys=keys, order_cols=order_cols)
+
+    rewrite_table(delta.sparkSession, path, merged)
 
 
 def silver_batch_writer(silver_root: str) -> Callable[[DataFrame, int], None]:
@@ -130,41 +117,36 @@ def silver_batch_writer(silver_root: str) -> Callable[[DataFrame, int], None]:
         )
 
     def write_batch(bronze: DataFrame, batch_id: int) -> None:
-        spark = bronze.sparkSession
         bronze = bronze.cache()  # consumed by 8 flatteners
         try:
             _merge_dim(
-                spark,
                 extract_teams(bronze),
                 f"{silver_root}/teams",
                 keys=["id"],
                 order_cols=["updated_at"],
-                replace=True,
+                merge=upsert_replace,
             )
             _merge_dim(
-                spark,
                 extract_leagues(bronze),
                 f"{silver_root}/leagues",
                 keys=["id", "season"],
                 order_cols=["created_at"],
-                replace=False,
+                merge=insert_if_absent,
             )
             _merge_dim(
-                spark,
                 extract_fixtures(bronze),
                 f"{silver_root}/fixtures",
                 keys=["id"],
                 order_cols=["created_at"],
-                replace=False,
+                merge=insert_if_absent,
             )
             lineups = flatten_lineups(bronze)
             _merge_dim(
-                spark,
                 derive_players(lineups),
                 f"{silver_root}/players",
                 keys=["id"],
                 order_cols=["created_at"],
-                replace=False,
+                merge=insert_if_absent,
             )
             write_fact(flatten_odds(bronze), f"{silver_root}/odds_history", batch_id, "collected_at")
             write_fact(

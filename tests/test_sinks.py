@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from football_data_pipeline_spark.sources.sinks import (
     PARTITION_COL,
     apply_retention,
-    read_silver,
     write_report_json,
     write_silver,
     write_snapshot_json,
@@ -30,7 +29,7 @@ def test_write_silver_partitions_and_roundtrip(spark, tmp_path):
     path = str(tmp_path / "silver_events")
     ev = _events(spark)
     write_silver(ev, path)
-    back = read_silver(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == ev.count()
     # partition layout exists on disk
     import os
@@ -44,12 +43,12 @@ def test_partition_pruning_reaches_scan(spark, tmp_path):
     the replacement for the reference's idx_odds_collected index."""
     path = str(tmp_path / "silver_events_pruned")
     write_silver(_events(spark), path)
-    some_date = read_silver(spark, path).select(PARTITION_COL).first()[0]
-    q = read_silver(spark, path).filter(F.col(PARTITION_COL) == some_date)
+    some_date = spark.read.parquet(path).select(PARTITION_COL).first()[0]
+    q = spark.read.parquet(path).filter(F.col(PARTITION_COL) == some_date)
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "snapshot_date" in plan.split("PartitionFilters")[1][:200]
     # and the pruned read returns exactly that partition's rows
-    n_all = read_silver(spark, path).count()
+    n_all = spark.read.parquet(path).count()
     n_pruned = q.count()
     assert 0 < n_pruned < n_all
 
@@ -62,9 +61,52 @@ def test_retention_drops_only_expired(spark, tmp_path):
     cutoff = F.lit(cutoff_row["c"]).cast("timestamp")
     expected = ev.filter(F.col("collected_at") >= cutoff_row["c"]).count()
     apply_retention(spark, path, cutoff)
-    # time-bounded read sees exactly the survivors
-    survivors = read_silver(spark, path).filter(F.col("collected_at") >= cutoff_row["c"])
-    assert survivors.count() == expected
+    # an unbounded read sees exactly the survivors: fully expired
+    # partitions are dropped, not just pruned away by a bounded read
+    back = spark.read.parquet(path)
+    assert back.count() == expected
+    assert back.filter(F.col("collected_at") < cutoff_row["c"]).count() == 0
+
+
+def test_retention_keeps_batch_partition_layout(spark, tmp_path):
+    """Retention on the streaming pipeline's
+    ``batch_id=N/snapshot_date=D`` fact layout leaves the table
+    readable with the same layout minus the expired partitions, the
+    same surviving rows, and the session's partition-overwrite conf
+    untouched."""
+    import datetime as dt
+    import os
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "odds_history")
+    day = dt.datetime(2024, 2, 10, 12)  # noon: the same date in any local zone
+    for batch_id in (0, 1):
+        rows = [(batch_id, i, day + dt.timedelta(days=i + 2 * batch_id)) for i in range(3)]
+        write_silver(
+            spark.createDataFrame(rows, "b int, i int, collected_at timestamp"),
+            f"{path}/batch_id={batch_id}",
+            mode="overwrite",
+        )
+
+    def layout():
+        return {
+            os.path.relpath(d, path)
+            for d, _, files in os.walk(path)
+            if any(f.endswith(".parquet") for f in files)
+        }
+
+    before = layout()
+    cutoff = day + dt.timedelta(days=2)
+    want = {tuple(r) for r in spark.read.parquet(path).filter(F.col("collected_at") >= cutoff).collect()}
+    conf_before = spark.conf.get(conf, None)
+    apply_retention(spark, path, F.lit(cutoff))
+    assert spark.conf.get(conf, None) == conf_before
+    back = spark.read.parquet(path)
+    assert back.columns == ["b", "i", "collected_at", "batch_id", "snapshot_date"]
+    assert {tuple(r) for r in back.collect()} == want and len(want) == 4
+    assert layout() == {
+        d for d in before if d.split("/")[1] >= f"{PARTITION_COL}=2024-02-12"
+    }
 
 
 def test_json_sinks_roundtrip(spark, tmp_path):
