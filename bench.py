@@ -200,7 +200,7 @@ HEADLINE = [
 # purely additive (stats path byte-identical), and same-session
 # repeats put the median at 1.06 s (below even the r8 number), with
 # the untouched control q_star_join showing the same pattern (1.25 s
-# vs its recorded 1.31→1.58); see tools/video_stats_ab.py.
+# vs its recorded 1.31→1.58); the runs are recorded in BENCH_AB_r10.json.
 
 #: spread ≈ median at trials=3 in BENCH_r03 — needs more samples.
 #: q_dedup_best_of_component joined in r14 (VERDICT r13 item 5): the

@@ -19,8 +19,10 @@ query workload the postings table is materialized once
 partition on term_bucket(term) and the snapshot manifest carries
 per-file bucket min/max, so a query's terms FILE-PRUNE the store at
 planning time (read_index; r12, closing VERDICT r11 item 1) — and
-folded incrementally (merge_index, doc-id-overlap-guarded); the
-scoring algebra is identical to the scan path, which q_bm25_indexed
+folded incrementally (merge_index, doc-id-overlap-guarded), and
+kept compact by ``maintain_index`` — the same snapshots.maintain
+every snapshot table runs, whose compactor never packs across a
+bucket; the scoring algebra is identical to the scan path, which q_bm25_indexed
 pins by sharing q_bm25_topk's oracle verbatim.
 
 Engine parity (the float discipline from textstats.q_tfidf_terms +
@@ -958,20 +960,19 @@ def index_append_writer(index_root: str, n_term_buckets: int = N_TERM_BUCKETS):
 
 def _pruned_bucketed_read(
     spark: SparkSession, log_dir: str, terms: list[str]
-) -> DataFrame | None:
+) -> DataFrame:
     """The snapshot at ``log_dir`` cut to the files whose term-bucket
-    min/max matches any of the query's buckets — or None when the
-    manifest carries no bucket layout (a legacy/unbucketed index;
-    the caller falls back to the full snapshot). The bucket count is
+    min/max matches any of the query's buckets (index_append_writer
+    always buckets the postings and dfs logs). The bucket count is
     recovered from the manifest's own column name, so a stale
     constant can never mis-prune."""
+    from ..sources.manifest import read_files
     from ..sources.snapshots import read_manifest
 
     manifest = read_manifest(spark, log_dir)
-    matches = [m for c in manifest.columns if (m := _BUCKET_COL_RE.match(c))]
-    if not matches:
-        return None
-    n = int(matches[0].group(1))
+    n = next(
+        int(m.group(1)) for c in manifest.columns if (m := _BUCKET_COL_RE.match(c))
+    )
     bcol = _bucket_col(n)
     pred = F.lit(False)
     for b in query_term_buckets(spark, terms, n):
@@ -979,16 +980,10 @@ def _pruned_bucketed_read(
             (F.col(f"{bcol}_min") <= b) & (F.col(f"{bcol}_max") >= b)
         )
     files = [r.file for r in manifest.filter(pred).select("file").collect()]
-    if files:
-        return spark.read.parquet(*files)
-    # no bucket holds any query term: provably empty
-    any_file = manifest.select("file").first()
-    if any_file is None:
-        # only empty batches ever committed (ADVICE r12): mirror
-        # read_snapshot's error for the same state instead of an
-        # AttributeError off the None row
-        raise ValueError("snapshot has an empty manifest")
-    return spark.read.parquet(any_file.file).filter(F.lit(False))
+    # no files: no bucket holds a query term, provably empty; an
+    # empty manifest (only empty batches ever committed, ADVICE r12)
+    # raises read_snapshot's error
+    return read_files(spark, manifest, files)
 
 
 def maintain_index(
@@ -996,69 +991,29 @@ def maintain_index(
     index_root: str,
     target_rows: int = 100_000,
     keep_latest: int = 2,
-    do_vacuum: bool = True,
 ) -> dict:
-    """Housekeeping for the standing index — the maintain() loop the
-    three logs need, layout-aware: the postings and dfs stores are
-    bucket-partitioned, so they compact through
-    optimize.compact_partitioned_log (bucket-PRESERVING bin-packing;
-    generic maintain() cannot even resolve their directory-encoded
-    bucket column, and cross-bucket packing would erode the term
-    prune), while the unbucketed 1-row-per-batch stats log runs plain
-    snapshots.maintain. Every compaction commit carries the batch
+    """Housekeeping for the standing index: one snapshots.maintain
+    pass per log. The postings and dfs stores are term-bucket
+    partitioned; maintain's compactor (optimize.plan_compaction)
+    derives that layout from the manifest and packs each bucket's
+    small files — the presence rows' NULL bucket included — without
+    crossing buckets, so per-file bucket min == max, the term prune,
+    stays exact. Every compaction commit carries the batch
     watermark, so the streaming writer's replay guard survives any
-    ``keep_latest`` retention. Returns a per-log audit dict."""
-    import os as _os
+    ``keep_latest`` retention. Returns {log name: maintain's audit
+    dict}."""
+    from ..sources.snapshots import maintain
 
-    from ..sources.optimize import compact_partitioned_log
-    from ..sources.snapshots import (
-        _SNAP_RE,
-        expire_snapshots,
-        get_snapshot_store,
-        maintain,
-        read_manifest,
-        vacuum,
-    )
-
-    report: dict = {}
-    store = get_snapshot_store()
-    for sub in ("postings_log", "dfs_log"):
-        log = f"{index_root}/{sub}"
-        manifest = read_manifest(spark, log)
-        matches = [m for c in manifest.columns if (m := _BUCKET_COL_RE.match(c))]
-        if not matches:  # legacy unbucketed index: plain maintain
-            report[sub] = maintain(
-                spark, log, target_rows,
-                _os.path.join(index_root, f"{sub[:-4]}_opt"),
-                keep_latest=keep_latest, do_vacuum=do_vacuum,
-            )
-            continue
-        bcol = _bucket_col(int(matches[0].group(1)))
-        taken = [
-            int(m.group(1))
-            for name in store.list_dirs(log)
-            if (m := _SNAP_RE.match(name))
-        ]
-        gen = (max(taken) + 1) if taken else 0
-        out = _os.path.join(index_root, f"{sub[:-4]}_fold", f"gen-{gen}")
-        version = compact_partitioned_log(spark, log, bcol, target_rows, out)
-        expired, orphans = expire_snapshots(spark, log, keep_latest)
-        vacuumed = vacuum(orphans) if do_vacuum else 0
-        report[sub] = {
-            "compacted_version": version,
-            "expired": expired,
-            "orphans": len(orphans),
-            "vacuumed": vacuumed,
-        }
-    report["stats_log"] = maintain(
-        spark,
-        f"{index_root}/stats_log",
-        target_rows,
-        _os.path.join(index_root, "stats_opt"),
-        keep_latest=keep_latest,
-        do_vacuum=do_vacuum,
-    )
-    return report
+    return {
+        sub: maintain(
+            spark,
+            f"{index_root}/{sub}",
+            target_rows,
+            f"{index_root}/{sub[:-len('_log')]}_opt",
+            keep_latest=keep_latest,
+        )
+        for sub in ("postings_log", "dfs_log", "stats_log")
+    }
 
 
 def read_index(
@@ -1076,22 +1031,19 @@ def read_index(
     then filters to the exact query terms map-side. Soundness never
     depends on either prune — bm25_topk_indexed re-applies the exact
     term filter on survivors (manifest.pruned_read's contract).
-    terms=None (or an unbucketed legacy index) reads the full
-    snapshots."""
+    terms=None reads the full snapshots."""
     from ..sources.snapshots import read_snapshot
 
     post_log = f"{index_root}/postings_log"
     dfs_log = f"{index_root}/dfs_log"
-    postings = dfs = None
-    if terms is not None:
-        postings = _pruned_bucketed_read(spark, post_log, terms)
-        dfs = _pruned_bucketed_read(spark, dfs_log, terms)
-    if postings is None:
+    if terms is None:
         postings = read_snapshot(spark, post_log)
-    if dfs is None:
         dfs = read_snapshot(spark, dfs_log)
-    if terms is not None:
-        dfs = dfs.filter(F.col("term").isin(list(terms)))
+    else:
+        postings = _pruned_bucketed_read(spark, post_log, terms)
+        dfs = _pruned_bucketed_read(spark, dfs_log, terms).filter(
+            F.col("term").isin(list(terms))
+        )
     dfs = dfs.groupBy("term").agg(F.sum("df").alias("df"))
     stats = read_snapshot(spark, f"{index_root}/stats_log").agg(
         F.sum("__n_docs").alias("__n_docs"),

@@ -23,11 +23,12 @@ Pieces:
   time.
 - ``refresh_view``: the maintenance loop. The view is ITSELF a
   snapshot table: each refresh writes the new state under
-  ``{view_data}/ref-N`` and commits it to the view's own log with
-  ``batch_id`` = the TABLE version it reflects — so the view has
-  time travel, its lineage to the base table is durable in its
-  markers, and a crashed refresh retries cleanly (marker-last
-  atomicity, inherited from ``commit_snapshot``). First refresh =
+  ``{view_data}/ref-N`` (``snapshots.fresh_dir``) and commits it
+  to the view's own log with ``batch_id`` = the TABLE version it
+  reflects — so the view has time travel, its lineage to the base
+  table is durable in its markers, and a crashed refresh retries
+  cleanly (marker-last atomicity, inherited from
+  ``commit_snapshot``). First refresh =
   full aggregate of the table's latest snapshot; every later one =
   ``scan_appends(reflected, latest)`` + one merge.
 
@@ -55,9 +56,6 @@ as designed.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,7 +64,7 @@ from .manifest import build_manifest
 from .snapshots import (
     commit_log,
     commit_snapshot,
-    get_snapshot_store,
+    fresh_dir,
     read_snapshot,
     scan_appends,
     snapshot_versions,
@@ -180,22 +178,10 @@ def refresh_view(
             prior, delta_aggregate(delta, keys, measures), keys, measures
         )
         mode = "incremental"
-    # number the ref dir past EVERY existing ref-* directory, not
-    # past the committed view versions (ADVICE r10): a crash between
-    # the state write and commit_snapshot leaves an orphan ref-N
-    # with no committed version pointing at it, and deriving N from
-    # committed versions would make every retry recompute the same N
-    # and die on the errorifexists write — wedged until manual
-    # cleanup. Numbering past the debris (commit_snapshot's own
-    # rule) makes a crashed refresh retry cleanly; the orphan is
-    # unreferenced garbage a vacuum can collect.
-    taken = [
-        int(m.group(1))
-        for name in get_snapshot_store().list_dirs(view_data)
-        if (m := re.match(r"^ref-(\d+)$", name))
-    ]
-    ref = (max(taken) + 1) if taken else 0
-    out = os.path.join(view_data, f"ref-{ref}")
+    # a crashed refresh leaves an orphan ref-N no committed version
+    # points at; fresh_dir numbers past it, so the retry cannot
+    # collide with it (ADVICE r10), and a vacuum can collect it
+    out = fresh_dir(view_data, "ref")
     state.write.mode("errorifexists").parquet(out)
     manifest = build_manifest(spark, out, [])
     view_version = commit_snapshot(

@@ -55,6 +55,41 @@ def build_manifest(
     )
 
 
+def tracked_columns(manifest: DataFrame) -> list[str]:
+    """The columns a manifest tracks, sorted: every ``c`` with both
+    ``<c>_min`` and ``<c>_max`` (build_manifest's naming). A rewrite
+    re-measures its new files on exactly these, so the fresh rows
+    union onto the carried ones."""
+    cols = set(manifest.columns)
+    return sorted(
+        c[: -len("_min")]
+        for c in cols
+        if c.endswith("_min") and f"{c[:-len('_min')]}_max" in cols
+    )
+
+
+def read_files(
+    spark: SparkSession,
+    manifest: DataFrame,
+    files: list[str],
+    base_path: str | None = None,
+) -> DataFrame:
+    """``files`` (some of ``manifest``'s) as one frame; ``base_path``
+    recovers directory-encoded partition columns (Spark's basePath).
+    No files reads zero rows of the table's schema, taken from any
+    one manifest file; an empty manifest has no schema to offer and
+    raises read_snapshot's ValueError."""
+    reader = spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    if files:
+        return reader.parquet(*files)
+    any_file = manifest.select("file").first()
+    if any_file is None:
+        raise ValueError("snapshot has an empty manifest")
+    return reader.parquet(any_file.file).filter(F.lit(False))
+
+
 def prune_files(
     manifest: DataFrame, col: str, lo, hi
 ) -> list[str]:
@@ -96,16 +131,7 @@ def pruned_read(
     """
     files = prune_files(manifest, col, lo, hi)
     predicate = F.col(col).between(F.lit(lo), F.lit(hi))
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    if not files:
-        # recover the schema from any one file, return zero rows
-        any_file = [r.file for r in manifest.select("file").limit(1).collect()]
-        if not any_file:
-            raise ValueError("empty manifest: no files to infer schema from")
-        return reader.parquet(any_file[0]).filter(F.lit(False))
-    return reader.parquet(*files).filter(predicate)
+    return read_files(spark, manifest, files, base_path).filter(predicate)
 
 
 def manifest_agg(manifest: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -120,11 +146,7 @@ def manifest_agg(manifest: DataFrame, cols: list[str] | None = None) -> DataFram
     the scan. Min/max of an all-NULL file is NULL and min/max
     ignores NULLs, matching the engine semantics."""
     if cols is None:
-        cols = sorted(
-            c[: -len("_min")]
-            for c in manifest.columns
-            if c.endswith("_min") and f"{c[:-len('_min')]}_max" in manifest.columns
-        )
+        cols = tracked_columns(manifest)
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_files"),
         F.coalesce(F.sum("n_rows"), F.lit(0)).cast("long").alias("n_rows"),

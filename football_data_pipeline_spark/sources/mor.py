@@ -39,7 +39,11 @@ subtraction is a pushed-down scan predicate (shows up in
 PushedFilters, costs nothing extra); the key anti-join broadcasts
 the delete keys. ``fold_deletes`` rewrites ONLY filter-class files,
 drops drop-class files without reading them, and carries the rest —
-then the delete log resets to empty.
+then the delete log resets to empty. Both folds (``fold_deletes``,
+``fold_keys``) are a plan plus a row transform on the snapshot
+table's one copy-on-write core, ``snapshots.cow_rewrite``, and
+``fold_retractions`` commits through ``snapshots.commit_rewrite``,
+so the retraction streams' batch watermarks survive the fold.
 
 Driver-checked: ``q_mor_delete`` runs the REAL ``plan_mor_read``
 classification over the fixed-width documents layout with two
@@ -60,7 +64,17 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .manifest import build_manifest
+from .manifest import read_files
+from .snapshots import (
+    commit_rewrite,
+    cow_rewrite,
+    fresh_dir,
+    plan_cow_merge,
+    planned_rewrites,
+    read_manifest,
+    read_snapshot,
+    snapshot_versions,
+)
 
 
 def _lit(x) -> Column:
@@ -134,15 +148,9 @@ def read_mor(
         r.file for r in plan.select("file", "action").collect()
         if r.action != "drop"
     ]
-    if not files:
-        empty = spark.read.parquet(
-            manifest.select("file").first().file
-        ).filter(F.lit(False))
-        return apply_deletes(empty, col, ranges, keys, key_col)
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    return apply_deletes(reader.parquet(*files), col, ranges, keys, key_col)
+    # an empty manifest (fold_deletes dropped every file) raises
+    rows = read_files(spark, manifest, files, base_path)
+    return apply_deletes(rows, col, ranges, keys, key_col)
 
 
 def fold_deletes(
@@ -157,47 +165,24 @@ def fold_deletes(
 ) -> DataFrame:
     """Materialize the delete log: drop-class files leave the
     manifest without being read, filter-class files are rewritten
-    without their deleted rows (one range-partitioned,
-    within-file-sorted write — clustering and tight min/max
-    survive), keep-class rows pass through verbatim... except when
+    without their deleted rows (``snapshots.cow_rewrite``),
+    keep-class rows pass through verbatim... except when
     KEY deletes exist, which respect no range: then keep-class files
     are rewritten too (they may hide deleted keys). Returns the new
     manifest; the caller's delete log is now empty."""
-    tracked = sorted(
-        {
-            c[: -len("_min")]
-            for c in manifest.columns
-            if c.endswith("_min")
-            and f"{c[:-len('_min')]}_max" in manifest.columns
-        }
-    )
-    plan = plan_mor_read(manifest, col, ranges)
-    actions = plan.select("file", "action").collect()
-    rewrite_classes = (
-        ("filter", "keep") if keys is not None else ("filter",)
-    )
+    actions = plan_mor_read(manifest, col, ranges).select("file", "action").collect()
+    rewrite_classes = ("filter", "keep") if keys is not None else ("filter",)
     rewrite = [r.file for r in actions if r.action in rewrite_classes]
-    carried = manifest.filter(
-        F.col("file").isin(
-            [r.file for r in actions if r.action not in rewrite_classes and r.action != "drop"]
-        )
+    dropped = [r.file for r in actions if r.action == "drop"]
+    return cow_rewrite(
+        spark,
+        manifest.filter(~F.col("file").isin(dropped)),
+        rewrite,
+        lambda rows: apply_deletes(rows, col, ranges, keys, key_col),
+        col,
+        out_dir,
+        base_path,
     )
-    if not rewrite:
-        return carried
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    survivors = apply_deletes(
-        reader.parquet(*rewrite), col, ranges, keys, key_col
-    )
-    (
-        survivors.repartitionByRange(len(rewrite), col)
-        .sortWithinPartitions(col)
-        .write.mode("errorifexists")
-        .parquet(out_dir)
-    )
-    fresh = build_manifest(spark, out_dir, tracked)
-    return carried.unionByName(fresh.select(*carried.columns))
 
 
 # --- streaming retractions: the equality-delete log as a snapshot table
@@ -211,8 +196,6 @@ def latest_delete_keys(
     reset. The delete log is just an append-only snapshot table of
     keys — ``snapshots.snapshot_append_writer`` IS the retraction
     stream's exactly-once sink; nothing new to build."""
-    from .snapshots import read_manifest, read_snapshot, snapshot_versions
-
     if not snapshot_versions(spark, delete_log):
         return None
     if read_manifest(spark, delete_log).limit(1).count() == 0:
@@ -232,8 +215,6 @@ def live_view(
     retraction sets are metadata-sized). Each log pins its own
     latest committed version; deletes are monotone between folds, so
     the pair is always consistent-forward."""
-    from .snapshots import read_snapshot
-
     df = read_snapshot(spark, data_log, base_path=base_path)
     keys = latest_delete_keys(spark, delete_log, key_col)
     if keys is None:
@@ -254,38 +235,15 @@ def fold_keys(
     range classification, reused — same invariant, pointed at
     deletes), the rest are rewritten without the keyed rows. Returns
     the new manifest."""
-    from .snapshots import plan_cow_merge
-
-    tracked = sorted(
-        {
-            c[: -len("_min")]
-            for c in manifest.columns
-            if c.endswith("_min")
-            and f"{c[:-len('_min')]}_max" in manifest.columns
-        }
+    return cow_rewrite(
+        spark,
+        manifest,
+        planned_rewrites(plan_cow_merge(manifest, key_col, keys)),
+        lambda rows: apply_deletes(rows, key_col, [], keys=keys, key_col=key_col),
+        key_col,
+        out_dir,
+        base_path,
     )
-    plan = plan_cow_merge(manifest, key_col, keys)
-    actions = plan.select("file", "action").collect()
-    rewrite = [r.file for r in actions if r.action == "rewrite"]
-    carried = manifest.filter(
-        F.col("file").isin([r.file for r in actions if r.action == "carry"])
-    )
-    if not rewrite:
-        return carried
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    survivors = apply_deletes(
-        reader.parquet(*rewrite), key_col, [], keys=keys, key_col=key_col
-    )
-    (
-        survivors.repartitionByRange(len(rewrite), key_col)
-        .sortWithinPartitions(key_col)
-        .write.mode("errorifexists")
-        .parquet(out_dir)
-    )
-    fresh = build_manifest(spark, out_dir, tracked)
-    return carried.unionByName(fresh.select(*carried.columns))
 
 
 def fold_retractions(
@@ -303,17 +261,26 @@ def fold_retractions(
     arriving mid-fold land in their own delete version and survive
     for the next fold (the empty reset is a new version, it never
     rewrites theirs). Old data versions still time-travel to the
-    deleted rows until expired. Returns a small audit dict."""
-    from .snapshots import commit_snapshot, read_manifest
-
+    deleted rows until expired. The folded data lands in
+    ``fresh_dir(out_dir)``, and both commits carry their log's batch
+    watermark (``commit_rewrite``): the streams' replay guards must
+    survive expire_snapshots, or a replayed batch would overwrite a
+    data directory the folded manifest still references. Returns a
+    small audit dict."""
     keys = latest_delete_keys(spark, delete_log, key_col)
     if keys is None:
         return {"mode": "noop", "data_version": None, "delete_version": None}
-    manifest = read_manifest(spark, data_log)
-    folded = fold_keys(spark, manifest, keys, key_col, out_dir, base_path)
-    v_data = commit_snapshot(spark, data_log, folded)
+    folded = fold_keys(
+        spark,
+        read_manifest(spark, data_log),
+        keys,
+        key_col,
+        fresh_dir(out_dir),
+        base_path,
+    )
+    v_data = commit_rewrite(spark, data_log, folded)
     empty = read_manifest(spark, delete_log).limit(0)
-    v_del = commit_snapshot(spark, delete_log, empty)
+    v_del = commit_rewrite(spark, delete_log, empty)
     return {"mode": "folded", "data_version": v_data, "delete_version": v_del}
 
 

@@ -18,12 +18,17 @@ directories are just storage):
   per-file row counts — driver-side, bounded by FILE count (the
   same planning-time work prune_files does). Files with
   ``n_rows >= target_rows`` are left alone; the rest pack into bins
-  of capacity ``target_rows``.
+  of capacity ``target_rows``, and a file alone in its bin stays
+  put. On a partition-encoded layout (a tracked column every file
+  path carries as a ``/<col>=`` directory, e.g. the term-bucketed
+  BM25 postings) a bin never crosses a partition value, so the
+  per-file min == max a bucket prune reads stays exact.
 - ``compact_small_files``: per bin, read exactly that bin's files →
   one output file (optionally re-sorted on the cluster column so
   min/max stay TIGHT — compaction must not undo zorder/linear
-  clustering) → returns the NEW manifest: untouched files' rows
-  carried over verbatim + freshly measured rows for the bin files.
+  clustering; partition directories restored) → returns the NEW
+  manifest: untouched files' rows carried over verbatim + freshly
+  measured rows for the bin files.
   Readers that consume the manifest (manifest.pruned_read,
   zorder.read_box take explicit file lists) switch atomically by
   switching manifests; the replaced small files become orphans for
@@ -51,116 +56,56 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .manifest import build_manifest
+from .manifest import build_manifest, tracked_columns
 
 
-def compact_partitioned_log(
-    spark: SparkSession,
-    log_dir: str,
-    part_col: str,
-    target_rows: int,
-    out_dir: str,
-) -> int | None:
-    """OPTIMIZE for a snapshot log whose data files live under a
-    DIRECTORY-ENCODED partition column (snapshot_append_writer's
-    ``partition_by`` — e.g. the term-bucketed BM25 postings/dfs
-    stores): bin-pack each partition VALUE's small files without ever
-    crossing values. Generic compact_small_files cannot run here at
-    all — the column is not IN the data files, so its tracked-column
-    aggregate fails to resolve — and even a fixed generic pass would
-    be WRONG for this layout: cross-value packing widens the per-file
-    min/max the readers prune on, eroding the very skip the layout
-    exists to provide.
+def _partition_column(manifest: DataFrame, files: list[str]) -> str | None:
+    """The tracked column every file path encodes as a ``/<col>=``
+    directory segment (snapshot_append_writer's ``partition_by``
+    layout, e.g. the term-bucketed BM25 postings), or None for a
+    plain layout. Such a column is not IN the data files; each
+    file's min == max is its directory value."""
+    for c in tracked_columns(manifest):
+        if files and all(f"/{c}=" in f for f in files):
+            return c
+    return None
 
-    Same one-job discipline as compact_small_files (driver-held
-    file→bin map broadcast onto input_file_name(), bin-keyed
-    repartition, partitioned write), with the partition dirs RESTORED
-    on write so per-file min == max == the value stays exact. Files
-    whose min != max (legacy/mixed) are carried untouched; files
-    whose value is NULL (the presence-row default partition the
-    bucketed postings writer emits one per batch) bin-pack as their
-    own partition group (ADVICE r12 — carrying them forever is a
-    slow small-file leak the maintain loop could never drain;
-    NULL-to-NULL packing keeps the prune contract intact because a
-    term prune never selects a NULL-bounds file). Commits the new
-    manifest with the log's batch watermark (maintain()'s carry
-    rule); returns the committed version, or None when nothing needs
-    packing."""
-    from .snapshots import (
-        commit_snapshot,
-        latest_committed_batch,
-        read_manifest,
-    )
 
+def _plan(
+    manifest: DataFrame, target_rows: int
+) -> tuple[str | None, list[list[str]], list[str]]:
+    """(partition column, bins, keep_files) — see plan_compaction."""
     if target_rows < 1:
         raise ValueError("target_rows must be >= 1")
-    manifest = read_manifest(spark, log_dir)
-    mn, mx = f"{part_col}_min", f"{part_col}_max"
-    if mn not in manifest.columns or mx not in manifest.columns:
-        raise ValueError(
-            f"manifest of {log_dir!r} does not track {part_col!r} — "
-            "this compactor is for partition-encoded snapshot logs; "
-            "use snapshots.maintain for plain layouts"
-        )
-    rows = manifest.select("file", "n_rows", mn, mx).collect()
-    small: dict[int | None, list[tuple[int, str]]] = {}
-    keep: list[str] = []
+    rows = manifest.collect()
+    part = _partition_column(manifest, [r.file for r in rows])
+    groups: dict = {}
+    keep = [r.file for r in rows if r.n_rows >= target_rows]
     for r in rows:
-        v_lo, v_hi = r[mn], r[mx]
-        # None == None groups the all-NULL (default-partition) files
-        # together; mixed-bounds files (min != max) stay carried
-        if r.n_rows < target_rows and v_lo == v_hi:
-            key = None if v_lo is None else int(v_lo)
-            small.setdefault(key, []).append((r.n_rows, r.file))
-        else:
-            keep.append(r.file)
-    bins: list[tuple[int | None, list[str]]] = []
-    for v in sorted(small, key=lambda k: (k is not None, k or 0)):
-        fs = sorted(small[v], key=lambda t: (-t[0], t[1]))
-        vbins: list[list[str]] = []
+        if r.n_rows < target_rows:
+            value = r[f"{part}_min"] if part else None
+            groups.setdefault(value, []).append((r.n_rows, r.file))
+    bins: list[list[str]] = []
+    # the NULL (default-partition) files pack as one group of their
+    # own: a term prune never selects a NULL-bounds file (ADVICE r12)
+    for value in sorted(groups, key=lambda v: (v is not None, v)):
+        packed: list[list[str]] = []
         loads: list[int] = []
-        for n, f in fs:
+        for n, f in sorted(groups[value], key=lambda t: (-t[0], t[1])):
             for i, load in enumerate(loads):
                 if load + n <= target_rows:
-                    vbins[i].append(f)
+                    packed[i].append(f)
                     loads[i] += n
                     break
             else:
-                vbins.append([f])
+                packed.append([f])
                 loads.append(n)
-        for b in vbins:
+        for b in packed:
             if len(b) == 1:  # rewriting a lone file buys nothing
                 keep.append(b[0])
             else:
-                bins.append((v, b))
-    if not bins:
-        return None
-    assign = spark.createDataFrame(
-        [(f, v, i) for i, (v, fs) in enumerate(bins) for f in fs],
-        f"__compact_file string, {part_col} long, __compact_bin int",
-    )
-    small_files = [f for _, fs in bins for f in fs]
-    packed = (
-        spark.read.parquet(*small_files)
-        .withColumn("__compact_file", F.input_file_name())
-        .join(F.broadcast(assign), "__compact_file")
-        .drop("__compact_file")
-        .repartition(len(bins), "__compact_bin")
-    )
-    packed.write.partitionBy(part_col, "__compact_bin").mode(
-        "overwrite"
-    ).parquet(out_dir)
-    # reading the OUT root (not leaf globs) re-infers part_col from
-    # the restored dirs, so the fresh manifest's min/max stay exact
-    fresh = build_manifest(spark, out_dir, [part_col])
-    carried = manifest.filter(F.col("file").isin(keep))
-    merged = carried.unionByName(fresh.select(*carried.columns))
-    return commit_snapshot(
-        spark,
-        log_dir,
-        merged,
-        batch_id=latest_committed_batch(spark, log_dir),
-    )
+                bins.append(b)
+    return part, bins, keep
 
 
 def plan_compaction(
@@ -168,28 +113,15 @@ def plan_compaction(
 ) -> tuple[list[list[str]], list[str]]:
     """(bins, keep_files): first-fit-decreasing packing of every
     file with fewer than ``target_rows`` rows into bins of that
-    capacity; right-sized files stay in ``keep_files`` untouched.
-    Deterministic: candidates ordered by (n_rows desc, path). The
-    collect is bounded by the table's FILE count."""
-    if target_rows < 1:
-        raise ValueError("target_rows must be >= 1")
-    rows = manifest.select("file", "n_rows").collect()
-    small = sorted(
-        ((r.n_rows, r.file) for r in rows if r.n_rows < target_rows),
-        key=lambda t: (-t[0], t[1]),
-    )
-    keep = [r.file for r in rows if r.n_rows >= target_rows]
-    bins: list[list[str]] = []
-    loads: list[int] = []
-    for n, f in small:
-        for i, load in enumerate(loads):
-            if load + n <= target_rows:
-                bins[i].append(f)
-                loads[i] += n
-                break
-        else:
-            bins.append([f])
-            loads.append(n)
+    capacity; right-sized files, and a small file left alone in its
+    bin, stay in ``keep_files`` untouched. On a partition-encoded
+    layout (``_partition_column``) a bin never crosses a partition
+    value, so each compacted file keeps min == max on it — the
+    per-file bounds a term-bucket prune reads; the NULL (default
+    partition) files pack as their own group. Deterministic:
+    candidates ordered by (n_rows desc, path). The collect is
+    bounded by the table's FILE count."""
+    _, bins, keep = _plan(manifest, target_rows)
     return bins, keep
 
 
@@ -202,17 +134,11 @@ def compact_small_files(
 ) -> DataFrame:
     """Rewrite the undersized files into ``out_dir`` (one file per
     bin, re-sorted on ``sort_col`` when given so clustering
-    survives) and return the NEW manifest — carried-over rows for
+    survives; a partition-encoded layout's directories are restored
+    on write) and return the NEW manifest — carried-over rows for
     untouched files + measured rows for the compacted ones. The
     input manifest's tracked columns are preserved."""
-    tracked = sorted(
-        {
-            c[: -len("_min")]
-            for c in manifest.columns
-            if c.endswith("_min") and f"{c[:-len('_min')]}_max" in manifest.columns
-        }
-    )
-    bins, keep = plan_compaction(manifest, target_rows)
+    part, bins, keep = _plan(manifest, target_rows)
     carried = manifest.filter(F.col("file").isin(keep))
     if not bins:
         return carried
@@ -230,6 +156,18 @@ def compact_small_files(
         [(f, i) for i, bin_files in enumerate(bins) for f in bin_files],
         "__compact_file string, __compact_bin int",
     )
+    layout = ["__compact_bin"]
+    if part is not None:
+        # the directory value is not in the files: take it from the
+        # manifest (min == max) and write it back as the directory
+        assign = assign.join(
+            manifest.select(
+                F.col("file").alias("__compact_file"),
+                F.col(f"{part}_min").alias(part),
+            ),
+            "__compact_file",
+        )
+        layout = [part, "__compact_bin"]
     small_files = [f for bin_files in bins for f in bin_files]
     packed = (
         spark.read.parquet(*small_files)
@@ -243,9 +181,8 @@ def compact_small_files(
         # file internally clustered — compaction must not undo
         # zorder/linear layout
         packed = packed.sortWithinPartitions("__compact_bin", sort_col)
-    packed.write.partitionBy("__compact_bin").mode("overwrite").parquet(out_dir)
-    # the leaf-dir glob hands Spark the bin directories directly, so
-    # no bin partition column is inferred — compacted files read back
-    # with the table's own schema, exactly like the old part-N layout
-    fresh = build_manifest(spark, f"{out_dir}/__compact_bin=*", tracked)
+    packed.write.partitionBy(*layout).mode("errorifexists").parquet(out_dir)
+    # reading the out ROOT re-infers the layout columns from the
+    # directories, so a partition column's min/max stay exact
+    fresh = build_manifest(spark, out_dir, tracked_columns(manifest))
     return carried.unionByName(fresh.select(*carried.columns))

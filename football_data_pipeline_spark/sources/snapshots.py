@@ -26,10 +26,9 @@ in the caller's hands. The snapshot log makes that contract durable:
   ``rewrite`` (its [min, max] intersects the delete range — the
   exact predicate prune_files uses, flipped to the write path) or
   ``carry``; only the rewrite tail is read and rewritten without the
-  deleted rows (one range-partitioned write, re-sorted so the
-  clustering and tight min/max survive), carried files' manifest
-  rows pass through verbatim. Files never mutate — old versions
-  still read the deleted rows (time travel), new versions don't.
+  deleted rows, carried files' manifest rows pass through verbatim.
+  Files never mutate — old versions still read the deleted rows
+  (time travel), new versions don't.
 - ``plan_cow_merge`` / ``merge_cow``: copy-on-write keyed MERGE
   (upsert) — the UPDATE half of the DML story. Planning is one
   broadcast range join of the update keys against the manifest's
@@ -42,6 +41,17 @@ in the caller's hands. The snapshot log makes that contract durable:
   present in the old rows is a replacement, an absent one an
   insert — no separate membership pass needed), written in one
   range-partitioned within-file-sorted job.
+- One rewrite path for every verb. Each DML verb here (and
+  mor.py's folds) is a planning step plus a row transform handed to
+  ``cow_rewrite``: read the planned files, transform, one
+  range-partitioned within-file-sorted write (clustering and tight
+  min/max survive), re-measure on the manifest's tracked columns,
+  union with the carried rows. Every rewrite that lands files for a
+  later commit (``maintain``, the CDC fold, a view refresh, a
+  retraction fold) writes into ``fresh_dir``, numbered past any
+  crash debris, and commits through ``commit_rewrite``, which
+  carries the log's batch watermark so the streaming replay guard
+  survives retention.
 - ``orphan_files`` / ``expire_snapshots`` / ``vacuum``: retention.
   A data file is an orphan when every snapshot referencing it has
   been expired — one anti-join of expired manifests against
@@ -80,7 +90,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .manifest import build_manifest
+from .manifest import build_manifest, read_files, tracked_columns
 
 _SNAP_RE = re.compile(r"^snap-(\d{6})$")
 
@@ -143,10 +153,6 @@ def set_snapshot_store(store: LocalSnapshotStore) -> LocalSnapshotStore:
     return prev
 
 
-def get_snapshot_store() -> LocalSnapshotStore:
-    return _STORE
-
-
 class ConcurrentCommitError(RuntimeError):
     """A compare-and-swap commit lost the race (``expect_latest``)."""
 
@@ -173,6 +179,28 @@ def _local_path(file_uri: str) -> str:
     if file_uri.startswith("file:"):
         return urlparse(file_uri).path
     return file_uri
+
+
+def _next_number(root: str, pattern: re.Pattern) -> int:
+    """One past the largest N among ``root``'s directories whose name
+    ``pattern`` matches (group 1 = N), committed or not; 0 when none
+    match."""
+    taken = [
+        int(m.group(1))
+        for name in _STORE.list_dirs(root)
+        if (m := pattern.match(name))
+    ]
+    return max(taken, default=-1) + 1
+
+
+def fresh_dir(root: str, prefix: str = "gen") -> str:
+    """``{root}/{prefix}-N``, numbered past every ``{prefix}-N``
+    directory already under ``root`` (ADVICE r12): a crash between a
+    rewrite's ``errorifexists`` write and its commit leaves such a
+    directory unreferenced, and numbering from committed state
+    would hand every retry that same N and fail it forever."""
+    pattern = re.compile(rf"^{re.escape(prefix)}-(\d+)$")
+    return os.path.join(root, f"{prefix}-{_next_number(root, pattern)}")
 
 
 def snapshot_versions(spark: SparkSession, log_dir: str) -> list[int]:
@@ -260,12 +288,7 @@ def commit_snapshot(
         # debris. The mkdir claim serializes unguarded racers onto
         # distinct versions (each loser renumbers past the winner).
         while True:
-            taken = [
-                int(m.group(1))
-                for name in _STORE.list_dirs(log_dir)
-                if (m := _SNAP_RE.match(name))
-            ]
-            version = (max(taken) + 1) if taken else 0
+            version = _next_number(log_dir, _SNAP_RE)
             snap = _snap_dir(log_dir, version)
             try:
                 _STORE.mkdir_atomic(snap)
@@ -385,7 +408,58 @@ def read_snapshot(
     return reader.parquet(*files)
 
 
-# --- copy-on-write delete --------------------------------------------
+# --- copy-on-write rewrites ------------------------------------------
+
+
+def cow_rewrite(
+    spark: SparkSession,
+    manifest: DataFrame,
+    rewrite: list[str],
+    transform,
+    col: str,
+    out_dir: str,
+    base_path: str | None = None,
+    inserts: DataFrame | None = None,
+) -> DataFrame:
+    """The copy-on-write core every rewrite verb shares (DELETE,
+    UPDATE and MERGE below; mor.fold_deletes / fold_keys): read the
+    ``rewrite`` files (``base_path`` recovers directory-encoded
+    columns), map their rows through ``transform``, union
+    ``inserts`` (MERGE's update rows), and write the result to
+    ``out_dir`` in one range-partitioned, within-file-sorted job on
+    ``col`` — one file per rewritten file, plus one for the inserts,
+    so clustering and tight min/max survive. Returns the NEW
+    manifest: ``manifest``'s other rows verbatim + the new files
+    measured on its tracked columns; with nothing to rewrite and no
+    inserts, ``manifest`` itself. Input files never mutate, so old
+    snapshots still read the pre-rewrite rows (time travel)."""
+    if not rewrite and inserts is None:
+        return manifest
+    rows = None
+    if rewrite:
+        rows = transform(read_files(spark, manifest, rewrite, base_path))
+    if inserts is not None:
+        rows = (
+            inserts
+            if rows is None
+            else rows.unionByName(inserts.select(*rows.columns))
+        )
+    n_out = len(rewrite) + (0 if inserts is None else 1)
+    (
+        rows.repartitionByRange(n_out, col)
+        .sortWithinPartitions(col)
+        .write.mode("errorifexists")
+        .parquet(out_dir)
+    )
+    carried = manifest.filter(~F.col("file").isin(rewrite))
+    fresh = build_manifest(spark, out_dir, tracked_columns(manifest))
+    return carried.unionByName(fresh.select(*carried.columns))
+
+
+def planned_rewrites(plan: DataFrame) -> list[str]:
+    """The files a COW plan marks 'rewrite' (a file-count collect)."""
+    rows = plan.filter(F.col("action") == "rewrite").select("file").collect()
+    return [r.file for r in rows]
 
 
 def plan_cow_delete(
@@ -418,42 +492,20 @@ def delete_where_cow(
     base_path: str | None = None,
 ) -> DataFrame:
     """Copy-on-write ``DELETE WHERE col BETWEEN lo AND hi``: rewrite
-    ONLY the files the manifest says can hold doomed rows — survivors
-    go to ``out_dir`` in one range-partitioned, within-file-sorted
-    write (one file per rewritten input file, so clustering and tight
-    min/max survive) — and return the NEW manifest: carried files'
-    rows verbatim + freshly measured rows for the rewrites. Input
-    files never mutate; commit the result as the next snapshot and
-    old versions still time-travel to the deleted rows."""
-    tracked = sorted(
-        {
-            c[: -len("_min")]
-            for c in manifest.columns
-            if c.endswith("_min") and f"{c[:-len('_min')]}_max" in manifest.columns
-        }
+    ONLY the files the manifest says can hold doomed rows, keeping
+    their survivors (``cow_rewrite``), and return the NEW manifest.
+    Commit the result as the next snapshot and old versions still
+    time-travel to the deleted rows."""
+    rewrite = planned_rewrites(plan_cow_delete(manifest, col, lo, hi))
+    return cow_rewrite(
+        spark,
+        manifest,
+        rewrite,
+        lambda rows: rows.filter(~F.col(col).between(F.lit(lo), F.lit(hi))),
+        col,
+        out_dir,
+        base_path,
     )
-    plan = plan_cow_delete(manifest, col, lo, hi)
-    actions = plan.select("file", "action").collect()
-    rewrite = [r.file for r in actions if r.action == "rewrite"]
-    carried = manifest.filter(
-        F.col("file").isin([r.file for r in actions if r.action == "carry"])
-    )
-    if not rewrite:
-        return manifest
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    survivors = reader.parquet(*rewrite).filter(
-        ~F.col(col).between(F.lit(lo), F.lit(hi))
-    )
-    (
-        survivors.repartitionByRange(len(rewrite), col)
-        .sortWithinPartitions(col)
-        .write.mode("errorifexists")
-        .parquet(out_dir)
-    )
-    fresh = build_manifest(spark, out_dir, tracked)
-    return carried.unionByName(fresh.select(*carried.columns))
 
 
 def update_where_cow(
@@ -479,48 +531,27 @@ def update_where_cow(
     manifest re-measures min/max, and the rewrite re-sorts, so
     skipping stays correct (though updating the clustering key
     degrades clustering, same as every table format)."""
-    tracked = sorted(
-        {
-            c[: -len("_min")]
-            for c in manifest.columns
-            if c.endswith("_min")
-            and f"{c[:-len('_min')]}_max" in manifest.columns
-        }
-    )
-    plan = plan_cow_delete(manifest, col, lo, hi)
-    actions = plan.select("file", "action").collect()
-    rewrite = [r.file for r in actions if r.action == "rewrite"]
-    carried = manifest.filter(
-        F.col("file").isin([r.file for r in actions if r.action == "carry"])
-    )
-    if not rewrite:
-        return manifest
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    rows = reader.parquet(*rewrite)
-    unknown = [c for c in assignments if c not in rows.columns]
-    if unknown:
-        raise ValueError(
-            f"UPDATE assigns to column(s) not in the table: {unknown}"
-        )
     pred = F.col(col).between(F.lit(lo), F.lit(hi))
-    updated = rows.select(
-        *[
-            F.when(pred, assignments[c]).otherwise(F.col(c)).alias(c)
-            if c in assignments
-            else F.col(c)
-            for c in rows.columns
-        ]
+
+    def assign(rows: DataFrame) -> DataFrame:
+        unknown = [c for c in assignments if c not in rows.columns]
+        if unknown:
+            raise ValueError(
+                f"UPDATE assigns to column(s) not in the table: {unknown}"
+            )
+        return rows.select(
+            *[
+                F.when(pred, assignments[c]).otherwise(F.col(c)).alias(c)
+                if c in assignments
+                else F.col(c)
+                for c in rows.columns
+            ]
+        )
+
+    rewrite = planned_rewrites(plan_cow_delete(manifest, col, lo, hi))
+    return cow_rewrite(
+        spark, manifest, rewrite, assign, col, out_dir, base_path
     )
-    (
-        updated.repartitionByRange(len(rewrite), col)
-        .sortWithinPartitions(col)
-        .write.mode("errorifexists")
-        .parquet(out_dir)
-    )
-    fresh = build_manifest(spark, out_dir, tracked)
-    return carried.unionByName(fresh.select(*carried.columns))
 
 
 # --- copy-on-write merge (keyed upsert) --------------------------------
@@ -600,41 +631,21 @@ def merge_cow(
             f"updates carry {dup.d} duplicate {key!r} key(s); "
             "MERGE requires a unique update key — dedupe first"
         )
-    tracked = sorted(
-        {
-            c[: -len("_min")]
-            for c in manifest.columns
-            if c.endswith("_min")
-            and f"{c[:-len('_min')]}_max" in manifest.columns
-        }
-    )
-    plan = plan_cow_merge(manifest, key, updates)
-    actions = plan.select("file", "action").collect()
-    rewrite = [r.file for r in actions if r.action == "rewrite"]
-    carried = manifest.filter(
-        F.col("file").isin([r.file for r in actions if r.action == "carry"])
-    )
-    if rewrite:
-        reader = spark.read
-        if base_path is not None:
-            reader = reader.option("basePath", base_path)
-        old = reader.parquet(*rewrite)
-        merged = old.join(
+    rewrite = planned_rewrites(plan_cow_merge(manifest, key, updates))
+    return cow_rewrite(
+        spark,
+        manifest,
+        rewrite,
+        lambda old: old.join(
             updates.select(F.col(key).alias("__k")),
             old[key] == F.col("__k"),
             "left_anti",
-        ).unionByName(updates.select(*old.columns))
-    else:
-        merged = updates
-    n_out = max(1, len(rewrite) + 1)
-    (
-        merged.repartitionByRange(n_out, key)
-        .sortWithinPartitions(key)
-        .write.mode("errorifexists")
-        .parquet(out_dir)
+        ),
+        key,
+        out_dir,
+        base_path,
+        inserts=updates,
     )
-    fresh = build_manifest(spark, out_dir, tracked)
-    return carried.unionByName(fresh.select(*carried.columns))
 
 
 # --- streaming: exactly-once snapshot commits --------------------------
@@ -670,6 +681,28 @@ def latest_committed_batch(spark: SparkSession, log_dir: str) -> int | None:
         return None
     row = commit_log(spark, log_dir).agg(F.max("batch_id").alias("b")).first()
     return row.b
+
+
+def commit_rewrite(
+    spark: SparkSession,
+    log_dir: str,
+    manifest: DataFrame,
+    expect_latest: int | None = None,
+) -> int:
+    """Commit a rewrite of the table (compaction, fold, rollback) as
+    the next version, INHERITING the log's batch watermark (Delta's
+    txn-version carry-forward; ADVICE r11). With a NULL batch_id,
+    expire_snapshots(keep_latest=1) would drop every batch-stamped
+    marker: the replay guard would reopen (a replayed batch
+    overwrites its data dir under files the rewrite carried) and the
+    dedup funnels' history reads would come back EMPTY."""
+    return commit_snapshot(
+        spark,
+        log_dir,
+        manifest,
+        batch_id=latest_committed_batch(spark, log_dir),
+        expect_latest=expect_latest,
+    )
 
 
 def snapshot_append_writer(
@@ -773,16 +806,7 @@ def scan_appends(
             f"{sorted(removed)[0]!r}); incremental file-diff reads "
             "would double-count — re-read the full snapshot instead"
         )
-    added = sorted(to_files - from_files)
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    if not added:
-        any_file = sorted(to_files)
-        if not any_file:
-            raise ValueError("both snapshots have empty manifests")
-        return reader.parquet(any_file[0]).filter(F.lit(False))
-    return reader.parquet(*added)
+    return read_files(spark, m_to, sorted(to_files - from_files), base_path)
 
 
 # --- named refs: tags and branches --------------------------------------
@@ -957,17 +981,15 @@ def rollback(
     them, and readers pinned mid-rollback see a consistent snapshot
     either way. Planning is one manifest read, bounded by file
     count; no data file is touched. The new commit inherits the
-    log's batch watermark (maintain()'s carry rule): a rollback
-    undoes a batch's EFFECTS deliberately, which must not reopen the
-    replay guard and let the stream re-apply it. ``expect_latest``
-    passes through to the CAS guard for concurrent-writer safety.
-    Returns the new version."""
-    manifest = read_manifest(spark, log_dir, to_version)
-    return commit_snapshot(
+    log's batch watermark (``commit_rewrite``): a rollback undoes a
+    batch's EFFECTS deliberately, which must not reopen the replay
+    guard and let the stream re-apply it. ``expect_latest`` passes
+    through to the CAS guard for concurrent-writer safety. Returns
+    the new version."""
+    return commit_rewrite(
         spark,
         log_dir,
-        manifest,
-        batch_id=latest_committed_batch(spark, log_dir),
+        read_manifest(spark, log_dir, to_version),
         expect_latest=expect_latest,
     )
 
@@ -1031,28 +1053,31 @@ def maintain(
     out_dir: str,
     sort_col: str | None = None,
     keep_latest: int = 2,
-    do_vacuum: bool = True,
 ) -> dict:
     """One housekeeping pass over the table — the OPTIMIZE loop a
     long-lived streaming table needs, composed from the pieces:
     compact the latest snapshot's small files (optimize.
     compact_small_files — a no-op commit is skipped entirely),
-    commit the compacted manifest, expire everything but the newest
-    ``keep_latest`` versions, and (optionally) vacuum the orphans.
-    Safe to run on a schedule alongside ``snapshot_append_writer``:
-    appends between the manifest read and the commit are NOT lost —
-    they live in their own snapshot, and the next pass folds them.
-    Each pass rewrites into its own ``{out_dir}/gen-N`` (N = the
-    version it is about to commit), so repeated passes never
-    overwrite files a retained snapshot still references. Returns a
+    commit the compacted manifest (``commit_rewrite``: the batch
+    watermark carries), expire everything but the newest
+    ``keep_latest`` versions, and vacuum the orphans. Safe to run on
+    a schedule alongside ``snapshot_append_writer``: appends between
+    the manifest read and the commit are NOT lost — they live in
+    their own snapshot, and the next pass folds them. Each pass
+    rewrites into its own ``fresh_dir(out_dir)``, so repeated passes
+    never overwrite files a retained snapshot still references.
+    Every layout runs through here: on a partition-encoded log (the
+    term-bucketed index stores) the compactor keeps each bin within
+    one partition value and restores the directories. Returns a
     small audit dict (committed version or None, expired versions,
     orphan count, vacuumed count).
 
     Caveat: once a snapshot mixes file roots (data dir + optimize
-    generations), directory-encoded partition columns like the
-    append writer's ``batch_id`` are NOT recoverable via basePath
-    any more — an OPTIMIZE rewrite keeps only real columns. Read
-    post-maintenance snapshots without ``base_path``; if a partition
+    generations), directory-encoded columns the manifest does not
+    track — like the append writer's ``batch_id`` — are NOT
+    recoverable via basePath any more: an OPTIMIZE rewrite keeps
+    only real columns and tracked partition columns. Read
+    post-maintenance snapshots without ``base_path``; if such a
     value must survive compaction, materialize it as a column before
     writing."""
     from .optimize import compact_small_files, plan_compaction
@@ -1061,39 +1086,16 @@ def maintain(
     bins, _ = plan_compaction(manifest, target_rows)
     version = None
     if bins:
-        taken = [
-            int(m.group(1))
-            for name in _STORE.list_dirs(log_dir)
-            if (m := _SNAP_RE.match(name))
-        ]
-        gen = (max(taken) + 1) if taken else 0
         compacted = compact_small_files(
-            spark,
-            manifest,
-            target_rows,
-            os.path.join(out_dir, f"gen-{gen}"),
-            sort_col=sort_col,
+            spark, manifest, target_rows, fresh_dir(out_dir), sort_col=sort_col
         )
-        # the compaction commit INHERITS the log's batch watermark
-        # (Delta's txn-version carry-forward; ADVICE r11): a NULL
-        # batch_id here plus expire_snapshots(keep_latest=1) would
-        # eventually expire every batch-stamped marker, after which
-        # latest_committed_batch/read_table_before_batch return None
-        # and the snapshot-backed dedup funnels would see an EMPTY
-        # history — re-accepting every duplicate on the next batch.
-        version = commit_snapshot(
-            spark,
-            log_dir,
-            compacted,
-            batch_id=latest_committed_batch(spark, log_dir),
-        )
+        version = commit_rewrite(spark, log_dir, compacted)
     expired, orphans = expire_snapshots(spark, log_dir, keep_latest)
-    vacuumed = vacuum(orphans) if do_vacuum else 0
     return {
         "compacted_version": version,
         "expired": expired,
         "orphans": len(orphans),
-        "vacuumed": vacuumed,
+        "vacuumed": vacuum(orphans),
     }
 
 

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from .manifest import read_files
 
 #: per-dimension grid resolution (bits); z-values span 2·Z_BITS bits
 Z_BITS = 16
@@ -201,15 +202,7 @@ def read_box(
         F.col(xcol).between(F.lit(xlo), F.lit(xhi))
         & F.col(ycol).between(F.lit(ylo), F.lit(yhi))
     )
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    if not files:
-        any_file = [r.file for r in manifest.select("file").limit(1).collect()]
-        if not any_file:
-            raise ValueError("empty manifest: no files to infer schema from")
-        return reader.parquet(any_file[0]).filter(F.lit(False))
-    return reader.parquet(*files).filter(predicate)
+    return read_files(spark, manifest, files, base_path).filter(predicate)
 
 
 # --- driver oracle: z-order vs linear skipping audit -----------------

@@ -26,8 +26,9 @@ micro-batch never rewrites the view:
   commit. The fold keeps the winning __seq AND the 'D' tombstones: a
   tombstone dropped at compaction would let a late lower-seq 'U'
   resurrect the key with stale state, so deletes stay until their
-  key is overwritten by a higher change. The fold commit inherits
-  the log's batch watermark, so the replay guard survives it.
+  key is overwritten by a higher change. The fold writes into a
+  ``snapshots.fresh_dir`` and commits through
+  ``snapshots.commit_rewrite``, so the replay guard survives it.
 
 At 100 TB: the winner sets are per-batch (small), the view collapse
 is one hash aggregate keyed on the CDC key — the reader is the same
@@ -42,7 +43,6 @@ enforced by a plan-embedded check in the writer.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -164,47 +164,19 @@ def compact_cdc_snapshot(
     lower-seq 'U' resurrect the key with stale state), land the
     folded rows in their own generation dir, and commit the new
     manifest. Old versions stay time-travelable until
-    expire_snapshots; the commit INHERITS the log's max batch_id
-    (maintain()'s watermark rule) so the replay guard survives any
+    expire_snapshots. The folded rows land in
+    ``fresh_dir({root}/winners_fold)`` — numbered past any crashed
+    fold's debris — and the commit INHERITS the log's batch
+    watermark (``commit_rewrite``), so the replay guard survives any
     retention policy. Returns the folded snapshot's version."""
-    import os as _os
-
     from ..sources.manifest import build_manifest
-    from ..sources.snapshots import (
-        _SNAP_RE,
-        commit_snapshot,
-        get_snapshot_store,
-        latest_committed_batch,
-    )
+    from ..sources.snapshots import commit_rewrite, fresh_dir
 
-    log = f"{root}/winners_log"
     snap = read_cdc_snapshot_log(
         spark, root, key, payload_cols, keep_seq=True, keep_tombstones=True
     )
-    # number generations past every snap dir AND every existing fold
-    # dir (ADVICE r12): a crash between the fold's parquet write and
-    # its commit leaves a gen-N dir with NO matching snap dir, so
-    # numbering from snap dirs alone would recompute the same gen and
-    # fail permanently on mode('errorifexists') — the retry must take
-    # a fresh dir instead of colliding with its own debris
-    store = get_snapshot_store()
-    fold_root = _os.path.join(root, "winners_fold")
-    _GEN_RE = re.compile(r"^gen-(\d+)$")
-    taken = [
-        int(m.group(1))
-        for name in store.list_dirs(log)
-        if (m := _SNAP_RE.match(name))
-    ] + [
-        int(m.group(1))
-        for name in (
-            store.list_dirs(fold_root) if store.is_dir(fold_root) else []
-        )
-        if (m := _GEN_RE.match(name))
-    ]
-    gen = (max(taken) + 1) if taken else 0
-    out = _os.path.join(root, "winners_fold", f"gen-{gen}")
+    out = fresh_dir(f"{root}/winners_fold")
     snap.write.mode("errorifexists").parquet(out)
-    manifest = build_manifest(spark, out, [])
-    return commit_snapshot(
-        spark, log, manifest, batch_id=latest_committed_batch(spark, log)
+    return commit_rewrite(
+        spark, f"{root}/winners_log", build_manifest(spark, out, [])
     )

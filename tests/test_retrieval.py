@@ -351,11 +351,11 @@ def test_maintain_index_bucket_preserving(spark, tmp_path):
     """Index housekeeping must keep the layout's contract: fewer
     postings/dfs files after compaction, per-file bucket min == max
     preserved (the prune stays exact), the serve byte-identical, and
-    the streaming replay guard alive through keep_latest=1 — while
-    generic maintain() cannot even run on these logs (the bucket
-    column is directory-encoded)."""
-    import pytest
-
+    the streaming replay guard alive through keep_latest=1. Plain
+    maintain() on the postings log already does all of that (the
+    compactor derives the directory-encoded bucket column from the
+    manifest); maintain_index then finds the postings compact and
+    packs the dfs log."""
     from football_data_pipeline_spark.operators.retrieval import (
         bm25_topk_indexed,
         index_append_writer,
@@ -387,11 +387,19 @@ def test_maintain_index_bucket_preserving(spark, tmp_path):
     post, dfs, stats = read_index(spark, root, terms)
     pre = bm25_topk_indexed(post, dfs, stats, terms, 10).collect()
     pre_files = read_manifest(spark, plog).count()
-    # generic maintain cannot resolve the directory-encoded bucket col
-    with pytest.raises(Exception, match="p_term_bucket_8"):
-        maintain(spark, plog, 100_000, f"{root}/bad_opt")
+    # plain maintain compacts the bucketed postings log in place
+    plain = maintain(spark, plog, 100_000, f"{root}/plain_opt")
+    assert plain["compacted_version"] is not None
+    m = read_manifest(spark, plog)
+    assert m.count() < pre_files
+    for r in m.collect():
+        assert r["p_term_bucket_8_min"] == r["p_term_bucket_8_max"]
+    post1, dfs1, stats1 = read_index(spark, root, terms)
+    got1 = bm25_topk_indexed(post1, dfs1, stats1, terms, 10).collect()
+    assert [tuple(r) for r in got1] == [tuple(r) for r in pre]
     report = maintain_index(spark, root, target_rows=100_000, keep_latest=1)
-    assert report["postings_log"]["compacted_version"] is not None
+    assert report["postings_log"]["compacted_version"] is None
+    assert report["dfs_log"]["compacted_version"] is not None
     m = read_manifest(spark, plog)
     assert m.count() < pre_files
     # per-file bucket bounds stay EXACT — the prune contract
