@@ -1,4 +1,14 @@
-"""Byte-bounded per-worker memoization for payload-keyed kernels.
+"""The media tier's shared kernel machinery: one Arrow runner
+(``map_rows``) and one byte-bounded per-worker memo
+(``payload_memo``) for the pure per-payload functions it runs.
+
+``map_rows`` is the only ``mapInPandas`` body the image, audio and
+video operators use: each operator is a module-level per-row function
+(decode + stats/fingerprint, or a synthesizer) plus one ``map_rows``
+call, so the batch loop, the key pass-through and the output column
+names live here once. The two vectorized kernels
+(multimodal.extract_features, embedsearch's matrix product) keep
+their own ``mapInPandas`` bodies.
 
 The r13 media kernels memoize pure per-payload computations
 (decode + fingerprint/stats) with ``lru_cache`` keyed on the payload
@@ -28,6 +38,8 @@ from __future__ import annotations
 
 import functools
 from collections.abc import Callable
+
+from pyspark.sql import DataFrame
 
 #: per-entry size gate: payloads above this never enter a memo.
 #: 256 KiB comfortably covers every fixture payload class (PPM
@@ -62,3 +74,41 @@ def payload_memo(
         return wrapper
 
     return deco
+
+
+def map_rows(
+    df: DataFrame, fn: Callable, schema: str, *args, many: bool = False
+) -> DataFrame:
+    """Run the per-row Python function ``fn`` over ``df`` as one
+    Arrow-batched ``mapInPandas`` pass. Each input row is
+    ``(key, *inputs)``, ``df``'s columns in order; ``fn(*inputs,
+    *args)`` returns the output row after the key (with
+    ``many=True``, an iterable of such rows, possibly empty), and the
+    runner emits ``(key, *tail)`` under the DDL ``schema``, whose
+    field names name the output columns (so an empty batch still has
+    them). Each batch's output frame is built from a list of row
+    tuples, so pandas infers the dtypes from the values and a
+    ``None`` reaches Spark as NULL. Binary columns arrive as
+    ``bytes``, so a ``payload_memo`` function keys on them directly;
+    keep ``fn`` module-level so each worker's memo outlives a batch.
+    """
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(schema).names
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            cols = [pdf[c] for c in pdf.columns]
+            if many:
+                rows = [
+                    (key, *tail)
+                    for key, *inputs in zip(*cols)
+                    for tail in fn(*inputs, *args)
+                ]
+            else:
+                rows = [(key, *fn(*inputs, *args)) for key, *inputs in zip(*cols)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(kernel, schema=schema)

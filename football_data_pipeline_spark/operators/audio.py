@@ -1,8 +1,8 @@
 """Audio column plumbing — the AUDIO tier of the multimodal layout
 (multimodal.py holds the image tier; same contract: payload =
 opaque ``binary``, metadata = a typed struct, heavy per-row work =
-Arrow-batched ``mapInPandas`` streaming per-partition with no
-shuffle).
+Arrow-batched ``functions.memo.map_rows`` streaming per-partition
+with no shuffle).
 
 Decode support is tiered by what this environment can honestly do,
 exactly like the image side:
@@ -45,10 +45,8 @@ documents AND 10x output rows — sub-linear per row, no pair stage.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-from ..functions.memo import payload_memo
+from ..functions.memo import map_rows, payload_memo
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -234,33 +232,11 @@ def _audio_stats_row(payload: bytes) -> tuple:
 def audio_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, decoded, rate, channels, n_samples, duration_s,
     rms, zcr, clip_ratio, silence_ratio): real signal statistics per
-    payload via the pure-Python WAV codec inside one Arrow kernel —
+    payload via the pure-Python WAV codec inside one ``map_rows`` pass —
     vectorized numpy per batch, undecodable rows kept with
     decoded=false and NULL stats (audited, never dropped)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (asset_id, *_audio_stats_row(bytes(payload)))
-                for asset_id, payload in zip(pdf["asset_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "decoded",
-                    "rate",
-                    "channels",
-                    "n_samples",
-                    "duration_s",
-                    "rms",
-                    "zcr",
-                    "clip_ratio",
-                    "silence_ratio",
-                ],
-            )
-
-    return assets.mapInPandas(kernel, schema=AUDIO_STATS_SCHEMA)
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _audio_stats_row, AUDIO_STATS_SCHEMA)
 
 
 def audio_quality_gate(
@@ -308,33 +284,19 @@ def synth_tone_assets(docs: DataFrame) -> DataFrame:
     length) — see the module docstring; the oracle recomputes the
     stats analytically. Every 7th doc clips at full scale on
     purpose so the gate's 'clipped' branch has driver coverage."""
+    seeds = docs.select(F.col("doc_id").alias("asset_id"), "doc_id", "text")
+    return map_rows(seeds, _tone_row, "asset_id long, payload binary")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                amp = (
-                    CLIP_LEVEL
-                    if doc_id % 7 == 0
-                    else 500 + (doc_id % 29) * 250
-                )
-                n = 160 + (len(text or "") % 200) * 8
-                t = np.arange(n)
-                s = np.where(
-                    (t // TONE_HALF_PERIOD) % 2 == 0, amp, -amp
-                ).astype("<i2")
-                payloads.append(
-                    encode_wav(TONE_RATE, 1, s.tobytes())
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
+def _tone_row(doc_id: int, text: str | None) -> tuple:
+    """(payload,): the synth_tone_assets WAV of one document."""
+    import numpy as np
 
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema="asset_id long, payload binary"
-    )
+    amp = CLIP_LEVEL if doc_id % 7 == 0 else 500 + (doc_id % 29) * 250
+    n = 160 + (len(text or "") % 200) * 8
+    t = np.arange(n)
+    s = np.where((t // TONE_HALF_PERIOD) % 2 == 0, amp, -amp).astype("<i2")
+    return (encode_wav(TONE_RATE, 1, s.tobytes()),)
 
 
 def _audio_stats_oracle() -> str:

@@ -32,7 +32,7 @@ in the WAV codec, channel downmix, window math, envelope bits,
 banding, star collapse, or Hamming verify changes the pair set and
 breaks the value hash.
 
-100 TB shape: the fingerprint is one narrow Arrow kernel pass over
+100 TB shape: the fingerprint is one narrow ``map_rows`` pass over
 the payload column (numpy per batch, no shuffle); everything
 pair-shaped is hash_near_dup's banded equi-joins over
 representatives — never all-pairs, identical scaling argument to
@@ -45,12 +45,10 @@ rep-level candidates stay bounded by the class count.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import lru_cache
 
-from ..functions.memo import payload_memo
+from ..functions.memo import map_rows, payload_memo
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -125,26 +123,14 @@ def _afp_row(payload: bytes) -> tuple:
 
 
 def audio_fingerprint(assets: DataFrame) -> DataFrame:
-    """Arrow-batched fingerprint extraction, the audio twin of
+    """``map_rows`` fingerprint extraction, the audio twin of
     multimodal.image_phash and schema-compatible with it: decodable
     payloads get their envelope fingerprint split into DHASH_BANDS
     16-bit bands; undecodable or sub-ENV_WINDOWS payloads fall back
     to md5-derived bands (byte-exact duplicates still collide;
     decoded=false marks the weaker semantics)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (aid, *_afp_row(bytes(b)))
-                for aid, b in zip(pdf["asset_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "decoded"]
-                + [f"band{i}" for i in range(DHASH_BANDS)],
-            )
-
-    return assets.mapInPandas(kernel, schema=PHASH_SCHEMA)
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _afp_row, PHASH_SCHEMA)
 
 
 def audio_near_dup(assets: DataFrame, max_hamming: int | None = None) -> DataFrame:
@@ -209,17 +195,13 @@ def synth_patterned_tones(docs: DataFrame) -> DataFrame:
     bit is 1 and flat where 0 — each window's mean |amplitude| is
     exact in float64, so the planted bits survive the REAL
     encode→decode→downmix→envelope path bit-for-bit."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                _tone_payload(tuple(_tone_hash_rows(int(doc_id))))
-                for doc_id in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
+    seeds = docs.select(F.col("doc_id").alias("asset_id"), "doc_id")
+    return map_rows(seeds, _patterned_tone_row, "asset_id long, payload binary")
 
-    return docs.select("doc_id").mapInPandas(
-        kernel, schema="asset_id long, payload binary"
-    )
+
+def _patterned_tone_row(doc_id: int) -> tuple:
+    """(payload,): the synth_patterned_tones WAV of one document."""
+    return (_tone_payload(tuple(_tone_hash_rows(doc_id))),)
 
 
 def _audio_near_dup_oracle() -> str:

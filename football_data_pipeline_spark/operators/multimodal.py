@@ -5,7 +5,7 @@ struct — the lakehouse pattern for image/audio/video at scale: bytes
 travel in the column (or a pointer to object storage), metadata is
 queryable, and decode/feature-extraction runs as Arrow-batched
 ``mapInPandas`` so the heavy Python work streams per-partition
-without a shuffle.
+without a shuffle (per-row kernels through ``functions.memo.map_rows``).
 
 Decode support is tiered by what this environment can honestly do:
 
@@ -33,7 +33,7 @@ from __future__ import annotations
 import struct
 import zlib
 from collections.abc import Iterator
-from ..functions.memo import payload_memo
+from ..functions.memo import map_rows, payload_memo
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -389,7 +389,7 @@ def extract_features(assets: DataFrame) -> DataFrame:
     body for a real decoder without touching the pipeline shape.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
         for pdf in batches:
@@ -407,7 +407,7 @@ def extract_features(assets: DataFrame) -> DataFrame:
                 }
             )
 
-    return assets.mapInPandas(kernel, schema=FEATURE_SCHEMA)
+    return assets.mapInPandas(featurize, schema=FEATURE_SCHEMA)
 
 
 @query(
@@ -444,7 +444,7 @@ RESIZED_SCHEMA = "asset_id long, payload binary, mime string, width int, height 
 
 
 def resize_images(assets: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Binary-in/binary-out Arrow-batched decode→resize→re-encode.
+    """Binary-in/binary-out decode→resize→re-encode (``map_rows``).
 
     PPM/BMP/PNG payloads take the REAL pixel path: decode to RGB,
     nearest-neighbor resample to width×height, re-encode as PPM
@@ -453,39 +453,28 @@ def resize_images(assets: DataFrame, width: int = 64, height: int = 64) -> DataF
     mime), so the synthetic text corpus still exercises the
     plumbing. Per-partition streaming, no shuffle, either way.
     """
-    target = width * height
+    assets = assets.select("asset_id", "payload", "meta")
+    return map_rows(assets, _resized_row, RESIZED_SCHEMA, width, height)
 
-    def one(b, mime):
-        decoded = try_decode_pixels(b)
-        # 0-pixel payloads are decodable but have no source pixels to
-        # sample — take the byte-truncation fallback like
-        # undecodables (previously the resample produced a
-        # wrong-length buffer and the re-encode raised, killing the
-        # whole Arrow batch; r9 fix)
-        if decoded is None or decoded[0] * decoded[1] == 0:
-            return bytes(b)[:target].ljust(target, b"\0"), mime
-        w0, h0, rgb = decoded
-        return (
-            encode_ppm(width, height, resize_nearest(w0, h0, rgb, width, height)),
-            "image/ppm",
-        )
 
-    def kernel(batches):
-        for pdf in batches:
-            pairs = [
-                one(b, m["mime"]) for b, m in zip(pdf["payload"], pdf["meta"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": [p for p, _ in pairs],
-                    "mime": [m for _, m in pairs],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return assets.mapInPandas(kernel, schema=RESIZED_SCHEMA)
+def _resized_row(payload: bytes, meta, width: int, height: int) -> tuple:
+    """(payload, mime, width, height) for one asset of resize_images."""
+    decoded = try_decode_pixels(payload)
+    # 0-pixel payloads are decodable but have no source pixels to
+    # sample — take the byte-truncation fallback like
+    # undecodables (previously the resample produced a
+    # wrong-length buffer and the re-encode raised, killing the
+    # whole Arrow batch; r9 fix)
+    if decoded is None or decoded[0] * decoded[1] == 0:
+        target = width * height
+        return payload[:target].ljust(target, b"\0"), meta["mime"], width, height
+    w0, h0, rgb = decoded
+    return (
+        encode_ppm(width, height, resize_nearest(w0, h0, rgb, width, height)),
+        "image/ppm",
+        width,
+        height,
+    )
 
 
 STATS_SCHEMA = (
@@ -527,27 +516,8 @@ def image_stats(assets: DataFrame) -> DataFrame:
     the feature-extraction step computed on REAL pixel data
     (PPM/BMP via the pure codecs). Undecodable payloads yield a
     NULL-stats row with decoded=false rather than fake numbers."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (aid, *_image_stats_row(bytes(b)))
-                for aid, b in zip(pdf["asset_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "decoded",
-                ],
-            )
-
-    return assets.mapInPandas(kernel, schema=STATS_SCHEMA)
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _image_stats_row, STATS_SCHEMA)
 
 
 FRAME_SIZE = 256  # stub "frame" = fixed byte chunk
@@ -657,27 +627,15 @@ def _phash_row(payload: bytes) -> tuple:
 
 
 def image_phash(assets: DataFrame) -> DataFrame:
-    """Arrow-batched perceptual-hash extraction: decodable payloads
+    """Perceptual-hash extraction via ``map_rows``: decodable payloads
     (PPM/BMP/PNG) get their dHash split into DHASH_BANDS 16-bit
     bands; undecodable payloads fall back to md5-derived bands
     (byte-exact duplicates still collide; decoded=false marks the
     weaker semantics). The Python kernel touches each payload once
     (once per DISTINCT payload per worker — _phash_row memoizes);
     everything pair-shaped happens in DataFrame land."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (aid, *_phash_row(bytes(b)))
-                for aid, b in zip(pdf["asset_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "decoded"]
-                + [f"band{i}" for i in range(DHASH_BANDS)],
-            )
-
-    return assets.mapInPandas(kernel, schema=PHASH_SCHEMA)
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _phash_row, PHASH_SCHEMA)
 
 
 def phash_near_dup(
@@ -852,30 +810,12 @@ def _img_quality_row(payload: bytes) -> tuple:
 
 def image_quality_stats(assets: DataFrame) -> DataFrame:
     """Per-asset luma mean/stddev over REAL decoded pixels — the
-    measurement half of the image quality gate, as one Arrow
-    ``mapInPandas`` pass (numpy per image; the decode is the same
-    pure-codec path image_stats uses, undecodable → decoded=false
-    with NULL stats, never fake numbers)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (aid, *_img_quality_row(bytes(b)))
-                for aid, b in zip(pdf["asset_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "mean_luma",
-                    "std_luma",
-                    "decoded",
-                ],
-            )
-
-    return assets.mapInPandas(kernel, schema=IMG_QUALITY_STATS_SCHEMA)
+    measurement half of the image quality gate, as one ``map_rows``
+    pass (numpy per image; the decode is the same pure-codec path
+    image_stats uses, undecodable → decoded=false with NULL stats,
+    never fake numbers)."""
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _img_quality_row, IMG_QUALITY_STATS_SCHEMA)
 
 
 def classify_image_quality(assets: DataFrame) -> DataFrame:

@@ -959,13 +959,18 @@ def index_append_writer(index_root: str, n_term_buckets: int = N_TERM_BUCKETS):
 
 
 def _pruned_bucketed_read(
-    spark: SparkSession, log_dir: str, terms: list[str]
+    spark: SparkSession,
+    log_dir: str,
+    terms: list[str],
+    buckets: dict[int, list[int]] | None = None,
 ) -> DataFrame:
     """The snapshot at ``log_dir`` cut to the files whose term-bucket
     min/max matches any of the query's buckets (index_append_writer
     always buckets the postings and dfs logs). The bucket count is
     recovered from the manifest's own column name, so a stale
-    constant can never mis-prune."""
+    constant can never mis-prune. Pass one ``buckets`` dict to every
+    log of a read: it keeps the query's bucket set per bucket count,
+    so the hash job runs once per distinct count."""
     from ..sources.manifest import read_files
     from ..sources.snapshots import read_manifest
 
@@ -975,7 +980,10 @@ def _pruned_bucketed_read(
     )
     bcol = _bucket_col(n)
     pred = F.lit(False)
-    for b in query_term_buckets(spark, terms, n):
+    buckets = {} if buckets is None else buckets
+    if n not in buckets:
+        buckets[n] = query_term_buckets(spark, terms, n)
+    for b in buckets[n]:
         pred = pred | (
             (F.col(f"{bcol}_min") <= b) & (F.col(f"{bcol}_max") >= b)
         )
@@ -1040,8 +1048,9 @@ def read_index(
         postings = read_snapshot(spark, post_log)
         dfs = read_snapshot(spark, dfs_log)
     else:
-        postings = _pruned_bucketed_read(spark, post_log, terms)
-        dfs = _pruned_bucketed_read(spark, dfs_log, terms).filter(
+        buckets: dict[int, list[int]] = {}
+        postings = _pruned_bucketed_read(spark, post_log, terms, buckets)
+        dfs = _pruned_bucketed_read(spark, dfs_log, terms, buckets).filter(
             F.col("term").isin(list(terms))
         )
     dfs = dfs.groupBy("term").agg(F.sum("df").alias("df"))

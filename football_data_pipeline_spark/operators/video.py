@@ -1,7 +1,7 @@
 """Video column plumbing — the VIDEO tier of the multimodal layout
 (images: multimodal.py, audio: audio.py; same contract: payload =
 opaque ``binary``, metadata = a typed struct, per-row decode work =
-Arrow-batched ``mapInPandas``, no shuffle).
+Arrow-batched ``functions.memo.map_rows``, no shuffle).
 
 Decode support is tiered by what this environment can honestly do:
 
@@ -42,12 +42,10 @@ documents AND 10x output rows — sub-linear per row, no pair stage.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import lru_cache
 
-from ..functions.memo import payload_memo
+from ..functions.memo import map_rows, payload_memo
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -226,33 +224,12 @@ def _video_stats_row(payload: bytes) -> tuple:
 def video_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, decoded, width, height, n_frames, fps, duration_s,
     mean_luma, scene_changes): real per-frame statistics from decoded
-    Y planes in one Arrow kernel — scene changes counted as
+    Y planes in one ``map_rows`` pass — scene changes counted as
     consecutive-frame mean-luma jumps >= SCENE_DELTA (the cheap
     temporal-dedup / shot-boundary signal). Undecodable rows kept
     with decoded=false and NULL stats."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (asset_id, *_video_stats_row(bytes(payload)))
-                for asset_id, payload in zip(pdf["asset_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "decoded",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "fps",
-                    "duration_s",
-                    "mean_luma",
-                    "scene_changes",
-                ],
-            )
-
-    return assets.mapInPandas(kernel, schema=VIDEO_STATS_SCHEMA)
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _video_stats_row, VIDEO_STATS_SCHEMA)
 
 
 FRAME_SCHEMA = (
@@ -265,23 +242,11 @@ def sample_frames_y4m(assets: DataFrame, every_n: int = 4) -> DataFrame:
     IMAGE tier's encoder (multimodal.encode_ppm, gray -> RGB) — the
     bridge that lets sampled frames flow into the image dedup /
     quality / dHash operators unchanged. Output rows scale with
-    n_frames/every_n, never with payload size."""
+    n_frames/every_n, never with payload size (many-row ``map_rows``)."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (asset_id, *tail)
-                for asset_id, payload in zip(pdf["asset_id"], pdf["payload"])
-                for tail in _sampled_frames(bytes(payload), every_n)
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "frame_idx", "payload", "width", "height"],
-            )
-
-    return assets.mapInPandas(kernel, schema=FRAME_SCHEMA)
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _sampled_frames, FRAME_SCHEMA, every_n, many=True)
 
 
 @payload_memo(maxsize=128)
@@ -315,26 +280,17 @@ def synth_clip_assets(docs: DataFrame) -> DataFrame:
     ``(doc_id*31 + k*17) % 256`` with neutral chroma — every
     statistic is CLOSED-FORM in doc_id (module docstring), which is
     what makes the analytic oracle possible."""
+    seeds = docs.select(F.col("doc_id").alias("asset_id"), "doc_id")
+    return map_rows(seeds, _clip_row, "asset_id long, payload binary")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                n = 4 + doc_id % 13
-                frames = [
-                    bytes([(doc_id * 31 + k * 17) % 256]) * (CLIP_W * CLIP_H)
-                    for k in range(n)
-                ]
-                payloads.append(
-                    encode_y4m(CLIP_W, CLIP_H, CLIP_FPS, frames)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "payload": payloads}
-            )
 
-    return docs.select("doc_id").mapInPandas(
-        kernel, schema="asset_id long, payload binary"
-    )
+def _clip_row(doc_id: int) -> tuple:
+    """(payload,): the synth_clip_assets Y4M clip of one document."""
+    frames = [
+        bytes([(doc_id * 31 + k * 17) % 256]) * (CLIP_W * CLIP_H)
+        for k in range(4 + doc_id % 13)
+    ]
+    return (encode_y4m(CLIP_W, CLIP_H, CLIP_FPS, frames),)
 
 
 def video_quality_gate(
@@ -441,22 +397,16 @@ def synth_patterned_clips(docs: DataFrame) -> DataFrame:
     a _pattern_plane. The dedup bridge's synth twin of
     synth_clip_assets — same geometry, structured instead of
     constant luma."""
+    seeds = docs.select(F.col("doc_id").alias("asset_id"), "doc_id")
+    return map_rows(seeds, _patterned_clip_row, "asset_id long, payload binary")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                n = 4 + doc_id % 13
-                frames = [
-                    _pattern_plane(_frame_hash_rows(int(doc_id), k))
-                    for k in range(n)
-                ]
-                payloads.append(encode_y4m(CLIP_W, CLIP_H, CLIP_FPS, frames))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
 
-    return docs.select("doc_id").mapInPandas(
-        kernel, schema="asset_id long, payload binary"
-    )
+def _patterned_clip_row(doc_id: int) -> tuple:
+    """(payload,): the synth_patterned_clips Y4M clip of one document."""
+    frames = [
+        _pattern_plane(_frame_hash_rows(doc_id, k)) for k in range(4 + doc_id % 13)
+    ]
+    return (encode_y4m(CLIP_W, CLIP_H, CLIP_FPS, frames),)
 
 
 def _video_frame_dedup_oracle() -> str:

@@ -138,7 +138,19 @@ def compact_small_files(
     on write) and return the NEW manifest — carried-over rows for
     untouched files + measured rows for the compacted ones. The
     input manifest's tracked columns are preserved."""
-    part, bins, keep = _plan(manifest, target_rows)
+    return _compact(spark, manifest, _plan(manifest, target_rows), out_dir, sort_col)
+
+
+def _compact(
+    spark: SparkSession,
+    manifest: DataFrame,
+    plan: tuple[str | None, list[list[str]], list[str]],
+    out_dir: str,
+    sort_col: str | None,
+) -> DataFrame:
+    """compact_small_files for an existing ``_plan`` result, so a
+    caller that planned to decide whether to compact plans once."""
+    part, bins, keep = plan
     carried = manifest.filter(F.col("file").isin(keep))
     if not bins:
         return carried

@@ -428,7 +428,11 @@ def cow_rewrite(
     ``inserts`` (MERGE's update rows), and write the result to
     ``out_dir`` in one range-partitioned, within-file-sorted job on
     ``col`` — one file per rewritten file, plus one for the inserts,
-    so clustering and tight min/max survive. Returns the NEW
+    so clustering and tight min/max survive. The new files hold the
+    columns the rewritten files held (plus any tracked column): a
+    directory-encoded column ``base_path`` recovered serves the
+    transform but is not written, so every file of the new snapshot
+    reads one schema (maintain's compactor rule). Returns the NEW
     manifest: ``manifest``'s other rows verbatim + the new files
     measured on its tracked columns; with nothing to rewrite and no
     inserts, ``manifest`` itself. Input files never mutate, so old
@@ -444,6 +448,10 @@ def cow_rewrite(
             if rows is None
             else rows.unionByName(inserts.select(*rows.columns))
         )
+    tracked = tracked_columns(manifest)
+    if rewrite and base_path is not None:
+        held = set(read_files(spark, manifest, rewrite).columns) | set(tracked)
+        rows = rows.select(*[c for c in rows.columns if c in held])
     n_out = len(rewrite) + (0 if inserts is None else 1)
     (
         rows.repartitionByRange(n_out, col)
@@ -452,7 +460,7 @@ def cow_rewrite(
         .parquet(out_dir)
     )
     carried = manifest.filter(~F.col("file").isin(rewrite))
-    fresh = build_manifest(spark, out_dir, tracked_columns(manifest))
+    fresh = build_manifest(spark, out_dir, tracked)
     return carried.unionByName(fresh.select(*carried.columns))
 
 
@@ -1057,7 +1065,8 @@ def maintain(
     """One housekeeping pass over the table — the OPTIMIZE loop a
     long-lived streaming table needs, composed from the pieces:
     compact the latest snapshot's small files (optimize.
-    compact_small_files — a no-op commit is skipped entirely),
+    compact_small_files on one plan per pass — a no-op commit is
+    skipped entirely),
     commit the compacted manifest (``commit_rewrite``: the batch
     watermark carries), expire everything but the newest
     ``keep_latest`` versions, and vacuum the orphans. Safe to run on
@@ -1080,15 +1089,14 @@ def maintain(
     post-maintenance snapshots without ``base_path``; if such a
     value must survive compaction, materialize it as a column before
     writing."""
-    from .optimize import compact_small_files, plan_compaction
+    from .optimize import _compact, _plan
 
     manifest = read_manifest(spark, log_dir)
-    bins, _ = plan_compaction(manifest, target_rows)
+    plan = _plan(manifest, target_rows)  # one manifest collect per pass
+    _, bins, _ = plan
     version = None
     if bins:
-        compacted = compact_small_files(
-            spark, manifest, target_rows, fresh_dir(out_dir), sort_col=sort_col
-        )
+        compacted = _compact(spark, manifest, plan, fresh_dir(out_dir), sort_col)
         version = commit_rewrite(spark, log_dir, compacted)
     expired, orphans = expire_snapshots(spark, log_dir, keep_latest)
     return {

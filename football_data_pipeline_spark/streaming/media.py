@@ -30,14 +30,16 @@ pytest-locked). No state is read back, so there is no crash window
 between the two writes: each is independently idempotent.
 
 100 TB shape: per batch this is ONE Arrow decode pass per present
-tier (each gate is a map-only plan — multimodal.py/audio.py/
-video.py document their kernels) plus two partition-local writes;
+tier (each gate is a map-only ``functions.memo.map_rows`` plan —
+multimodal.py/audio.py/video.py document their kernels) plus two
+partition-local writes;
 no join, no shuffle, no history read. The stream scales by
 partitioning the payload column exactly like the batch gates.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -164,49 +166,16 @@ def synth_gate_assets(docs: DataFrame) -> DataFrame:
     - video: video.synth_clip_assets (static when 4+doc_id%13 ≥ 8
       frames with zero luma-wrap scene jumps, else keep — never
       too_short at 25 fps)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+    from ..functions.memo import map_rows
     from ..operators.audio import synth_tone_assets
-    from ..operators.multimodal import encode_ppm
     from ..operators.video import synth_clip_assets
 
-    def img_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        checker16 = bytes(
-            v
-            for y in range(16)
-            for x in range(16)
-            for v in ((255, 255, 255) if (x + y) % 2 == 0 else (0, 0, 0))
-        )
-        checker4 = bytes(
-            v
-            for y in range(4)
-            for x in range(4)
-            for v in ((255, 255, 255) if (x + y) % 2 == 0 else (0, 0, 0))
-        )
-        flat16 = bytes([100, 100, 100]) * 256
-        ppm = {
-            "small": encode_ppm(4, 4, checker4),
-            "flat": encode_ppm(16, 16, flat16),
-            "ok": encode_ppm(16, 16, checker16),
-        }
-        for pdf in batches:
-            payloads = [
-                ppm[
-                    "small"
-                    if d % 5 == 0
-                    else ("flat" if d % 3 == 0 else "ok")
-                ]
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"] * 4, "payload": payloads}
-            )
-
-    image = docs.select("doc_id").mapInPandas(
-        img_kernel, schema="asset_id long, payload binary"
-    ).select("asset_id", F.lit("image").alias("kind"), "payload")
+    seeds = docs.select(F.col("doc_id").alias("asset_id"), "doc_id")
+    image = map_rows(seeds, _gate_image_row, "asset_id long, payload binary").select(
+        (F.col("asset_id") * 4).alias("asset_id"),
+        F.lit("image").alias("kind"),
+        "payload",
+    )
     audio = synth_tone_assets(docs).select(
         (F.col("asset_id") * 4 + 1).alias("asset_id"),
         F.lit("audio").alias("kind"),
@@ -233,6 +202,33 @@ def synth_gate_assets(docs: DataFrame) -> DataFrame:
         .unionByName(unknown)
         .unionByName(nullkind)
     )
+
+
+@functools.cache
+def _gate_ppms() -> dict[str, bytes]:
+    """The three synth_gate_assets image payloads, built once per
+    worker: a 4×4 checker, a 16×16 flat gray and a 16×16 checker."""
+    from ..operators.multimodal import encode_ppm
+
+    def checker(n: int) -> bytes:
+        return bytes(
+            v
+            for y in range(n)
+            for x in range(n)
+            for v in ((255, 255, 255) if (x + y) % 2 == 0 else (0, 0, 0))
+        )
+
+    return {
+        "small": encode_ppm(4, 4, checker(4)),
+        "flat": encode_ppm(16, 16, bytes([100, 100, 100]) * 256),
+        "ok": encode_ppm(16, 16, checker(16)),
+    }
+
+
+def _gate_image_row(doc_id: int) -> tuple:
+    """(payload,): the synth_gate_assets image of one document."""
+    case = "small" if doc_id % 5 == 0 else ("flat" if doc_id % 3 == 0 else "ok")
+    return (_gate_ppms()[case],)
 
 
 def _media_gate_oracle() -> str:

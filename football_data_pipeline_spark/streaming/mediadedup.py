@@ -75,7 +75,7 @@ curation writer (pipeline.curation_batch_writer).
 from __future__ import annotations
 
 from collections.abc import Callable
-from ..functions.memo import payload_memo
+from ..functions.memo import map_rows, payload_memo
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -204,31 +204,15 @@ def video_fingerprints(
     PPM-round-trip path the batch bridge uses, which is exact), no
     intermediate PPM re-encode/re-decode. Undecodable clips emit ONE
     md5-fallback row (fp_seq 0, decoded=false) like the image/audio
-    kernels, so byte-exact duplicate junk still collides."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+    kernels, so byte-exact duplicate junk still collides (many-row
+    ``map_rows``)."""
     if frame_every_n < 1:
         raise ValueError("frame_every_n must be >= 1")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (aid, *tail)
-                for aid, payload in zip(pdf["asset_id"], pdf["payload"])
-                for tail in _vfp_rows(bytes(payload), frame_every_n)
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "fp_seq", "decoded", *_BAND_COLS],
-            )
-
-    return assets.mapInPandas(
-        kernel,
-        schema="asset_id long, fp_seq int, decoded boolean, "
-        + ", ".join(f"{c} int" for c in _BAND_COLS),
+    schema = "asset_id long, fp_seq int, decoded boolean, " + ", ".join(
+        f"{c} int" for c in _BAND_COLS
     )
+    payloads = assets.select("asset_id", "payload")
+    return map_rows(payloads, _vfp_rows, schema, frame_every_n, many=True)
 
 
 def _fid(df: DataFrame) -> DataFrame:

@@ -1,8 +1,10 @@
 """The snapshot table's one rewrite path, default tier: a retraction
 fold commits with the logs' batch watermarks (so expiry cannot reopen
 the replay guard), a merge-on-read over an empty manifest fails with
-read_snapshot's error, and maintain() compacts a partition-encoded
-log without crossing a partition value."""
+read_snapshot's error, maintain() compacts a partition-encoded
+log without crossing a partition value and plans each pass once, and
+a fold through ``base_path`` writes files of the carried files'
+schema."""
 
 from __future__ import annotations
 
@@ -110,3 +112,51 @@ def test_maintain_packs_within_partition_values(spark, tmp_path):
     # already compact: the next pass is a no-op
     again = maintain(spark, log, 1_000, str(tmp_path / "opt"), keep_latest=1)
     assert again["compacted_version"] is None
+
+
+def test_maintain_plans_compaction_once_per_pass(spark, tmp_path, monkeypatch):
+    """One maintain() pass over a 3-batch log of small files plans
+    the compaction once: the plan that decides whether to commit is
+    the plan the compactor runs (each plan collects the manifest)."""
+    from football_data_pipeline_spark.sources import optimize
+
+    log, data = str(tmp_path / "log"), str(tmp_path / "data")
+    w = snapshot_append_writer(log, data, ["id"])
+    for b in range(3):
+        w(_batch(spark, b * 10, (b + 1) * 10), b)
+    calls = []
+    plan = optimize._plan
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return plan(*args, **kwargs)
+
+    monkeypatch.setattr(optimize, "_plan", counted)
+    report = maintain(spark, log, 1_000, str(tmp_path / "opt"), keep_latest=1)
+    assert report["compacted_version"] is not None
+    assert len(calls) == 1
+    assert read_manifest(spark, log).count() == 1
+    assert _ids(read_snapshot(spark, log)) == list(range(30))
+
+
+def test_fold_through_base_path_keeps_one_file_schema(spark, tmp_path):
+    """A retraction fold that reads through ``base_path`` recovers the
+    append writer's directory-encoded ``batch_id`` for the transform
+    but writes only the columns the rewritten files held, so the
+    folded snapshot's files (carried and rewritten) read one column
+    set."""
+    dlog, ddata = str(tmp_path / "dlog"), str(tmp_path / "ddata")
+    rlog, rdata = str(tmp_path / "rlog"), str(tmp_path / "rdata")
+    data_w = snapshot_append_writer(dlog, ddata, ["id"])
+    del_w = snapshot_append_writer(rlog, rdata, ["id"])
+    data_w(_batch(spark, 0, 50), 0)
+    data_w(_batch(spark, 50, 100), 1)
+    del_w(spark.createDataFrame([(5,)], "id long").coalesce(1), 0)
+    out = fold_retractions(
+        spark, dlog, rlog, "id", str(tmp_path / "fold"), base_path=ddata
+    )
+    assert out["mode"] == "folded"
+    files = [r.file for r in read_manifest(spark, dlog).collect()]
+    assert any("/fold/" in f for f in files) and any("/ddata/" in f for f in files)
+    assert {tuple(spark.read.parquet(f).columns) for f in files} == {("id",)}
+    assert _ids(read_snapshot(spark, dlog)) == [i for i in range(100) if i != 5]
