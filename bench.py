@@ -7,8 +7,12 @@ item 1: the rich dict's growth got the r12 printed line
 front-truncated in the driver's tail capture, losing the
 round-over-round comparison; diagnostics live in bench_out.json):
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"q_...": sec, ...}, "sf": <float>}
+   "queries": {"q_...": sec, ...}, "sf": <float>, "version": 2}
 bench_out.json additionally carries spread/trials/noisy_trials.
+``version`` (also in bench_out.json) is the printed contract's
+version: it is bumped whenever the printed key set changes (2: the
+r14 cut to the contract-minimum keys), so a reader comparing two
+lines knows whether they carry the same keys.
 
 Each query is fully materialized through the no-op sink (format
 "noop") so projection pruning can't skip work, and timing excludes
@@ -70,6 +74,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import football_data_pipeline_spark.all_queries  # noqa: F401
 from football_data_pipeline_spark.registry import QUERIES
 from football_data_pipeline_spark.session import get_spark
+
+#: version of the printed contract (see the module docstring)
+VERSION = 2
 
 #: representative cross-section: joins, windows, aggs, ER cascade,
 #: dedup/LSH, ANN, text — the operators that dominate real workloads
@@ -319,6 +326,7 @@ def main() -> None:
         "trials": n_trials,
         "noisy_trials": {n: len(samples[n]) for n in sorted(NOISY_QUERIES)},
         "sf": sf,
+        "version": VERSION,
     }
     # the artifact must never depend on stdout capture length: the
     # r10 run's 47-query line was front-truncated by the driver's
@@ -330,7 +338,9 @@ def main() -> None:
     # are diagnostics, so they live in the file only)
     with open(os.path.join(os.path.dirname(__file__), "bench_out.json"), "w") as f:
         json.dump(result, f, indent=1)
-    printed = {k: result[k] for k in ("metric", "value", "unit", "queries", "sf")}
+    printed = {
+        k: result[k] for k in ("metric", "value", "unit", "queries", "sf", "version")
+    }
     print(json.dumps(printed))
     spark.stop()
 

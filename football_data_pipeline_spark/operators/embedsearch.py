@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import first_per_key, top_k
 from ..functions.stable import rnd
 from ..registry import query
 
@@ -112,14 +113,9 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sim",
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "neighbor_label", "rank", rnd(F.col("sim"), 6).alias("cosine_sim"))
-    )
+    return top_k(
+        scored, TOP_K, [F.desc("sim"), F.asc("neighbor_id")], by=["query_id"]
+    ).select("query_id", "neighbor_id", "neighbor_label", "rank", rnd(F.col("sim"), 6).alias("cosine_sim"))
 
 
 def _hyperplane(k: int) -> list[float]:
@@ -278,14 +274,9 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("sim", dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "sim")
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", rnd(F.col("sim"), 6).alias("cosine_sim"))
-    )
+    return top_k(
+        scored, TOP_K, [F.desc("sim"), F.asc("neighbor_id")], by=["query_id"]
+    ).select("query_id", "neighbor_id", "rank", rnd(F.col("sim"), 6).alias("cosine_sim"))
 
 
 def _knn_recall_oracle() -> str:
@@ -466,10 +457,7 @@ def q_ivf_reassign(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d2", F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x)
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("c_label"))
-    best = dists.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    best = first_per_key(dists, ["vec_id"], [F.asc("d2"), F.asc("c_label")])
     return best.groupBy(
         "old_label", F.col("c_label").alias("new_label")
     ).agg(

@@ -68,8 +68,10 @@ def q_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     INSERT OR REPLACE semantics == latest row per key.
 
     This is exactly ``keep_latest`` from the upsert library
-    (/root/reference/database_integration.py:127-130 semantics),
-    proving the merge kernel against the SQL oracle.
+    (/root/reference/database_integration.py:127-130 semantics), a
+    name over ``rank.first_per_key`` — the one keep-one-row-per-key
+    window that the merges, the W1 view and the stream collapses
+    share — proving that window against the SQL oracle.
     """
     events = load(spark, sf_dir, "events")
     latest = keep_latest(events, ["user_id", "event_type"], ["ts", "event_id"])

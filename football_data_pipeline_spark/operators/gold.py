@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .windows import latest_per_key
+from .upsert import keep_latest
 
 
 def upcoming_games_with_odds(
@@ -57,7 +57,7 @@ def upcoming_games_with_odds(
     h2h = odds_history.filter(F.col("market_type") == "h2h").select(
         "fixture_id", "home_odds", "draw_odds", "away_odds", "bookmaker", "collected_at"
     )
-    latest = latest_per_key(h2h, ["fixture_id"], "collected_at", "bookmaker").select(
+    latest = keep_latest(h2h, ["fixture_id"], ["collected_at", "bookmaker"]).select(
         F.col("fixture_id").alias("__odds_fixture_id"),
         "home_odds",
         "draw_odds",

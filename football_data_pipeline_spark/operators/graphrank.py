@@ -40,10 +40,10 @@ the edges for 2.1x the time (fixed plan cost dominates at these
 sizes; the data-dependent part is the per-round edge join + dst
 aggregate, linear in edges).
 
-Production-depth probe (r9, VERDICT r8 item 7;
-tools/pagerank_depth_probe.py — sf0.1 trade graph replicated into
-10 disjoint copies = 11.74 M edges / 160 k nodes,
-checkpoint_every=5, medians of 3):
+Production-depth measurement (r9, VERDICT r8 item 7; recorded in
+SURVEY.md's "checkpointed PageRank proven flat" row — sf0.1 trade
+graph replicated into 10 disjoint copies = 11.74 M edges / 160 k
+nodes, checkpoint_every=5, medians of 3):
 
     rounds   wall_s   s/round
         5     18.5      3.70

@@ -39,10 +39,11 @@ rank-list-bounded.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import oracle_rnd, rnd
 from ..registry import query
 from .embedsearch import _oracle_dot, _oracle_norm, dot, norm
@@ -93,21 +94,9 @@ def rrf_fuse(
             6,
         ),
     )
-    order = [F.desc("rrf_score"), F.asc(id_col)]
-    if by:
-        w = Window.partitionBy(*by).orderBy(*order)
-        return (
-            fused.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select(*by, "rank", id_col, "sparse_rank", "dense_rank", "rrf_score")
-        )
-    # single query: cut with orderBy+limit FIRST (TakeOrdered — the
-    # retrieval.py/profiling.py discipline), then rank the ≤k
-    # survivors; the window never sees more than k rows
-    topk = fused.orderBy(*order).limit(k)
-    w = Window.orderBy(*order)
-    return topk.withColumn("rank", F.row_number().over(w).cast("long")).select(
-        "rank", id_col, "sparse_rank", "dense_rank", "rrf_score"
+    ranked = top_k(fused, k, [F.desc("rrf_score"), F.asc(id_col)], by=by)
+    return ranked.withColumn("rank", F.col("rank").cast("long")).select(
+        *by, "rank", id_col, "sparse_rank", "dense_rank", "rrf_score"
     )
 
 
@@ -135,10 +124,8 @@ def dense_topk(
             ),
         )
     )
-    topk = scored.orderBy(F.desc("sim"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("sim"), F.asc("doc_id"))
-    return topk.withColumn("rank", F.row_number().over(w).cast("long")).select(
-        "rank", "doc_id", rnd(F.col("sim"), 6).alias("sim")
+    return top_k(scored, k, [F.desc("sim"), F.asc("doc_id")]).select(
+        F.col("rank").cast("long").alias("rank"), "doc_id", rnd(F.col("sim"), 6).alias("sim")
     )
 
 

@@ -103,10 +103,11 @@ size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import rnd
 from ..registry import query
 from .embedsearch import N_QUERIES, TOP_K
@@ -451,13 +452,11 @@ def ivfpq_recall(
     qfull = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    w_probe = Window.partitionBy("q_id").orderBy(F.asc("__cd2"), F.asc("code"))
-    probes = (
-        qfull.crossJoin(F.broadcast(coarse_cb))
-        .withColumn("__cd2", _d2(F.col("q_emb"), F.col("cs")))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", F.col("code").alias("probe_cell"))
+    cd2 = qfull.crossJoin(F.broadcast(coarse_cb)).withColumn(
+        "__cd2", _d2(F.col("q_emb"), F.col("cs"))
+    )
+    probes = top_k(cd2, nprobe, [F.asc("__cd2"), F.asc("code")], by=["q_id"]).select(
+        "q_id", F.col("code").alias("probe_cell")
     )
     lut_r = lut.select(
         F.col("q_id").alias("l_q_id"),
@@ -478,28 +477,22 @@ def ivfpq_recall(
         .groupBy("q_id", "vec_id")
         .agg(F.sum("d2_fp").cast("long").alias("dist_fp"))
     )
-    w_adc = Window.partitionBy("q_id").orderBy(F.asc("dist_fp"), F.asc("vec_id"))
-    shortlisted = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= shortlist)
-        .select("q_id", "vec_id")
-    )
-    w_rr = Window.partitionBy("q_id").orderBy(F.asc("__rd2"), F.asc("vec_id"))
-    rerank = (
+    shortlisted = top_k(
+        adc, shortlist, [F.asc("dist_fp"), F.asc("vec_id")], by=["q_id"]
+    ).select("q_id", "vec_id")
+    rd2 = (
         shortlisted.join(F.broadcast(qfull), "q_id")
         .join(emb.select("vec_id", "embedding"), "vec_id")
         .withColumn("__rd2", _d2(F.col("q_emb"), F.col("embedding")))
-        .withColumn("rn", F.row_number().over(w_rr))
-        .filter(F.col("rn") <= TOP_K)
-        .select("q_id", "vec_id", F.lit(1).alias("__hit"))
     )
-    w_ex = Window.partitionBy("q_id").orderBy(F.asc("__d2"), F.asc("vec_id"))
-    exact_top = (
-        emb.join(F.broadcast(qfull), F.col("vec_id") != F.col("q_id"))
-        .withColumn("__d2", _d2(F.col("q_emb"), F.col("embedding")))
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= TOP_K)
-        .select("q_id", "vec_id")
+    rerank = top_k(rd2, TOP_K, [F.asc("__rd2"), F.asc("vec_id")], by=["q_id"]).select(
+        "q_id", "vec_id", F.lit(1).alias("__hit")
+    )
+    ed2 = emb.join(F.broadcast(qfull), F.col("vec_id") != F.col("q_id")).withColumn(
+        "__d2", _d2(F.col("q_emb"), F.col("embedding"))
+    )
+    exact_top = top_k(ed2, TOP_K, [F.asc("__d2"), F.asc("vec_id")], by=["q_id"]).select(
+        "q_id", "vec_id"
     )
     return (
         exact_top.join(rerank, ["q_id", "vec_id"], "left")

@@ -54,10 +54,11 @@ distinct cells, which is the quota doing its job).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import rnd
 from ..registry import query
 from .embedsearch import N_QUERIES, _oracle_dot, _oracle_norm, dot, norm
@@ -133,20 +134,15 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("q_nrm") * F.col("nrm")),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HARD_NEG_K)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            F.col("vec_id").alias("negative_id"),
-            F.col("label").alias("negative_label"),
-            "rank",
-            rnd(F.col("sim"), 6).alias("cosine_sim"),
-        )
+    return top_k(
+        scored, HARD_NEG_K, [F.desc("sim"), F.asc("vec_id")], by=["anchor_id"]
+    ).select(
+        "anchor_id",
+        "anchor_label",
+        F.col("vec_id").alias("negative_id"),
+        F.col("label").alias("negative_label"),
+        "rank",
+        rnd(F.col("sim"), 6).alias("cosine_sim"),
     )
 
 
@@ -281,17 +277,15 @@ def q_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("code").alias("cell")
     )
     sized = cells.groupBy("cell").agg(F.count("*").alias("n_members"))
-    w = Window.partitionBy("cell").orderBy(F.asc("d2"), F.asc("vec_id"))
-    ranked = (
+    dists = (
         cells.join(emb.select("vec_id", "embedding"), "vec_id")
         .join(
             F.broadcast(cb.select(F.col("code").alias("cell"), "cs")),
             "cell",
         )
         .withColumn("d2", _d2(F.col("embedding"), F.col("cs")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= DIVERSE_PER_CELL)
     )
+    ranked = top_k(dists, DIVERSE_PER_CELL, [F.asc("d2"), F.asc("vec_id")], by=["cell"])
     return ranked.join(F.broadcast(sized), "cell").select(
         "cell",
         "rank",

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import oracle_rnd, rnd
 from ..registry import query
 
@@ -184,19 +185,9 @@ def key_skew_profile(df: DataFrame, key_col: str, k: int = SKEW_TOP_K) -> DataFr
     globals_ = counts.agg(
         F.sum("n_rows").alias("total_rows"), F.count("*").alias("n_keys")
     )
-    from pyspark.sql import Window
-
-    # top-k FIRST via orderBy+limit (TakeOrderedAndProject — per-
-    # partition heaps, no global sort of the key-count table), THEN
-    # the rank window over the k surviving rows only
-    topk = (
-        counts.orderBy(F.desc("n_rows"), F.asc("key_value"))
-        .limit(k)
-        .crossJoin(F.broadcast(globals_))
-    )
-    w = Window.orderBy(F.desc("n_rows"), F.asc("key_value"))
     return (
-        topk.withColumn("rank", F.row_number().over(w))
+        top_k(counts, k, [F.desc("n_rows"), F.asc("key_value")])
+        .crossJoin(F.broadcast(globals_))
         .select(
             "rank",
             F.col("key_value").cast("string").alias("key_value"),

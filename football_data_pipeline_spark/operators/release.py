@@ -44,10 +44,11 @@ nothing is collected to the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import first_per_key
 from ..registry import query
 from ..sources.sinks import write_report_json, write_training_shards
 from .datacard import dataset_card
@@ -143,19 +144,12 @@ def release_frames(
         # fingerprint groups: same one-exchange window shape, scores
         # are stage 1's (computed on the ORIGINAL text — redaction
         # must not change which copy wins)
-        w_best = Window.partitionBy("f").orderBy(
-            F.desc_nulls_last("__score"), F.asc("doc_id")
+        fp_scored = fp.join(
+            scored.select("doc_id", F.col("score").alias("__score")), "doc_id", "left"
         )
-        canon = (
-            fp.join(
-                scored.select("doc_id", F.col("score").alias("__score")),
-                "doc_id",
-                "left",
-            )
-            .withColumn("__rn", F.row_number().over(w_best))
-            .filter(F.col("__rn") == 1)
-            .select("f", F.col("doc_id").alias("canon"))
-        )
+        canon = first_per_key(
+            fp_scored, ["f"], [F.desc_nulls_last("__score"), F.asc("doc_id")]
+        ).select("f", F.col("doc_id").alias("canon"))
     dup_ids = (
         fp.join(canon, "f")
         .filter(F.col("doc_id") != F.col("canon"))

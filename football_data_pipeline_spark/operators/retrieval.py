@@ -52,10 +52,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import dsum, oracle_dsum, oracle_rnd, rnd
 from ..registry import query
 
@@ -237,11 +238,9 @@ def bm25_topk_batch(
             dsum(F.col("__ts"), 4).alias("score"),
         )
     )
-    w = Window.partitionBy(query_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_col, "rank", id_col, "n_matched", "score")
+    ranked = top_k(scored, k, [F.desc("score"), F.asc(id_col)], by=[query_col])
+    return ranked.select(
+        query_col, F.col("rank").cast("long").alias("rank"), id_col, "n_matched", "score"
     )
 
 
@@ -506,11 +505,8 @@ def bm25_topk_indexed(
             dsum(F.col("__ts"), 4).alias("score"),
         )
     )
-    topk = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        topk.withColumn("rank", F.row_number().over(w).cast("long"))
-        .select("rank", id_col, "n_matched", "score")
+    return top_k(scored, k, [F.desc("score"), F.asc(id_col)]).select(
+        F.col("rank").cast("long").alias("rank"), id_col, "n_matched", "score"
     )
 
 
@@ -676,19 +672,12 @@ def bm25_topk(
     k: int = TOP_K,
     **kwargs,
 ) -> DataFrame:
-    """Top-k by (score desc, id asc) — deterministic ties. The cut
-    is orderBy+limit FIRST (TakeOrderedAndProject: per-partition
-    heaps of size k, so one common query term matching a corpus-
-    sized doc set never funnels through a single-task global sort),
-    THEN the rank window over the ≤k survivors only (the
-    profiling.py top-k discipline; VERDICT r10 item 1)."""
+    """Top-k by (score desc, id asc) — deterministic ties; the cut
+    is ``rank.top_k``'s global one (orderBy+limit, then rank)."""
     id_col = kwargs.get("id_col", "doc_id")
     scored = bm25_scores(docs, terms, **kwargs)
-    topk = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        topk.withColumn("rank", F.row_number().over(w).cast("long"))
-        .select("rank", id_col, "n_matched", "score")
+    return top_k(scored, k, [F.desc("score"), F.asc(id_col)]).select(
+        F.col("rank").cast("long").alias("rank"), id_col, "n_matched", "score"
     )
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import rnd
 from ..registry import query
 from .embedsearch import DIMS, N_QUERIES, TOP_K, _oracle_dot, _oracle_norm, dot, norm
@@ -393,8 +394,6 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_ivf_centroids machinery) raises it; this query exists so that
     tuning is measurable.
     """
-    from pyspark.sql import Window
-
     emb = load(spark, sf_dir, "embeddings")
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
@@ -447,22 +446,17 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "vec_id")
         .agg(F.sum("d2_fp").cast("long").alias("dist_fp"))
     )
-    w_adc = Window.partitionBy("q_id").orderBy(F.asc("dist_fp"), F.asc("vec_id"))
-    adc_top = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= TOP_K)
-        .select("q_id", "vec_id", F.lit(1).alias("__hit"))
-    )
+    adc_top = top_k(
+        adc, TOP_K, [F.asc("dist_fp"), F.asc("vec_id")], by=["q_id"]
+    ).select("q_id", "vec_id", F.lit(1).alias("__hit"))
     qfull = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    w_ex = Window.partitionBy("q_id").orderBy(F.asc("__d2"), F.asc("vec_id"))
-    exact_top = (
-        emb.join(F.broadcast(qfull), F.col("vec_id") != F.col("q_id"))
-        .withColumn("__d2", d2(F.col("q_emb"), F.col("embedding")))
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= TOP_K)
-        .select("q_id", "vec_id")
+    ed2 = emb.join(F.broadcast(qfull), F.col("vec_id") != F.col("q_id")).withColumn(
+        "__d2", d2(F.col("q_emb"), F.col("embedding"))
+    )
+    exact_top = top_k(ed2, TOP_K, [F.asc("__d2"), F.asc("vec_id")], by=["q_id"]).select(
+        "q_id", "vec_id"
     )
     return (
         exact_top.join(adc_top, ["q_id", "vec_id"], "left")

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import rnd
 from ..functions.sliding import sliding_join, sliding_min
 from ..registry import query
@@ -435,14 +436,9 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_sources))
         .withColumn("tfidf", rnd(F.col("tf") * idf, 4))
     )
-    from pyspark.sql import Window
-
-    rw = Window.partitionBy("source").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= TFIDF_TOP_K)
-        .select("source", "rank", "term", "tf", "df", "tfidf")
-    )
+    return top_k(
+        scored, TFIDF_TOP_K, [F.desc("tfidf"), F.asc("term")], by=["source"]
+    ).select("source", "rank", "term", "tf", "df", "tfidf")
 
 
 #: winnowing parameters: k-gram size (words) and window width —

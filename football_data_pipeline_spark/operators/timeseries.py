@@ -225,9 +225,10 @@ def asof_join(
     ``last(right-row-struct, ignorenulls)``. Right rows sort before
     left rows at equal ts, giving inclusive <= semantics. Cost is a
     single shuffle on the key and a streaming frame — no pair
-    explosion, no per-row probe, so it scales like latest_per_key
-    rather than like J5's join+filter (whose matched-pair stream is
-    |left| × |right-in-range| before filtering).
+    explosion, no per-row probe, so it scales like the W1 keep-latest
+    window (``rank.first_per_key``) rather than like J5's join+filter
+    (whose matched-pair stream is |left| × |right-in-range| before
+    filtering).
 
     The whole right ROW travels as one struct so a NULL payload field
     is carried faithfully (a last(value, ignorenulls) would skip

@@ -11,7 +11,8 @@ The reference never UPDATEs; every write is one of:
 Without a transactional table format, upserts are expressed as
 deterministic dedup-overwrite: union the delta with the base and keep
 exactly one row per key, chosen by an explicit (priority, ordering)
-rule — the same result MERGE INTO would produce, and the pattern
+rule (``functions/rank.first_per_key``, the engine's one ranking
+rule) — the same result MERGE INTO would produce, and the pattern
 Delta/Iceberg's MERGE compiles to anyway.
 
 Scale notes: one shuffle on the key columns per merge. At 100 TB the
@@ -22,25 +23,22 @@ helpers keep the logic engine-side and format-agnostic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _one_per_key(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+from ..functions.rank import first_per_key
 
 
 def keep_first(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
     """First row per key in (order_cols) order — INSERT OR IGNORE
     within a batch: the first insert wins, later duplicates are
     ignored."""
-    return _one_per_key(df, keys, [F.asc(c) for c in order_cols])
+    return first_per_key(df, keys, [F.asc(c) for c in order_cols])
 
 
 def keep_latest(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
     """Last row per key — INSERT OR REPLACE within a batch."""
-    return _one_per_key(df, keys, [F.desc(c) for c in order_cols])
+    return first_per_key(df, keys, [F.desc(c) for c in order_cols])
 
 
 def upsert_replace(
@@ -58,7 +56,7 @@ def upsert_replace(
         delta.withColumn("__src", F.lit(1))
     )
     order = [F.desc("__src")] + [F.desc(c) for c in order_cols]
-    return _one_per_key(tagged, keys, order).drop("__src")
+    return first_per_key(tagged, keys, order).drop("__src")
 
 
 def insert_if_absent(base: DataFrame, delta: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:

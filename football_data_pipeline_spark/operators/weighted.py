@@ -33,10 +33,11 @@ constant in corpus size).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.rank import top_k
 from ..functions.stable import rnd
 from ..registry import query
 from .sampling import RESOLUTION, _bucket_sql, sample_bucket
@@ -73,22 +74,9 @@ def weighted_topk(
     keyed = df.withColumn(
         "__key", aes_key(F.col(id_col), F.col(weight_col), salt)
     ).withColumn("__cell", hash_bucket(F.col(id_col), cells))
-    local = Window.partitionBy(stratum_col, "__cell").orderBy(
-        F.desc("__key"), F.asc(id_col)
-    )
-    survivors = (
-        keyed.withColumn("__r", F.row_number().over(local))
-        .filter(F.col("__r") <= k)
-        .drop("__r", "__cell")
-    )
-    final = Window.partitionBy(stratum_col).orderBy(
-        F.desc("__key"), F.asc(id_col)
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(final))
-        .filter(F.col("rank") <= k)
-        .drop("__key")
-    )
+    order = [F.desc("__key"), F.asc(id_col)]
+    survivors = top_k(keyed, k, order, by=[stratum_col, "__cell"]).drop("rank", "__cell")
+    return top_k(survivors, k, order, by=[stratum_col]).drop("__key")
 
 
 @query(

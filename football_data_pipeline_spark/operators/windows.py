@@ -4,7 +4,8 @@ first-vs-last change.
 These are the reference's most load-bearing analytic patterns:
 - W1/J3 latest snapshot per key — the reference's only view
   (/root/reference/database_schema.sql:161-166) and the nightly report
-  (.github/workflows/football-data-pipeline.yml:853-857);
+  (.github/workflows/football-data-pipeline.yml:853-857); the window
+  is ``upsert.keep_latest`` (the ranking rule in ``functions/rank``);
 - W2 LAG-based odds-movement detection
   (/root/reference/discord_integration.py:477-498, yml:868-886);
 - W3 first-vs-last per-partition % change
@@ -27,19 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.stable import rnd
 from ..registry import query
-
-
-def latest_per_key(
-    df: DataFrame, keys: list[str], order_col: str, tiebreak: str
-) -> DataFrame:
-    """W1: keep the newest row per key (ROW_NUMBER() == 1).
-
-    Equivalent of the reference view's
-    ``ROW_NUMBER() OVER (PARTITION BY fixture_id ORDER BY collected_at
-    DESC) = 1`` (/root/reference/database_schema.sql:163).
-    """
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col), F.desc(tiebreak))
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+from .upsert import keep_latest
 
 
 def pct_change(cur: Column, prev: Column) -> Column:
@@ -78,7 +67,7 @@ def q_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = load(spark, sf_dir, "events")
     customer = load(spark, sf_dir, "customer")
-    latest = latest_per_key(events, ["user_id"], "ts", "event_id")
+    latest = keep_latest(events, ["user_id"], ["ts", "event_id"])
     return (
         latest.join(F.broadcast(customer), latest.user_id == customer.c_custkey, "left")
         .select(

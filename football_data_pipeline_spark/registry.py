@@ -12,6 +12,9 @@ exact):
 - round float aggregates (ROUND(x, 2)) on BOTH sides so engine-order
   float summation noise cannot flip the value hash;
 - make every window/top-k deterministic with explicit tie-breaks;
+  every keep-one-per-key and top-k cut goes through
+  ``functions/rank.py`` (``first_per_key`` / ``top_k``), whose order
+  must end on a unique column;
 - CAST integer SUMs to BIGINT in the DuckDB oracle — DuckDB sums
   integers into HUGEINT (→ float in pandas), Spark into LONG.
 """

@@ -75,11 +75,12 @@ curation writer (pipeline.curation_batch_writer).
 from __future__ import annotations
 
 from collections.abc import Callable
-from ..functions.memo import map_rows, payload_memo
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.memo import map_rows, payload_memo
+from ..functions.rank import first_per_key
 from ..operators.multimodal import (
     DHASH_BANDS,
     DHASH_BITS_PER_BAND,
@@ -329,10 +330,7 @@ def media_dup_rejects(
                 F.col(f"a{i}").cast("long").bitwiseXOR(F.col(f"b{i}").cast("long"))
             )
             ham = term if ham is None else ham + term
-        w_owner = Window.partitionBy("asset_id").orderBy(
-            F.asc("hamming"), F.asc("dup_of")
-        )
-        against_hist = (
+        matches = (
             cand.join(ha, "b_fid")
             .join(hh, "h_fid")
             .withColumn("hamming", ham.cast("int"))
@@ -342,11 +340,10 @@ def media_dup_rejects(
                 F.expr(f"h_fid DIV {FRAME_KEY}").alias("dup_of"),
                 "hamming",
             )
-            .withColumn("__rk", F.row_number().over(w_owner))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-            .withColumn("scope", F.lit("history"))
         )
+        against_hist = first_per_key(
+            matches, ["asset_id"], ["hamming", "dup_of"]
+        ).withColumn("scope", F.lit("history"))
     else:
         against_hist = spark.createDataFrame(
             [], "asset_id long, dup_of long, hamming int, scope string"
@@ -390,17 +387,6 @@ def _fp_snapshot_io(root: str):
     return read_hist, fp_w
 
 
-def _collapse_asset_ids(batch: DataFrame) -> DataFrame:
-    """Same-asset_id re-collections collapse deterministically (min
-    (kind, payload) wins)."""
-    idw = Window.partitionBy("asset_id").orderBy("kind", "payload")
-    return (
-        batch.withColumn("__rn", F.row_number().over(idw))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def media_dedup_snapshot_writer(
     root: str,
     max_hamming: int = DHASH_MAX_HAMMING,
@@ -413,7 +399,7 @@ def media_dedup_snapshot_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch_rows = _collapse_asset_ids(batch)
+        batch_rows = first_per_key(batch, ["asset_id"], ["kind", "payload"])
         # unknown/NULL kinds reject up front (the gate's r9 lesson:
         # NULL-safe predicate, audited as kind='unknown')
         is_media = F.col("kind").isin("image", "audio", "video")
@@ -491,7 +477,7 @@ def media_curation_snapshot_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch_rows = _collapse_asset_ids(batch)
+        batch_rows = first_per_key(batch, ["asset_id"], ["kind", "payload"])
         gated = gate_media_batch(batch_rows).localCheckpoint()
         gate_drops = gated.filter(F.col("reason").isNotNull()).select(
             "asset_id",

@@ -50,8 +50,9 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.rank import first_per_key
 from ..operators.flatten import (
     derive_players,
     extract_fixtures,
@@ -229,18 +230,12 @@ def collapsed_batch(batch: DataFrame) -> Iterator[DataFrame]:
 
     from ..operators.dedup import batch_near_dup_drops, fingerprint
 
-    w = Window.partitionBy("__fp").orderBy("doc_id")
     # cache the exact-collapsed batch BEFORE the near-dup pass: its
     # lineage (fingerprint projection + the __fp window shuffle) is
     # otherwise re-evaluated ~3× — both sides of the near pass's band
     # self-join plus the outer anti-join below
-    collapsed = (
-        batch.withColumn("__fp", fingerprint(F.col("text")))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__fp", "__rn")
-        .cache()
-    )
+    fps = batch.withColumn("__fp", fingerprint(F.col("text")))
+    collapsed = first_per_key(fps, ["__fp"], ["doc_id"]).drop("__fp").cache()
     rows = None
     try:
         rows = collapsed.join(
@@ -482,12 +477,7 @@ def substring_trim_snapshot_writer(
         # text wins) — duplicate doc_ids would fan out the metadata
         # re-attach join and defeat the within-batch owner rule
         # (countDistinct(doc_id) = 1 across copies of one id)
-        idw = Window.partitionBy("doc_id").orderBy("text")
-        batch = (
-            batch.withColumn("__rn", F.row_number().over(idw))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        batch = first_per_key(batch, ["doc_id"], ["text"])
         trimmed_path = f"{corpus_root}/trimmed/batch_id={batch_id}"
         grams = _doc_grams(batch, k).cache()
         try:

@@ -52,8 +52,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.rank import first_per_key
 
 #: cosine threshold above which an arriving vector is a near-dup of
 #: an accepted one and is rejected. Deliberately far above
@@ -200,12 +202,7 @@ def vector_ingest_snapshot_writer(
             N_BANDS if n_bands is None else n_bands,
             BITS_PER_BAND if bits_per_band is None else bits_per_band,
         )
-        idw = Window.partitionBy("vec_id").orderBy("embedding")
-        batch = (
-            batch.withColumn("__rn", F.row_number().over(idw))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        batch = first_per_key(batch, ["vec_id"], ["embedding"])
         # zero-norm vectors have no cosine: reject up front (ANSI mode
         # would otherwise DIVIDE_BY_ZERO inside the verify and poison-
         # pill the batch on every replay)
@@ -240,7 +237,7 @@ def vector_ingest_snapshot_writer(
             )
             if hist is not None:
                 h = hist.alias("h")
-                against_hist = (
+                matches = (
                     sigs.alias("a")
                     .join(h, F.col("a.sig") == F.col("h.sig"))
                     .select(
@@ -249,18 +246,10 @@ def vector_ingest_snapshot_writer(
                         _pair_cosine("a", "h").alias("cosine_sim"),
                     )
                     .filter(F.col("cosine_sim") >= tau)
-                    .withColumn(
-                        "__rk",
-                        F.row_number().over(
-                            Window.partitionBy("vec_id").orderBy(
-                                F.col("cosine_sim").desc(), F.col("dup_of")
-                            )
-                        ),
-                    )
-                    .filter(F.col("__rk") == 1)
-                    .drop("__rk")
-                    .withColumn("scope", F.lit("history"))
                 )
+                against_hist = first_per_key(
+                    matches, ["vec_id"], [F.desc("cosine_sim"), "dup_of"]
+                ).withColumn("scope", F.lit("history"))
             else:
                 against_hist = spark.createDataFrame(
                     [], "vec_id long, dup_of long, cosine_sim double, scope string"

@@ -13,6 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 
 from football_data_pipeline_spark.functions.normalize import normalize_name
+from football_data_pipeline_spark.functions.rank import top_k
 from football_data_pipeline_spark.operators.dedup import word_set
 from football_data_pipeline_spark.operators.upsert import keep_latest, upsert_replace
 
@@ -101,6 +102,28 @@ def test_keep_latest_idempotent_and_maximal(spark, rows):
         assert got[k] == max((t, v) for kk, t, v in rows if kk == k)
     twice = keep_latest(once, ["k"], ["ts", "v"])
     assert sorted(map(tuple, twice.collect())) == sorted(map(tuple, once.collect()))
+
+
+@given(events, st.integers(min_value=1, max_value=6))
+@FAST
+def test_top_k_by_group_is_sort_and_slice(spark, rows, k):
+    """top_k(by=g) equals a Python sort-and-slice per group under the
+    same total order (ts desc, v asc, then the unique row id asc), with
+    ranks 1..n in that order."""
+    df = spark.createDataFrame(
+        [(i, g, t, v) for i, (g, t, v) in enumerate(rows)],
+        "id long, g long, ts long, v double",
+    )
+    out = top_k(df, k, [F.desc("ts"), F.asc("v"), F.asc("id")], by=["g"])
+    got = sorted((r["g"], r["rank"], r["id"]) for r in out.collect())
+    want = []
+    for g in {g for g, _, _ in rows}:
+        ids = sorted(
+            (i for i, (gg, _, _) in enumerate(rows) if gg == g),
+            key=lambda i: (-rows[i][1], rows[i][2], i),
+        )
+        want += [(g, n, i) for n, i in enumerate(ids[:k], 1)]
+    assert got == sorted(want)
 
 
 @given(events, events)

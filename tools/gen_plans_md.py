@@ -170,12 +170,6 @@ KNOWN_NOTES = {
         "_phash_pair_plan), and connected-components rounds checkpoint "
         "per iteration by design"
     ),
-    "q_skew_report": (
-        "the 'global window' is the TakeOrdered-then-rank top-k idiom "
-        "(profiling.py:189-197) — k-bounded by construction; an "
-        "intermediate exchange hides the TakeOrderedAndProject child "
-        "from the generic detector"
-    ),
     "q_media_curation": (
         "smj count is a checkpoint artifact: the probe joins read "
         "localCheckpoint scans whose statistics are unknown to the "
@@ -220,7 +214,7 @@ def plan_row(name: str, plan: str) -> str:
     # (partitionBy with no orderBy) also has one separator but its
     # final group is bare columns — scalable, not flagged. A global
     # window whose DIRECT CHILD is TakeOrderedAndProject (the
-    # orderBy+limit→rank top-k idiom, profiling.py/retrieval.py) is
+    # orderBy+limit→rank cut, functions/rank.top_k without ``by``) is
     # k-bounded by construction — noted separately, never a scale
     # flag (VERDICT r10 item 1).
     lines = plan.split("\n")
