@@ -7,7 +7,7 @@ turns pairs into a keep/drop list:
   catches reordered/repeated-word duplicates that byte-exact hashing
   misses (testdata has 0 byte-exact but thousands of set-equal pairs);
 - MinHash + LSH banding: 18 signatures, 3 bands × 6 rows, salted
-  bucket-local pair generation (PAIR_SALT) and true Jaccard
+  bucket-local pair generation (functions/lsh.band_pairs) and true Jaccard
   verification. This is THE 100 TB dedup path: cost is O(docs × H)
   for signatures plus bucket-local pair generation — never an
   all-pairs product;
@@ -34,7 +34,7 @@ measured on a one-off corpus and are superseded by these):
   (25,735 → 922,481) — time tracks OUTPUT pairs sublinearly, the
   correct asymptote for pair-emitting dedup (generation is
   inherently quadratic per cluster; banding+salting keeps
-  everything else linear). r3's PAIR_SALT sweep conclusion stands:
+  everything else linear). r3's lsh.PAIR_SALT sweep conclusion stands:
   default 8.
 - q_ngram_jaccard: 3.4s → 12s while output rows grew 4 → 223,988
   (the probe's copy families are shingle-level near-dups, unlike
@@ -67,6 +67,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.lsh import band_pairs
 from ..functions.sliding import chunked_join, sliding_join
 from ..functions.stable import rnd
 from ..registry import query
@@ -76,9 +77,6 @@ N_HASHES = 18
 N_BANDS = 3  # rows per band = N_HASHES // N_BANDS = 6
 ROWS_PER_BAND = N_HASHES // N_BANDS
 JACCARD_VERIFY = 0.9
-#: bucket-local pair generation is split across this many tasks per
-#: band bucket (skew salt for template mega-buckets)
-PAIR_SALT = 8
 
 
 def word_set(text: Column) -> Column:
@@ -113,12 +111,22 @@ def minhash_signature(
     return [_salted_min(words, salt_fmt.format(i=i)) for i in range(n_hashes)]
 
 
-def _band_sigs(n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND) -> Column:
-    cols = []
-    for b in range(n_bands):
-        parts = [F.col(f"mh{rows_per_band * b + r}") for r in range(rows_per_band)]
-        cols.append(F.concat_ws("|", F.lit(str(b)), *parts))
-    return F.array(*cols)
+def _band_sigs(
+    words: Column,
+    n_bands: int = N_BANDS,
+    rows_per_band: int = ROWS_PER_BAND,
+    salt_fmt: str = "{i}:",
+) -> Column:
+    """The minhash band array of a token set: band b joins min-hashes
+    b·rows … b·rows + rows − 1 (the functions/lsh.band_pairs input,
+    which keys on the band's array position)."""
+    mh = minhash_signature(words, n_bands * rows_per_band, salt_fmt)
+    return F.array(
+        *[
+            F.concat_ws("|", *mh[rows_per_band * b : rows_per_band * (b + 1)])
+            for b in range(n_bands)
+        ]
+    )
 
 
 @query(
@@ -358,53 +366,7 @@ def minhash_verified_pairs(spark: SparkSession, grp: DataFrame) -> DataFrame:
     a rep-group table from :func:`minhash_rep_groups` (q_dedup_minhash
     minus the collapse stage — see its docstring for the plan
     argument)."""
-    mh = grp
-    for i, c in enumerate(minhash_signature(F.col("ws"))):
-        mh = mh.withColumn(f"mh{i}", c)
-    sigs = mh.select("rid", F.explode(_band_sigs()).alias("sig"))
-    # pair generation parallelism: this corpus has template mega-
-    # buckets (~1k reps sharing a band signature → ~500k pairs each).
-    # Under the default broadcast self-join the whole pair explosion
-    # runs in the probe task(s) — and AQE coalesces the tiny sig
-    # stream to ONE partition first. shuffle_hash + a pinned
-    # partition count spreads bucket pair-generation across cores
-    # (mega-buckets still bound a single task each — the price of
-    # bucket-local generation; banding width is the knob that caps
-    # them). The explicit repartition after distinct re-spreads the
-    # candidate stream so Jaccard verification never inherits the
-    # few coalesced post-shuffle partitions.
-    num_parts = spark.sparkContext.defaultParallelism
-    # skew salt: a bucket of K reps would otherwise generate all its
-    # K²/2 pairs in the single task owning that sig. Salting splits
-    # the LEFT occurrence of each rep into PAIR_SALT groups by
-    # hash(rid) and replicates the right side across all salts, so
-    # one bucket's pair generation spreads over PAIR_SALT tasks at
-    # the cost of a PAIR_SALT× blow-up of the (tiny, rep-level) sig
-    # stream. Result set is identical: pair (x, y) appears exactly
-    # once, in partition (sig, salt(x)). Measured at sf0.1
-    # (interleaved A/B, salt 1 vs 8): wall-clock statistically
-    # indistinguishable — at this SF the md5 signature computation
-    # dominates and the widest bucket (~1k reps → 500k pairs) fits
-    # one task comfortably. The salt is kept for the property that
-    # matters at 100 TB: per-task pair-generation width is bounded by
-    # K²/(2·PAIR_SALT) instead of K²/2, so a 10× wider template
-    # cluster degrades 8 tasks' runtime, not one straggler's.
-    a = sigs.withColumn("salt", F.pmod(F.hash("rid"), F.lit(PAIR_SALT)))
-    a = a.repartition(num_parts, "sig", "salt").alias("a")
-    b = sigs.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(PAIR_SALT - 1)))
-    ).alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col("a.rid") < F.col("b.rid")),
-        )
-        .select(F.col("a.rid").alias("rid_a"), F.col("b.rid").alias("rid_b"))
-        .distinct()
-        .repartition(num_parts)
-    )
+    cand = band_pairs(grp, "rid", _band_sigs(F.col("ws")))
     ga = grp.select(F.col("rid").alias("rid_a"), F.col("ws").alias("ws_a"), F.col("sz").alias("sz_a"))
     gb = grp.select(F.col("rid").alias("rid_b"), F.col("ws").alias("ws_b"), F.col("sz").alias("sz_b"))
     jac = F.size(F.array_intersect("ws_a", "ws_b")) / F.size(F.array_union("ws_a", "ws_b"))
@@ -601,37 +563,11 @@ def ngram_dedup_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
             F.lit("exact").alias("kind"),
         )
     )
-    mh = grp
-    for i, c in enumerate(
-        minhash_signature(F.col("shingles"), n_hashes=NGRAM_HASHES, salt_fmt="g{i}:")
-    ):
-        mh = mh.withColumn(f"mh{i}", c)
-    sigs = mh.select(
-        "lang", "source", "rid", F.explode(_band_sigs(NGRAM_BANDS, NGRAM_ROWS)).alias("sig")
-    )
-    # same pair-generation shape as q_dedup_minhash: pin the shuffle
-    # partitioning so AQE cannot coalesce the tiny sig stream into one
-    # task, and keep the join bucket-local (shuffle_hash, never a
-    # broadcast nested loop)
-    num_parts = spark.sparkContext.defaultParallelism
-    a = sigs.repartition(num_parts, "sig").alias("a")
-    b = sigs.alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.rid") < F.col("b.rid")),
-        )
-        .select(
-            F.col("a.lang").alias("lang"),
-            F.col("a.source").alias("source"),
-            F.col("a.rid").alias("rid_a"),
-            F.col("b.rid").alias("rid_b"),
-        )
-        .distinct()
-        .repartition(num_parts)
+    cand = band_pairs(
+        grp,
+        "rid",
+        _band_sigs(F.col("shingles"), NGRAM_BANDS, NGRAM_ROWS, salt_fmt="g{i}:"),
+        by=("lang", "source"),
     )
     ga = grp.select(F.col("rid").alias("rid_a"), F.col("shingles").alias("sh_a"))
     gb = grp.select(F.col("rid").alias("rid_b"), F.col("shingles").alias("sh_b"))
@@ -1032,24 +968,9 @@ def batch_near_dup_drops(docs: DataFrame, verify: float = JACCARD_VERIFY) -> Dat
     runs over a batch-sized edge set — bounded by arrival rate, not
     corpus size.
     """
-    # ids-only through the band join and the distinct — the word-set
-    # arrays attach AFTER candidate pairs exist, so shuffle bytes are
-    # id-sized, not corpus-sized (the dedup_against_corpus pattern;
-    # shuffling ws through the self-join was this function's version
-    # of the bug that commit fixed there)
     ws_df = docs.select("doc_id", word_set(F.col("text")).alias("ws"))
-    with_mh = ws_df.select(
-        "doc_id",
-        *[m.alias(f"mh{i}") for i, m in enumerate(minhash_signature(F.col("ws")))],
-    )
-    sig = with_mh.select("doc_id", F.explode(_band_sigs()).alias("sig"))
-    left = sig.select(F.col("doc_id").alias("doc_a"), "sig")
-    right = sig.select(F.col("doc_id").alias("doc_b"), "sig")
-    cand = (
-        left.join(right, "sig")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    cand = band_pairs(ws_df, "doc_id", _band_sigs(F.col("ws"))).select(
+        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
     a_ws = ws_df.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a"))
     b_ws = ws_df.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b"))
@@ -1118,25 +1039,8 @@ def dedup_against_corpus(
 
     remaining = n.join(exact.select("doc_id"), "doc_id", "left_anti")
 
-    def sigs(df: DataFrame, id_alias: str) -> DataFrame:
-        with_mh = df.select(
-            F.col("doc_id").alias(id_alias),
-            *[m.alias(f"mh{i}") for i, m in enumerate(minhash_signature(F.col("ws")))],
-        )
-        return with_mh.select(id_alias, F.explode(_band_sigs()).alias("sig"))
-
-    # candidate pairs as IDS ONLY: the sig equi-join and the distinct
-    # shuffle (sig, id) / (id, id) rows — never the word-set arrays,
-    # which attach afterwards for verification. On the 10× probe the
-    # wall-clock is verify-bound either way (57M candidates), but at
-    # real document lengths the array payload dominates shuffle bytes
-    # and this ordering is the difference between shuffling ids and
-    # shuffling the corpus.
-    pair_ids = (
-        sigs(remaining, "doc_id")
-        .join(sigs(h, "h_doc"), "sig")
-        .select("doc_id", "h_doc")
-        .distinct()
+    pair_ids = band_pairs(remaining, "doc_id", _band_sigs(F.col("ws")), right=h).select(
+        F.col("doc_id_a").alias("doc_id"), F.col("doc_id_b").alias("h_doc")
     )
     cand = pair_ids.join(remaining.select("doc_id", "ws"), "doc_id").join(
         h.select(F.col("doc_id").alias("h_doc"), F.col("ws").alias("h_ws")), "h_doc"
@@ -1425,20 +1329,11 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= JACCARD_VERIFY)
         .select("ra", "rb")
     )
-    with_mh = reps.select(
-        "rid",
-        "ws",
-        *[m.alias(f"mh{i}") for i, m in enumerate(minhash_signature(F.col("ws")))],
-    )
-    sigs = with_mh.select("rid", "ws", F.explode(_band_sigs()).alias("sig"))
-    sa = sigs.select(F.col("sig"), F.col("rid").alias("ra"), F.col("ws").alias("wsa"))
-    sb = sigs.select(
-        F.col("sig").alias("__sb"), F.col("rid").alias("rb"), F.col("ws").alias("wsb")
-    )
     found = (
-        sa.join(sb, (F.col("sig") == F.col("__sb")) & (F.col("ra") < F.col("rb")))
-        .select("ra", "rb", "wsa", "wsb")
-        .distinct()
+        band_pairs(reps, "rid", _band_sigs(F.col("ws")))
+        .select(F.col("rid_a").alias("ra"), F.col("rid_b").alias("rb"))
+        .join(a, "ra")
+        .join(b, "rb")
         .filter(jac >= JACCARD_VERIFY)
         .select("ra", "rb")
     )

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.lsh import band_pairs
 from ..functions.rank import first_per_key, top_k
 from ..functions.stable import rnd
 from ..registry import query
@@ -131,6 +132,42 @@ def _hyperplane(k: int) -> list[float]:
     ]
 
 
+def band_signatures(vectors: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm, bands): the random-hyperplane LSH band
+    array of each vector — N_PLANES sign bits of dot products against
+    the md5 hyperplanes, packed into N_BANDS ``"band|bits"`` strings.
+    The one builder behind q_dedup_embed and the streaming vector
+    screen (streaming/vectors.py); a narrow no-shuffle projection."""
+    bits = [
+        F.when(dot(F.col("embedding"), F.array(*[F.lit(x) for x in _hyperplane(k)])) >= 0, "1")
+        .otherwise("0")
+        for k in range(N_PLANES)
+    ]
+    bands = F.array(
+        *[
+            F.concat(F.lit(f"{band}|"), *bits[BITS_PER_BAND * band : BITS_PER_BAND * (band + 1)])
+            for band in range(N_BANDS)
+        ]
+    )
+    return vectors.select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm"), bands.alias("bands")
+    )
+
+
+def cosine_pairs(
+    pairs: DataFrame, a: str, b: str, left: DataFrame, right: DataFrame | None = None
+) -> DataFrame:
+    """``pairs`` plus ``cosine_sim``, the cosine between vector ``a``
+    of ``left`` and vector ``b`` of ``right`` (default ``left``): the
+    verify step of the hyperplane-LSH passes, joined back to the
+    (vec_id, embedding, nrm) payload by id."""
+    right = left if right is None else right
+    pa = left.select(F.col("vec_id").alias(a), F.col("embedding").alias("__ea"), F.col("nrm").alias("__na"))
+    pb = right.select(F.col("vec_id").alias(b), F.col("embedding").alias("__eb"), F.col("nrm").alias("__nb"))
+    sim = dot(F.col("__ea"), F.col("__eb")) / (F.col("__na") * F.col("__nb"))
+    return pairs.join(pa, a).join(pb, b).select(*pairs.columns, sim.alias("cosine_sim"))
+
+
 _R_SQL = (
     "(CAST('0x' || substr(md5('{k}:' || i), 1, 8) AS BIGINT)"
     " / 4294967296.0 - 0.5)"
@@ -188,40 +225,14 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall is tunable with bands × bits (4×8 here); the brute-force
     q_knn_bruteforce is the recall yardstick.
     """
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
-    for k in range(N_PLANES):
-        plane = F.array(*[F.lit(x) for x in _hyperplane(k)])
-        e = e.withColumn(
-            f"b{k}",
-            F.when(dot(F.col("embedding"), plane) >= 0, "1").otherwise("0"),
-        )
-    bands = F.array(
-        *[
-            F.concat(
-                F.lit(f"{band}|"),
-                *[F.col(f"b{BITS_PER_BAND * band + r}") for r in range(BITS_PER_BAND)],
-            )
-            for band in range(N_BANDS)
-        ]
-    )
-    sigs = e.select("vec_id", "embedding", "nrm", F.explode(bands).alias("sig"))
-    a, b = sigs.alias("a"), sigs.alias("b")
-    sim = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
+    e = band_signatures(load(spark, sf_dir, "embeddings"))
+    pairs = band_pairs(e, "vec_id", "bands").select(
+        F.col("vec_id_a").alias("vec_a"), F.col("vec_id_b").alias("vec_b")
     )
     return (
-        a.join(b, (F.col("a.sig") == F.col("b.sig")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            sim.alias("sim"),
-        )
-        .distinct()
-        .filter(F.col("sim") >= COSINE_VERIFY)
-        .select("vec_a", "vec_b", rnd(F.col("sim"), 6).alias("cosine_sim"))
+        cosine_pairs(pairs, "vec_a", "vec_b", e)
+        .filter(F.col("cosine_sim") >= COSINE_VERIFY)
+        .select("vec_a", "vec_b", rnd(F.col("cosine_sim"), 6).alias("cosine_sim"))
     )
 
 

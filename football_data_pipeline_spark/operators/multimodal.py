@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.lsh import band_pairs
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -724,50 +725,28 @@ def _phash_pair_plan(
         F.col("rid").alias("asset_id"),
         *[F.col(c) for c in band_cols],
     )
-    bands = reps.select(
-        *by,
-        "asset_id",
-        F.posexplode(F.array(*[F.col(c) for c in band_cols])).alias(
-            "band_idx", "band_val"
-        ),
+    pairs = band_pairs(reps, "asset_id", F.array(*band_cols), by=by).select(
+        F.col("asset_id_a").alias("id_a"), F.col("asset_id_b").alias("id_b")
     )
-    cond = (
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.asset_id") < F.col("b.asset_id"))
-    )
-    for c in by:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    pairs = (
-        bands.alias("a")
-        .join(bands.alias("b"), cond)
-        .select(
-            F.col("a.asset_id").alias("id_a"), F.col("b.asset_id").alias("id_b")
-        )
-        .distinct()
-    )
-    ha = reps.select(
-        F.col("asset_id").alias("id_a"),
-        *[F.col(f"band{i}").alias(f"a{i}") for i in range(DHASH_BANDS)],
-    )
-    hb = reps.select(
-        F.col("asset_id").alias("id_b"),
-        *[F.col(f"band{i}").alias(f"b{i}") for i in range(DHASH_BANDS)],
-    )
-    hamming = None
-    for i in range(DHASH_BANDS):
-        term = F.bit_count(
-            F.col(f"a{i}").cast("long").bitwiseXOR(F.col(f"b{i}").cast("long"))
-        )
-        hamming = term if hamming is None else hamming + term
-    near = (
-        pairs.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    near = hamming_pairs(pairs, "id_a", "id_b", reps).filter(F.col("hamming") <= max_hamming)
     return stars.unionByName(near)
+
+
+def hamming_pairs(
+    pairs: DataFrame, a: str, b: str, left: DataFrame, right: DataFrame | None = None
+) -> DataFrame:
+    """``pairs`` plus ``hamming``, the bit distance between fingerprint
+    ``a`` of ``left`` and fingerprint ``b`` of ``right`` (default
+    ``left``): the verify step of the perceptual near-dup passes,
+    joined back to the (asset_id, band0..3) payload by id."""
+    right = left if right is None else right
+    pa = left.select(F.col("asset_id").alias(a), *[F.col(f"band{i}").alias(f"__a{i}") for i in range(DHASH_BANDS)])
+    pb = right.select(F.col("asset_id").alias(b), *[F.col(f"band{i}").alias(f"__b{i}") for i in range(DHASH_BANDS)])
+    bits = sum(
+        F.bit_count(F.col(f"__a{i}").cast("long").bitwiseXOR(F.col(f"__b{i}").cast("long")))
+        for i in range(DHASH_BANDS)
+    )
+    return pairs.join(pa, a).join(pb, b).select(*pairs.columns, bits.cast("int").alias("hamming"))
 
 
 # --- image-side quality gate (VERDICT r4 item 9) ---------------------

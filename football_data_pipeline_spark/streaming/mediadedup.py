@@ -14,9 +14,9 @@ q_video_frame_dedup bridge) — one fingerprint row per sampled frame.
 All three share the 4×16-bit band layout, so ONE probe geometry
 serves every kind: a fingerprint within DHASH_MAX_HAMMING (3) bits
 of another is guaranteed ≥ 1 equal band (pigeonhole), and the
-history probe is a single (band_idx, band_val)-keyed equi join —
-history is never self-paired, so per-batch cost is
-arrival × bucket occupancy, the incremental-dedup asymptote.
+history probe is functions/lsh.band_pairs' history form — history is
+never self-paired, so per-batch cost is arrival × bucket occupancy,
+the incremental-dedup asymptote.
 
 Layout (the vectors.py resolution protocol, media form)::
 
@@ -34,7 +34,7 @@ Per micro-batch N:
    ``scope='unknown_kind'`` — rejects audited, never silent;
 2. history near-dups: batch fingerprints probe the fp index
    (ACCEPTED assets only — a rejected near-copy can never evict
-   future arrivals) by one band-keyed equi join + exact Hamming
+   future arrivals) by band_pairs' history form + exact Hamming
    verify; best owner per asset = min (hamming, owner id);
 3. within-batch near-dups: fingerprint pairs from the SHARED banded
    pass (multimodal.hash_near_dup: star collapse + band blocking +
@@ -79,12 +79,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.lsh import band_pairs
 from ..functions.memo import map_rows, payload_memo
 from ..functions.rank import first_per_key
 from ..operators.multimodal import (
     DHASH_BANDS,
     DHASH_BITS_PER_BAND,
     DHASH_MAX_HAMMING,
+    hamming_pairs,
 )
 from ..registry import query
 
@@ -301,43 +303,17 @@ def media_dup_rejects(
         .withColumn("scope", F.lit("batch"))
     )
 
-    # --- history probe: batch bands vs accepted-index bands, one
-    # equi join; verify = exact Hamming over the colliding rows
+    # --- history probe: batch bands vs accepted-index bands (kind in
+    # the key); verify = exact Hamming over the candidate fids
     if hist_fps is not None:
-        bb = _explode_bands(fps, "b")
-        hb = _explode_bands(hist_fps, "h")
-        cand = (
-            bb.join(
-                hb,
-                (F.col("b_kind") == F.col("h_kind"))
-                & (F.col("b_band_idx") == F.col("h_band_idx"))
-                & (F.col("b_band_val") == F.col("h_band_val")),
-            )
-            .select("b_fid", "h_fid")
-            .distinct()
-        )
-        ha = _fid(fps).select(
-            F.col("asset_id").alias("b_fid"),
-            *[F.col(f"band{i}").alias(f"a{i}") for i in range(DHASH_BANDS)],
-        )
-        hh = _fid(hist_fps).select(
-            F.col("asset_id").alias("h_fid"),
-            *[F.col(f"band{i}").alias(f"b{i}") for i in range(DHASH_BANDS)],
-        )
-        ham = None
-        for i in range(DHASH_BANDS):
-            term = F.bit_count(
-                F.col(f"a{i}").cast("long").bitwiseXOR(F.col(f"b{i}").cast("long"))
-            )
-            ham = term if ham is None else ham + term
+        bf, hf = _fid(fps), _fid(hist_fps)
+        cand = band_pairs(bf, "asset_id", F.array(*_BAND_COLS), right=hf, by=("kind",))
         matches = (
-            cand.join(ha, "b_fid")
-            .join(hh, "h_fid")
-            .withColumn("hamming", ham.cast("int"))
+            hamming_pairs(cand, "asset_id_a", "asset_id_b", bf, hf)
             .filter(F.col("hamming") <= max_hamming)
             .select(
-                F.expr(f"b_fid DIV {FRAME_KEY}").alias("asset_id"),
-                F.expr(f"h_fid DIV {FRAME_KEY}").alias("dup_of"),
+                F.expr(f"asset_id_a DIV {FRAME_KEY}").alias("asset_id"),
+                F.expr(f"asset_id_b DIV {FRAME_KEY}").alias("dup_of"),
                 "hamming",
             )
         )
@@ -354,18 +330,6 @@ def media_dup_rejects(
     )
     return rejected.join(kinds, "asset_id").select(
         "asset_id", "kind", "dup_of", "hamming", "scope"
-    )
-
-
-def _explode_bands(fps: DataFrame, prefix: str) -> DataFrame:
-    return fps.select(
-        (F.col("asset_id") * FRAME_KEY + F.col("fp_seq"))
-        .cast("long")
-        .alias(f"{prefix}_fid"),
-        F.col("kind").alias(f"{prefix}_kind"),
-        F.posexplode(F.array(*[F.col(c) for c in _BAND_COLS])).alias(
-            f"{prefix}_band_idx", f"{prefix}_band_val"
-        ),
     )
 
 

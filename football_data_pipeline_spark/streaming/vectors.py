@@ -13,22 +13,20 @@ encoder) must be screened against what the corpus already holds
 before the vectors — and the documents they represent — are
 admitted.
 
-Screening = the q_dedup_embed plan (operators/embedsearch.py:183)
-run incrementally: sign-bit band signatures against the SAME
-md5-derived hyperplanes, candidates only from band-bucket equi
-joins, exact cosine verification at ``VECTOR_DUP_TAU``. The batch
-probes history; history is never re-paired with itself — per-batch
-cost is arrival-rate × bucket occupancy, the incremental-dedup
-asymptote, not corpus².
+Screening = the q_dedup_embed plan run incrementally: the same band
+builder (embedsearch.band_signatures), candidates only from
+functions/lsh.band_pairs, exact cosine verification at
+``VECTOR_DUP_TAU``. The batch probes history; history is never
+re-paired with itself — per-batch cost is arrival-rate × bucket
+occupancy, the incremental-dedup asymptote, not corpus².
 
-Band-width knob (the honest 100 TB caveat): with the default
-4 bands × 8 bits the signature space is 4·2⁸ = 1024 buckets, so
-history buckets grow ~linearly with the accepted corpus and the
-probe degrades toward arrival × corpus/1024. The writer therefore
-takes (n_bands, bits_per_band) — at real scale 16-24 bits per band
-keeps bucket occupancy bounded (more planes, same md5 generator);
-the defaults stay at embedsearch's constants so the batch and
-streaming passes stay one family with one recall yardstick
+Band-width caveat (the honest 100 TB one): 4 bands × 8 bits is a
+signature space of 4·2⁸ = 1024 buckets, so history buckets grow
+~linearly with the accepted corpus and the probe degrades toward
+arrival × corpus/1024. At real scale 16-24 bits per band keeps
+bucket occupancy bounded (more planes, same md5 generator); that is
+a change of embedsearch's constants, so the batch and streaming
+passes stay one family with one recall yardstick
 (q_lsh_recall / q_knn_bruteforce).
 
 Measured stream-screen recall (r7, VERDICT r6 item 8 — the
@@ -55,7 +53,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.lsh import band_pairs
 from ..functions.rank import first_per_key
+from ..operators.embedsearch import (
+    BITS_PER_BAND,
+    N_BANDS,
+    band_signatures,
+    cosine_pairs,
+    norm,
+)
 
 #: cosine threshold above which an arriving vector is a near-dup of
 #: an accepted one and is rejected. Deliberately far above
@@ -64,55 +70,7 @@ from ..functions.rank import first_per_key
 VECTOR_DUP_TAU = 0.92
 
 
-def band_signatures(
-    vectors: DataFrame,
-    n_bands: int | None = None,
-    bits_per_band: int | None = None,
-) -> DataFrame:
-    """(vec_id, embedding, nrm, sig): one row per (vector, band) —
-    the q_dedup_embed signature assembly over the shared md5
-    hyperplanes (embedsearch._hyperplane), parameterized on band
-    geometry. A narrow no-shuffle projection: n_bands·bits_per_band
-    dot products per vector, evaluated in the scan stage."""
-    from ..operators.embedsearch import (
-        BITS_PER_BAND,
-        N_BANDS,
-        _hyperplane,
-        dot,
-        norm,
-    )
-
-    n_bands = N_BANDS if n_bands is None else n_bands
-    bits_per_band = BITS_PER_BAND if bits_per_band is None else bits_per_band
-    e = vectors.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
-    for k in range(n_bands * bits_per_band):
-        plane = F.array(*[F.lit(x) for x in _hyperplane(k)])
-        e = e.withColumn(
-            f"b{k}",
-            F.when(dot(F.col("embedding"), plane) >= 0, "1").otherwise("0"),
-        )
-    bands = F.array(
-        *[
-            F.concat(
-                F.lit(f"{band}|"),
-                *[
-                    F.col(f"b{bits_per_band * band + r}")
-                    for r in range(bits_per_band)
-                ],
-            )
-            for band in range(n_bands)
-        ]
-    )
-    return e.select(
-        "vec_id", "embedding", "nrm", F.explode(bands).alias("sig")
-    )
-
-
-def _check_geometry(
-    spark, corpus_root: str, n_bands: int, bits_per_band: int
-) -> None:
+def _check_geometry(spark, corpus_root: str) -> None:
     """Persist the band geometry on first write; raise on mismatch.
     A geometry change makes every new signature disjoint from the
     index — history screening would silently match NOTHING."""
@@ -121,24 +79,22 @@ def _check_geometry(
     path = f"{corpus_root}/geometry"
     try:
         row = spark.read.parquet(path).collect()[0]
-        if (row.n_bands, row.bits_per_band) != (n_bands, bits_per_band):
+        if (row.n_bands, row.bits_per_band) != (N_BANDS, BITS_PER_BAND):
             raise ValueError(
                 f"signature index at {corpus_root} was built with "
                 f"{row.n_bands} bands x {row.bits_per_band} bits; "
-                f"writer configured for {n_bands} x {bits_per_band} — "
+                f"writer built for {N_BANDS} x {BITS_PER_BAND} — "
                 "rebuild the index or match the recorded geometry"
             )
     except AnalysisException:
         spark.createDataFrame(
-            [(n_bands, bits_per_band)], "n_bands int, bits_per_band int"
+            [(N_BANDS, BITS_PER_BAND)], "n_bands int, bits_per_band int"
         ).write.mode("overwrite").parquet(path)
 
 
 def vector_ingest_snapshot_writer(
     corpus_root: str,
     tau: float = VECTOR_DUP_TAU,
-    n_bands: int | None = None,
-    bits_per_band: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body for an EMBEDDING stream of
     (vec_id, embedding) rows. Per micro-batch:
@@ -150,8 +106,8 @@ def vector_ingest_snapshot_writer(
        an unguarded cosine would DIVIDE_BY_ZERO and poison-pill the
        stream (replay re-crashes forever);
     2. history near-dups: batch signatures probe the signature index
-       (accepted vectors only) by ONE sig-keyed equi join + cosine
-       verify at ≥ tau;
+       (accepted vectors only) through band_pairs' history form +
+       cosine verify at ≥ tau;
     3. within-batch near-dups: band-bucket candidate pairs →
        connected components (the dedup.py pointer-jumping kernel —
        near-dup clusters are near-cliques, so it converges in 1-2
@@ -173,14 +129,16 @@ def vector_ingest_snapshot_writer(
 
     Layout: the signature index is a snapshot table
     (``{root}/sig_log`` + ``{root}/sig_data``,
-    sources/snapshots.snapshot_append_writer), read as of the newest
-    commit before batch N (snapshots.read_table_before_batch);
-    accepted/rejected are plain batchId-keyed audit partitions.
+    sources/snapshots.snapshot_append_writer) of one
+    (vec_id, embedding, nrm, bands) row per accepted vector, read as
+    of the newest commit before batch N
+    (snapshots.read_table_before_batch); accepted/rejected are plain
+    batchId-keyed audit partitions.
 
     The band geometry is persisted to ``{root}/geometry`` on first
-    write and validated on every batch: restarting the writer with a
-    different (n_bands, bits_per_band) over an existing corpus_root
-    raises instead of silently matching nothing against history.
+    write and validated on every batch: an index built under other
+    (N_BANDS, BITS_PER_BAND) constants raises instead of silently
+    matching nothing against history.
     """
     from ..sources.snapshots import (
         read_table_before_batch,
@@ -193,15 +151,9 @@ def vector_ingest_snapshot_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         from ..operators.dedup import connected_components
-        from ..operators.embedsearch import BITS_PER_BAND, N_BANDS, norm
 
         spark = batch.sparkSession
-        _check_geometry(
-            spark,
-            corpus_root,
-            N_BANDS if n_bands is None else n_bands,
-            BITS_PER_BAND if bits_per_band is None else bits_per_band,
-        )
+        _check_geometry(spark, corpus_root)
         batch = first_per_key(batch, ["vec_id"], ["embedding"])
         # zero-norm vectors have no cosine: reject up front (ANSI mode
         # would otherwise DIVIDE_BY_ZERO inside the verify and poison-
@@ -213,22 +165,13 @@ def vector_ingest_snapshot_writer(
             F.lit("degenerate").alias("scope"),
         )
         batch = batch.filter(norm(F.col("embedding")) > 0)
-        sigs = band_signatures(batch, n_bands, bits_per_band).cache()
-        a, b = sigs.alias("a"), sigs.alias("b")
+        sigs = band_signatures(batch).cache()
         pairs = (
-            a.join(
-                b,
-                (F.col("a.sig") == F.col("b.sig"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(
-                F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-                _pair_cosine("a", "b").alias("cosine_sim"),
-            )
+            cosine_pairs(band_pairs(sigs, "vec_id", "bands"), "vec_id_a", "vec_id_b", sigs)
             .filter(F.col("cosine_sim") >= tau)
-            .groupBy("vec_a", "vec_b")
-            .agg(F.max("cosine_sim").alias("cosine_sim"))
+            .select(
+                F.col("vec_id_a").alias("vec_a"), F.col("vec_id_b").alias("vec_b"), "cosine_sim"
+            )
             .cache()
         )
         try:
@@ -236,16 +179,20 @@ def vector_ingest_snapshot_writer(
                 spark, f"{corpus_root}/sig_log", batch_id
             )
             if hist is not None:
-                h = hist.alias("h")
                 matches = (
-                    sigs.alias("a")
-                    .join(h, F.col("a.sig") == F.col("h.sig"))
-                    .select(
-                        F.col("a.vec_id").alias("vec_id"),
-                        F.col("h.vec_id").alias("dup_of"),
-                        _pair_cosine("a", "h").alias("cosine_sim"),
+                    cosine_pairs(
+                        band_pairs(sigs, "vec_id", "bands", right=hist),
+                        "vec_id_a",
+                        "vec_id_b",
+                        sigs,
+                        hist,
                     )
                     .filter(F.col("cosine_sim") >= tau)
+                    .select(
+                        F.col("vec_id_a").alias("vec_id"),
+                        F.col("vec_id_b").alias("dup_of"),
+                        "cosine_sim",
+                    )
                 )
                 against_hist = first_per_key(
                     matches, ["vec_id"], [F.desc("cosine_sim"), "dup_of"]
@@ -300,19 +247,11 @@ def vector_ingest_snapshot_writer(
                 f"{corpus_root}/accepted/batch_id={batch_id}"
             )
             # index from the already-cached signatures — recomputing the
-            # n_bands*bits_per_band plane dots per accepted vector would
-            # double the batch's dominant cost for no reason
+            # N_PLANES plane dots per accepted vector would double the
+            # batch's dominant cost for no reason
             sig_w(sigs.join(rej, "vec_id", "left_anti"), batch_id)
         finally:
             pairs.unpersist()
             sigs.unpersist()
 
     return write_batch
-
-
-def _pair_cosine(left: str, right: str):
-    from ..operators.embedsearch import dot
-
-    return dot(F.col(f"{left}.embedding"), F.col(f"{right}.embedding")) / (
-        F.col(f"{left}.nrm") * F.col(f"{right}.nrm")
-    )

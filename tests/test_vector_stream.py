@@ -119,8 +119,9 @@ def test_snapshot_vector_writer_decisions(spark, tmp_path):
     ]
     assert rej == [{}, {3: (1, "history", 1.0)}, {6: (5, "batch", 1.0)}]
     sigs = {
-        (r.vec_id, r.sig)
+        (r.vec_id, sig)
         for r in read_snapshot(spark, f"{root}/sig_log").collect()
+        for sig in r.bands
     }
     assert sigs == {
         (1, "0|11001010"), (1, "1|10010010"), (1, "2|11111111"), (1, "3|10111001"),
@@ -186,25 +187,25 @@ def test_zero_norm_vector_rejected_not_crashing(spark, tmp_path):
 
 
 def test_geometry_mismatch_raises(spark, tmp_path):
-    """Restarting the writer with a different band geometry over an
-    existing corpus must fail loudly — new signatures would silently
+    """A writer over a corpus whose index was built under a different
+    band geometry must fail loudly — new signatures would silently
     match nothing against history."""
     import pytest
 
     root = str(tmp_path / "vecs")
+    spark.createDataFrame([(4, 16)], "n_bands int, bits_per_band int").write.parquet(
+        f"{root}/geometry"
+    )
     write = vector_ingest_snapshot_writer(root)
-    write(spark.createDataFrame([(1, _block(0))], SCHEMA), 0)
-    bad = vector_ingest_snapshot_writer(root, bits_per_band=16)
     with pytest.raises(ValueError, match="geometry|bands"):
-        bad(spark.createDataFrame([(2, _block(8))], SCHEMA), 1)
+        write(spark.createDataFrame([(2, _block(8))], SCHEMA), 0)
 
 
 def test_band_signatures_match_batch_dedup_pass(spark):
-    """The streaming signature assembly and q_dedup_embed must stay
-    ONE family: reconstructing the batch pass's near-dup pair report
-    from band_signatures reproduces it exactly. (The assembly is
-    duplicated in streaming/vectors.py and embedsearch.py; this test
-    pins bit-equivalence until a shared kernel replaces both.)"""
+    """q_dedup_embed's pair report equals a plain, unsalted band
+    self-join over the band builder the streaming screen also uses
+    (embedsearch.band_signatures): the salted functions/lsh.band_pairs
+    plan and the id join-back for the cosine verify change no pair."""
     from pyspark.sql import functions as F
 
     from football_data_pipeline_spark.catalog import load
@@ -212,10 +213,12 @@ def test_band_signatures_match_batch_dedup_pass(spark):
         COSINE_VERIFY,
         q_dedup_embed,
     )
-    from football_data_pipeline_spark.streaming.vectors import band_signatures
+    from football_data_pipeline_spark.operators.embedsearch import band_signatures
 
     sf = "/root/testdata/sf0.001"
-    sigs = band_signatures(load(spark, sf, "embeddings"))
+    sigs = band_signatures(load(spark, sf, "embeddings")).select(
+        "vec_id", "embedding", "nrm", F.explode("bands").alias("sig")
+    )
     a, b = sigs.alias("a"), sigs.alias("b")
     mine = {
         (r.vec_a, r.vec_b)

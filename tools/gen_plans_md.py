@@ -152,8 +152,9 @@ KNOWN_NOTES = {
         "PLANS.md staleness guard (tests/test_plans_md.py)"
     ),
     "q_video_frame_dedup": (
-        "counts are the REAL pair-stage shape (band-join/star-collapse/"
-        "Hamming-verify) rebuilt lazily via _phash_pair_plan — the "
+        "counts are the REAL pair-stage shape (star collapse, the salted "
+        "functions/lsh.band_pairs band join, Hamming verify) rebuilt "
+        "lazily via _phash_pair_plan — the "
         "executed query checkpoints this stage eagerly, so its final "
         "plan is a checkpoint scan; shape also pytest-locked in "
         "tests/test_multimodal.py, result oracle-checked"
@@ -164,7 +165,8 @@ KNOWN_NOTES = {
         "pytest-locked, result oracle-checked"
     ),
     "q_media_dedup": (
-        "final plan shows the lazy history band probe + owner window; "
+        "final plan shows the lazy history band probe (band_pairs' "
+        "history form) + owner window; "
         "the WITHIN-BATCH pair stage is the same eager-checkpointed "
         "shared pass as q_audio_near_dup (shape pytest-locked via "
         "_phash_pair_plan), and connected-components rounds checkpoint "
