@@ -11,34 +11,38 @@ is shared. Callers keep their verify step (Jaccard, cosine, Hamming),
 joined back to their payload by id, so shuffle bytes through the
 band join and the distinct are id-sized, never payload-sized.
 
-The skew policy, one for every site:
+The plan is a plain, unhinted equi-join: the planner broadcasts a
+band stream that fits under the broadcast threshold and sort-merges
+a larger one, and AQE sizes the partitions from the bytes it sees.
+The history form pairs batch rows with history rows only, so
+per-batch cost is arrival × bucket occupancy, the incremental-dedup
+asymptote, and a small batch is the broadcast side against the
+streamed history.
 
-- **shuffle_hash on pinned partitions.** Under a broadcast self-join
-  the whole pair explosion runs in the probe task(s), and AQE
-  coalesces the tiny band stream to ONE partition first. A
-  ``repartition(defaultParallelism, keys)`` (which AQE never
-  coalesces) plus a ``shuffle_hash`` join spreads bucket pair
-  generation across the cores; the ``repartition`` after the
-  ``distinct`` re-spreads the candidates, so the verify never
-  inherits a few coalesced post-shuffle partitions.
-- **Salted buckets.** This corpus has template mega-buckets (~1k reps
-  sharing one band value → ~500k pairs each), and a bucket of K rows
-  would generate all its K²/2 pairs in the single task that owns it.
-  The split side is salted by ``pmod(hash(id), PAIR_SALT)`` and the
-  other side replicated across all salts, so one bucket's pairs
-  spread over PAIR_SALT tasks at the cost of a PAIR_SALT× copy of the
-  (id-sized) replicated side. The result set is unchanged: pair
-  (x, y) forms only in partition (band, value, salt(split id)).
-  Measured at sf0.1 on q_dedup_minhash (interleaved A/B, salt 1 vs
-  8): wall-clock statistically indistinguishable, since the md5
-  signatures dominate there and the widest bucket fits one task. The
-  salt is kept for 100 TB: per-task pair generation is bounded by
-  K²/(2·PAIR_SALT) instead of K²/2, so a 10× wider template cluster
-  slows 8 tasks, not one straggler. r3's PAIR_SALT sweep chose 8.
-- **History form.** A batch probing an accepted corpus salts the
-  history side (the large one) and replicates the batch side, and
-  history is never paired with itself: per-batch cost is
-  arrival × bucket occupancy, the incremental-dedup asymptote.
+A salted skew plan (split side salted by ``pmod(hash(id), 8)``, the
+other side replicated 8×, ``shuffle_hash`` on ``defaultParallelism``
+pinned partitions, a re-spread after the ``distinct``) was tried as
+the rule for every site and measured against this plain join on a
+4-core, 16 GB box, interleaved in one session:
+
+- a 500-document micro-batch (the streaming writers' self form):
+  0.76 s salted vs 0.58 s plain per call (median of 6);
+- sf0.1 queries (median of 6): q_dedup_minhash 7.56 vs 6.77 s,
+  q_ngram_jaccard 3.14 vs 3.49, q_video_frame_dedup 1.45 vs 1.48,
+  q_lsh_recall 7.29 vs 6.92, q_dedup_embed 3.44 vs 4.10 — only
+  q_dedup_embed was faster salted;
+- a 600k-row band stream with one 4,000-row bucket (8.9M pairs):
+  the ``shuffle_hash`` build over pinned partitions failed with
+  "not enough memory to build hash map" at a 4 GB driver heap, and
+  the same salted join left to the planner took 19.1 s vs 10.1 s
+  plain (0 of 4 runs faster).
+
+So no salt: at every measured size the 8× copy of one side costs more
+than the pair generation it spreads. A template mega-bucket of K rows
+still generates its K²/2 pairs in the one task that owns it; when a
+corpus grows buckets wide enough to straggle, the measured fix is a
+split of the hot buckets only (found by a bucket-size count), not a
+copy of every row.
 """
 
 from __future__ import annotations
@@ -48,10 +52,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: each band bucket's pair generation is split across this many tasks
-#: (skew salt for template mega-buckets)
-PAIR_SALT = 8
-
 
 def band_pairs(
     left: DataFrame,
@@ -60,9 +60,12 @@ def band_pairs(
     right: DataFrame | None = None,
     by: Sequence[str] = (),
 ) -> DataFrame:
-    """Distinct ``(*by, {id}_a, {id}_b)`` pairs of rows that share
+    """Distinct ``({id}_a, {id}_b)`` pairs of rows that share
     ``(by…, band index, band value)``; ``bands`` is an array column
-    (or an expression over each side's columns) of band values.
+    (or an expression over each side's columns) of band values. The
+    ``by`` keys only restrict the pairing: ids determine them, so the
+    distinct runs over the two ids alone (keeping a string ``kind``
+    key in it made q_media_curation 40 → 53 s at sf0.1).
 
     Self form (``right`` is None): pairs within ``left``, ``{id}_a <
     {id}_b``. History form: ``{id}_a`` from ``left`` (the batch),
@@ -70,19 +73,11 @@ def band_pairs(
     ``by`` and what ``bands`` reads."""
     by = list(by)
     a, b = f"{id}_a", f"{id}_b"
-    keys = [*by, "band", "sig", "salt"]
 
     def explode(df: DataFrame, name: str) -> DataFrame:
         return df.select(*by, F.col(id).alias(name), F.posexplode(bands).alias("band", "sig"))
 
-    if right is None:
-        split, split_id, copies = explode(left, a), a, explode(left, b)
-    else:
-        split, split_id, copies = explode(right, b), b, explode(left, a)
-    num_parts = left.sparkSession.sparkContext.defaultParallelism
-    split = split.withColumn("salt", F.pmod(F.hash(split_id), F.lit(PAIR_SALT)))
-    copies = copies.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(PAIR_SALT - 1))))
-    pairs = split.repartition(num_parts, *keys).join(copies.hint("shuffle_hash"), keys)
+    pairs = explode(left, a).join(explode(left if right is None else right, b), [*by, "band", "sig"])
     if right is None:
         pairs = pairs.filter(F.col(a) < F.col(b))
-    return pairs.select(*by, a, b).distinct().repartition(num_parts)
+    return pairs.select(a, b).distinct()

@@ -6,9 +6,9 @@ turns pairs into a keep/drop list:
 - exact (canonical-form): hash of the sorted distinct word set —
   catches reordered/repeated-word duplicates that byte-exact hashing
   misses (testdata has 0 byte-exact but thousands of set-equal pairs);
-- MinHash + LSH banding: 18 signatures, 3 bands × 6 rows, salted
-  bucket-local pair generation (functions/lsh.band_pairs) and true Jaccard
-  verification. This is THE 100 TB dedup path: cost is O(docs × H)
+- MinHash + LSH banding: 18 signatures, 3 bands × 6 rows,
+  bucket-local pair generation (functions/lsh.band_pairs) and true
+  Jaccard verification. This is THE 100 TB dedup path: cost is O(docs × H)
   for signatures plus bucket-local pair generation — never an
   all-pairs product;
 - SimHash: 16-bit sign-sum fingerprint; identical word sets collide
@@ -33,9 +33,9 @@ measured on a one-off corpus and are superseded by these):
 - q_dedup_minhash: 4.6s → 116s while output pairs grew 35.9×
   (25,735 → 922,481) — time tracks OUTPUT pairs sublinearly, the
   correct asymptote for pair-emitting dedup (generation is
-  inherently quadratic per cluster; banding+salting keeps
-  everything else linear). r3's lsh.PAIR_SALT sweep conclusion stands:
-  default 8.
+  inherently quadratic per cluster; banding keeps everything else
+  linear). This probe ran the salted pair plan that
+  functions/lsh.py records as measured slower and removed.
 - q_ngram_jaccard: 3.4s → 12s while output rows grew 4 → 223,988
   (the probe's copy families are shingle-level near-dups, unlike
   the word-shuffled sf duplicates).
@@ -321,8 +321,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
        band): this corpus is template-generated with millions of
        0.3-0.8-Jaccard pairs that 2-row bands would admit and the
        ≥0.9 verify would then discard.
-    3. band self-join on signature (shuffle on sig — collision
-       buckets only, never all-pairs) → distinct rep pairs → verify
+    3. band self-join on (band, signature) through
+       functions/lsh.band_pairs (collision buckets only, never
+       all-pairs) → distinct rep pairs → verify
        against true Jaccard. Intra-group duplicates (Jaccard 1.0) are
        q_dedup_exact's output, not repeated here; group sizes ride
        along so downstream can weight clusters.
@@ -569,7 +570,7 @@ def ngram_dedup_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
         _band_sigs(F.col("shingles"), NGRAM_BANDS, NGRAM_ROWS, salt_fmt="g{i}:"),
         by=("lang", "source"),
     )
-    ga = grp.select(F.col("rid").alias("rid_a"), F.col("shingles").alias("sh_a"))
+    ga = grp.select("lang", "source", F.col("rid").alias("rid_a"), F.col("shingles").alias("sh_a"))
     gb = grp.select(F.col("rid").alias("rid_b"), F.col("shingles").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
     near_pairs = (

@@ -69,26 +69,35 @@ from ..operators.embedsearch import (
 #: ingest gate drops only near-copies, not merely-related content.
 VECTOR_DUP_TAU = 0.92
 
+#: the signature index's row layout, kept in the geometry record: one
+#: (vec_id, embedding, nrm, bands) row per accepted vector
+_INDEX_LAYOUT = "vector rows"
+
 
 def _check_geometry(spark, corpus_root: str) -> None:
     """Persist the band geometry on first write; raise on mismatch.
     A geometry change makes every new signature disjoint from the
-    index — history screening would silently match NOTHING."""
+    index — history screening would silently match NOTHING. The
+    record also names the index's row layout, so an index written
+    one row per (vector, band) fails here instead of deep inside the
+    history probe."""
     from pyspark.errors import AnalysisException
 
     path = f"{corpus_root}/geometry"
+    want = (N_BANDS, BITS_PER_BAND, _INDEX_LAYOUT)
     try:
-        row = spark.read.parquet(path).collect()[0]
-        if (row.n_bands, row.bits_per_band) != (N_BANDS, BITS_PER_BAND):
+        row = spark.read.parquet(path).collect()[0].asDict()
+        got = (row["n_bands"], row["bits_per_band"], row.get("layout", "band rows"))
+        if got != want:
             raise ValueError(
                 f"signature index at {corpus_root} was built with "
-                f"{row.n_bands} bands x {row.bits_per_band} bits; "
-                f"writer built for {N_BANDS} x {BITS_PER_BAND} — "
-                "rebuild the index or match the recorded geometry"
+                f"{got[0]} bands x {got[1]} bits ({got[2]} layout); "
+                f"writer built for {N_BANDS} x {BITS_PER_BAND} "
+                f"({_INDEX_LAYOUT} layout) — rebuild the index"
             )
     except AnalysisException:
         spark.createDataFrame(
-            [(N_BANDS, BITS_PER_BAND)], "n_bands int, bits_per_band int"
+            [want], "n_bands int, bits_per_band int, layout string"
         ).write.mode("overwrite").parquet(path)
 
 

@@ -1,20 +1,41 @@
 """The engine's one candidate-pair rule for LSH band joins
 (functions/lsh.py): ``band_pairs`` returns exactly the pairs of rows
 that share a (by…, band index, band value) bucket, each once, in the
-self form and in the batch-vs-history form, through a salted
-equi-join plan that never pairs all rows with all rows.
+self form and in the batch-vs-history form, through a band
+equi-join that never pairs all rows with all rows, broadcast or
+sort-merged.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from football_data_pipeline_spark.functions.lsh import PAIR_SALT, band_pairs
+from football_data_pipeline_spark.functions.lsh import band_pairs
 
 SCHEMA = "id long, g string, bands array<string>"
+#: rows in the crafted band-0 mega-bucket
+WIDE = 24
+
+
+@pytest.fixture(params=["broadcast", "sort-merge"])
+def join_mode(request, spark):
+    """Run under the planner's two band-join strategies: the default
+    threshold broadcasts these tiny inputs; -1 forces a sort-merge
+    join, the plan a band stream above the threshold gets."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if request.param == "sort-merge":
+        spark.conf.set(key, "-1")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _plan(df) -> str:
+    """The executed plan, after AQE's runtime re-planning."""
+    df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -29,13 +50,11 @@ def _brute(rows, pairable):
 
 
 def _mega_bucket_rows():
-    # one band-0 mega-bucket wider than PAIR_SALT (every salt owns
-    # several left occurrences), a band-1 bucket that repeats a band-0
+    # one band-0 mega-bucket, a band-1 bucket that repeats a band-0
     # pair (must not duplicate it), a value that equals a band-0 value
     # but sits in band 2 (must not pair across band indices), and
     # singletons
-    width = 3 * PAIR_SALT
-    rows = [(i, "g", ["hot", f"u{i}", f"w{i}"]) for i in range(width)]
+    rows = [(i, "g", ["hot", f"u{i}", f"w{i}"]) for i in range(WIDE)]
     rows[0] = (0, "g", ["hot", "twin", "w0"])
     rows[1] = (1, "g", ["hot", "twin", "w1"])
     rows.append((100, "g", ["c100", "twin", "x"]))
@@ -44,7 +63,7 @@ def _mega_bucket_rows():
     return rows
 
 
-def test_self_form_equals_brute_force_each_pair_once(spark):
+def test_self_form_equals_brute_force_each_pair_once(spark, join_mode):
     rows = _mega_bucket_rows()
     got = [
         (r.id_a, r.id_b)
@@ -54,7 +73,7 @@ def test_self_form_equals_brute_force_each_pair_once(spark):
     assert len(got) == len(set(got))
     assert set(got) == want
     assert (0, 1) in want and (100, 101) not in want
-    assert len(want) > PAIR_SALT * PAIR_SALT
+    assert len(want) > WIDE * (WIDE - 1) // 2
 
 
 def test_by_groups_never_pair_across_groups(spark):
@@ -67,13 +86,13 @@ def test_by_groups_never_pair_across_groups(spark):
         (5, "z", ["a", "b"]),
     ]
     out = band_pairs(spark.createDataFrame(rows, SCHEMA), "id", "bands", by=["g"])
-    got = {(r.g, r.id_a, r.id_b) for r in out.collect()}
-    assert got == {("x", 1, 2), ("y", 3, 4)}
-    assert set((a, b) for _, a, b in got) == _brute(rows, lambda a, b: a < b)
+    got = {(r.id_a, r.id_b) for r in out.collect()}
+    assert got == {(1, 2), (3, 4)}
+    assert got == _brute(rows, lambda a, b: a < b)
 
 
-def test_history_form_pairs_batch_with_history_only(spark):
-    hist_rows = [(i, "g", ["hot", f"h{i}", "k"]) for i in range(2 * PAIR_SALT)]
+def test_history_form_pairs_batch_with_history_only(spark, join_mode):
+    hist_rows = [(i, "g", ["hot", f"h{i}", "k"]) for i in range(16)]
     batch_rows = [
         (50, "g", ["hot", "n50", "m"]),
         (51, "g", ["hot", "n51", "m"]),  # shares "m" with 50 — batch-only
@@ -95,7 +114,7 @@ def test_history_form_pairs_batch_with_history_only(spark):
     assert (52, 3) in want
 
 
-def test_both_forms_plan_band_equi_joins_only(spark):
+def test_both_forms_plan_band_equi_joins_only(spark, join_mode):
     rows = _mega_bucket_rows()
     df = spark.createDataFrame(rows, SCHEMA)
     for pairs in (
@@ -105,4 +124,5 @@ def test_both_forms_plan_band_equi_joins_only(spark):
         plan = _plan(pairs)
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        assert "ShuffledHashJoin" in plan
+        want = "BroadcastHashJoin" if join_mode == "broadcast" else "SortMergeJoin"
+        assert want in plan

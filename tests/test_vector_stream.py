@@ -201,11 +201,32 @@ def test_geometry_mismatch_raises(spark, tmp_path):
         write(spark.createDataFrame([(2, _block(8))], SCHEMA), 0)
 
 
+def test_old_index_layout_raises(spark, tmp_path):
+    """An index written one row per (vector, band) under the same
+    band constants — a geometry record without a layout — must fail
+    the geometry check with the rebuild error, not later inside the
+    history probe."""
+    import pytest
+
+    from football_data_pipeline_spark.operators.embedsearch import (
+        BITS_PER_BAND,
+        N_BANDS,
+    )
+
+    root = str(tmp_path / "vecs")
+    spark.createDataFrame(
+        [(N_BANDS, BITS_PER_BAND)], "n_bands int, bits_per_band int"
+    ).write.parquet(f"{root}/geometry")
+    write = vector_ingest_snapshot_writer(root)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        write(spark.createDataFrame([(2, _block(8))], SCHEMA), 0)
+
+
 def test_band_signatures_match_batch_dedup_pass(spark):
-    """q_dedup_embed's pair report equals a plain, unsalted band
+    """q_dedup_embed's pair report equals a hand-written band
     self-join over the band builder the streaming screen also uses
-    (embedsearch.band_signatures): the salted functions/lsh.band_pairs
-    plan and the id join-back for the cosine verify change no pair."""
+    (embedsearch.band_signatures): the functions/lsh.band_pairs plan
+    and the id join-back for the cosine verify change no pair."""
     from pyspark.sql import functions as F
 
     from football_data_pipeline_spark.catalog import load

@@ -152,7 +152,7 @@ KNOWN_NOTES = {
         "PLANS.md staleness guard (tests/test_plans_md.py)"
     ),
     "q_video_frame_dedup": (
-        "counts are the REAL pair-stage shape (star collapse, the salted "
+        "counts are the REAL pair-stage shape (star collapse, the "
         "functions/lsh.band_pairs band join, Hamming verify) rebuilt "
         "lazily via _phash_pair_plan — the "
         "executed query checkpoints this stage eagerly, so its final "
