@@ -6,9 +6,8 @@
 video operators use: each operator is a module-level per-row function
 (decode + stats/fingerprint, or a synthesizer) plus one ``map_rows``
 call, so the batch loop, the key pass-through and the output column
-names live here once. The two vectorized kernels
-(multimodal.extract_features, embedsearch's matrix product) keep
-their own ``mapInPandas`` bodies.
+names live here once. It is the package's only ``mapInPandas``
+body.
 
 The r13 media kernels memoize pure per-payload computations
 (decode + fingerprint/stats) with ``lru_cache`` keyed on the payload

@@ -13,11 +13,10 @@ exactly like the image side:
   ``encode_wav``/``decode_wav`` round-trip exactly. No native deps;
   the same kernel runs unchanged under ``mapInPandas`` at any scale.
 - compressed formats (MP3/OGG/FLAC/AAC) require an audio library
-  none of which ship in this build — ``decode_audio`` raises
-  ``NotImplementedError`` when no decoder is importable (honest
-  gating, the JPEG rule), and ``try_decode_wav`` returns None on any
-  unparseable payload so one bad row can never kill a mapInPandas
-  stage.
+  none of which ship in this build: ``try_decode_wav`` returns None
+  on them and on any other unparseable payload, so such a row reads
+  as undecoded (the JPEG rule) and one bad row can never kill a
+  mapInPandas stage.
 - ``audio_stats`` computes REAL signal statistics over decoded PCM
   (duration, RMS level, zero-crossing rate, clip ratio, silence
   ratio — the standard ingest-gate features); ``audio_quality_gate``
@@ -141,33 +140,6 @@ def try_decode_wav(payload: bytes) -> tuple[int, int, int, bytes] | None:
         return decode_wav(bytes(payload))
     except (ValueError, struct.error):
         return None
-
-
-def _try_import_audio_decoder() -> bool:
-    try:  # pragma: no cover - audio libs absent in this environment
-        import soundfile  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_audio(payload: bytes) -> tuple[int, int, int, bytes]:
-    """WAV decodes via the pure-Python parser above — REAL in every
-    environment. Compressed audio (MP3/OGG/FLAC) needs an audio
-    library; without one it raises ``NotImplementedError`` (honest
-    gating, never a fake decode). PINNED CONSTRAINT: this sandbox
-    forbids installs, so the compressed branch is perpetually gated
-    here (MIGRATION.md 'Optional-dependency constraints')."""
-    got = try_decode_wav(payload)
-    if got is not None:
-        return got
-    if not _try_import_audio_decoder():
-        raise NotImplementedError(
-            "compressed-audio decode requires soundfile/librosa; not "
-            "available in this build (RIFF/WAVE PCM decode is built in)"
-        )
-    raise NotImplementedError("non-WAV decode path not wired")  # pragma: no cover
 
 
 AUDIO_STATS_SCHEMA = (

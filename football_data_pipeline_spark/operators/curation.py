@@ -253,7 +253,7 @@ def q_dedup_best_of_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     grp = minhash_rep_groups(docs)
-    pairs = minhash_verified_pairs(spark, grp).select("doc_a", "doc_b")
+    pairs = minhash_verified_pairs(grp).select("doc_a", "doc_b")
     # the cached group table IS the fingerprint→rep mapping the
     # member expansion needs (f = fingerprint(text), rid = min
     # doc_id) — reuse it instead of re-aggregating the corpus

@@ -329,7 +329,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
        along so downstream can weight clusters.
     """
     docs = load(spark, sf_dir, "documents")
-    return minhash_verified_pairs(spark, minhash_rep_groups(docs))
+    return minhash_verified_pairs(minhash_rep_groups(docs))
 
 
 def minhash_rep_groups(docs: DataFrame) -> DataFrame:
@@ -362,7 +362,7 @@ def minhash_rep_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_verified_pairs(spark: SparkSession, grp: DataFrame) -> DataFrame:
+def minhash_verified_pairs(grp: DataFrame) -> DataFrame:
     """Signature → band-bucket self-join → exact-Jaccard verify over
     a rep-group table from :func:`minhash_rep_groups` (q_dedup_minhash
     minus the collapse stage — see its docstring for the plan
@@ -516,7 +516,7 @@ def _ngram_oracle() -> str:
     """
 
 
-def ngram_dedup_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
+def ngram_dedup_pairs(docs: DataFrame) -> DataFrame:
     """Word-3-gram duplicate detection over any (doc_id, lang, source,
     text) DataFrame — the kernel behind q_ngram_jaccard, kept separate
     so tests can drive it with a corpus that actually contains
@@ -617,7 +617,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the star output differ. ``tests/test_ngram_dedup.py`` drives the
     kernel with a crafted corpus where both pair kinds are non-empty.
     """
-    return ngram_dedup_pairs(spark, load(spark, sf_dir, "documents"))
+    return ngram_dedup_pairs(load(spark, sf_dir, "documents"))
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 26) -> DataFrame:

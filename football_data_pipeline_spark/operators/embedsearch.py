@@ -548,10 +548,7 @@ def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays one combine-reduced vec_id-keyed shuffle (one row per train
     vector after map-side max) plus the final label-keyed rollup. The scoring
     here is the fold-based dot product (oracle-exact summation
-    order); for throughput pipelines use
-    :func:`eval_max_similarity_arrow` — one numpy matmul per Arrow
-    batch, measured 14× faster at 10× probe density (the interpreted
-    HOF fold allocates an array per pair). At extreme eval sizes the
+    order). At extreme eval sizes the
     IVF/LSH bucketing upstream (q_knn_ivf / q_dedup_embed) bounds
     candidates first.
     """
@@ -589,8 +586,8 @@ def eval_max_similarity(train: DataFrame, ev: DataFrame) -> DataFrame:
     cosine against one is undefined — ``try_divide`` makes it NULL
     (ANSI sessions would otherwise raise mid-stage), F.max skips
     NULLs, and a zero-norm TRAIN vector surfaces with max_sim NULL.
-    The Arrow twin below mirrors exactly this. The oracle corpus has
-    no zero vectors, so the DuckDB side never exercises the branch.
+    The oracle corpus has no zero vectors, so the DuckDB side never
+    exercises the branch.
     """
     evn = ev.select(
         F.col("embedding").alias("ev_emb"), norm(F.col("embedding")).alias("ev_nrm")
@@ -610,78 +607,3 @@ def eval_max_similarity(train: DataFrame, ev: DataFrame) -> DataFrame:
     )
 
 
-#: guard for the Arrow kernel's plan-time eval collect: benchmarks
-#: are thousands of rows by construction; refuse quietly unbounded
-#: eval sides rather than OOM the driver (same contract style as
-#: resolution.MAX_RANK_CANDIDATES)
-MAX_EVAL_VECTORS = 100_000
-
-
-def eval_max_similarity_arrow(
-    train: DataFrame, ev: DataFrame, max_eval: int = MAX_EVAL_VECTORS
-) -> DataFrame:
-    """Throughput twin of :func:`eval_max_similarity`: one Arrow
-    batch × eval matrix matmul per partition instead of a per-pair
-    expression fold. The fold form is the ORACLE-EXACT baseline
-    (identical left-to-right summation in both engines) but Catalyst
-    evaluates higher-order functions interpreted, allocating a
-    64-float array per pair — measured 34s for 1.25M pairs at 10×
-    probe density vs 2.4s for this kernel (14×; an unrolled 64-term
-    codegen expression was tried and is 2.5× SLOWER than the fold —
-    the tree depth defeats codegen). numpy float64 matmul may differ
-    from the sequential fold in the last ulps (pairwise summation),
-    so this path feeds pipelines, not oracle hashes; parity is pytest
-    -checked at 1e-9.
-
-    The eval side is collected to a broadcast matrix — bounded by
-    ``max_eval`` (a benchmark set is small by definition; a guard
-    raises rather than letting a mis-wired corpus-sized DataFrame
-    OOM the driver). Train-side layout, batching, and the per-vector
-    max all stay distributed.
-    """
-    import numpy as np
-    import pandas as pd
-
-    ev_rows = ev.limit(max_eval + 1).collect()
-    if len(ev_rows) > max_eval:
-        raise ValueError(
-            f"eval side exceeds MAX_EVAL_VECTORS={max_eval}; "
-            "bucket it first (q_knn_ivf / q_dedup_embed) or raise the cap"
-        )
-    if not ev_rows:
-        return train.select(
-            "vec_id", "label", F.lit(0.0).alias("max_sim")
-        ).filter(F.lit(False))
-    E = np.array([np.asarray(r.embedding, dtype=np.float64) for r in ev_rows])
-    # zero-norm parity with the fold baseline: a cosine against a
-    # zero EVAL vector is NULL there (double div-by-zero), which
-    # F.max skips — equivalent to dropping those eval rows; a zero
-    # TRAIN vector makes every sim NULL → the fold emits the row
-    # with max_sim NULL, mirrored below via the nullable Float64
-    # column (plain float64 NaN would arrive as NaN, not NULL).
-    e_nrm = np.linalg.norm(E, axis=1, keepdims=True)
-    En = (E / np.where(e_nrm == 0, 1.0, e_nrm))[e_nrm[:, 0] != 0]
-    bE = train.sparkSession.sparkContext.broadcast(En)
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                # np.array([]) is 1-D → axis=1 norm would AxisError
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            nrm = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(nrm == 0, 1.0, nrm)
-            if bE.value.shape[0]:
-                ms = pd.array((Xn @ bE.value.T).max(axis=1), dtype="Float64")
-            else:
-                ms = pd.array([pd.NA] * len(pdf), dtype="Float64")
-            ms[nrm[:, 0] == 0] = pd.NA
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "label": pdf["label"], "max_sim": ms}
-            )
-
-    return train.select("vec_id", "label", "embedding").mapInPandas(
-        kernel, "vec_id long, label int, max_sim double"
-    )

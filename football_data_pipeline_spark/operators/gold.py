@@ -372,9 +372,9 @@ def team_odds_lookup(
     Scale shape: teams/matched are broadcast; the only full-table
     work is one scan of fixtures (semi-join probe + kickoff filter →
     TakeOrderedAndProject top-1) and one scan of odds_history for the
-    point lookup. On a real deployment the odds scan prunes via the
-    bucketed/partitioned layout (sources/bucketing.py); at any scale
-    nothing here shuffles more than the candidate set.
+    point lookup. On a real deployment the odds scan prunes via a
+    partitioned layout (sources/partitions.py); at any scale nothing
+    here shuffles more than the candidate set.
     """
     matched = teams.filter(F.col("name").like(f"%{team_like}%")).select(
         F.col("id").alias("__m_id")

@@ -17,12 +17,12 @@ Decode support is tiered by what this environment can honestly do:
   resampling, ``image_stats`` computes true per-channel statistics.
   No native deps; the same kernels run unchanged under
   ``mapInPandas`` at any scale.
-- other compressed formats (JPEG/...) still require PIL and stay
-  gated behind the import probe — ``decode_image`` raises
-  ``NotImplementedError`` when no decoder is importable.
+- other compressed formats (JPEG/GIF/WEBP) decode only when PIL is
+  importable; without it ``try_decode_pixels`` returns None and the
+  row reads as undecoded.
 - non-image payloads keep the deterministic byte-level fallback in
-  ``extract_features``/``resize_images`` so the plumbing remains
-  exercised end-to-end on the synthetic text corpus. A payload that
+  ``resize_images`` so the plumbing remains exercised end-to-end on
+  the synthetic text corpus. A payload that
   merely *starts* with an image magic but fails to parse takes the
   same fallback (``try_decode_pixels``) instead of killing the
   mapInPandas stage on one bad row.
@@ -32,15 +32,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
-from ..functions.memo import map_rows, payload_memo
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.lsh import band_pairs
+from ..functions.memo import map_rows, payload_memo
 from ..registry import query
 
 # ---------------------------------------------------------------------------
@@ -328,27 +326,6 @@ def resize_nearest(
     xs = (np.arange(new_width) * width) // new_width
     return px[np.ix_(ys, xs)].tobytes()
 
-FEATURE_SCHEMA = (
-    "asset_id long, mime string, n_bytes long, checksum string, "
-    "fake_width int, fake_height int, decoded boolean"
-)
-
-
-def to_media_assets(docs: DataFrame) -> DataFrame:
-    """Wrap text docs as synthetic media assets: payload = utf-8
-    bytes, metadata struct alongside — the column layout real
-    image/audio tables use."""
-    return docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.struct(
-            F.lit("image/fake").alias("mime"),
-            F.octet_length("text").alias("n_bytes"),
-            F.col("source").alias("origin"),
-        ).alias("meta"),
-    )
-
-
 def _try_import_decoder():
     try:  # pragma: no cover - decoder libs absent in this environment
         import PIL.Image  # noqa: F401
@@ -356,59 +333,6 @@ def _try_import_decoder():
         return True
     except ImportError:
         return False
-
-
-def decode_image(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode to (width, height, top-down RGB bytes).
-
-    PPM/BMP/PNG decode via the pure-Python codecs above — REAL in
-    every environment. Other compressed formats (JPEG/...) need PIL;
-    without it they raise ``NotImplementedError`` (honest gating,
-    not a fake decode).
-    """
-    direct = decode_pixels(payload)
-    if direct is not None:
-        return direct
-    if not _try_import_decoder():
-        raise NotImplementedError(
-            "compressed-image decode requires PIL/opencv; not available in "
-            "this build (PPM/BMP decode is built in)"
-        )
-    import io
-
-    import PIL.Image
-
-    img = PIL.Image.open(io.BytesIO(payload)).convert("RGB")
-    return img.width, img.height, img.tobytes()
-
-
-def extract_features(assets: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over media payloads.
-
-    Deterministic fake kernel (byte stats + md5 checksum + derived
-    fake dimensions) standing in for decode→resize→embed; swap the
-    body for a real decoder without touching the pipeline shape.
-    """
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            payloads = pdf["payload"]
-            n_bytes = payloads.map(len)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "mime": pdf["meta"].map(lambda m: m["mime"]),
-                    "n_bytes": n_bytes,
-                    "checksum": payloads.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
-                    "fake_width": (64 + n_bytes % 512).astype("int32"),
-                    "fake_height": (64 + (n_bytes // 7) % 512).astype("int32"),
-                    "decoded": False,  # stub kernel never decodes
-                }
-            )
-
-    return assets.mapInPandas(featurize, schema=FEATURE_SCHEMA)
 
 
 @query(
@@ -426,8 +350,7 @@ def extract_features(assets: DataFrame) -> DataFrame:
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata projection over the binary payload — the queryable
     half of the multimodal layout (pure built-ins: octet_length +
-    md5 over bytes), matching what extract_features computes in its
-    Pandas kernel.
+    md5 over bytes).
     """
     docs = load(spark, sf_dir, "documents")
     n = F.octet_length("text").cast("long")
@@ -519,40 +442,6 @@ def image_stats(assets: DataFrame) -> DataFrame:
     NULL-stats row with decoded=false rather than fake numbers."""
     payloads = assets.select("asset_id", "payload")
     return map_rows(payloads, _image_stats_row, STATS_SCHEMA)
-
-
-FRAME_SIZE = 256  # stub "frame" = fixed byte chunk
-
-
-def sample_frames(assets: DataFrame, every_n: int = 4) -> DataFrame:
-    """Frame sampling for video-shaped payloads: one output row per
-    kept frame (frame index, frame bytes).
-
-    Implemented with built-ins only — no Python in the hot path: the
-    payload splits into fixed-size chunks via a sequence+transform
-    over substrings of the binary, explodes to rows, and keeps every
-    n-th frame. At scale this is a generator (explode) inside
-    whole-stage codegen; the decode of each kept frame is then the
-    mapInPandas stage (stubbed, as above).
-    """
-    # empty payloads are dropped up front: sequence(0, n_frames − 1)
-    # with n_frames = 0 would be sequence(0, -1) = [0, -1] (Spark
-    # sequences step downward), yielding one spurious empty frame row
-    n_frames = F.ceil(F.octet_length("payload") / F.lit(FRAME_SIZE)).cast("int")
-    frame_idx = F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx")
-    framed = assets.filter(F.octet_length("payload") > 0).select(
-        F.col("asset_id"), F.col("payload"), frame_idx
-    )
-    return (
-        framed.filter(F.col("frame_idx") % every_n == 0)
-        .select(
-            "asset_id",
-            "frame_idx",
-            F.expr(f"substring(payload, frame_idx * {FRAME_SIZE} + 1, {FRAME_SIZE})").alias(
-                "frame_bytes"
-            ),
-        )
-    )
 
 
 # --- perceptual near-duplicate hashing (dHash) -----------------------

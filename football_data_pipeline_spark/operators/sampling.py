@@ -49,11 +49,6 @@ def sample_bucket(
     return F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(resolution))
 
 
-def hash_sample(df: DataFrame, id_col: str, rate_bp: int, salt: str) -> DataFrame:
-    """Keep ~rate_bp/10000 of rows, deterministically by id hash."""
-    return df.filter(sample_bucket(F.col(id_col), salt) < rate_bp)
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,

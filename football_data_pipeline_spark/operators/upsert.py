@@ -73,9 +73,3 @@ def delete_where(df: DataFrame, cond: Column) -> DataFrame:
     return df.filter(~F.coalesce(cond, F.lit(False)))
 
 
-def retention_filter(df: DataFrame, ts_col: str, days: int, now: Column) -> DataFrame:
-    """S7: the 180-day retention DELETE
-    (.github/workflows/football-data-pipeline.yml:661-680). On plain
-    Parquet this is filter-and-rewrite; with a date-partitioned table
-    it becomes partition drops — metadata-only at any scale."""
-    return df.filter(F.col(ts_col) >= now - F.expr(f"INTERVAL {days} DAYS"))

@@ -12,10 +12,10 @@ Decode support is tiered by what this environment can honestly do:
   the same kernel runs unchanged under ``mapInPandas`` at any
   scale.
 - compressed video (MP4/H.264/VP9/...) requires a decoder none of
-  which ship in this build — ``decode_video`` raises
-  ``NotImplementedError`` when nothing is importable (the JPEG/MP3
-  rule; pinned in MIGRATION.md), and ``try_decode_y4m`` returns
-  None on junk so one bad row never kills a mapInPandas stage.
+  which ship in this build: ``try_decode_y4m`` returns None on them
+  and on any other junk, so such a row reads as undecoded (the
+  JPEG/MP3 rule; pinned in MIGRATION.md) and one bad row never kills
+  a mapInPandas stage.
 - REAL per-frame work over decoded planes: ``video_stats`` (frame
   count, geometry, fps, duration, mean luma, scene-change count via
   mean-luma jumps), ``sample_frames_y4m`` (every-Nth frame-sample,
@@ -152,31 +152,6 @@ def try_decode_y4m(payload: bytes):
         return decode_y4m(bytes(payload))
     except (ValueError, IndexError):
         return None
-
-
-def _try_import_video_decoder() -> bool:
-    try:  # pragma: no cover - video libs absent in this environment
-        import av  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_video(payload: bytes):
-    """Y4M decodes via the pure-Python parser above — REAL in every
-    environment. Compressed video needs PyAV/ffmpeg; without one it
-    raises ``NotImplementedError`` (honest gating — the JPEG/MP3
-    rule; constraint pinned in MIGRATION.md)."""
-    got = try_decode_y4m(payload)
-    if got is not None:
-        return got
-    if not _try_import_video_decoder():
-        raise NotImplementedError(
-            "compressed-video decode requires PyAV/ffmpeg; not available "
-            "in this build (YUV4MPEG2 decode is built in)"
-        )
-    raise NotImplementedError("non-Y4M decode path not wired")  # pragma: no cover
 
 
 VIDEO_STATS_SCHEMA = (

@@ -1,6 +1,6 @@
 """Weighted reservoir sampling (Efraimidis-Spirakis A-ES): a
 deterministic, engine-portable weighted top-k per stratum — the
-missing third of the sampling family (hash_sample draws uniformly,
+missing third of the sampling family (stratified_sample draws uniformly,
 temperature_rates rescales strata; this draws WITHIN a stratum
 proportionally to a per-document weight, e.g. quality score or
 length, which is how curation teams spend a fixed token budget on

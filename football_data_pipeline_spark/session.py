@@ -4,7 +4,11 @@ Local tests run on ``local[N]``; production target is a multi-executor
 cluster, so every default here is chosen to also make sense at scale:
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 UTC session time zone (oracle parity + sane cross-cluster semantics),
-Arrow enabled for the few Pandas-UDF code paths.
+Arrow enabled for clients that collect to pandas (``toPandas()`` and
+``createDataFrame(pandas_df)``: the dashboard read surface, the
+oracle checks, ``perfbench``); in PySpark 4.1 that setting governs only
+those two, while Pandas UDFs and ``mapInPandas`` use Arrow whatever
+it is set to.
 """
 
 from __future__ import annotations

@@ -204,22 +204,6 @@ def prune_files_bloom(
     ]
 
 
-def build_file_blooms(
-    spark: SparkSession,
-    data_dir: str,
-    key_col: str,
-    num_bits: int = DEFAULT_BITS,
-    k: int = BLOOM_K,
-) -> DataFrame:
-    """Bloom words for every parquet file under ``data_dir``, keyed
-    by the real file URI (input_file_name) — the manifest sidecar a
-    writer materializes once per layout."""
-    rows = spark.read.parquet(data_dir).select(
-        F.input_file_name().alias("file"), F.col(key_col)
-    )
-    return file_blooms(rows, "file", key_col, num_bits, k)
-
-
 def read_point(
     spark: SparkSession,
     blooms: DataFrame,

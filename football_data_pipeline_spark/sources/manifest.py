@@ -134,24 +134,3 @@ def pruned_read(
     return read_files(spark, manifest, files, base_path).filter(predicate)
 
 
-def manifest_agg(manifest: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Metadata-speed aggregates: COUNT(*) / MIN / MAX answered from
-    the manifest ALONE — one aggregate over file-count-bounded rows,
-    zero data files opened (Iceberg's "scan planning answers the
-    query" trick; what ANALYZE-backed engines do for count(*)).
-    Returns one row: n_files, n_rows, and <c>_min/<c>_max for every
-    requested tracked column. SOUND ONLY on a fully-materialized
-    snapshot: pending MOR delete logs (mor.py) or unfolded
-    tombstones make the manifest an overcount — fold first, or pay
-    the scan. Min/max of an all-NULL file is NULL and min/max
-    ignores NULLs, matching the engine semantics."""
-    if cols is None:
-        cols = tracked_columns(manifest)
-    aggs = [
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.coalesce(F.sum("n_rows"), F.lit(0)).cast("long").alias("n_rows"),
-    ]
-    for c in cols:
-        aggs.append(F.min(f"{c}_min").alias(f"{c}_min"))
-        aggs.append(F.max(f"{c}_max").alias(f"{c}_max"))
-    return manifest.agg(*aggs)

@@ -71,10 +71,19 @@ def _partition_column(manifest: DataFrame, files: list[str]) -> str | None:
     return None
 
 
-def _plan(
+def plan_compaction(
     manifest: DataFrame, target_rows: int
 ) -> tuple[str | None, list[list[str]], list[str]]:
-    """(partition column, bins, keep_files) — see plan_compaction."""
+    """(partition column, bins, keep_files): first-fit-decreasing
+    packing of every file with fewer than ``target_rows`` rows into
+    bins of that capacity; right-sized files, and a small file left
+    alone in its bin, stay in ``keep_files`` untouched. On a
+    partition-encoded layout (``_partition_column``, else None) a bin
+    never crosses a partition value, so each compacted file keeps
+    min == max on it — the per-file bounds a term-bucket prune reads;
+    the NULL (default partition) files pack as their own group.
+    Deterministic: candidates ordered by (n_rows desc, path). The
+    collect is bounded by the table's FILE count."""
     if target_rows < 1:
         raise ValueError("target_rows must be >= 1")
     rows = manifest.collect()
@@ -108,48 +117,21 @@ def _plan(
     return part, bins, keep
 
 
-def plan_compaction(
-    manifest: DataFrame, target_rows: int
-) -> tuple[list[list[str]], list[str]]:
-    """(bins, keep_files): first-fit-decreasing packing of every
-    file with fewer than ``target_rows`` rows into bins of that
-    capacity; right-sized files, and a small file left alone in its
-    bin, stay in ``keep_files`` untouched. On a partition-encoded
-    layout (``_partition_column``) a bin never crosses a partition
-    value, so each compacted file keeps min == max on it — the
-    per-file bounds a term-bucket prune reads; the NULL (default
-    partition) files pack as their own group. Deterministic:
-    candidates ordered by (n_rows desc, path). The collect is
-    bounded by the table's FILE count."""
-    _, bins, keep = _plan(manifest, target_rows)
-    return bins, keep
-
-
 def compact_small_files(
-    spark: SparkSession,
-    manifest: DataFrame,
-    target_rows: int,
-    out_dir: str,
-    sort_col: str | None = None,
-) -> DataFrame:
-    """Rewrite the undersized files into ``out_dir`` (one file per
-    bin, re-sorted on ``sort_col`` when given so clustering
-    survives; a partition-encoded layout's directories are restored
-    on write) and return the NEW manifest — carried-over rows for
-    untouched files + measured rows for the compacted ones. The
-    input manifest's tracked columns are preserved."""
-    return _compact(spark, manifest, _plan(manifest, target_rows), out_dir, sort_col)
-
-
-def _compact(
     spark: SparkSession,
     manifest: DataFrame,
     plan: tuple[str | None, list[list[str]], list[str]],
     out_dir: str,
-    sort_col: str | None,
+    sort_col: str | None = None,
 ) -> DataFrame:
-    """compact_small_files for an existing ``_plan`` result, so a
-    caller that planned to decide whether to compact plans once."""
+    """Rewrite a ``plan_compaction`` plan's bins into ``out_dir`` (one
+    file per bin, re-sorted on ``sort_col`` when given so clustering
+    survives; a partition-encoded layout's directories are restored
+    on write) and return the NEW manifest — carried-over rows for
+    untouched files + measured rows for the compacted ones. The
+    input manifest's tracked columns are preserved. Taking the plan,
+    not a target, lets a caller that planned to decide whether to
+    compact plan once."""
     part, bins, keep = plan
     carried = manifest.filter(F.col("file").isin(keep))
     if not bins:

@@ -95,16 +95,6 @@ def partition_columns(spec: list[tuple]) -> dict[str, Column]:
     }
 
 
-def write_partitioned(df: DataFrame, out_dir: str, spec: list[tuple]) -> None:
-    """Write ``df`` under the spec's derived partition directories.
-    The source columns stay in the data (hidden partitioning: the
-    partition values are derivable, the reader never needs them)."""
-    staged = df.withColumns(partition_columns(spec))
-    staged.write.partitionBy(
-        [name for _, _, _, name in spec]
-    ).mode("errorifexists").parquet(out_dir)
-
-
 def eq_partition_filter(spec: list[tuple], src: str, value) -> Column:
     """The partition-space predicate equivalent to ``src = value``:
     every transform of the value pins its dimension."""
@@ -131,29 +121,6 @@ def range_partition_filter(spec: list[tuple], src: str, lo, hi) -> Column:
                 truncate_transform(hi_c, param),
             )
     return pred
-
-
-def read_eq(
-    spark: SparkSession, root: str, spec: list[tuple], src: str, value
-) -> DataFrame:
-    """Point read through the partition grid: directory pruning via
-    the mapped partition predicate (PartitionFilters in the plan),
-    exact residual filter on the source column on survivors."""
-    df = spark.read.parquet(root)
-    return df.filter(eq_partition_filter(spec, src, value)).filter(
-        F.col(src) == value
-    )
-
-
-def read_range(
-    spark: SparkSession, root: str, spec: list[tuple], src: str, lo, hi
-) -> DataFrame:
-    """Range read: truncate dims prune directories, bucket dims scan
-    (correctly); the exact BETWEEN is re-applied."""
-    df = spark.read.parquet(root)
-    return df.filter(range_partition_filter(spec, src, lo, hi)).filter(
-        F.col(src).between(lo, hi)
-    )
 
 
 # --- driver oracle: grid classification audit ---------------------------

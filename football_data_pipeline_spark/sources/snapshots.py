@@ -1089,14 +1089,16 @@ def maintain(
     post-maintenance snapshots without ``base_path``; if such a
     value must survive compaction, materialize it as a column before
     writing."""
-    from .optimize import _compact, _plan
+    from .optimize import compact_small_files, plan_compaction
 
     manifest = read_manifest(spark, log_dir)
-    plan = _plan(manifest, target_rows)  # one manifest collect per pass
+    plan = plan_compaction(manifest, target_rows)  # one manifest collect per pass
     _, bins, _ = plan
     version = None
     if bins:
-        compacted = _compact(spark, manifest, plan, fresh_dir(out_dir), sort_col)
+        compacted = compact_small_files(
+            spark, manifest, plan, fresh_dir(out_dir), sort_col
+        )
         version = commit_rewrite(spark, log_dir, compacted)
     expired, orphans = expire_snapshots(spark, log_dir, keep_latest)
     return {

@@ -3,11 +3,10 @@ the plain-Parquet lakehouse layout. Reference parity: none — scale
 extension (SURVEY.md §4.1's partitioning/clustering row, second
 dimension).
 
-The gap this closes: bucketing.py co-locates equi-joins and
-manifest.py (+ the ordered shard writer) prunes files on ONE
-clustered column — a linear sort makes per-file min/max tight on the
-leading column only. A fact table queried by 2-D boxes (customer ×
-order-date here; user × event-time, key-range × day in general)
+The gap this closes: manifest.py (+ the ordered shard writer) prunes
+files on ONE clustered column — a linear sort makes per-file min/max
+tight on the leading column only. A fact table queried by 2-D boxes
+(customer × order-date here; user × event-time, key-range × day in general)
 cannot be sorted by both dimensions at once: under an x-sort, every
 file spans the FULL y range, so a y-bounded predicate prunes nothing.
 Z-ordering maps each row's (x, y) onto one integer by interleaving

@@ -16,7 +16,6 @@ from football_data_pipeline_spark.operators.audio import (
     TONE_RATE,
     audio_quality_gate,
     audio_stats,
-    decode_audio,
     decode_wav,
     encode_wav,
     resample_nearest,
@@ -61,10 +60,10 @@ def test_junk_returns_none_not_exception():
 
 
 def test_compressed_decode_is_honestly_gated():
-    """No audio library ships in this build: a non-WAV payload must
-    raise NotImplementedError (the JPEG rule), never fake-decode."""
-    with pytest.raises(NotImplementedError, match="soundfile|WAVE"):
-        decode_audio(b"\xff\xfb\x90\x00" + b"\x00" * 64)  # MP3 magic
+    """No audio library ships in this build: a non-WAV payload reads
+    as undecoded (the JPEG rule), never as a fake decode."""
+    mp3 = b"\xff\xfb\x90\x00" + b"\x00" * 64
+    assert try_decode_wav(mp3) is None
 
 
 def test_audio_stats_known_signal(spark):

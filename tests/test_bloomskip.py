@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from football_data_pipeline_spark.sources.bloomskip import (
     bloom_probe,
-    build_file_blooms,
     file_blooms,
     prune_files_bloom,
     read_point,
@@ -25,9 +24,15 @@ def _layout(spark, base):
     return path
 
 
+def _blooms(spark, path):
+    """Bloom words for every file under ``path``, keyed by its URI."""
+    rows = spark.read.parquet(path).select(F.input_file_name().alias("file"), "id")
+    return file_blooms(rows, "file", "id")
+
+
 def test_no_false_negatives_full_sweep(spark, tmp_path):
     path = _layout(spark, tmp_path)
-    blooms = build_file_blooms(spark, path, "id").cache()
+    blooms = _blooms(spark, path).cache()
     truth = spark.read.parquet(path).select(
         F.input_file_name().alias("file"), F.col("id").alias("k")
     )
@@ -42,7 +47,7 @@ def test_no_false_negatives_full_sweep(spark, tmp_path):
 
 def test_read_point_equals_exact_filter(spark, tmp_path):
     path = _layout(spark, tmp_path)
-    blooms = build_file_blooms(spark, path, "id")
+    blooms = _blooms(spark, path)
     keys = spark.createDataFrame([(3,), (400,), (777,)], "id long")
     got = sorted(
         (r.id, r.v)
@@ -59,14 +64,14 @@ def test_read_point_equals_exact_filter(spark, tmp_path):
 
 def test_absent_keys_prune_everything(spark, tmp_path):
     path = _layout(spark, tmp_path)
-    blooms = build_file_blooms(spark, path, "id")
+    blooms = _blooms(spark, path)
     keys = spark.createDataFrame([(10_000,), (10_001,)], "id long")
     assert read_point(spark, blooms, keys, "id").count() == 0
 
 
 def test_single_key_prunes_most_files(spark, tmp_path):
     path = _layout(spark, tmp_path)
-    blooms = build_file_blooms(spark, path, "id")
+    blooms = _blooms(spark, path)
     keys = spark.createDataFrame([(123,)], "id long")
     survivors = prune_files_bloom(blooms, keys, "id")
     # 4096-bit blooms over ~50 keys/file: FP rate ~0 — expect the

@@ -116,6 +116,7 @@ def test_compaction_churn_cancels(spark, tmp_path):
     be EMPTY (the exceptAll pairing cancels the churn)."""
     from football_data_pipeline_spark.sources.optimize import (
         compact_small_files,
+        plan_compaction,
     )
 
     base = tmp_path
@@ -126,7 +127,9 @@ def test_compaction_churn_cancels(spark, tmp_path):
     ).repartitionByRange(6, "id").write.parquet(path)
     m0 = build_manifest(spark, path, ["id"])
     v0 = commit_snapshot(spark, log, m0)
-    m1 = compact_small_files(spark, m0, 200, str(base / "c"), sort_col="id")
+    m1 = compact_small_files(
+        spark, m0, plan_compaction(m0, 200), str(base / "c"), sort_col="id"
+    )
     v1 = commit_snapshot(spark, log, m1)
     assert snapshot_changes(spark, log, v0, v1).count() == 0
 

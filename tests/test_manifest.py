@@ -96,21 +96,3 @@ def test_pruned_read_partitioned_layout_base_path(spark, tmp_path):
     assert set(empty.columns) == {"id", "part", "payload"}
     assert empty.count() == 0
 
-
-def test_manifest_agg_answers_from_metadata(spark, tmp_path):
-    from football_data_pipeline_spark.sources.manifest import (
-        build_manifest,
-        manifest_agg,
-    )
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(500).select(F.col("id"), (F.col("id") * 3).alias("k"))
-    df.repartitionByRange(8, "id").write.parquet(path)
-    m = build_manifest(spark, path, ["id", "k"])
-    row = manifest_agg(m).first()
-    assert row.n_files == 8 and row.n_rows == 500
-    assert row.id_min == 0 and row.id_max == 499
-    assert row.k_min == 0 and row.k_max == 1497
-    only_id = manifest_agg(m, ["id"]).columns
-    assert "k_min" not in only_id and "id_min" in only_id

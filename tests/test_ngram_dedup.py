@@ -34,7 +34,7 @@ def test_star_and_near_pairs(spark):
         (7, "en", "web", OTHER),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, source string, text string")
-    out = ngram_dedup_pairs(spark, docs).collect()
+    out = ngram_dedup_pairs(docs).collect()
     exact = sorted((r.doc_a, r.doc_b) for r in out if r.kind == "exact")
     near = [(r.doc_a, r.doc_b, r.jaccard) for r in out if r.kind == "near"]
     assert exact == [(1, 2), (1, 3)]
@@ -48,7 +48,7 @@ def test_blocking_respects_lang_source(spark):
     # two identical docs in different (lang, source) blocks → nothing
     rows = [(1, "en", "web", BASE), (2, "en", "books", BASE), (3, "fr", "web", BASE)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, source string, text string")
-    assert ngram_dedup_pairs(spark, docs).count() == 0
+    assert ngram_dedup_pairs(docs).count() == 0
 
 
 def test_contamination_overlap_flags_verbatim_copies(spark):

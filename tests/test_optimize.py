@@ -39,11 +39,11 @@ def fragmented(spark, tmp_path_factory):
 def test_plan_packs_small_files_only(spark, fragmented):
     path, _ = fragmented
     man = build_manifest(spark, path, ["id"])
-    bins, keep = plan_compaction(man, TARGET)
+    _, bins, keep = plan_compaction(man, TARGET)
     assert len(keep) == 4  # the 1000-row files stay put
     assert sorted(len(b) for b in bins) == [6, 6]  # 12×100 → 2×600
     # deterministic: replanning gives the identical packing
-    bins2, keep2 = plan_compaction(man, TARGET)
+    _, bins2, keep2 = plan_compaction(man, TARGET)
     assert bins == bins2 and keep == keep2
 
 
@@ -51,7 +51,7 @@ def test_bins_respect_capacity(spark, fragmented):
     path, _ = fragmented
     man = build_manifest(spark, path, ["id"])
     sizes = {r.file: r.n_rows for r in man.collect()}
-    bins, _ = plan_compaction(man, TARGET)
+    _, bins, _ = plan_compaction(man, TARGET)
     for b in bins:
         assert sum(sizes[f] for f in b) <= TARGET
 
@@ -59,7 +59,8 @@ def test_bins_respect_capacity(spark, fragmented):
 def test_compaction_preserves_rows_and_tightens_layout(spark, fragmented):
     path, out = fragmented
     man = build_manifest(spark, path, ["id"])
-    new_man = compact_small_files(spark, man, TARGET, out, sort_col="id")
+    plan = plan_compaction(man, TARGET)
+    new_man = compact_small_files(spark, man, plan, out, sort_col="id")
     rows = new_man.collect()
     assert len(rows) == 6  # 4 kept + 2 bins
     assert sum(r.n_rows for r in rows) == 5200
@@ -80,7 +81,8 @@ def test_compaction_preserves_rows_and_tightens_layout(spark, fragmented):
 def test_pruned_read_identical_through_new_manifest(spark, fragmented):
     path, out = fragmented
     man = build_manifest(spark, path, ["id"])
-    new_man = compact_small_files(spark, man, TARGET, out + "_p", sort_col="id")
+    plan = plan_compaction(man, TARGET)
+    new_man = compact_small_files(spark, man, plan, out + "_p", sort_col="id")
     got = sorted(
         r.id for r in pruned_read(spark, new_man, "id", 150, 1400).collect()
     )
@@ -97,9 +99,10 @@ def test_noop_when_nothing_small(spark, tmp_path):
     path = str(tmp_path / "big")
     spark.range(2000).repartitionByRange(2, "id").write.parquet(path)
     man = build_manifest(spark, path, ["id"])
-    bins, keep = plan_compaction(man, 500)
+    plan = plan_compaction(man, 500)
+    _, bins, keep = plan
     assert bins == [] and len(keep) == 2
-    new_man = compact_small_files(spark, man, 500, str(tmp_path / "out"))
+    new_man = compact_small_files(spark, man, plan, str(tmp_path / "out"))
     assert sorted(r.file for r in new_man.collect()) == sorted(keep)
 
 

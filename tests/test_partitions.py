@@ -13,11 +13,9 @@ from pyspark.sql import functions as F
 from football_data_pipeline_spark.sources.partitions import (
     bucket_transform,
     eq_partition_filter,
+    partition_columns,
     range_partition_filter,
-    read_eq,
-    read_range,
     truncate_transform,
-    write_partitioned,
 )
 
 N = 1000
@@ -30,7 +28,9 @@ SPEC = [
 def _table(spark, base):
     root = str(base / "tbl")
     df = spark.range(N).select(F.col("id"), (F.col("id") % 7).alias("v"))
-    write_partitioned(df, root, SPEC)
+    df.withColumns(partition_columns(SPEC)).write.partitionBy(
+        [name for _, _, _, name in SPEC]
+    ).parquet(root)
     return root
 
 
@@ -43,7 +43,11 @@ def _plan(df) -> str:
 
 def test_eq_read_parity_and_partition_filters(spark, tmp_path):
     root = _table(spark, tmp_path)
-    got = read_eq(spark, root, SPEC, "id", 437)
+    got = (
+        spark.read.parquet(root)
+        .filter(eq_partition_filter(SPEC, "id", 437))
+        .filter(F.col("id") == 437)
+    )
     rows = got.collect()
     assert len(rows) == 1 and rows[0].id == 437 and rows[0].v == 437 % 7
     plan = _plan(got)
@@ -53,7 +57,11 @@ def test_eq_read_parity_and_partition_filters(spark, tmp_path):
 
 def test_range_read_parity_prunes_truncate_only(spark, tmp_path):
     root = _table(spark, tmp_path)
-    got = read_range(spark, root, SPEC, "id", 150, 349)
+    got = (
+        spark.read.parquet(root)
+        .filter(range_partition_filter(SPEC, "id", 150, 349))
+        .filter(F.col("id").between(150, 349))
+    )
     assert sorted(r.id for r in got.collect()) == list(range(150, 350))
     plan = _plan(got)
     assert "PartitionFilters" in plan and "p_trunc" in plan

@@ -125,13 +125,13 @@ def test_maintain_plans_compaction_once_per_pass(spark, tmp_path, monkeypatch):
     for b in range(3):
         w(_batch(spark, b * 10, (b + 1) * 10), b)
     calls = []
-    plan = optimize._plan
+    plan = optimize.plan_compaction
 
     def counted(*args, **kwargs):
         calls.append(args)
         return plan(*args, **kwargs)
 
-    monkeypatch.setattr(optimize, "_plan", counted)
+    monkeypatch.setattr(optimize, "plan_compaction", counted)
     report = maintain(spark, log, 1_000, str(tmp_path / "opt"), keep_latest=1)
     assert report["compacted_version"] is not None
     assert len(calls) == 1

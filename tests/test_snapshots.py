@@ -11,7 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from football_data_pipeline_spark.sources.manifest import build_manifest
-from football_data_pipeline_spark.sources.optimize import compact_small_files
+from football_data_pipeline_spark.sources.optimize import (
+    compact_small_files,
+    plan_compaction,
+)
 from football_data_pipeline_spark.sources.snapshots import (
     _local_path,
     commit_log,
@@ -59,7 +62,7 @@ def table(spark, tmp_path_factory):
     m0 = build_manifest(spark, path, ["id"])
     v0 = commit_snapshot(spark, log, m0)
     m1 = compact_small_files(
-        spark, m0, target_rows=500, out_dir=str(base / "compact"), sort_col="id"
+        spark, m0, plan_compaction(m0, 500), str(base / "compact"), sort_col="id"
     )
     v1 = commit_snapshot(spark, log, m1)
     m2 = delete_where_cow(

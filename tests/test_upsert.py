@@ -11,7 +11,6 @@ from football_data_pipeline_spark.operators.upsert import (
     insert_if_absent,
     keep_first,
     keep_latest,
-    retention_filter,
     upsert_replace,
 )
 
@@ -63,13 +62,3 @@ def test_delete_where_null_safe(spark):
     out = delete_where(df, F.col("val") == "x")
     assert {r.id for r in out.collect()} == {2, 3}
 
-
-def test_retention_filter(spark):
-    """S7: 180-day retention keeps the boundary row (>= cutoff)."""
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00"), (2, "2024-06-29 00:00:00"), (3, "2024-06-30 00:00:00")],
-        "id long, ts_s string",
-    ).withColumn("ts", F.to_timestamp("ts_s"))
-    now = F.to_timestamp(F.lit("2024-12-27 00:00:00"))  # cutoff = 2024-06-30
-    kept = {r.id for r in retention_filter(df, "ts", 180, now).collect()}
-    assert kept == {3}  # boundary row kept (>=), 2024-06-29 dropped
