@@ -212,8 +212,9 @@ HEADLINE = [
 #: spread ≈ median at trials=3 in BENCH_r03 — needs more samples.
 #: q_dedup_best_of_component joined in r14 (VERDICT r13 item 5): the
 #: driver's r13 print carried spread 35.9 on an 11.1 s median at
-#: trials=3 — it inherits q_dedup_minhash's cache straddle PLUS the
-#: CC checkpoints, so the headline total was hostage to one query's
+#: trials=3 — measured while q_dedup_minhash's group table stayed
+#: cached across trials (see the q_dedup_minhash note), PLUS the CC
+#: checkpoints, so the headline total was hostage to one query's
 #: variance. The r13 wall-clock concern is gone: the r14 CC rewrite
 #: (one-pass symmetrize + fused rounds) roughly halved the query, so
 #: 6 trials cost what 3 did in r13.
@@ -222,24 +223,23 @@ HEADLINE = [
 #: codegen/cache straddle signature (its kernel memo warms within
 #: the first measured pass); extra trials + the max-trim read the
 #: steady state.
-#: q_dedup_minhash joined in r4: its cached signature table makes
-#: the first trials re-computation-heavy and later ones cache-warm
-#: (measured solo: 5.6, 4.0, 7.0, 4.4, 2.7, 2.9 s), so 3 samples
-#: straddle the two regimes; more samples + the max-trim converge on
-#: the steady state.
-#: q_ngram_jaccard joined in r5: spread ≈ 0.9s on a 1.65s median in
-#: both full r5 runs — its LSH re-block stage caches straddle trials
-#: the same way q_dedup_minhash's do.
-#: q_learned_mapping joined in r9: it runs the SAME two-phase
-#: cascade as q_fuzzy_join twice (batch 1 + learned batch 2), so it
-#: inherits q_fuzzy_join's JIT/cache straddling verbatim.
+#: q_dedup_minhash joined in r4 (measured solo: 5.6, 4.0, 7.0, 4.4,
+#: 2.7, 2.9 s), q_ngram_jaccard in r5 (spread ≈ 0.9s on a 1.65s
+#: median in both full r5 runs) and q_learned_mapping in r9 (it then
+#: ran q_fuzzy_join's cascade twice). Those spreads were read as
+#: early trials computing a table that later trials found still
+#: cached; every query now releases its caches before it returns
+#: (functions/materialize.py, asserted after each oracle check), so
+#: each trial pays for its own tables and that reading no longer
+#: holds. They stay in the set until a re-measurement says
+#: otherwise; what else drives their spread is unmeasured.
 #: q_video_frame_dedup joined late in r9: its phash pair stage
-#: materializes eagerly (localCheckpoint) like q_dedup_minhash's
-#: signature cache, giving the same early-trial straddle (spread
-#: ~1.5 s on a 3.5 s median at trials=3 in the r9 validation runs).
+#: materializes eagerly (localCheckpoint), giving an early-trial
+#: straddle (spread ~1.5 s on a 3.5 s median at trials=3 in the r9
+#: validation runs).
 #: q_dedup_best_of_component (spread 5.3 s on a 10.9 s median at
-#: trials=3, r10 validation — it inherits q_dedup_minhash's cache
-#: straddle PLUS the CC checkpoints) and q_media_dedup (2.0 s on
+#: trials=3, r10 validation, measured while the minhash group table
+#: outlived each trial) and q_media_dedup (2.0 s on
 #: 4.0 s) would qualify, but 6 trials on an 11 s query adds ~45 s of
 #: bench wall and the r10 measurement put the full run right at a
 #: 10-minute boundary — read their spreads with the same straddle

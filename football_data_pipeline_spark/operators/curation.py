@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.materialize import cached
 from ..registry import query
 from .dedup import _WORD_SET_SQL, fingerprint
 from .quality import WEIGHT_MOD, WEIGHT_SALT, classify_quality
@@ -148,12 +149,13 @@ def best_of_component(
 
     ``rep`` (optional): a precomputed (f, rid) fingerprint→rep
     mapping. When the caller already built the pair table from
-    dedup.minhash_rep_groups, its cached group table holds exactly
-    this mapping (f = fingerprint(text), rid = min doc_id per group
-    — same key expression, same aggregate, same doc set), so passing
-    it skips re-running the corpus-wide fingerprint groupBy here
-    (r14, guide §2.4 — don't re-aggregate what a shared stage
-    already materialized)."""
+    dedup.minhash_rep_groups, its group table holds exactly this
+    mapping (f = fingerprint(text), rid = min doc_id per group — same
+    key expression, same aggregate, same doc set), so passing it
+    skips re-running the corpus-wide fingerprint groupBy here (r14,
+    guide §2.4 — don't re-aggregate what a shared stage already
+    materialized; q_dedup_best_of_component caches that table for
+    both uses)."""
     from .dedup import connected_components
 
     fp = docs.select("doc_id", fingerprint(F.col("text")).alias("f"))
@@ -252,11 +254,12 @@ def q_dedup_best_of_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import minhash_rep_groups, minhash_verified_pairs
 
     docs = load(spark, sf_dir, "documents")
-    grp = minhash_rep_groups(docs)
-    pairs = minhash_verified_pairs(grp).select("doc_a", "doc_b")
-    # the cached group table IS the fingerprint→rep mapping the
-    # member expansion needs (f = fingerprint(text), rid = min
-    # doc_id) — reuse it instead of re-aggregating the corpus
-    return best_of_component(
-        docs, pairs, rep=grp.select(F.col("fp").alias("f"), "rid")
-    )
+    # the group table IS the fingerprint→rep mapping the member
+    # expansion needs (f = fingerprint(text), rid = min doc_id) —
+    # cached once for the pair stage and the expansion, and the
+    # result checkpointed before the scope releases it
+    with cached(minhash_rep_groups(docs)) as grp:
+        pairs = minhash_verified_pairs(grp).select("doc_a", "doc_b")
+        return best_of_component(
+            docs, pairs, rep=grp.select(F.col("fp").alias("f"), "rid")
+        ).localCheckpoint()

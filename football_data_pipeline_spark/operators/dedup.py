@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.lsh import band_pairs
+from ..functions.materialize import cached
 from ..functions.sliding import chunked_join, sliding_join
 from ..functions.stable import rnd
 from ..registry import query
@@ -329,7 +330,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
        along so downstream can weight clusters.
     """
     docs = load(spark, sf_dir, "documents")
-    return minhash_verified_pairs(minhash_rep_groups(docs))
+    with cached(minhash_rep_groups(docs)) as grp:
+        return minhash_verified_pairs(grp).localCheckpoint()
 
 
 def minhash_rep_groups(docs: DataFrame) -> DataFrame:
@@ -339,11 +341,12 @@ def minhash_rep_groups(docs: DataFrame) -> DataFrame:
     best_of_component member expansion (r14: the expansion previously
     re-aggregated this same fingerprint→rep mapping from scratch).
 
-    Cached at the aggregate: the consumers (signature path + both
-    verify sides + the component member expansion) would each re-run
-    the scan + the SortAggregate that the array-typed min_by buffer
-    forces (measured 3× at sf0.1). The cached set is one row per
-    DISTINCT word set — already the collapsed small side at any
+    Callers cache it in a ``materialize.cached`` scope and checkpoint
+    their result before the scope exits: the consumers (signature
+    path + both verify sides + the component member expansion) would
+    each re-run the scan + the SortAggregate that the array-typed
+    min_by buffer forces (measured 3× at sf0.1). The table is one row
+    per DISTINCT word set — already the collapsed small side at any
     scale. The cut stays HERE, not after the signature columns: an
     r13 A/B of the wider cut (cache mh0..17 too, so the two band-join
     sides share the transform) measured 3.70 → 4.30 s median — the
@@ -358,7 +361,6 @@ def minhash_rep_groups(docs: DataFrame) -> DataFrame:
             F.count("*").alias("sz"),
             F.min_by("ws", "doc_id").alias("ws"),
         )
-        .cache()
     )
 
 
@@ -536,58 +538,57 @@ def ngram_dedup_pairs(docs: DataFrame) -> DataFrame:
         .withColumn("fp", F.md5(F.concat_ws(" ", F.array_sort("shingles"))))
     )
     # collapse identical shingle sets (one rep per distinct set per
-    # (lang, source)); cached — consumed by the signature path, the
-    # star-pair join-back, and both verify sides. The cut stays at
-    # the aggregate, NOT after the signature columns: an r13 A/B of
-    # the wider cut (cache mh0..15 too, so the two band-join sides
-    # share the transform) measured 1.73 → 2.42 s median — the
-    # duplicated signature work runs in overlapping jobs on idle
-    # cores while the wider cache serializes its materialization.
-    grp = (
-        sh.groupBy("lang", "source", "fp")
-        .agg(
-            F.min("doc_id").alias("rid"),
-            F.count("*").alias("sz"),
-            F.min_by("shingles", "doc_id").alias("shingles"),
+    # (lang, source)); cached for this scope — consumed by the
+    # signature path, the star-pair join-back, and both verify sides —
+    # and the pair result checkpointed before the scope releases it.
+    # The cut stays at the aggregate, NOT after the signature columns:
+    # an r13 A/B of the wider cut (cache mh0..15 too, so the two
+    # band-join sides share the transform) measured 1.73 → 2.42 s
+    # median — the duplicated signature work runs in overlapping jobs
+    # on idle cores while the wider cache serializes its
+    # materialization.
+    grp = sh.groupBy("lang", "source", "fp").agg(
+        F.min("doc_id").alias("rid"),
+        F.count("*").alias("sz"),
+        F.min_by("shingles", "doc_id").alias("shingles"),
+    )
+    with cached(grp) as grp:
+        exact_pairs = (
+            sh.join(grp.select("lang", "source", "fp", "rid"), ["lang", "source", "fp"])
+            .filter(F.col("doc_id") != F.col("rid"))
+            .select(
+                "lang",
+                "source",
+                F.col("rid").alias("doc_a"),
+                F.col("doc_id").alias("doc_b"),
+                F.lit(1.0).alias("jaccard"),
+                F.lit("exact").alias("kind"),
+            )
         )
-        .cache()
-    )
-    exact_pairs = (
-        sh.join(grp.select("lang", "source", "fp", "rid"), ["lang", "source", "fp"])
-        .filter(F.col("doc_id") != F.col("rid"))
-        .select(
-            "lang",
-            "source",
-            F.col("rid").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-            F.lit("exact").alias("kind"),
+        cand = band_pairs(
+            grp,
+            "rid",
+            _band_sigs(F.col("shingles"), NGRAM_BANDS, NGRAM_ROWS, salt_fmt="g{i}:"),
+            by=("lang", "source"),
         )
-    )
-    cand = band_pairs(
-        grp,
-        "rid",
-        _band_sigs(F.col("shingles"), NGRAM_BANDS, NGRAM_ROWS, salt_fmt="g{i}:"),
-        by=("lang", "source"),
-    )
-    ga = grp.select("lang", "source", F.col("rid").alias("rid_a"), F.col("shingles").alias("sh_a"))
-    gb = grp.select(F.col("rid").alias("rid_b"), F.col("shingles").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
-    near_pairs = (
-        cand.join(ga, "rid_a")
-        .join(gb, "rid_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= NGRAM_VERIFY)
-        .select(
-            "lang",
-            "source",
-            F.col("rid_a").alias("doc_a"),
-            F.col("rid_b").alias("doc_b"),
-            rnd(F.col("jaccard"), 4).alias("jaccard"),
-            F.lit("near").alias("kind"),
+        ga = grp.select("lang", "source", F.col("rid").alias("rid_a"), F.col("shingles").alias("sh_a"))
+        gb = grp.select(F.col("rid").alias("rid_b"), F.col("shingles").alias("sh_b"))
+        jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
+        near_pairs = (
+            cand.join(ga, "rid_a")
+            .join(gb, "rid_b")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= NGRAM_VERIFY)
+            .select(
+                "lang",
+                "source",
+                F.col("rid_a").alias("doc_a"),
+                F.col("rid_b").alias("doc_b"),
+                rnd(F.col("jaccard"), 4).alias("jaccard"),
+                F.lit("near").alias("kind"),
+            )
         )
-    )
-    return exact_pairs.unionByName(near_pairs)
+        return exact_pairs.unionByName(near_pairs).localCheckpoint()
 
 
 @query("q_ngram_jaccard", oracle=_ngram_oracle())

@@ -351,8 +351,8 @@ def q_learned_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_replace(F.col("c_name"), "Customer#", "Cust#").alias("manual_target"),
     )
     # batch 1 has exactly ONE consumer now (the projection below), so
-    # the r7/r13 lineage-cut checkpoint is gone too — no serial
-    # materialization barrier, and the plan stays one-cascade-sized
+    # the r7/r13 lineage-cut checkpoint is gone too: batch 1 is the
+    # one cascade, whose result resolve_names checkpoints itself
     # (tests/test_resolution.py::test_learned_mapping_plan_bounded).
     batch1 = resolve_names(
         api, cand, block_key="nk", manual=manual, with_alternatives=False

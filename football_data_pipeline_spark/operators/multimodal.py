@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.lsh import band_pairs
+from ..functions.materialize import cached
 from ..functions.memo import map_rows, payload_memo
 from ..registry import query
 
@@ -575,16 +576,11 @@ def hash_near_dup(
     per group; asset_id must remain unique across the whole table
     and determine its group)."""
     # cached for the four consumers inside the pair plan (group,
-    # stars, both verify sides) — released before returning via the
-    # localCheckpoint at the end, which pins only the (small) pair
-    # result instead of the per-asset hash table
-    hashes = hashes.cache()
-    # materialize the (small) pair result and release the hash cache
-    # — returning a lazy plan over the cached table would leave the
-    # per-asset hashes pinned in executor memory for the session
-    result = _phash_pair_plan(hashes, max_hamming, by).localCheckpoint()
-    hashes.unpersist()
-    return result
+    # stars, both verify sides); the (small) pair result is
+    # checkpointed before the scope releases the per-asset hashes —
+    # a lazy plan returned past the scope would recompute them
+    with cached(hashes) as hashes:
+        return _phash_pair_plan(hashes, max_hamming, by).localCheckpoint()
 
 
 def _phash_pair_plan(

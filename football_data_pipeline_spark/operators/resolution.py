@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.materialize import cached
 from ..functions.normalize import normalize_name
 from ..functions.stable import rnd
 from ..functions.similarity import (
@@ -584,60 +585,56 @@ def resolve_names(
         # cache the per-name verdicts (dim-sized): the two consumers
         # (the union output and the remainder anti-join) would
         # otherwise re-run the tier's whole subtree per reference.
-        # Lifecycle: the returned plan references these cached
-        # frames, so they stay pinned for the session (a dim-sized
-        # cost) — a long-lived driver running the cascade repeatedly
-        # should spark.catalog.clearCache() between corpora or
-        # materialize the result and unpersist (the phash_near_dup
-        # pattern)
-        easy_a = easy_a.cache()
-        all_names = api_df.select(api_col).distinct()
-        rest_a = all_names.join(
-            F.broadcast(easy_a.select(api_col)), api_col, "left_anti"
-        )
-        # There is deliberately NO separate substring tier (r13 opt
-        # round removed it as provably dead work): strategy 5's
-        # confidence is (min(len)/max(len))·0.75 ≤ 0.75 with equality
-        # iff the lengths match, and containment of equal-length
-        # strings IS string equality — so a pair can clear the 0.75
-        # gate only when __api_norm == __cand_norm, which strategy 4
-        # (normalized equality, higher priority, threshold 0.85 = its
-        # own constant confidence) already resolved in tier A. The old
-        # tier A' therefore always produced an EMPTY verdict set while
-        # paying a full pair-stream pass + cache + anti-join
-        # (tests/test_resolution.py::test_substring_tier_provably_dead
-        # pins the arithmetic fact; the fast-vs-window parity test
-        # pins end-to-end equality).
-        #
-        # The same tier-A-completeness argument bounds the remainder's
-        # pass_idx to {6, 7, 8, NULL} — a rest_a pair passing 1-4
-        # would have resolved its name in tier A, and 5 is impossible
-        # as above — so the aggregate runs over STRATEGIES[5:] only
-        # and Catalyst prunes the never-read cheap confidence columns
-        # out of the pair projection.
-        #
-        # No pass_idx pre-filter here, deliberately: the 0.3 fallback
-        # admits nearly every pair, so a filter would drop nothing
-        # while inlining the Levenshtein/Jaccard kernels a second
-        # time into the Filter node (measured 2× kernel cost in the
-        # physical plan). resolve_agg yields null-key groups →
-        # 'no_match' rows for names nothing matches.
-        hard_names = rest_a
-        hard_pairs = pairs.join(F.broadcast(hard_names), api_col, "inner")
-        hard_agg = resolve_agg(
-            score(hard_pairs, expensive="compute"),
-            ranks,
-            api_col=api_col,
-            cand_col=cand_col,
-            strategies=STRATEGIES[5:],
-        )
-        hard_out = hard_names.join(hard_agg, api_col, "left").select(
-            F.col(api_col),
-            F.col("matched_name"),
-            F.col("confidence"),
-            F.coalesce(F.col("strategy"), F.lit("no_match")).alias("strategy"),
-        )
-        return easy_a.unionByName(hard_out)
+        # The (dim-sized) result is checkpointed before the scope
+        # releases them, so no call leaves a frame in the session.
+        with cached(easy_a) as easy_a:
+            all_names = api_df.select(api_col).distinct()
+            rest_a = all_names.join(
+                F.broadcast(easy_a.select(api_col)), api_col, "left_anti"
+            )
+            # There is deliberately NO separate substring tier (r13 opt
+            # round removed it as provably dead work): strategy 5's
+            # confidence is (min(len)/max(len))·0.75 ≤ 0.75 with equality
+            # iff the lengths match, and containment of equal-length
+            # strings IS string equality — so a pair can clear the 0.75
+            # gate only when __api_norm == __cand_norm, which strategy 4
+            # (normalized equality, higher priority, threshold 0.85 = its
+            # own constant confidence) already resolved in tier A. The old
+            # tier A' therefore always produced an EMPTY verdict set while
+            # paying a full pair-stream pass + cache + anti-join
+            # (tests/test_resolution.py::test_substring_tier_provably_dead
+            # pins the arithmetic fact; the fast-vs-window parity test
+            # pins end-to-end equality).
+            #
+            # The same tier-A-completeness argument bounds the remainder's
+            # pass_idx to {6, 7, 8, NULL} — a rest_a pair passing 1-4
+            # would have resolved its name in tier A, and 5 is impossible
+            # as above — so the aggregate runs over STRATEGIES[5:] only
+            # and Catalyst prunes the never-read cheap confidence columns
+            # out of the pair projection.
+            #
+            # No pass_idx pre-filter here, deliberately: the 0.3 fallback
+            # admits nearly every pair, so a filter would drop nothing
+            # while inlining the Levenshtein/Jaccard kernels a second
+            # time into the Filter node (measured 2× kernel cost in the
+            # physical plan). resolve_agg yields null-key groups →
+            # 'no_match' rows for names nothing matches.
+            hard_names = rest_a
+            hard_pairs = pairs.join(F.broadcast(hard_names), api_col, "inner")
+            hard_agg = resolve_agg(
+                score(hard_pairs, expensive="compute"),
+                ranks,
+                api_col=api_col,
+                cand_col=cand_col,
+                strategies=STRATEGIES[5:],
+            )
+            hard_out = hard_names.join(hard_agg, api_col, "left").select(
+                F.col(api_col),
+                F.col("matched_name"),
+                F.col("confidence"),
+                F.coalesce(F.col("strategy"), F.lit("no_match")).alias("strategy"),
+            )
+            return easy_a.unionByName(hard_out).localCheckpoint()
 
     # alternatives require a full ranking per name → window path;
     # same two-pass split so the ranking sorts stay cheap-kernel

@@ -52,6 +52,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.materialize import cached
 from ..functions.rank import first_per_key
 from ..operators.flatten import (
     derive_players,
@@ -118,8 +119,7 @@ def silver_batch_writer(silver_root: str) -> Callable[[DataFrame, int], None]:
         )
 
     def write_batch(bronze: DataFrame, batch_id: int) -> None:
-        bronze = bronze.cache()  # consumed by 8 flatteners
-        try:
+        with cached(bronze) as bronze:  # consumed by 8 flatteners
             _merge_dim(
                 extract_teams(bronze),
                 f"{silver_root}/teams",
@@ -163,8 +163,6 @@ def silver_batch_writer(silver_root: str) -> Callable[[DataFrame, int], None]:
                 "created_at",
             )
             write_fact(lineups, f"{silver_root}/lineups", batch_id, "collected_at")
-        finally:
-            bronze.unpersist()
 
     return write_batch
 
@@ -235,17 +233,11 @@ def collapsed_batch(batch: DataFrame) -> Iterator[DataFrame]:
     # otherwise re-evaluated ~3× — both sides of the near pass's band
     # self-join plus the outer anti-join below
     fps = batch.withColumn("__fp", fingerprint(F.col("text")))
-    collapsed = first_per_key(fps, ["__fp"], ["doc_id"]).drop("__fp").cache()
-    rows = None
-    try:
-        rows = collapsed.join(
-            batch_near_dup_drops(collapsed), "doc_id", "left_anti"
-        ).cache()
-        yield rows
-    finally:
-        if rows is not None:
-            rows.unpersist()
-        collapsed.unpersist()
+    with cached(first_per_key(fps, ["__fp"], ["doc_id"]).drop("__fp")) as collapsed:
+        with cached(
+            collapsed.join(batch_near_dup_drops(collapsed), "doc_id", "left_anti")
+        ) as rows:
+            yield rows
 
 
 def dedup_snapshot_writer(
@@ -479,8 +471,7 @@ def substring_trim_snapshot_writer(
         # (countDistinct(doc_id) = 1 across copies of one id)
         batch = first_per_key(batch, ["doc_id"], ["text"])
         trimmed_path = f"{corpus_root}/trimmed/batch_id={batch_id}"
-        grams = _doc_grams(batch, k).cache()
-        try:
+        with cached(_doc_grams(batch, k)) as grams:
             within = foreign_offsets(grams)
             hist = read_table_before_batch(
                 spark, f"{corpus_root}/gram_log", batch_id
@@ -510,7 +501,5 @@ def substring_trim_snapshot_writer(
                 .distinct(),
                 batch_id,
             )
-        finally:
-            grams.unpersist()
 
     return write_batch

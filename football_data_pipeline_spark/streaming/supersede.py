@@ -74,6 +74,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.materialize import cached
 from ..registry import query
 from .pipeline import collapsed_batch
 
@@ -223,8 +224,7 @@ def keep_best_snapshot_writer(
             history = _snapshot_live_history(spark, corpus_root, batch_id)
             if history is None:
                 history = spark.createDataFrame([], batch_rows.schema)
-            history = history.cache()
-            try:
+            with cached(history) as history:
                 dedup_against_corpus(batch_rows, history).write.mode(
                     "overwrite"
                 ).parquet(cls_path)
@@ -255,8 +255,6 @@ def keep_best_snapshot_writer(
                     ),
                     batch_id,
                 )
-            finally:
-                history.unpersist()
 
     return write_batch
 

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.lsh import band_pairs
+from ..functions.materialize import cached
 from ..functions.rank import first_per_key
 from ..operators.embedsearch import (
     BITS_PER_BAND,
@@ -174,16 +175,16 @@ def vector_ingest_snapshot_writer(
             F.lit("degenerate").alias("scope"),
         )
         batch = batch.filter(norm(F.col("embedding")) > 0)
-        sigs = band_signatures(batch).cache()
-        pairs = (
-            cosine_pairs(band_pairs(sigs, "vec_id", "bands"), "vec_id_a", "vec_id_b", sigs)
-            .filter(F.col("cosine_sim") >= tau)
-            .select(
-                F.col("vec_id_a").alias("vec_a"), F.col("vec_id_b").alias("vec_b"), "cosine_sim"
-            )
-            .cache()
-        )
-        try:
+        with (
+            cached(band_signatures(batch)) as sigs,
+            cached(
+                cosine_pairs(band_pairs(sigs, "vec_id", "bands"), "vec_id_a", "vec_id_b", sigs)
+                .filter(F.col("cosine_sim") >= tau)
+                .select(
+                    F.col("vec_id_a").alias("vec_a"), F.col("vec_id_b").alias("vec_b"), "cosine_sim"
+                )
+            ) as pairs,
+        ):
             hist = read_table_before_batch(
                 spark, f"{corpus_root}/sig_log", batch_id
             )
@@ -259,8 +260,5 @@ def vector_ingest_snapshot_writer(
             # N_PLANES plane dots per accepted vector would double the
             # batch's dominant cost for no reason
             sig_w(sigs.join(rej, "vec_id", "left_anti"), batch_id)
-        finally:
-            pairs.unpersist()
-            sigs.unpersist()
 
     return write_batch

@@ -1,14 +1,18 @@
 """Cache hygiene of the streaming corpus funnels: many micro-batches
 share one long-lived driver session, so a foreachBatch body must
 leave no frame registered in Spark's CacheManager — neither after a
-committed batch nor after a batch whose history read raised."""
+committed batch nor after a batch whose history read raised — and a
+``materialize.cached`` scope releases its frames on every exit path."""
 
 from __future__ import annotations
 
 import pytest
 
-from football_data_pipeline_spark.operators.multimodal import encode_ppm
+from football_data_pipeline_spark.functions.materialize import cached
+from football_data_pipeline_spark.operators import multimodal
+from football_data_pipeline_spark.operators.multimodal import encode_ppm, hash_near_dup
 from football_data_pipeline_spark.sources import snapshots
+from football_data_pipeline_spark.streaming import vectors
 from football_data_pipeline_spark.streaming.cdc_stream import cdc_snapshot_writer
 from football_data_pipeline_spark.streaming.mediadedup import (
     media_curation_snapshot_writer,
@@ -129,4 +133,50 @@ def test_failed_history_read_surfaces_and_releases_cache(
     spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="history read failed"):
         write(_doc_batches(spark)[0], 0)
+    assert _cache_empty(spark)
+
+
+def test_nested_scope_releases_outer_when_inner_construction_raises(spark):
+    def inner(outer):
+        outer.count()  # the outer frame is materialized first
+        raise RuntimeError("inner construction failed")
+
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="inner construction failed"):
+        with cached(spark.range(10)) as outer:
+            with cached(inner(outer)):
+                pass
+    assert _cache_empty(spark)
+
+
+def _failing_pair_plan(*args, **kwargs):
+    raise RuntimeError("pair plan failed")
+
+
+#: the pair plan raises after a first frame was cached: the vector
+#: writer's ``pairs`` over its cached ``sigs``, and the hash table
+#: ``hash_near_dup`` caches before it plans the pairs
+PAIR_PLAN_FAILURES = {
+    "vector_ingest": (
+        vectors,
+        "cosine_pairs",
+        lambda spark, root: vector_ingest_snapshot_writer(root)(
+            _vector_batches(spark)[0], 0
+        ),
+    ),
+    "hash_near_dup": (
+        multimodal,
+        "_phash_pair_plan",
+        lambda spark, root: hash_near_dup(spark.range(3)),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PAIR_PLAN_FAILURES))
+def test_failed_pair_plan_releases_cache(spark, tmp_path, monkeypatch, name):
+    module, attr, run = PAIR_PLAN_FAILURES[name]
+    monkeypatch.setattr(module, attr, _failing_pair_plan)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="pair plan failed"):
+        run(spark, str(tmp_path / name))
     assert _cache_empty(spark)

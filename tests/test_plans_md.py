@@ -11,11 +11,16 @@ from __future__ import annotations
 
 import os
 import re
+import sys
 
 import football_data_pipeline_spark.all_queries  # noqa: F401
 from football_data_pipeline_spark.registry import QUERIES
 
-PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS = os.path.join(ROOT, "PLANS.md")
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+from gen_plans_md import LAZY_SHAPE  # noqa: E402
 
 
 def test_plans_md_covers_every_query():
@@ -53,7 +58,7 @@ ROW_CEILINGS = {
     # mirrors tests/test_resolution.py::test_learned_mapping_plan_bounded
     "q_learned_mapping": 400,
     "q_fuzzy_join": 400,
-    # the eager-checkpoint rows record the LAZY pair-stage shape
+    # the eager-checkpoint rows record the planned stage shape
     # (gen_plans_md.LAZY_SHAPE, VERDICT r9 item 6): a banded
     # star-collapse + bucket-join + verify is a handful of exchanges;
     # a row far above that means the seam drifted or the artifact is
@@ -65,7 +70,7 @@ ROW_CEILINGS = {
 
 #: lazy-shape rows must show REAL work — a zero-exchange row here
 #: means gen_plans_md regressed to printing the post-checkpoint scan
-LAZY_ROWS_NONZERO = ("q_video_frame_dedup", "q_audio_near_dup")
+LAZY_ROWS_NONZERO = tuple(sorted(LAZY_SHAPE))
 #: no query in this engine has a legitimate plan anywhere near this
 #: many exchanges — a committed row above it is either a plan bomb
 #: (fix the code) or a stale artifact (regenerate PLANS.md)

@@ -25,14 +25,21 @@ EXPECTED_EMPTY_OK: set[str] = set()
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
+    """Also: the query leaves no frame in Spark's CacheManager — many
+    queries share one long-lived driver session, so a cache must not
+    outlive the query that made it (functions/materialize.py)."""
+    spark.catalog.clearCache()
     q = QUERIES[name]
     df = q.fn(spark, SF_DIR)
     if q.oracle is None:
         assert df.count() >= 0  # rows-only check, mirrors the driver
-        return
-    assert_matches_oracle(
-        df, duck, q.oracle, name=name,
-        expect_nonempty=name not in EXPECTED_EMPTY_OK,
+    else:
+        assert_matches_oracle(
+            df, duck, q.oracle, name=name,
+            expect_nonempty=name not in EXPECTED_EMPTY_OK,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left cached frames in the session"
     )
 
 

@@ -18,6 +18,10 @@ A definition that nothing reaches stays only as
 ``KEEP`` holds exactly those definitions, each mapped to ENTRY or to
 the first cell (or a unique prefix of it) of its SURVEY.md row.
 Anything else that nothing reaches is deleted, with its tests.
+
+A second AST rule holds the materialization rule: every cache in the
+package lives in a ``functions/materialize.cached`` scope, so no other
+module calls ``.cache()``, ``.persist()`` or ``.unpersist()``.
 """
 
 from __future__ import annotations
@@ -107,6 +111,10 @@ KEEP = {
 }
 
 _ENTRY_NAME = re.compile(r"start_\w+_pipeline|\w+_writer")
+
+#: the one module that caches and releases frames
+MATERIALIZE = ROOT / PKG / "functions" / "materialize.py"
+CACHE_CALLS = {"cache", "persist", "unpersist"}
 
 
 def _names(nodes) -> set[str]:
@@ -202,3 +210,22 @@ def test_keep_entries_are_current():
             elif not re.search(rf"\b{re.escape(name)}\b", hits[0]):
                 stale.append(f"{qualified}: SURVEY.md row {why!r} does not name it")
     assert not stale, stale
+
+
+def test_frames_are_cached_only_through_materialize():
+    calls = []
+    for p in sorted((ROOT / PKG).rglob("*.py")):
+        if p == MATERIALIZE:
+            continue
+        for node in ast.walk(ast.parse(p.read_text(), str(p))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in CACHE_CALLS
+            ):
+                calls.append((str(p.relative_to(ROOT)), node.lineno, node.func.attr))
+    calls = [f"{f}:{line} .{attr}()" for f, line, attr in sorted(calls)]
+    assert not calls, (
+        f"cache calls outside functions/materialize.py: {calls} — wrap the "
+        "frame in `with cached(df) as df:` so every exit path releases it"
+    )

@@ -329,18 +329,22 @@ def test_learned_mapping_plan_bounded(spark):
     dim-sized learned table enters batch 2 as a leaf. Ceiling is ~10x
     the post-fix count (~45 exchanges) so real work can grow but a
     lineage re-embedding regression (two orders of magnitude) trips."""
+    import os
+    import sys
+
     import football_data_pipeline_spark.all_queries  # noqa: F401
     from football_data_pipeline_spark.registry import QUERIES
 
     from .conftest import SF_DIR
 
-    plan = (
-        QUERIES["q_learned_mapping"]
-        .fn(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    # resolve_names checkpoints its result eagerly; plan the cascade
+    # the checkpoint would run, as PLANS.md does
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from gen_plans_md import planned_checkpoints
+
+    with planned_checkpoints():
+        df = QUERIES["q_learned_mapping"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange")
     assert n_exchanges < 400, (
         f"q_learned_mapping plan has {n_exchanges} Exchange prints - "

@@ -19,8 +19,11 @@ from __future__ import annotations
 import os
 import re
 import sys
+from contextlib import contextmanager, nullcontext
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql.classic.dataframe import DataFrame
 
 import football_data_pipeline_spark.all_queries  # noqa: F401
 from football_data_pipeline_spark.registry import QUERIES
@@ -45,11 +48,15 @@ broadcast-hash / sort-merge / broadcast-nested-loop joins; **win** =
 window operators; **scans** = parquet scans (those with pushed
 filters marked `+pf`).
 
-Eager-checkpoint queries (q_video_frame_dedup, q_audio_near_dup):
-their executed final plan is a localCheckpoint scan, so their rows
-record the REAL pair-stage shape rebuilt lazily through the
-pytest-locked `_phash_pair_plan` seam (generator's LAZY_SHAPE table)
-— planned, never executed, like every other static row here.
+Eager-checkpoint queries (the generator's LAZY_SHAPE set:
+q_video_frame_dedup, q_audio_near_dup, q_dedup_minhash,
+q_ngram_jaccard, q_dedup_best_of_component, q_fuzzy_join,
+q_learned_mapping): each caches a shared stage in a
+`functions/materialize.cached` scope and checkpoints its result
+before the scope exits, so its executed final plan is a
+localCheckpoint scan. Their rows record the REAL stage shape instead,
+built with eager checkpoints planned as their input frame — planned,
+never executed, like every other static row here.
 
 | query | exch | bhj | smj | bnlj | win | scans | notes |
 |---|---|---|---|---|---|---|---|
@@ -72,67 +79,40 @@ def final_sections(plan: str) -> str:
     return "\n".join(out)
 
 
-def _lazy_video_pair(spark):
-    """The REAL band-join shape of q_video_frame_dedup's pair stage —
-    phash_near_dup executes it eagerly (localCheckpoint), so the
-    query's final plan is just a checkpoint scan; this rebuilds the
-    identical upstream lazily via _phash_pair_plan (the pytest-locked
-    seam, multimodal.py)."""
-    from pyspark.sql import functions as F
+@contextmanager
+def planned_checkpoints():
+    """Plan eager ``localCheckpoint()`` calls instead of running them:
+    inside the block an eager checkpoint returns its input frame, so a
+    query that checkpoints its result before its
+    ``functions/materialize.cached`` scope exits returns the lazy plan
+    of the stage it would run. Lazy checkpoints (the
+    connected-components rounds) run as before."""
+    real = DataFrame.localCheckpoint
 
-    from football_data_pipeline_spark.catalog import load
-    from football_data_pipeline_spark.operators.multimodal import (
-        DHASH_MAX_HAMMING,
-        _phash_pair_plan,
-        image_phash,
-    )
-    from football_data_pipeline_spark.operators.video import (
-        FRAME_EVERY_N,
-        sample_frames_y4m,
-        synth_patterned_clips,
-    )
+    def planned(self, eager=True, *args, **kwargs):
+        return self if eager else real(self, eager, *args, **kwargs)
 
-    docs = load(spark, SF_DIR, "documents")
-    frames = sample_frames_y4m(
-        synth_patterned_clips(docs), every_n=FRAME_EVERY_N
-    )
-    stills = frames.select(
-        (F.col("asset_id") * 100 + F.col("frame_idx"))
-        .cast("long")
-        .alias("asset_id"),
-        "payload",
-    )
-    return _phash_pair_plan(image_phash(stills), DHASH_MAX_HAMMING)
+    DataFrame.localCheckpoint = planned
+    try:
+        yield
+    finally:
+        DataFrame.localCheckpoint = real
 
 
-def _lazy_audio_pair(spark):
-    """q_audio_near_dup's pair stage, lazily (same story as the video
-    bridge — hash_near_dup checkpoints eagerly)."""
-    from football_data_pipeline_spark.catalog import load
-    from football_data_pipeline_spark.operators.audiodedup import (
-        audio_fingerprint,
-        synth_patterned_tones,
-    )
-    from football_data_pipeline_spark.operators.multimodal import (
-        DHASH_MAX_HAMMING,
-        _phash_pair_plan,
-    )
-
-    docs = load(spark, SF_DIR, "documents")
-    return _phash_pair_plan(
-        audio_fingerprint(synth_patterned_tones(docs)), DHASH_MAX_HAMMING
-    )
-
-
-#: queries whose FINAL plan is a localCheckpoint scan because the
-#: pair stage executes eagerly (VERDICT r9 item 6): the row records
-#: the REAL upstream shape instead, rebuilt lazily through the
-#: pytest-locked _phash_pair_plan seam. Counts for these rows are
-#: PLANNED (never executed) — honest for shape, exactly like every
-#: other static-plan row here.
+#: queries whose FINAL plan is a localCheckpoint scan because their
+#: pair stage (or whole result) executes eagerly inside the query
+#: function: the row records the REAL stage shape instead, built under
+#: planned_checkpoints(). Counts for these rows are PLANNED (never
+#: executed) — honest for shape, exactly like every other static-plan
+#: row here.
 LAZY_SHAPE = {
-    "q_video_frame_dedup": _lazy_video_pair,
-    "q_audio_near_dup": _lazy_audio_pair,
+    "q_video_frame_dedup",
+    "q_audio_near_dup",
+    "q_dedup_minhash",
+    "q_ngram_jaccard",
+    "q_dedup_best_of_component",
+    "q_fuzzy_join",
+    "q_learned_mapping",
 }
 
 #: hand-audited explanations for signals the generic notes would
@@ -152,16 +132,13 @@ KNOWN_NOTES = {
         "PLANS.md staleness guard (tests/test_plans_md.py)"
     ),
     "q_video_frame_dedup": (
-        "counts are the REAL pair-stage shape (star collapse, the "
-        "functions/lsh.band_pairs band join, Hamming verify) rebuilt "
-        "lazily via _phash_pair_plan — the "
-        "executed query checkpoints this stage eagerly, so its final "
-        "plan is a checkpoint scan; shape also pytest-locked in "
-        "tests/test_multimodal.py, result oracle-checked"
+        "the pair stage is star collapse, the functions/lsh.band_pairs "
+        "band join and Hamming verify; shape also pytest-locked in "
+        "tests/test_multimodal.py via _phash_pair_plan, result "
+        "oracle-checked"
     ),
     "q_audio_near_dup": (
-        "counts are the SHARED banded pair pass rebuilt lazily (same "
-        "eager-checkpoint story as q_video_frame_dedup); shape "
+        "the SHARED banded pair pass of q_video_frame_dedup; shape "
         "pytest-locked, result oracle-checked"
     ),
     "q_media_dedup": (
@@ -241,6 +218,11 @@ def plan_row(name: str, plan: str) -> str:
             f"{len(bounded_windows)} k-bounded rank window(s) over "
             "TakeOrdered survivors"
         )
+    if name in LAZY_SHAPE:
+        notes.append(
+            "planned stage shape: the executed query checkpoints it "
+            "eagerly, so its final plan is a checkpoint scan"
+        )
     if name in KNOWN_NOTES:
         notes.append(KNOWN_NOTES[name])
     return (
@@ -253,9 +235,7 @@ def main() -> None:
     spark = get_spark(app_name="fdps-gen-plans")
     rows = []
     for name in QUERIES:
-        if name in LAZY_SHAPE:
-            df = LAZY_SHAPE[name](spark)
-        else:
+        with planned_checkpoints() if name in LAZY_SHAPE else nullcontext():
             df = QUERIES[name].fn(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
         rows.append(plan_row(name, plan))
